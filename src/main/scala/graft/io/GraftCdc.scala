@@ -116,7 +116,7 @@ object GraftCdc {
     // OVERWRITE records its frame's schema verbatim and clears alias
     // markers) — the latter would null-fill where data exists under
     // another name, so it refuses
-    val nowSchema = TxnTable.latestVersion(spark, table)
+    lazy val nowSchema = TxnTable.latestVersion(spark, table)
       .flatMap(v => TxnTable.snapshotSchema(spark, table, v))
     svOpt.foreach { sv =>
       base.fields.foreach { f =>
@@ -152,13 +152,17 @@ object GraftCdc {
               s"by v$until — the change feed cannot adapt mid-stream; " +
               "restart the subscriber against the current schema")
         }
-        // no vintage marker, but the column is gone from the CURRENT
-        // schema: an OVERWRITE records its frame's schema verbatim and
-        // clears alias markers, so a drop/rename via overwrite is
-        // otherwise indistinguishable from "not yet added" — and only
-        // the latter may null-fill (the column exists NOW, so the
-        // handle that captured `base` legitimately saw it)
-        require(nowSchema.forall(_.fields.exists(
+        // absent from the window-end schema with no vintage marker, and
+        // gone from the CURRENT schema too: an OVERWRITE records its
+        // frame's schema verbatim and clears alias markers, so a
+        // drop/rename via overwrite is otherwise indistinguishable from
+        // "not yet added" — and only the latter may null-fill (the
+        // column exists NOW, so the handle that captured `base`
+        // legitimately saw it). A column PRESENT at the window's end is
+        // stored under its subscribed name in every file the window
+        // reads, whatever happened after `until`.
+        val inWindow = sv.fields.exists(_.name.equalsIgnoreCase(f.name))
+        require(inWindow || nowSchema.forall(_.fields.exists(
             _.name.equalsIgnoreCase(f.name))),
           s"$table no longer has column '${f.name}' (dropped or " +
             "renamed since this subscriber's handle — an overwrite " +

@@ -33,21 +33,28 @@ import java.nio.charset.StandardCharsets.UTF_8
   * number of commits ever made — the property a per-microbatch
   * streaming sink (s60/s62) needs to run for months.
   *
-  * Protocol: a writer materializes its data files under a fresh unique
+  * Protocol: every commit goes through ONE primitive, `Log.commit`. An
+  * op's plan materializes its data files under a fresh unique
   * `w=<token>/` dir (two racing writers can never clobber each other's
-  * data), computes the file list of the snapshot it intends to publish
-  * (OVERWRITE commit: just its new files; APPEND commit: the current
-  * latest manifest's files plus its new ones), then commits by creating
-  * `_v<next>.manifest` EXCLUSIVELY (atomic hard-link publish on local
-  * FS, exclusive create on HDFS — see tryCreateAtomic for the per-FS
-  * contract). That exclusive create is the FS-level compare-and-swap:
-  * exactly one of N racing writers creates the next version's manifest;
-  * every loser
-  * gets FileAlreadyExistsException, re-reads the NEW latest snapshot,
-  * recomputes its file list against it, and retries at `next+1` — so
-  * concurrent appends serialize and both survive (lost-update-free).
-  * A writer that dies before its manifest rename leaves only an orphan
-  * `w=` dir: invisible to readers AND to `versions` (manifest existence
+  * data) and describes the commit as a typed `Change` — files added and
+  * removed, new deletes, and a header update. The primitive renders the
+  * next manifest from the base snapshot plus that change (a full
+  * manifest or a delta; `computeState` replays a delta through the same
+  * `Change.applyTo`) and commits by creating `_v<next>.manifest`
+  * EXCLUSIVELY (atomic hard-link publish on local FS, exclusive create
+  * on HDFS — see tryCreateAtomic for the per-FS contract). That
+  * exclusive create is the FS-level compare-and-swap: exactly one of N
+  * racing writers creates the next version's manifest. Every loser
+  * backs off, re-reads the NEW latest snapshot and applies its op's
+  * rule: REBASE (re-publish the output it already wrote, re-deriving
+  * the header against the fresh snapshot — an append always can, a
+  * rewrite when the interleaved commits provably cannot touch its rows)
+  * or RECOMPUTE (drop its data dirs and plan again from the fresh
+  * snapshot) — so concurrent commits serialize and none is lost. One
+  * budget of 64 lost CAS tries covers every op. The CAS seam lives in
+  * the private `Log` object, so no other code path can publish a
+  * manifest. A writer that dies before its manifest rename leaves only
+  * an orphan `w=` dir: invisible to readers AND to `versions` (manifest existence
   * is committedness — there is no window where a crashed writer's
   * output is half-visible). This is the concurrency+atomicity fix for
   * the reference's copy-then-delete zone hops
@@ -243,70 +250,6 @@ object TxnTable {
     val in = ctx.open(p)
     try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
-
-  /** Publish `content` at `dest` iff `dest` does not exist. Returns
-    * false (leaving `dest` untouched) on the lost-the-race signal.
-    *
-    * The CAS seam, per filesystem:
-    *   - local/raw FS: write a temp file, then `link(2)` it to `dest` —
-    *     hard-link creation is KERNEL-atomic and fails with EEXIST, so
-    *     exactly one racer wins AND readers only ever see the full
-    *     content. (The previous rename-without-overwrite was NOT a CAS
-    *     here: FileContext emulates the no-overwrite check as
-    *     exists-then-rename, and two racers inside that window could
-    *     both "commit", silently losing one update.)
-    *   - HDFS: exclusive create (CreateFlag.CREATE alone) — atomic in
-    *     the namenode.
-    *   - object stores: the connector must map exclusive create to a
-    *     conditional PUT (If-None-Match). A store whose connector
-    *     emulates it with exists-then-put does NOT give this table
-    *     serializable commits — that is the documented contract. */
-  private def tryCreateAtomic(ctx: FileContext, dest: Path, content: String): Boolean = {
-    val scheme = dest.toUri.getScheme
-    if (scheme == null || scheme == "file") {
-      import java.nio.file.{Files, Paths, FileAlreadyExistsException => NioExists}
-      val d = Paths.get(dest.toUri.getPath)
-      Files.createDirectories(d.getParent)
-      val tmp = d.resolveSibling(
-        s".${d.getFileName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.write(tmp, content.getBytes(UTF_8))
-      try { Files.createLink(d, tmp); true }
-      catch { case _: NioExists => false }
-      finally { Files.deleteIfExists(tmp); () }
-    } else {
-      try {
-        val out = ctx.create(dest,
-          java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE),
-          Options.CreateOpts.createParent())
-        try out.write(content.getBytes(UTF_8)) finally out.close()
-        true
-      } catch {
-        case _: FileAlreadyExistsException | _: org.apache.hadoop.fs.PathExistsException =>
-          false
-      }
-    }
-  }
-
-  /** Jittered exponential backoff between CAS attempts: under N-writer
-    * contention the retries de-synchronize instead of stampeding the
-    * next version's manifest (each loser otherwise re-reads state and
-    * re-CASes in lockstep, and one writer can starve). Caps at ~128 ms
-    * — commit latency stays interactive. */
-  private def backoff(attempt: Int): Unit =
-    if (attempt > 0) {
-      val cap = math.min(128L, 2L << math.min(attempt, 6))
-      Thread.sleep(
-        java.util.concurrent.ThreadLocalRandom.current().nextLong(cap / 2, cap + 1))
-    }
-
-  private def writePointer(ctx: FileContext, table: String, v: Long): Unit =
-    try {
-      val out = ctx.create(new Path(table, PointerName),
-        java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-          org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-        Options.CreateOpts.createParent())
-      try out.write(v.toString.getBytes(UTF_8)) finally out.close()
-    } catch { case scala.util.control.NonFatal(_) => () } // hint only
 
   /** Highest committed version, if any (manifest existence = committed).
     * With a `_latest` hint: one small GET + a handful of forward
@@ -918,6 +861,21 @@ object TxnTable {
     def bloom(f: String, c: String): Option[BloomMeta] =
       blooms.getOrElse(f, Nil).find(_.col == c)
     def bloomCols: Set[String] = blooms.values.flatten.map(_.col).toSet
+    /** This snapshot — refusing a table with no commits yet. */
+    def present(table: String): State =
+      if (version > 0L) this
+      else throw new IllegalStateException(s"no committed version in $table")
+    def schemaOf(table: String): StructType = schema.getOrElse(
+      throw new IllegalStateException(s"$table predates the schema log"))
+    /** Does an in-place-converted file survive once `removed` leaves?
+      * The `#pathpart` flag is sticky only while one does. */
+    def keepsAdopted(removed: Set[String]): Boolean =
+      pathpart && files.exists(f => !f.startsWith("w=") && !removed(f))
+  }
+
+  private object State {
+    /** The snapshot of a table with no commits: version 0, nothing. */
+    val empty: State = State(0L, Map.empty, Nil, None, Map.empty)
   }
 
   private def enc(s: String): String =
@@ -992,9 +950,9 @@ object TxnTable {
     * (checkpoint) manifest — at most checkpointInterval-1 hops, each a
     * small GET — then replay the delta chain forward: removals drop
     * files (and their stats), additions append; schema/txn headers come
-    * from v's own manifest (every manifest carries them in full). The
-    * commit loop therefore reads O(interval) small objects per attempt
-    * regardless of table history length. */
+    * from v's own manifest (every manifest carries them in full). A
+    * commit try therefore reads O(interval) small objects regardless of
+    * table history length. */
   /** Parsed-snapshot cache: a committed version's State is IMMUTABLE
     * (manifests are write-once; a delta's chain below it cannot change
     * without a new version), so (manifest path, length, mtime) is a
@@ -1037,37 +995,49 @@ object TxnTable {
         "full base manifest (vacuumed too aggressively?)")
       lines = manifestLines(spark, table, cur)
     }
-    val (baseHeaders, baseFileLines) = lines.partition(_.startsWith("#"))
-    val baseParsed = baseFileLines.map(parseFileLine)
-    var files = baseParsed.map(_._1)
-    var stats = parseStats(baseHeaders)
-    var blooms = parseBlooms(baseHeaders)
-    var rows = baseParsed.collect { case (f, Some(n)) => f -> n }.toMap
-    var dels = parseDels(baseHeaders)
-    var addv = parseAddv(baseHeaders)
-    var headOf = baseHeaders
     // a delta's added files were added AT the delta's own version —
     // recorded implicitly by chain position, never as #addv lines
-    var deltaV = cur + 1L
-    for (delta <- chain) {
-      val (dh, df) = delta.partition(_.startsWith("#"))
-      val removed = df.filter(_.startsWith(RemovePrefix))
-        .map(_.stripPrefix(RemovePrefix)).toSet
-      val added = df.filter(_.startsWith(AddPrefix))
-        .map(l => parseFileLine(l.stripPrefix(AddPrefix)))
-      files = files.filterNot(removed) ++ added.map(_._1)
-      stats = (stats -- removed) ++ parseStats(dh)
-      blooms = (blooms -- removed) ++ parseBlooms(dh)
-      rows = (rows -- removed) ++ added.collect { case (f, Some(n)) => f -> n }
-      dels = dels ++ parseDels(dh)
-      addv = (addv -- removed) ++ added.map(_._1 -> deltaV).toMap
-      headOf = dh
-      deltaV += 1L
+    chain.foldLeft(parseFull(lines, cur)) { (st, delta) =>
+      parseDelta(delta).applyTo(st, st.version + 1L)
     }
-    State(v, parseTxns(headOf), files, parseSchema(headOf), stats, blooms, rows,
-      parsePartCols(headOf), parseCdf(headOf), parseMor(headOf), dels, addv,
-      parseChecks(headOf), parseRetired(headOf), parsePathPart(headOf),
-      parseAliases(headOf), parseProps(headOf))
+  }
+
+  /** Snapshot-wide header fields of one manifest, full or delta — every
+    * manifest carries them in full, so they REPLACE the prior state's. */
+  private def parseHeader(headers: Seq[String]): State => State =
+    _.copy(txns = parseTxns(headers), schema = parseSchema(headers),
+      partCols = parsePartCols(headers), cdf = parseCdf(headers),
+      mor = parseMor(headers), checks = parseChecks(headers),
+      retired = parseRetired(headers), pathpart = parsePathPart(headers),
+      aliases = parseAliases(headers), props = parseProps(headers))
+
+  private def parseFull(lines: Seq[String], v: Long): State = {
+    val (headers, fileLines) = lines.partition(_.startsWith("#"))
+    val parsed = fileLines.map(parseFileLine)
+    parseHeader(headers)(State.empty.copy(version = v,
+      files = parsed.map(_._1), stats = parseStats(headers),
+      blooms = parseBlooms(headers),
+      rows = parsed.collect { case (f, Some(n)) => f -> n }.toMap,
+      dels = parseDels(headers), addv = parseAddv(headers)))
+  }
+
+  /** A `#delta=` manifest as the [[Change]] that wrote it (its
+    * commit-scoped change-feed lines do not enter snapshot state). */
+  private def parseDelta(lines: Seq[String]): Change = {
+    val (headers, body) = lines.partition(_.startsWith("#"))
+    val added = body.filter(_.startsWith(AddPrefix))
+      .map(l => parseFileLine(l.stripPrefix(AddPrefix)))
+    Change(
+      op = headers.find(_.startsWith(OpPrefix))
+        .fold("")(_.stripPrefix(OpPrefix)),
+      added = added.map(_._1),
+      stats = parseStats(headers),
+      blooms = parseBlooms(headers),
+      rows = added.collect { case (f, Some(n)) => f -> n }.toMap,
+      removed = body.filter(_.startsWith(RemovePrefix))
+        .map(_.stripPrefix(RemovePrefix)),
+      dels = parseDels(headers),
+      header = parseHeader(headers))
   }
 
   private def parsePartCols(headers: Seq[String]): Seq[String] =
@@ -1184,6 +1154,9 @@ object TxnTable {
 
   private def latestState(spark: SparkSession, table: String): Option[State] =
     latestVersion(spark, table).map(stateOf(spark, table, _))
+
+  private def latestOrEmpty(spark: SparkSession, table: String): State =
+    latestState(spark, table).getOrElse(State.empty)
 
   /** Declared partition columns of the latest snapshot (empty for an
     * unpartitioned or uncommitted table). */
@@ -1408,7 +1381,7 @@ object TxnTable {
     val df = declared.filter(FieldIds.hasIds)
       .map(FieldIds.stamp(df0, _)).getOrElse(df0)
     val spark = df.sparkSession
-    val dataDir = s"w=${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+    val dataDir = freshDir()
     // PARTITIONED WRITE: hive-style value dirs inside this commit's data
     // dir, so each file holds exactly ONE partition value. The partition
     // column is DUPLICATED into a `__gp_<col>` directory column (hive
@@ -1883,63 +1856,195 @@ object TxnTable {
     }
   }
 
-  /** Write `changes` (table columns + [[ChangeTypeCol]]) as this commit's
-    * eager change files, nested under the commit's own data dir
-    * (`<dataDir>/_cdc/` — the `_` prefix keeps them out of every data
-    * read, and they share the data dir's lifecycle: a discarded CAS
-    * loser takes its change files with it). Returns the table-relative
-    * paths for the `#cdc=` manifest lines. */
-  private def writeChangeData(changes: DataFrame, table: String,
-                              dataDir: String): Seq[String] = {
-    changes.write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$dataDir/_cdc")
-    val ctx = fc(changes.sparkSession)
+  /** A fresh writer-unique data dir name: two racing writers can never
+    * clobber each other's files. */
+  private def freshDir(): String =
+    s"w=${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+
+  /** Write `df` under `<dataDir>/<sub>/` and return its table-relative
+    * parquet files. The `_`-prefixed `sub` keeps the files out of every
+    * data read, and they share the data dir's lifecycle (a discarded CAS
+    * loser takes them with it): `_cdc` holds a commit's eager change
+    * files (`#cdc=` lines), `_del` its delete sidecars (`#del=`). */
+  private def writeUnder(df: DataFrame, table: String, dataDir: String,
+                         sub: String): Seq[String] = {
+    df.write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$dataDir/$sub")
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = ctx.listStatus(new Path(s"$table/$dataDir/_cdc"))
+    val it = fc(df.sparkSession).listStatus(new Path(s"$table/$dataDir/$sub"))
     while (it.hasNext) {
       val st = it.next()
       val n = st.getPath.getName
       if (!st.isDirectory && n.endsWith(".parquet"))
-        buf += s"$dataDir/_cdc/$n"
+        buf += s"$dataDir/$sub/$n"
     }
     buf.sorted.toSeq
   }
+
+  private def writeChangeData(changes: DataFrame, table: String,
+                              dataDir: String): Seq[String] =
+    writeUnder(changes, table, dataDir, "_cdc")
 
   private def partColsLine(partCols: Seq[String]): Seq[String] =
     if (partCols.isEmpty) Nil
     else Seq(s"$PartPrefix${partCols.map(enc).mkString(",")}")
 
-  private def manifestContent(
-      schema: org.apache.spark.sql.types.StructType,
-      txns: Map[String, Long],
-      stats: Map[String, Seq[FileStat]],
-      files: Seq[String],
+  /** One commit, described by what it changes: the unit [[Log.commit]]
+    * renders, and what a `#delta=` manifest parses back into — so the
+    * writer and [[computeState]] derive the next snapshot through the
+    * SAME [[applyTo]].
+    *   - `header` updates snapshot-wide state: schema, txn markers,
+    *     checks, props, retired names, aliases, partition spec and the
+    *     cdf/mor/pathpart flags. Sticky fields carry forward because
+    *     the header starts from the base snapshot.
+    *   - the file fields are the data-layout diff: `added` files (with
+    *     their `stats`/`blooms`/`rows`), `removed` files, new `dels`.
+    *   - `cdc`/`cdcDel` are commit-scoped change-feed lines.
+    *   - `checkpoint` forces a full manifest. A delta can only add and
+    *     remove files and add deletes, so a change whose header also
+    *     rewrites the layout (restore, vector coalesce, ALTER dropping
+    *     stats) must set it; the renderer refuses otherwise.
+    *   - `prune`: a full manifest of this change drops delete entries
+    *     that no surviving file is gated by (the commit that rewrote or
+    *     replaced their files materialized them). */
+  private final case class Change(
+      op: String,
+      added: Seq[String] = Nil,
+      stats: Map[String, Seq[FileStat]] = Map.empty,
       blooms: Map[String, Seq[BloomMeta]] = Map.empty,
       rows: Map[String, Long] = Map.empty,
-      partCols: Seq[String] = Nil,
-      op: String = "append",
-      cdf: Boolean = false,
-      cdcAdd: Seq[String] = Nil,
-      cdcDel: Seq[String] = Nil,
-      mor: Boolean = false,
+      removed: Seq[String] = Nil,
       dels: Seq[DelMeta] = Nil,
-      addv: Map[String, Long] = Map.empty,
-      checks: Map[String, String] = Map.empty,
-      retired: Seq[String] = Nil,
-      pathpart: Boolean = false,
-      aliases: Map[String, Seq[String]] = Map.empty,
-      props: Map[String, String] = Map.empty): String = {
-    val filesSet = files.toSet
-    (Seq(s"$SchemaPrefix${schema.json}",
-      s"$TsPrefix${System.currentTimeMillis()}",
-      s"$OpPrefix$op") ++
-      (if (cdf) Seq(s"${CdfPrefix}true") else Nil) ++
-      (if (mor) Seq(s"${MorPrefix}true") else Nil) ++
-      (if (pathpart) Seq(s"${PathPartPrefix}true") else Nil) ++
-      checkLines(checks) ++
-      propLines(props) ++
-      retiredLine(retired) ++
-      aliasLines(aliases) ++
-      dels.map(delLine) ++
+      cdc: Seq[String] = Nil,
+      cdcDel: Seq[String] = Nil,
+      header: State => State = identity,
+      checkpoint: Boolean = false,
+      prune: Boolean = false) {
+    /** The snapshot this change produces on `base` as `version`. */
+    def applyTo(base: State, version: Long): State = layout(header(base), version)
+
+    private[TxnTable] def layout(h: State, version: Long): State = {
+      val gone = removed.toSet
+      h.copy(version = version,
+        files = (if (gone.isEmpty) h.files else h.files.filterNot(gone)) ++ added,
+        stats = (h.stats -- removed) ++ stats,
+        blooms = (h.blooms -- removed) ++ blooms,
+        rows = (h.rows -- removed) ++ rows,
+        dels = h.dels ++ dels,
+        // an added file's add version IS the commit's version — a delta
+        // records it implicitly by its position in the chain
+        addv = (h.addv -- removed) ++ added.map(_ -> version))
+    }
+  }
+
+  /** What an op's `plan` decides for one commit try. */
+  private sealed trait Attempt
+  /** CAS `change` on top of the snapshot the plan was handed. `dirs` are
+    * the data dirs the op wrote for it; `rebases` is the op's rule for a
+    * lost CAS: true when the written output is still exact on the fresh
+    * snapshot (the change re-publishes as is — its header re-derives
+    * against that snapshot), false when the dirs must go and the plan
+    * recompute. */
+  private final case class Publish(change: Change, dirs: Seq[String] = Nil,
+      rebases: State => Boolean = _ => false) extends Attempt
+  /** Nothing to commit (a replay, a provable no-op, or work another
+    * path committed): the op's result is `version`. */
+  private final case class Done(version: Long) extends Attempt
+
+  /** THE COMMIT PROTOCOL — the only code that creates manifests. Its
+    * CAS seam, pointer write, backoff and renderer are private to this
+    * object, so a commit path written anywhere else in TxnTable does
+    * not compile: every op goes through [[commit]], and only a new
+    * table's first manifest (or a staged one) through [[create]]. */
+  private object Log {
+    /** CAS tries one commit may lose before it gives up. */
+    private val Budget = 64
+
+    /** Commit one op: read the latest snapshot, let `plan` turn it into
+      * a [[Publish]] (or settle with [[Done]]), render the next
+      * manifest, exclusive-create it, publish the pointer hint. On a
+      * lost CAS, back off and re-read: if the op's `rebases` rule
+      * accepts the fresh snapshot, the same change re-publishes on it;
+      * otherwise its data dirs are dropped and `plan` recomputes from
+      * the fresh snapshot. Every CAS try counts against one budget.
+      * `first` seeds the first try with a snapshot the op already read
+      * (an empty table is [[State.empty]]). */
+    def commit(spark: SparkSession, table: String, op: String,
+               first: Option[State] = None)(plan: State => Attempt): Long = {
+      val ctx = fc(spark)
+      def drop(p: Publish): Unit =
+        p.dirs.foreach(d => ctx.delete(new Path(s"$table/$d"), true))
+      @annotation.tailrec
+      def attempt(base: State, lost: Int, held: Option[Publish]): Long =
+        held.filter(_.rebases(base)).getOrElse {
+          held.foreach(drop)
+          plan(base)
+        } match {
+          case Done(v) => v
+          case p: Publish =>
+            val v = base.version + 1L
+            if (tryCreateAtomic(ctx, new Path(table, manifestName(v)),
+                render(spark, table, base, p.change, v))) {
+              writePointer(ctx, table, v)
+              v
+            } else if (lost + 1 >= Budget) {
+              drop(p)
+              throw new IllegalStateException(
+                s"$op on $table lost the manifest race ${lost + 1} times — " +
+                  "pathological contention")
+            } else {
+              backoff(lost + 1)
+              attempt(latestOrEmpty(spark, table), lost + 1, Some(p))
+            }
+        }
+      attempt(first.getOrElse(latestOrEmpty(spark, table)), 0, None)
+    }
+
+    /** Exclusive-create `dest` holding snapshot `s` as a FULL manifest
+      * labelled `op`: a new table's version 1 (clones, CREATE LIKE,
+      * CONVERT — then [[repoint]] it) or a staged commit outside the
+      * version chain. False when `dest` already exists. */
+    def create(spark: SparkSession, dest: Path, s: State, op: String): Boolean =
+      tryCreateAtomic(fc(spark), dest,
+        text(dest.toString, s, Change(op), deltaOf = None))
+
+    /** Best-effort `_latest` hint write — never part of the CAS. */
+    def repoint(ctx: FileContext, table: String, v: Long): Unit =
+      writePointer(ctx, table, v)
+
+    /** The manifest for committing `c` on `base` as version `v`: FULL for
+      * a table's first commit, every `graft.txn.checkpointInterval`-th
+      * version and a `checkpoint` change; otherwise the O(change) delta,
+      * which [[computeState]] replays through the same `applyTo`. */
+    private def render(spark: SparkSession, table: String, base: State,
+                       c: Change, v: Long): String = {
+      val h = c.header(base)
+      if (c.checkpoint || base.version == 0L ||
+          v % checkpointInterval(spark) == 0L)
+        text(table, c.layout(h, v), c, deltaOf = None)
+      else {
+        require((h.files eq base.files) && (h.stats eq base.stats) &&
+          (h.blooms eq base.blooms) && (h.rows eq base.rows) &&
+          (h.dels eq base.dels) && (h.addv eq base.addv),
+          s"${c.op} rewrites the data layout in its header — a delta " +
+            "cannot express that; mark the change checkpoint")
+        text(table, h, c, deltaOf = Some(base.version))
+      }
+    }
+
+    /** Full manifest of snapshot `s` (deltaOf None), or the delta of `c`
+      * on version `deltaOf` under `s`'s header fields. Both share one
+      * line order: headers, deletes, change files, partition spec, txn
+      * markers, stats, blooms, files. */
+    private def text(table: String, s: State, c: Change,
+                     deltaOf: Option[Long]): String = {
+      val schema = s.schemaOf(table)
+      val full = deltaOf.isEmpty
+      lazy val filesSet = s.files.toSet
+      val dels =
+        if (!full) c.dels
+        else if (c.prune)
+          s.dels.filter(d => s.files.exists(f => d.gates(f, s.addv.getOrElse(f, 0L))))
+        else s.dels
       // add-version lines exist to gate equality deletes AND the
       // nested-default existence fill; on a table using neither they
       // are O(files) dead weight per checkpoint (500 appends ≈ +45 KB
@@ -1951,68 +2056,102 @@ object TxnTable {
       // CORRECTNESS bug: a full manifest (overwrite/compact/restore)
       // dropping addv resets every file to vintage 0, and the read-time
       // fill would overwrite post-declaration files' real values.
-      (if (mor || dels.nonEmpty ||
-           nestedDefaults(schema).exists(nd =>
-             nd.existsSql.isDefined && nd.sinceV > 0L))
-        addvLines(addv, filesSet) else Nil) ++
-      cdcAdd.map(CdcPrefix + _) ++
-      cdcDel.map(CdcDelPrefix + _) ++
-      partColsLine(partCols) ++
-      txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a:$b" } ++
-      stats.toSeq.filter(kv => filesSet(kv._1)).sortBy(_._1).flatMap { case (f, ss) =>
-        ss.map(s => statLine(f, s)) } ++
-      blooms.toSeq.filter(kv => filesSet(kv._1)).sortBy(_._1).flatMap { case (f, bs) =>
-        bs.map(b => bloomLine(f, b)) } ++
-      files.map(f => fileLine(f, rows)))
-      .mkString("\n")
-  }
+      val addv =
+        if (full && (s.mor || dels.nonEmpty ||
+            nestedDefaults(schema).exists(nd =>
+              nd.existsSql.isDefined && nd.sinceV > 0L)))
+          addvLines(s.addv, filesSet)
+        else Nil
+      val (stats, blooms) =
+        if (full) (s.stats.filter(kv => filesSet(kv._1)),
+          s.blooms.filter(kv => filesSet(kv._1)))
+        else (c.stats, c.blooms)
+      val fileLines =
+        if (full) s.files.map(fileLine(_, s.rows))
+        else c.removed.map(RemovePrefix + _) ++
+          c.added.map(f => AddPrefix + fileLine(f, c.rows))
+      def flag(prefix: String, on: Boolean) =
+        if (on) Seq(s"${prefix}true") else Nil
+      (deltaOf.map(b => s"$DeltaPrefix$b").toSeq ++
+        Seq(s"$SchemaPrefix${schema.json}",
+          s"$TsPrefix${System.currentTimeMillis()}", s"$OpPrefix${c.op}") ++
+        flag(CdfPrefix, s.cdf) ++ flag(MorPrefix, s.mor) ++
+        flag(PathPartPrefix, s.pathpart) ++
+        checkLines(s.checks) ++ propLines(s.props) ++
+        retiredLine(s.retired) ++ aliasLines(s.aliases) ++
+        dels.map(delLine) ++ addv ++
+        c.cdc.map(CdcPrefix + _) ++ c.cdcDel.map(CdcDelPrefix + _) ++
+        partColsLine(s.partCols) ++
+        s.txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a:$b" } ++
+        stats.toSeq.sortBy(_._1).flatMap { case (f, ss) => ss.map(statLine(f, _)) } ++
+        blooms.toSeq.sortBy(_._1).flatMap { case (f, bs) => bs.map(bloomLine(f, _)) } ++
+        fileLines).mkString("\n")
+    }
 
-  /** O(change) commit record: full schema/txn headers (small), stats,
-    * bloom metas, and row counts for the new files only, then
-    * removal/addition lines. */
-  private def deltaContent(
-      schema: org.apache.spark.sql.types.StructType,
-      txns: Map[String, Long],
-      newStats: Map[String, Seq[FileStat]],
-      removed: Seq[String],
-      added: Seq[String],
-      base: Long,
-      newBlooms: Map[String, Seq[BloomMeta]] = Map.empty,
-      newRows: Map[String, Long] = Map.empty,
-      partCols: Seq[String] = Nil,
-      op: String = "append",
-      cdf: Boolean = false,
-      cdcAdd: Seq[String] = Nil,
-      cdcDel: Seq[String] = Nil,
-      mor: Boolean = false,
-      newDels: Seq[DelMeta] = Nil,
-      checks: Map[String, String] = Map.empty,
-      retired: Seq[String] = Nil,
-      pathpart: Boolean = false,
-      aliases: Map[String, Seq[String]] = Map.empty,
-      props: Map[String, String] = Map.empty): String =
-    (Seq(s"$DeltaPrefix$base", s"$SchemaPrefix${schema.json}",
-      s"$TsPrefix${System.currentTimeMillis()}",
-      s"$OpPrefix$op") ++
-      (if (cdf) Seq(s"${CdfPrefix}true") else Nil) ++
-      (if (mor) Seq(s"${MorPrefix}true") else Nil) ++
-      (if (pathpart) Seq(s"${PathPartPrefix}true") else Nil) ++
-      checkLines(checks) ++
-      propLines(props) ++
-      retiredLine(retired) ++
-      aliasLines(aliases) ++
-      newDels.map(delLine) ++
-      cdcAdd.map(CdcPrefix + _) ++
-      cdcDel.map(CdcDelPrefix + _) ++
-      partColsLine(partCols) ++
-      txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a:$b" } ++
-      newStats.toSeq.sortBy(_._1).flatMap { case (f, ss) =>
-        ss.map(s => statLine(f, s)) } ++
-      newBlooms.toSeq.sortBy(_._1).flatMap { case (f, bs) =>
-        bs.map(b => bloomLine(f, b)) } ++
-      removed.map(RemovePrefix + _) ++
-      added.map(f => AddPrefix + fileLine(f, newRows)))
-      .mkString("\n")
+    /** Publish `content` at `dest` iff `dest` does not exist. Returns
+      * false (leaving `dest` untouched) on the lost-the-race signal.
+      *
+      * The CAS seam, per filesystem:
+      *   - local/raw FS: write a temp file, then `link(2)` it to `dest` —
+      *     hard-link creation is KERNEL-atomic and fails with EEXIST, so
+      *     exactly one racer wins AND readers only ever see the full
+      *     content. (The previous rename-without-overwrite was NOT a CAS
+      *     here: FileContext emulates the no-overwrite check as
+      *     exists-then-rename, and two racers inside that window could
+      *     both "commit", silently losing one update.)
+      *   - HDFS: exclusive create (CreateFlag.CREATE alone) — atomic in
+      *     the namenode.
+      *   - object stores: the connector must map exclusive create to a
+      *     conditional PUT (If-None-Match). A store whose connector
+      *     emulates it with exists-then-put does NOT give this table
+      *     serializable commits — that is the documented contract. */
+    private def tryCreateAtomic(ctx: FileContext, dest: Path, content: String): Boolean = {
+      val scheme = dest.toUri.getScheme
+      if (scheme == null || scheme == "file") {
+        import java.nio.file.{Files, Paths, FileAlreadyExistsException => NioExists}
+        val d = Paths.get(dest.toUri.getPath)
+        Files.createDirectories(d.getParent)
+        val tmp = d.resolveSibling(
+          s".${d.getFileName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
+        Files.write(tmp, content.getBytes(UTF_8))
+        try { Files.createLink(d, tmp); true }
+        catch { case _: NioExists => false }
+        finally { Files.deleteIfExists(tmp); () }
+      } else {
+        try {
+          val out = ctx.create(dest,
+            java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE),
+            Options.CreateOpts.createParent())
+          try out.write(content.getBytes(UTF_8)) finally out.close()
+          true
+        } catch {
+          case _: FileAlreadyExistsException | _: org.apache.hadoop.fs.PathExistsException =>
+            false
+        }
+      }
+    }
+
+    /** Jittered exponential backoff between CAS attempts: under N-writer
+      * contention the retries de-synchronize instead of stampeding the
+      * next version's manifest (each loser otherwise re-reads state and
+      * re-CASes in lockstep, and one writer can starve). Caps at ~128 ms
+      * — commit latency stays interactive. */
+    private def backoff(attempt: Int): Unit =
+      if (attempt > 0) {
+        val cap = math.min(128L, 2L << math.min(attempt, 6))
+        Thread.sleep(
+          java.util.concurrent.ThreadLocalRandom.current().nextLong(cap / 2, cap + 1))
+      }
+
+    private def writePointer(ctx: FileContext, table: String, v: Long): Unit =
+      try {
+        val out = ctx.create(new Path(table, PointerName),
+          java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
+            org.apache.hadoop.fs.CreateFlag.OVERWRITE),
+          Options.CreateOpts.createParent())
+        try out.write(v.toString.getBytes(UTF_8)) finally out.close()
+      } catch { case scala.util.control.NonFatal(_) => () } // hint only
+  }
 
   /** Diagnostic for specs/ops: (manifests read, log bytes read) to
     * resolve snapshot `v` — proves state resolution is bounded by the
@@ -2273,7 +2412,7 @@ object TxnTable {
           s"column $dotted already exists in $table")
         StructType(inner.fields :+ stamped)
       }
-      (ns, st.stats, st.blooms, st.checks, st.retired)
+      st.copy(schema = Some(ns))
     }
 
   /** `ALTER TABLE … ADD COLUMN name dt DEFAULT defaultSql` — pure
@@ -2304,8 +2443,8 @@ object TxnTable {
       val folded = org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
         .constantFoldCurrentDefaultsToExistDefaults(
           declared, "ALTER TABLE ADD COLUMNS")
-      (org.apache.spark.sql.types.StructType(schema.fields ++ folded.fields),
-       st.stats, st.blooms, st.checks, st.retired)
+      st.copy(schema = Some(org.apache.spark.sql.types.StructType(
+        schema.fields ++ folded.fields)))
     }
 
   /** `ALTER TABLE … ALTER COLUMN name SET DEFAULT sql` / `DROP
@@ -2349,7 +2488,7 @@ object TxnTable {
           StructType(inner.fields.map(x =>
             if (x.name.equalsIgnoreCase(parts.last)) patched else x))
         }
-        (ns, st.stats, st.blooms, st.checks, st.retired)
+        st.copy(schema = Some(ns))
       } else {
       val field = schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
         throw new IllegalArgumentException(s"no such column $name in $table"))
@@ -2371,9 +2510,8 @@ object TxnTable {
           field.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
             .withMetadata(field.metadata).remove(CurDefaultKey).build())
       }
-      (org.apache.spark.sql.types.StructType(schema.fields.map(f =>
-        if (f.name.equalsIgnoreCase(name)) patched else f)),
-       st.stats, st.blooms, st.checks, st.retired)
+      st.copy(schema = Some(org.apache.spark.sql.types.StructType(
+        schema.fields.map(f => if (f.name.equalsIgnoreCase(name)) patched else f))))
       }
     }
 
@@ -2563,17 +2701,15 @@ object TxnTable {
                      optimizedWrite: Boolean = false): Long = {
     val op = opLabel.getOrElse(if (append) "append" else "overwrite")
     val spark = df.sparkSession
-    val ctx = fc(spark)
-    def applied(state: Option[State]): Boolean =
-      txn.exists { case (appId, batchId) =>
-        state.exists(_.txns.get(appId).exists(_ >= batchId)) }
+    def applied(st: State): Boolean =
+      txn.exists { case (appId, batchId) => st.txns.get(appId).exists(_ >= batchId) }
     // replay fast-path: skip the data write entirely
-    var state = latestState(spark, table)
-    if (applied(state)) return state.get.version
+    val state = latestOrEmpty(spark, table)
+    if (applied(state)) return state.version
     // fail-fast schema validation: an incompatible append should throw
     // BEFORE materializing data files, leaving no orphan dir (a
     // concurrent evolution can still surface it inside the loop)
-    if (append) state.flatMap(_.schema)
+    if (append) state.schema
       .foreach(org.apache.spark.sql.GraftBridge.mergeSchemas(_, df.schema))
     val maintenanceOps = Set("compact", "zorder", "alter-rename")
     // GENERATED columns: on append the definitions come from the
@@ -2586,16 +2722,14 @@ object TxnTable {
     val genDefs: Map[String, String] =
       if (maintenanceOps(op)) Map.empty
       else if (append)
-        state.flatMap(_.schema).map(generatedColumns)
-          .getOrElse(generatedColumns(df.schema))
+        state.schema.map(generatedColumns).getOrElse(generatedColumns(df.schema))
       else generatedColumns(df.schema)
     // DEFAULT columns fill the same way (before the constraint gate);
     // appends read declarations from the snapshot schema
     val defDefs =
       if (maintenanceOps(op)) Nil
       else if (append)
-        state.flatMap(_.schema).map(defaultColumns)
-          .getOrElse(defaultColumns(df.schema))
+        state.schema.map(defaultColumns).getOrElse(defaultColumns(df.schema))
       else defaultColumns(df.schema)
     val dfd = if (defDefs.isEmpty) df else applyDefaults(df, defDefs)
     // NESTED declared defaults fill the same way: a frame whose struct
@@ -2605,8 +2739,7 @@ object TxnTable {
     // vintages
     val ndefDefs =
       if (maintenanceOps(op)) Nil
-      else if (append)
-        state.flatMap(_.schema).map(nestedDefaults).getOrElse(Nil)
+      else if (append) state.schema.map(nestedDefaults).getOrElse(Nil)
       else nestedDefaults(df.schema)
     val dfn =
       if (ndefDefs.isEmpty) dfd else applyNestedDefaults(dfd, ndefDefs)
@@ -2619,8 +2752,7 @@ object TxnTable {
     // that already passed the gate at their originating commit, so they
     // skip the re-scan — same as Delta, which doesn't re-validate on
     // OPTIMIZE.
-    if (!maintenanceOps(op))
-      state.map(_.checks).foreach(enforceChecks(dfg, table, _))
+    if (!maintenanceOps(op)) enforceChecks(dfg, table, state.checks)
     // the generation SOURCE columns join the stats set: a predicate on
     // the source (e.g. the raw timestamp behind a generated date
     // partition) then prunes files through ordinary stats skipping —
@@ -2637,216 +2769,149 @@ object TxnTable {
     // Maintenance rewrites carry already-assigned rows untouched.
     val idDef: Option[IdentityDef] =
       if (maintenanceOps(op)) None
-      else if (append) state.flatMap(_.schema).flatMap(identityColumn)
+      else if (append) state.schema.flatMap(identityColumn)
       else identityColumn(dfg.schema)
     if (append) idDef.foreach { d =>
       require(!dfg.columns.exists(_.equalsIgnoreCase(d.col)),
         s"IDENTITY column ${d.col} of $table is GENERATED ALWAYS — " +
           "appends cannot supply it")
     }
-    // hwm base this attempt's values were assigned from; a CAS loser
-    // that observes an ADVANCED hwm re-materializes (below) so two
-    // racing identity appends can never hand out the same value
-    var idBase = 0L
-    def assignIdentity(st: Option[State]): DataFrame = idDef match {
-      case Some(d) if append =>
-        idBase = st.flatMap(_.schema).flatMap(identityColumn)
-          .flatMap(_.hwm).getOrElse(d.start - d.step)
-        assignSequential(dfg, d.col, idBase + d.step, d.step)._1
-      case _ => dfg
-    }
+    def hwmOf(st: State, d: IdentityDef): Long =
+      st.schema.flatMap(identityColumn).flatMap(_.hwm).getOrElse(d.start - d.step)
     // partitioning is STICKY: an explicit spec wins (and re-partitions
-    // the table on overwrite); otherwise appends conform to the prior
-    // snapshot's recorded partition columns automatically. Partition
-    // columns always join the stats set — single-valued files make the
-    // stats machinery do exact partition pruning.
-    val partCols =
-      if (partitionCols.nonEmpty) partitionCols
-      else state.map(_.partCols).getOrElse(Nil)
-    val allStatsCols =
-      (statsCols ++ partCols.map(partSource) ++ genStatCols ++
-        idDef.map(_.col).toSeq).distinct
+    // the table on overwrite); otherwise appends AND implicit-spec
+    // overwrites conform to the snapshot's recorded partition columns.
+    // Partition columns always join the stats set — single-valued files
+    // make the stats machinery do exact partition pruning.
+    def specOf(st: State): Seq[String] =
+      if (partitionCols.nonEmpty) partitionCols else st.partCols
     // FIELD-ID MODE (parquet column mapping): active when the prior
     // snapshot's schema carries ids, or the creating frame opted in
     // (withFieldIds / the catalog's TBLPROPERTIES spelling). Enablement
     // is creation-only: files written before it carry no ids and would
     // serve all-NULL under id resolution.
-    val priorHasIds = state.flatMap(_.schema).exists(FieldIds.hasIds)
+    val priorHasIds = state.schema.exists(FieldIds.hasIds)
     val idMode = priorHasIds || FieldIds.hasIds(df.schema)
     if (FieldIds.hasIds(df.schema) && !priorHasIds)
-      state.foreach(s => require(s.files.isEmpty,
+      require(state.files.isEmpty,
         s"$table already holds files written without field ids — " +
           "column-mapping mode 'id' can only be declared while the " +
-          "table has no files"))
-    // the (prior idMap, never-reuse floor) this attempt assigned ids
-    // from — a CAS loser whose winner evolved the schema re-mints
-    // against the fresh snapshot, so two racing evolutions can never
-    // publish files whose bytes claim the same id for different columns
-    def idSigOf(st: Option[State]) =
-      (st.flatMap(_.schema).filter(FieldIds.hasIds).map(FieldIds.idMap),
-        FieldIds.floorOf(st.map(_.retired).getOrElse(Nil)))
-    var idSig = idSigOf(state)
-    // the frame an attempt writes: identity values assigned above the
-    // observed hwm, then — in id mode — every field (including brand-new
-    // evolved columns) stamped with its id so the parquet writer bakes
-    // them into the files; the recorded schema below carries the SAME
-    // ids because StructType.merge preserves field metadata
-    def shape(st: Option[State]): DataFrame = {
-      val d = assignIdentity(st)
-      if (!idMode) d
-      else FieldIds.stamp(d, FieldIds.assign(
-        st.flatMap(_.schema).filter(FieldIds.hasIds), d.schema,
-        FieldIds.floorOf(st.map(_.retired).getOrElse(Nil))))
-    }
-    var dfw = shape(state)
-    var (dataDir, newFiles, newStats, newBlooms, newRows) =
-      writeData(dfw, table, allStatsCols, bloomCols, partCols, optimizedWrite)
-    var attempt = 0
-    while (attempt < 64) {
-      if (applied(state)) { // raced with a replica of the same batch
-        ctx.delete(new Path(s"$table/$dataDir"), true)
-        return state.get.version
+          "table has no files")
+    // the (prior idMap, never-reuse floor) an attempt assigned ids from
+    // — a CAS loser whose winner evolved the schema re-mints against
+    // the fresh snapshot, so two racing evolutions can never publish
+    // files whose bytes claim the same id for different columns
+    def idSigOf(st: State) =
+      (st.schema.filter(FieldIds.hasIds).map(FieldIds.idMap),
+        FieldIds.floorOf(st.retired))
+    /** One materialization of the frame against snapshot `st`: identity
+      * values assigned above its hwm, then — in id mode — every field
+      * (including brand-new evolved columns) stamped with its id so the
+      * parquet writer bakes them into the files (the recorded schema
+      * carries the SAME ids because StructType.merge preserves field
+      * metadata), laid out under `st`'s partition spec. */
+    final case class Written(on: State, frame: DataFrame, idBase: Long,
+        dir: String, files: Seq[String], stats: Map[String, Seq[FileStat]],
+        blooms: Map[String, Seq[BloomMeta]], rows: Map[String, Long])
+    def write(st: State): Written = {
+      val (d, idBase) = idDef match {
+        case Some(i) if append =>
+          val b = hwmOf(st, i)
+          (assignSequential(dfg, i.col, b + i.step, i.step)._1, b)
+        case _ => (dfg, 0L)
       }
-      val next = state.map(_.version + 1L).getOrElse(1L)
-      val priorTxns = state.map(_.txns).getOrElse(Map.empty[String, Long])
-      val txns = priorTxns ++ txn.map { case (a, b) =>
-        a -> math.max(b, priorTxns.getOrElse(a, Long.MinValue)) } ++ extraTxns
-      val files =
-        if (append) state.map(_.files).getOrElse(Nil) ++ newFiles else newFiles
-      // STICKY spec, re-read on EVERY attempt: a partition-spec
-      // evolution landing between this commit's base snapshot and its
-      // CAS win must carry forward — recording the pre-race spec would
-      // silently REVERT the evolution (the lost-update PartEvolSpec's
-      // race test hunts). Appends AND implicit-spec overwrites both
-      // conform to the CURRENT sticky spec; only an explicit spec
-      // overrides. This commit's own files keep their at-write layout;
-      // mixed vintages are the evolution machinery's normal state, so
-      // the manifest line is pure metadata here.
-      val partColsNow =
-        if (partitionCols.nonEmpty) partitionCols
-        else state.map(_.partCols).getOrElse(Nil)
-      val stats: Map[String, Seq[FileStat]] =
-        (if (append) state.map(_.stats).getOrElse(Map.empty[String, Seq[FileStat]])
-         else Map.empty[String, Seq[FileStat]]) ++ newStats
-      val blooms: Map[String, Seq[BloomMeta]] =
-        (if (append) state.map(_.blooms).getOrElse(Map.empty[String, Seq[BloomMeta]])
-         else Map.empty[String, Seq[BloomMeta]]) ++ newBlooms
-      val rows: Map[String, Long] =
-        (if (append) state.map(_.rows).getOrElse(Map.empty[String, Long])
-         else Map.empty[String, Long]) ++ newRows
-      // snapshot schema recorded in the log (Delta-style): an APPEND
-      // merges the evolved frame's schema into the prior snapshot's —
-      // pre-evolution files surface the new column as NULL; incompatible
-      // evolution fails HERE, at commit, not at some later read
-      val mergedSchema =
-        if (append)
-          state.flatMap(_.schema)
-            .map(org.apache.spark.sql.GraftBridge.mergeSchemas(_, dfw.schema))
-            .getOrElse(org.apache.spark.sql.GraftBridge.nullableSchema(dfw.schema))
-        else org.apache.spark.sql.GraftBridge.nullableSchema(dfw.schema)
-      // the identity high-water mark commits WITH the rows that
-      // consumed it: merge keeps the PRIOR snapshot's (stale) value, so
-      // re-stamp it — appends advance by the rows just assigned,
-      // overwrites keep monotonicity across the replacement (ids are
-      // never reused even after the old rows are gone)
-      val schema = idDef match {
+      val frame =
+        if (!idMode) d
+        else FieldIds.stamp(d, FieldIds.assign(st.schema.filter(FieldIds.hasIds),
+          d.schema, FieldIds.floorOf(st.retired)))
+      val spec = specOf(st)
+      val statCols = (statsCols ++ spec.map(partSource) ++ genStatCols ++
+        idDef.map(_.col).toSeq).distinct
+      val (dir, files, stats, blooms, rows) =
+        writeData(frame, table, statCols, bloomCols, spec, optimizedWrite)
+      Written(st, frame, idBase, dir, files, stats, blooms, rows)
+    }
+    // snapshot schema recorded in the log (Delta-style): an APPEND
+    // merges the evolved frame's schema into the base snapshot's —
+    // pre-evolution files surface the new column as NULL; incompatible
+    // evolution fails HERE, at commit, not at some later read. The
+    // identity high-water mark commits WITH the rows that consumed it:
+    // merge keeps the base's (stale) value, so re-stamp it — appends
+    // advance by the rows just assigned, overwrites keep monotonicity
+    // across the replacement (ids are never reused even after the old
+    // rows are gone)
+    def schemaOn(base: State, w: Written): StructType = {
+      val merged =
+        if (append) base.schema
+          .map(org.apache.spark.sql.GraftBridge.mergeSchemas(_, w.frame.schema))
+          .getOrElse(org.apache.spark.sql.GraftBridge.nullableSchema(w.frame.schema))
+        else org.apache.spark.sql.GraftBridge.nullableSchema(w.frame.schema)
+      idDef match {
         case Some(d) =>
           val newHwm =
-            if (append) idBase + d.step * newRows.values.sum
+            if (append) w.idBase + d.step * w.rows.values.sum
             else {
-              val frameHwm = identityColumn(dfw.schema).flatMap(_.hwm)
+              val frameHwm = identityColumn(w.frame.schema).flatMap(_.hwm)
                 .getOrElse(d.start - d.step)
-              state.flatMap(_.schema).flatMap(identityColumn).flatMap(_.hwm)
+              base.schema.flatMap(identityColumn).flatMap(_.hwm)
                 .map(prior =>
                   if (d.step > 0) math.max(prior, frameHwm)
                   else math.min(prior, frameHwm))
                 .getOrElse(frameHwm)
             }
-          patchIdentityHwm(mergedSchema, d.col, newHwm)
-        case None => mergedSchema
-      }
-      // checkpoint cadence: overwrites and first commits are naturally
-      // full; appends write an O(new files) delta except every
-      // interval-th version, which rolls the chain up into a checkpoint
-      val writeFull = !append || state.isEmpty ||
-        next % checkpointInterval(spark) == 0
-      // CDF and merge-on-read enablement are STICKY: an explicit
-      // request turns them on (or off); otherwise the prior snapshot's
-      // flags carry forward
-      val cdfOn = cdf.getOrElse(state.exists(_.cdf))
-      val morOn = mor.getOrElse(state.exists(_.mor))
-      // equality-delete files survive an APPEND untouched (the new
-      // files' add versions exempt them from every live delete); an
-      // OVERWRITE replaces table content wholesale, so they drop
-      val dels = if (append) state.map(_.dels).getOrElse(Nil) else Nil
-      val addvAll =
-        (if (append) state.map(_.addv).getOrElse(Map.empty[String, Long])
-         else Map.empty[String, Long]) ++ newFiles.map(_ -> next).toMap
-      // checkpoints prune delete entries whose gate no surviving file
-      // is under — once every pre-delete file is rewritten or dropped,
-      // the delete is fully materialized and leaves the log
-      def liveDels =
-        dels.filter(d => files.exists(f => addvAll.getOrElse(f, 0L) < d.version))
-      // constraints and the retired-name list are snapshot state like
-      // the schema: carried forward by every commit, append or overwrite
-      val chks = state.map(_.checks).getOrElse(Map.empty[String, String])
-      // table properties carry like constraints — through append AND
-      // overwrite (replacing a table's rows is not un-configuring it)
-      val prps = state.map(_.props).getOrElse(Map.empty[String, String])
-      val ret = state.map(_.retired).getOrElse(Nil)
-      // converted-layout flag is sticky ONLY while adopted files remain:
-      // an overwrite replaces table content wholesale with graft-written
-      // files, so the flag drops with them
-      val ppOn = state.exists(_.pathpart) && append
-      // like pathpart: an overwrite replaces every old-name file, so the
-      // alias map (and its coalesce read cost) drops with them
-      val aliasOn =
-        if (append) state.map(_.aliases).getOrElse(Map.empty[String, Seq[String]])
-        else Map.empty[String, Seq[String]]
-      val content =
-        if (writeFull)
-          manifestContent(schema, txns, stats, files, blooms, rows,
-            partColsNow,
-            op = op, cdf = cdfOn, mor = morOn, dels = liveDels, addv = addvAll,
-            checks = chks, props = prps, retired = ret, pathpart = ppOn,
-            aliases = aliasOn)
-        else deltaContent(schema, txns, newStats, removed = Nil,
-          added = newFiles, base = state.get.version, newBlooms = newBlooms,
-          newRows = newRows, partCols = partColsNow, op = op, cdf = cdfOn,
-          mor = morOn, checks = chks, props = prps, retired = ret, pathpart = ppOn,
-          aliases = aliasOn)
-      if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-        writePointer(ctx, table, next)
-        return next
-      }
-      attempt += 1 // lost the CAS: recompute against the new snapshot
-      backoff(attempt)
-      state = latestState(spark, table)
-      // identity race: the winner advanced the hwm our files baked in —
-      // drop this attempt's data dir and re-assign above the NEW hwm,
-      // so concurrent identity appends can never publish duplicates.
-      // Field-id race likewise: the winner evolved the schema, so the
-      // ids this attempt stamped may collide with the winner's minting —
-      // re-stamp against the fresh snapshot before re-publishing.
-      val idRace = append && idDef.exists { d =>
-        state.flatMap(_.schema).flatMap(identityColumn)
-          .flatMap(_.hwm).getOrElse(d.start - d.step) != idBase
-      }
-      val fidRace = idMode && idSigOf(state) != idSig
-      if (idRace || fidRace) {
-        ctx.delete(new Path(s"$table/$dataDir"), true)
-        dfw = shape(state)
-        idSig = idSigOf(state)
-        val rewritten =
-          writeData(dfw, table, allStatsCols, bloomCols, partCols,
-            optimizedWrite)
-        dataDir = rewritten._1; newFiles = rewritten._2
-        newStats = rewritten._3; newBlooms = rewritten._4
-        newRows = rewritten._5
+          patchIdentityHwm(merged, d.col, newHwm)
+        case None => merged
       }
     }
-    throw new IllegalStateException(
-      s"commit to $table lost the manifest race 64 times — pathological contention")
+    def publish(w: Written) = Publish(
+      Change(op, added = w.files, stats = w.stats, blooms = w.blooms,
+        rows = w.rows, checkpoint = !append, prune = true,
+        header = { h0 =>
+          // an OVERWRITE replaces table content wholesale — every file
+          // and every equality-delete entry drops — and is a natural
+          // checkpoint
+          val h = if (append) h0 else h0.copy(files = Nil, stats = Map.empty,
+            blooms = Map.empty, rows = Map.empty, dels = Nil, addv = Map.empty)
+          h.copy(
+            txns = h.txns ++ txn.map { case (a, b) =>
+              a -> math.max(b, h.txns.getOrElse(a, Long.MinValue)) } ++ extraTxns,
+            schema = Some(schemaOn(h0, w)),
+            // STICKY spec, re-read on EVERY try: an evolution landing
+            // between this commit's base snapshot and its CAS win
+            // carries forward — recording the pre-race spec would
+            // silently REVERT it (PartEvolSpec's race tests)
+            partCols = specOf(h),
+            // CDF and merge-on-read enablement are STICKY: an explicit
+            // request turns them on (or off); otherwise they carry
+            cdf = cdf.getOrElse(h.cdf),
+            mor = mor.getOrElse(h.mor),
+            // constraints, properties and retired names carry through
+            // append AND overwrite (replacing a table's rows is not
+            // un-configuring it); the converted-layout flag and the
+            // alias map describe OLD files, so an overwrite drops them
+            pathpart = h.pathpart && append,
+            aliases = if (append) h.aliases else Map.empty)
+        }),
+      dirs = Seq(w.dir),
+      // a lost CAS re-publishes the written files unless the winner
+      // applied this very batch (a replica: settle) or invalidated what
+      // they baked in (recompute against the fresh snapshot). Identity
+      // race: the winner advanced the hwm our values were assigned
+      // above. Field-id race: the winner evolved the schema, so our
+      // stamped ids may collide with its minting. Spec race: an
+      // implicit-spec OVERWRITE lost to a partition-spec evolution — its
+      // files, the table's ENTIRE content, would sit in the old layout
+      // under the new spec. (An append publishes its old-layout files as
+      // one more vintage: mixed vintages are the evolution machinery's
+      // normal state.)
+      rebases = fresh => !applied(fresh) &&
+        !(append && idDef.exists(hwmOf(fresh, _) != w.idBase)) &&
+        !(idMode && idSigOf(fresh) != idSigOf(w.on)) &&
+        !(!append && specOf(fresh) != specOf(w.on)))
+    Log.commit(spark, table, op, Some(state)) { base =>
+      if (applied(base)) Done(base.version) // raced a replica of the batch
+      else publish(write(base))
+    }
   }
 
   /** Write `df` as a full replacement snapshot and commit it atomically.
@@ -2938,7 +3003,7 @@ object TxnTable {
     * conflict rule; covers field-id minting, alias renames, and
     * read-time default vintages in one check — re-stage instead).
     * CHECK/property/tag changes during the audit window are fine.
-    * Concurrent ordinary commits are fine (the CAS loop re-merges).
+    * Concurrent ordinary commits are fine (a lost CAS re-merges).
     * Abort and publish of the SAME stage must not race (single-auditor
     * assumption); both sides re-validate to shrink that window to ms,
     * mirroring setTag/vacuum. */
@@ -3063,13 +3128,13 @@ object TxnTable {
       org.apache.spark.sql.GraftBridge.mergeSchemas(snapSchema, dfw.schema)
     val id = stageId.getOrElse(
       java.util.UUID.randomUUID().toString.replace("-", "").take(16))
-    val content = manifestContent(stagedSchema, txns = Map.empty,
+    val staged = State.empty.copy(schema = Some(stagedSchema),
       stats = newStats, files = newFiles, blooms = newBlooms,
-      rows = newRows, partCols = st.partCols, op = "staged",
+      rows = newRows, partCols = st.partCols,
       props = Map(WapBaseSchemaProp -> snapSchema.json,
         WapBaseVersionProp -> st.version.toString,
         WapStagedAtProp -> System.currentTimeMillis().toString))
-    if (!tryCreateAtomic(fc(spark), stagedManifestPath(table, id), content)) {
+    if (!Log.create(spark, stagedManifestPath(table, id), staged, "staged")) {
       // two replicas staged the same id concurrently: the winner's
       // manifest stands, this attempt's data dir is an orphan — drop it
       require(stageId.isDefined, s"staged manifest collision for $id")
@@ -3232,18 +3297,9 @@ object TxnTable {
         props.getOrElse(WapBaseSchemaProp, ""),
         props.getOrElse(WapBaseVersionProp, "?"))
     }
-    var attempt = 0
     var checkedAgainst: Option[Map[String, String]] = None
-    while (attempt < 64) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"$table lost its snapshot while stages were pending"))
-      if (replayed(st)) { // raced our own replay
-        ids.foreach(id => ctx.delete(stagedManifestPath(table, id), false))
-        return st.version
-      }
-      val curSchema = st.schema.getOrElse(throw new IllegalStateException(
-        s"$table predates the schema log"))
+    def publish(st: State): Attempt = {
+      val curSchema = st.schemaOf(table)
       staged.foreach { sg =>
         require(curSchema.json == sg.baseSchemaJson,
           s"$table's schema changed since stage ${sg.id} was written " +
@@ -3278,14 +3334,8 @@ object TxnTable {
             table, st.checks))
         checkedAgainst = Some(st.checks)
       }
-      val next = st.version + 1L
       val schema = staged.foldLeft(curSchema)((acc, sg) =>
         org.apache.spark.sql.GraftBridge.mergeSchemas(acc, sg.schema))
-      val newFiles = staged.flatMap(_.files)
-      val addvAll = st.addv ++ newFiles.map(_ -> next).toMap
-      val files = st.files ++ newFiles
-      val liveDels = st.dels.filter(d =>
-        files.exists(f => addvAll.getOrElse(f, 0L) < d.version))
       // batch-shaped ids fold into their prefix's high-water entry;
       // ad-hoc ids keep per-id markers (see batchShaped)
       val (batched, plain) =
@@ -3293,31 +3343,27 @@ object TxnTable {
       val seqUpdates = batched.flatMap(batchShaped).groupBy(_._1).map {
         case (p, xs) => seqMarker(p) -> math.max(
           st.txns.getOrElse(seqMarker(p), -1L), xs.map(_._2).max) }
-      val content = manifestContent(schema,
-        st.txns ++ plain.map(wapMarker(_) -> 1L) ++ seqUpdates,
-        st.stats ++ staged.flatMap(_.stats), files,
-        st.blooms ++ staged.flatMap(_.blooms),
-        st.rows ++ staged.flatMap(_.rows), st.partCols, op = "wap-publish",
-        cdf = st.cdf, mor = st.mor, dels = liveDels, addv = addvAll,
-        checks = st.checks, props = st.props, retired = st.retired,
-        pathpart = st.pathpart, aliases = st.aliases)
       // abort hardening: every staged manifest must still exist at the
       // last moment — an abort deletes it FIRST, so this check shrinks
       // the publish/abort race to the gap between probe and CAS
       ids.foreach(id =>
         require(ctx.util.exists(stagedManifestPath(table, id)),
           s"stage $id was aborted while publishing"))
-      if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-        writePointer(ctx, table, next)
-        ids.foreach(id => ctx.delete(stagedManifestPath(table, id), false))
-        return next
-      }
-      attempt += 1
-      backoff(attempt)
+      Publish(Change("wap-publish", added = staged.flatMap(_.files),
+        stats = staged.flatMap(_.stats).toMap,
+        blooms = staged.flatMap(_.blooms).toMap,
+        rows = staged.flatMap(_.rows).toMap, checkpoint = true, prune = true,
+        header = _.copy(schema = Some(schema),
+          txns = st.txns ++ plain.map(wapMarker(_) -> 1L) ++ seqUpdates)))
     }
-    throw new IllegalStateException(
-      s"publish of stages ${ids.mkString(",")} on $table lost the " +
-        "manifest race 64 times")
+    val v = Log.commit(spark, table, "wap-publish") { st0 =>
+      val st = st0.present(table)
+      if (replayed(st)) Done(st.version) // raced our own replay
+      else publish(st)
+    }
+    // published (or found published): the staged manifests are done
+    ids.foreach(id => ctx.delete(stagedManifestPath(table, id), false))
+    v
   }
 
   /** Discard stage `id`: drop its manifest, which releases the vacuum
@@ -3564,16 +3610,13 @@ object TxnTable {
                    value: Any): Long = {
     require(value != null, "deleteEquals removes a key; NULLs are retained by design")
     val ctx = fc(spark)
-    var attempt = 0
-    while (attempt < 16) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
+    Log.commit(spark, table, "delete") { st0 =>
+      val st = st0.present(table)
       require(st.dels.isEmpty,
         s"$table carries merge-on-read delete files; materialize them " +
           "first (compact / SQL OPTIMIZE) or delete through SQL DELETE, " +
           "which composes with them")
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+      val schema = st.schemaOf(table)
       val dt = schema(column).dataType
       val b = pointBound(value, dt)
       val statsPass = st.files.filter(f => st.mayOverlap(f, column, b))
@@ -3616,21 +3659,10 @@ object TxnTable {
               table, d)
           (nf, ns, nb, nr, Some(d), cdc)
         }
-      val removedFiles = (covered ++ boundary).sorted
-      publishRewrite(spark, ctx, table, st, schema, removedFiles, newFiles,
-        newStats, newBlooms, newRows, disjointCol = Some(column), bound = b,
-        op = "delete", cdcAdd = cdcAdd,
-        cdcDel = if (st.cdf) covered.sorted else Nil)
-        match {
-          case Some(v) => return v
-          case None => // race invalidated the computation: redo
-            dataDir.foreach(d => ctx.delete(new Path(s"$table/$d"), true))
-            attempt += 1
-            backoff(attempt)
-        }
+      rewritePublish("delete", st, schema, (covered ++ boundary).sorted,
+        dataDir.toSeq, newFiles, newStats, newBlooms, newRows,
+        Some(column -> b), cdcAdd, if (st.cdf) covered.sorted else Nil)
     }
-    throw new IllegalStateException(
-      s"deleteEquals on $table lost the snapshot race 16 times")
   }
 
   /** Bloom-prune `files` for an equality/IN constraint: keep a file iff
@@ -3705,11 +3737,10 @@ object TxnTable {
 
   def merge(updates0: DataFrame, table: String, keyCol: String): Long = {
     val spark = updates0.sparkSession
-    val ctx = fc(spark)
     // GENERATED ALWAYS AS IDENTITY: a merge MAY run — matched rows
     // INHERIT their existing identity values (same logical entity,
     // keyed by keyCol) and unmatched inserts MINT fresh values above
-    // the snapshot's high-water mark, inside the attempt loop where the
+    // the snapshot's high-water mark, inside the commit plan where the
     // pinned hwm is in hand — but the frame can never SUPPLY the
     // column (ALWAYS semantics, same as the append path). Generated
     // columns recompute over the incoming frame (fill for inserts,
@@ -3732,12 +3763,10 @@ object TxnTable {
         idCol.exists(c => exprRefs(spark, sql).exists(_.equalsIgnoreCase(c)))
       }
     }.foreach(enforceChecks(updates, table, _))
-    var attempt = 0
-    while (attempt < 16) {
-      val st = latestState(spark, table).getOrElse(
-        return commitAppend(updates, table, statsCols = Seq(keyCol)))
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+    def plan(st: State): Attempt = {
+      if (st.version == 0L)
+        return Done(commitAppend(updates, table, statsCols = Seq(keyCol)))
+      val schema = st.schemaOf(table)
       val keys = updates.select(col(keyCol)).distinct()
       // typed key bounds: strings min/max lexicographically (a numeric
       // cast would NULL out and silently no-op the whole merge),
@@ -3746,7 +3775,7 @@ object TxnTable {
       val bounds = keys.agg(
         count(col(keyCol)),
         min(normExpr(keyCol, keyDt)), max(normExpr(keyCol, keyDt))).head()
-      if (bounds.getLong(0) == 0L) return st.version // no non-null keys: no-op
+      if (bounds.getLong(0) == 0L) return Done(st.version) // no non-null keys: no-op
       val keyBound: Option[Bound] =
         (bounds.get(1), bounds.get(2)) match {
           case (l: String, h: String) => Some(Bound("str", loS = l, hiS = h))
@@ -3903,106 +3932,52 @@ object TxnTable {
       // (keyBound None) always recompute — and identity merges ALWAYS
       // recompute (a raced append may have advanced the high-water
       // mark; re-minting from the fresh snapshot prevents collisions)
-      publishRewrite(spark, ctx, table, st, mergedSchema,
-        touched.toSeq.sorted, newFiles, newStats, newBlooms, newRows,
-        disjointCol = if (idDef.isDefined) None else keyBound.map(_ => keyCol),
-        bound = keyBound.getOrElse(Bound("conflict")),
-        op = "merge", cdcAdd = cdcAdd) match {
-        case Some(v) => return v
-        case None =>
-          // lost the race: this merge was computed against a stale base —
-          // discard its output and redo the whole read-merge-write
-          ctx.delete(new Path(s"$table/$dataDir"), true)
-          attempt += 1
-          backoff(attempt)
-      }
+      rewritePublish("merge", st, mergedSchema, touched.toSeq.sorted,
+        Seq(dataDir), newFiles, newStats, newBlooms, newRows,
+        if (idDef.isDefined) None else keyBound.map(keyCol -> _), cdcAdd)
     }
-    throw new IllegalStateException(
-      s"merge into $table lost the snapshot race 16 times — pathological contention")
+    Log.commit(spark, table, "merge")(plan)
   }
 
-  /** CAS publish for a computed file rewrite, with APPEND REBASE:
-    * first tried against the snapshot the rewrite was computed on;
-    * on every CAS loss, if the interleaved commits (a) left every
-    * removed file in place, (b) only ADDED files whose stats on
-    * `disjointCol` PROVABLY refute `bound` (no row of theirs matches
-    * the rewrite's predicate), and (c) did not evolve the schema, the
-    * already-written output is still exact — re-derive the manifest
-    * against the fresh snapshot and re-CAS, WITHOUT re-running the
-    * read-rewrite-write. This is the streaming-ingest shape: a
-    * maintenance delete/merge racing a firehose of disjoint appends
-    * commits in one data write instead of recomputing per loss.
-    * Returns None when the race invalidated the computation (caller
-    * discards its data dir and recomputes). */
-  private def publishRewrite(
-      spark: SparkSession, ctx: FileContext, table: String,
-      computed: State, schema: org.apache.spark.sql.types.StructType,
-      removedFiles: Seq[String], newFiles: Seq[String],
-      newStats: Map[String, Seq[FileStat]],
-      newBlooms: Map[String, Seq[BloomMeta]],
-      newRows: Map[String, Long],
-      disjointCol: Option[String], bound: Bound,
-      txns: State => Map[String, Long] = _.txns,
-      op: String = "delete",
-      cdcAdd: Seq[String] = Nil,
-      cdcDel: Seq[String] = Nil): Option[Long] = {
-    val removedSet = removedFiles.toSet
-    val computedFiles = computed.files.toSet
-    var base = computed
-    var tries = 0
-    while (tries < 32) {
-      val files = base.files.filterNot(removedSet) ++ newFiles
-      val next = base.version + 1L
-      // equality-delete entries survive a rewrite: untouched files keep
-      // their gate, the REPLACEMENT files' add version (`next`) exempts
-      // them — the rewrite read its rows through the delete-applying
-      // path, so their deletions are materialized
-      val content =
-        if (next % checkpointInterval(spark) == 0)
-          {
-            val addvAll =
-              (base.addv -- removedFiles) ++ newFiles.map(_ -> next).toMap
-            manifestContent(schema, txns(base),
-              (base.stats -- removedFiles) ++ newStats, files,
-              (base.blooms -- removedFiles) ++ newBlooms,
-              (base.rows -- removedFiles) ++ newRows, base.partCols,
-              op = op, cdf = base.cdf, cdcAdd = cdcAdd, cdcDel = cdcDel,
-              mor = base.mor,
-              dels = base.dels.filter(d =>
-                files.exists(f => addvAll.getOrElse(f, 0L) < d.version)),
-              addv = addvAll, checks = base.checks, props = base.props, retired = base.retired,
-              pathpart = base.pathpart && files.exists(!_.startsWith("w=")),
-              aliases = base.aliases)
-          }
-        else deltaContent(schema, txns(base), newStats,
-          removed = removedFiles, added = newFiles, base = base.version,
-          newBlooms = newBlooms, newRows = newRows, partCols = base.partCols,
-          op = op, cdf = base.cdf, cdcAdd = cdcAdd, cdcDel = cdcDel,
-          mor = base.mor, checks = base.checks, props = base.props, retired = base.retired,
-          pathpart = base.pathpart, aliases = base.aliases)
-      if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-        writePointer(ctx, table, next)
-        return Some(next)
-      }
-      tries += 1
-      backoff(tries)
-      val fresh = latestState(spark, table).getOrElse(return None)
-      // an interleaved merge-on-read delete (either flavor) invalidates
-      // the computation: the written replacement was read under the
-      // PINNED snapshot's deletes, and its files' add version will
-      // exceed the new delete's gate — rebasing would silently lose the
-      // new delete's effect on every replaced row
-      val rebasable = disjointCol.exists { c =>
-        removedFiles.forall(fresh.files.contains) &&
+  /** The publish of a computed file rewrite: `removed` (snapshot files
+    * of `computed`, the snapshot it was computed on) out, the written
+    * replacement in, recorded under `schema`. APPEND REBASE: on a CAS
+    * loss, if the interleaved commits (a) left every removed file in
+    * place, (b) only ADDED files whose stats on the `key` column
+    * PROVABLY refute its bound (no row of theirs matches the rewrite's
+    * predicate), and (c) did not evolve the schema, the written output
+    * is still exact — it re-publishes on the fresh snapshot WITHOUT
+    * re-running the read-rewrite-write. This is the streaming-ingest
+    * shape: a maintenance delete/merge racing a firehose of disjoint
+    * appends commits in one data write instead of recomputing per
+    * loss. Without a key every loss recomputes. */
+  private def rewritePublish(op: String, computed: State, schema: StructType,
+      removed: Seq[String], dirs: Seq[String], added: Seq[String],
+      stats: Map[String, Seq[FileStat]], blooms: Map[String, Seq[BloomMeta]],
+      rows: Map[String, Long], key: Option[(String, Bound)],
+      cdc: Seq[String], cdcDel: Seq[String] = Nil): Publish = {
+    val gone = removed.toSet
+    // equality-delete entries survive a rewrite: untouched files keep
+    // their gate, the REPLACEMENT files' add version exempts them — the
+    // rewrite read its rows through the delete-applying path, so their
+    // deletions are materialized
+    Publish(Change(op, added, stats, blooms, rows, removed, cdc = cdc,
+        cdcDel = cdcDel, prune = true,
+        header = h => h.copy(schema = Some(schema),
+          pathpart = h.keepsAdopted(gone))),
+      dirs,
+      rebases = fresh => key.exists { case (c, b) =>
+        val (live, seen) = (fresh.files.toSet, computed.files.toSet)
+        // an interleaved merge-on-read delete (either flavor)
+        // invalidates the computation: the written replacement was read
+        // under the PINNED snapshot's deletes, and its files' add
+        // version will exceed the new delete's gate — rebasing would
+        // silently lose the new delete's effect on every replaced row
+        removed.forall(live) &&
           fresh.schema.map(_.json) == computed.schema.map(_.json) &&
           fresh.dels == computed.dels &&
-          fresh.files.filterNot(computedFiles).forall(f =>
-            fresh.stat(f, c).exists(_.disjointFrom(bound)))
-      }
-      if (!rebasable) return None
-      base = fresh
-    }
-    None
+          fresh.files.forall(f => seen(f) || fresh.stat(f, c).exists(_.disjointFrom(b)))
+      })
   }
 
   /** COPY-ON-WRITE COMMIT — the generic file-surgical primitive SQL
@@ -4054,18 +4029,14 @@ object TxnTable {
       identityHwm: Option[Long] = None)
 
   def rewriteCommit(spark: SparkSession, table: String, op: String,
-                    compute: (DataFrame, Long) => Option[Rewrite]): Long = {
-    val ctx = fc(spark)
-    var attempt = 0
-    while (attempt < 16) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+                    compute: (DataFrame, Long) => Option[Rewrite]): Long =
+    Log.commit(spark, table, op) { st0 =>
+      val st = st0.present(table)
+      val schema = st.schemaOf(table)
       val snap = spark.read.format("graft")
         .option("versionAsOf", st.version.toString).load(table)
       compute(snap, st.version) match {
-        case None => return st.version
+        case None => Done(st.version)
         case Some(rw) =>
           // SQL MERGE can INSERT rows — unless the lowering declared it
           // minted/inherited identity values itself (GraftDml.runMerge
@@ -4126,27 +4097,14 @@ object TxnTable {
           val cdcAdd =
             if (st.cdf) rw.changes.toSeq.flatMap(writeChangeData(_, table, dataDir))
             else Nil
-          publishRewrite(spark, ctx, table, st, outSchema, removed, newFiles,
+          rewritePublish(op, st, outSchema, removed, Seq(dataDir), newFiles,
             newStats, newBlooms, newRows,
             // minted values were assigned from the PINNED hwm: a raced
             // append advanced it, so the append rebase is forbidden —
             // recompute is the only sound recovery (never fast-rebase)
-            disjointCol =
-              if (rw.identityHwm.isDefined) None
-              else rw.disjointKey.map(_._1),
-            bound = rw.disjointKey.map(_._2).getOrElse(Bound("conflict")),
-            op = op, cdcAdd = cdcAdd) match {
-            case Some(v) => return v
-            case None =>
-              ctx.delete(new Path(s"$table/$dataDir"), true)
-              attempt += 1 // computed against a stale snapshot: redo
-              backoff(attempt)
-          }
+            if (rw.identityHwm.isDefined) None else rw.disjointKey, cdcAdd)
       }
     }
-    throw new IllegalStateException(
-      s"rewrite of $table lost the snapshot race 16 times")
-  }
 
   /** Is merge-on-read DELETE active on the latest snapshot? (Sticky
     * `#mor=true` flag — write option `mergeOnRead=true` sets it, any
@@ -4207,12 +4165,9 @@ object TxnTable {
                      cond: DataFrame => org.apache.spark.sql.Column): Long = {
     require(keyCols.nonEmpty, "merge-on-read delete needs at least one key column")
     val ctx = fc(spark)
-    var attempt = 0
-    while (attempt < 16) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+    def plan(st0: State): Attempt = {
+      val st = st0.present(table)
+      val schema = st.schemaOf(table)
       keyCols.foreach(k => require(schema.fieldNames.contains(k),
         s"merge-on-read delete key '$k' is not a column of $table"))
       // pinned graft read: stats/bloom skipping prunes the scan to the
@@ -4223,24 +4178,13 @@ object TxnTable {
       val matched = snap.filter(cond(snap))
       val tuples = matched
         .select(keyCols.map(k => col(s"`$k`")): _*).distinct().coalesce(1)
-      val dataDir =
-        s"w=${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-      tuples.write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$dataDir/_del")
-      val delFiles = {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        val it = ctx.listStatus(new Path(s"$table/$dataDir/_del"))
-        while (it.hasNext) {
-          val s = it.next()
-          if (!s.isDirectory && s.getPath.getName.endsWith(".parquet"))
-            buf += s"$dataDir/_del/${s.getPath.getName}"
-        }
-        buf.sorted.toSeq
-      }
+      val dataDir = freshDir()
+      val delFiles = writeUnder(tuples, table, dataDir, "_del")
       val n = delFiles.map(f =>
         spark.read.parquet(s"$table/$f").count()).sum
       if (n == 0L) { // nothing matched: provable no-op
         ctx.delete(new Path(s"$table/$dataDir"), true)
-        return st.version
+        return Done(st.version)
       }
       val cdcAdd =
         if (st.cdf)
@@ -4251,48 +4195,25 @@ object TxnTable {
       // only from files whose add version is below st.version + 1,
       // i.e. exactly the files it was computed against
       val gate = st.version + 1L
-      val dels = delFiles.map(f => DelMeta(f, gate, keyCols, n))
-      var base = st
-      var tries = 0
-      var rebasing = true
-      while (rebasing && tries < 32) {
-        val next = base.version + 1L
-        val content =
-          if (next % checkpointInterval(spark) == 0)
-            manifestContent(schema, base.txns, base.stats, base.files,
-              base.blooms, base.rows, base.partCols, op = "delete",
-              cdf = base.cdf, cdcAdd = cdcAdd,
-              mor = true, dels = base.dels ++ dels, addv = base.addv,
-              checks = base.checks, props = base.props, retired = base.retired,
-              pathpart = base.pathpart, aliases = base.aliases)
-          else deltaContent(schema, base.txns,
-            Map.empty[String, Seq[FileStat]], removed = Nil, added = Nil,
-            base = base.version, partCols = base.partCols, op = "delete",
-            cdf = base.cdf, cdcAdd = cdcAdd, mor = true, newDels = dels,
-            checks = base.checks, props = base.props, retired = base.retired,
-            pathpart = base.pathpart, aliases = base.aliases)
-        if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-          writePointer(ctx, table, next)
-          return next
-        }
-        tries += 1
-        backoff(tries)
-        val fresh = latestState(spark, table).getOrElse(
-          throw new IllegalStateException(s"$table lost its manifests mid-commit"))
+      Publish(Change("delete", cdc = cdcAdd,
+          dels = delFiles.map(f => DelMeta(f, gate, keyCols, n)),
+          header = _.copy(mor = true)),
+        Seq(dataDir),
         // interleaved appends: exempt via the gate; interleaved MoR
         // deletes: both tuple sets apply. Removed files or a schema
         // change invalidate the computed tuples — recompute.
-        rebasing = st.files.forall(fresh.files.contains) &&
-          fresh.schema.map(_.json) == st.schema.map(_.json) &&
-          st.dels.forall(fresh.dels.contains)
-        if (rebasing) base = fresh
-      }
-      ctx.delete(new Path(s"$table/$dataDir"), true)
-      attempt += 1
-      backoff(attempt)
+        rebases = fresh => onlyGrew(st, fresh) &&
+          st.dels.forall(fresh.dels.contains))
     }
-    throw new IllegalStateException(
-      s"merge-on-read delete of $table lost the snapshot race 16 times")
+    Log.commit(spark, table, "delete")(plan)
+  }
+
+  /** Did the commits between `on` and `fresh` keep every file of `on`
+    * and its schema? The rebase precondition of a merge-on-read commit:
+    * its tuples / coordinates / appended rows were derived from `on`. */
+  private def onlyGrew(on: State, fresh: State): Boolean = {
+    val live = fresh.files.toSet
+    on.files.forall(live) && fresh.schema.map(_.json) == on.schema.map(_.json)
   }
 
   /** The table's live rows (all deletes applied) plus two ROW IDENTITY
@@ -4626,16 +4547,16 @@ object TxnTable {
     // admitted after the original application
     def appliedIn(s: State): Boolean = txn.exists { case (a, b) =>
       s.txns.get(a).exists(_ >= b) }
-    def txnsOf(s: State): Map[String, Long] =
+    def withTxn(s: State): State = s.copy(txns =
       s.txns ++ txn.map { case (a, b) =>
-        a -> math.max(b, s.txns.getOrElse(a, Long.MinValue)) }
-    var attempt = 0
-    while (attempt < 16) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
-      if (appliedIn(st)) return st.version
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+        a -> math.max(b, s.txns.getOrElse(a, Long.MinValue)) })
+    // set when the plan's publish carries a vector: the auto-coalesce
+    // check runs after a published positional commit only
+    var vector = false
+    def plan(st0: State): Attempt = {
+      val st = st0.present(table)
+      vector = false
+      if (appliedIn(st)) return Done(st.version)
       // CDF off + caller-supplied coordinates: pure-metadata commit, no
       // data scan — the coordinates go to the sidecar as written and
       // are validated against the manifest from the sidecar read-back
@@ -4680,64 +4601,22 @@ object TxnTable {
           pos.join(known, Seq(PosFileCol), "left_semi").distinct()
         case None => matched.select(col(PosFileCol), col(PosOrdCol))
       }).coalesce(1)
-      val dataDir =
-        s"w=${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-      tuples.write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$dataDir/_del")
-      val delFiles = {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        val it = ctx.listStatus(new Path(s"$table/$dataDir/_del"))
-        while (it.hasNext) {
-          val s = it.next()
-          if (!s.isDirectory && s.getPath.getName.endsWith(".parquet"))
-            buf += s"$dataDir/_del/${s.getPath.getName}"
-        }
-        buf.sorted.toSeq
-      }
+      val dataDir = freshDir()
+      val delFiles = writeUnder(tuples, table, dataDir, "_del")
       val side = spark.read.schema(PosDelSchema)
         .parquet(delFiles.map(f => s"$table/$f"): _*)
       // count + named files in ONE job over the kilobyte sidecar
       val (n, named) = sidecarSummary(spark, side)
       if (n == 0L) { // nothing matched
         ctx.delete(new Path(s"$table/$dataDir"), true)
-        if (txn.isEmpty) return st.version // provable no-op
+        if (txn.isEmpty) return Done(st.version) // provable no-op
         // EXACTLY-ONCE consumers record the batch even when it matched
         // nothing: without the marker, a crash-replay arriving AFTER a
         // later admission of matching rows would re-match and wrongly
-        // erase them — the marker-only commit closes that window
-        var base = st
-        var tries = 0
-        while (tries < 32) {
-          if (appliedIn(base)) return base.version
-          val next = base.version + 1L
-          val sch = base.schema.getOrElse(schema)
-          val content =
-            if (next % checkpointInterval(spark) == 0)
-              manifestContent(sch, txnsOf(base), base.stats, base.files,
-                base.blooms, base.rows, base.partCols, op = "txn-marker",
-                cdf = base.cdf, mor = base.mor, dels = base.dels,
-                addv = base.addv, checks = base.checks, props = base.props,
-                retired = base.retired, pathpart = base.pathpart,
-                aliases = base.aliases)
-            else deltaContent(sch, txnsOf(base),
-              Map.empty[String, Seq[FileStat]], removed = Nil, added = Nil,
-              base = base.version, partCols = base.partCols,
-              op = "txn-marker", cdf = base.cdf, mor = base.mor,
-              checks = base.checks, props = base.props,
-              retired = base.retired, pathpart = base.pathpart,
-              aliases = base.aliases)
-          if (tryCreateAtomic(ctx, new Path(table, manifestName(next)),
-              content)) {
-            writePointer(ctx, table, next)
-            return next
-          }
-          tries += 1
-          backoff(tries)
-          base = latestState(spark, table).getOrElse(
-            throw new IllegalStateException(
-              s"$table lost its manifests mid-commit"))
-        }
-        throw new IllegalStateException(
-          s"marker-only commit on $table lost the snapshot race 32 times")
+        // erase them — the marker-only commit closes that window; it
+        // rebases onto any snapshot that has not applied the batch
+        return Publish(Change("txn-marker", header = withTxn),
+          rebases = fresh => !appliedIn(fresh))
       }
       // `named` (from the sidecarSummary job above): (a) the strict
       // staleness gate for metadata-only commits, (b) recorded in the
@@ -4772,57 +4651,24 @@ object TxnTable {
       // the gate pins the delete to its READ snapshot, exactly like the
       // equality flavor — positions can only name files that existed
       val gate = st.version + 1L
-      val dels = delFiles.map(f =>
-        DelMeta(f, gate, PosDelKeyCols, n, named = named.getOrElse(Nil)))
-      var base = st
-      var tries = 0
-      var rebasing = true
-      while (rebasing && tries < 32) {
-        val next = base.version + 1L
-        val content =
-          if (next % checkpointInterval(spark) == 0)
-            manifestContent(schema, txnsOf(base), base.stats, base.files,
-              base.blooms, base.rows, base.partCols, op = "delete",
-              cdf = base.cdf, cdcAdd = cdcAdd,
-              mor = true, dels = base.dels ++ dels, addv = base.addv,
-              checks = base.checks, props = base.props, retired = base.retired,
-              pathpart = base.pathpart, aliases = base.aliases)
-          else deltaContent(schema, txnsOf(base),
-            Map.empty[String, Seq[FileStat]], removed = Nil, added = Nil,
-            base = base.version, partCols = base.partCols, op = "delete",
-            cdf = base.cdf, cdcAdd = cdcAdd, mor = true, newDels = dels,
-            checks = base.checks, props = base.props, retired = base.retired,
-            pathpart = base.pathpart, aliases = base.aliases)
-        if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-          writePointer(ctx, table, next)
-          maybeCoalescePosVectors(spark, table)
-          return next
-        }
-        tries += 1
-        backoff(tries)
-        val fresh = latestState(spark, table).getOrElse(
-          throw new IllegalStateException(s"$table lost its manifests mid-commit"))
+      vector = true
+      Publish(Change("delete", cdc = cdcAdd,
+          dels = delFiles.map(f =>
+            DelMeta(f, gate, PosDelKeyCols, n, named = named.getOrElse(Nil))),
+          header = s => withTxn(s).copy(mor = true)),
+        Seq(dataDir),
         // a concurrent replica applied the SAME (appId, batchId): its
         // commit carries this batch's effect — applying ours on top
-        // would double-delete; drop the attempt and report success
-        if (appliedIn(fresh)) {
-          ctx.delete(new Path(s"$table/$dataDir"), true)
-          return fresh.version
-        }
-        // interleaved appends: exempt via the gate; interleaved deletes
-        // of either flavor: both sets apply. Removed files or a schema
-        // change invalidate the recorded coordinates — recompute.
-        rebasing = st.files.forall(fresh.files.contains) &&
-          fresh.schema.map(_.json) == st.schema.map(_.json) &&
-          st.dels.forall(fresh.dels.contains)
-        if (rebasing) base = fresh
-      }
-      ctx.delete(new Path(s"$table/$dataDir"), true)
-      attempt += 1
-      backoff(attempt)
+        // would double-delete, so the plan settles instead. Interleaved
+        // appends: exempt via the gate; interleaved deletes of either
+        // flavor: both sets apply. Removed files or a schema change
+        // invalidate the recorded coordinates — recompute.
+        rebases = fresh => !appliedIn(fresh) && onlyGrew(st, fresh) &&
+          st.dels.forall(fresh.dels.contains))
     }
-    throw new IllegalStateException(
-      s"positional delete of $table lost the snapshot race 16 times")
+    val v = Log.commit(spark, table, "delete")(plan)
+    if (vector) maybeCoalescePosVectors(spark, table)
+    v
   }
 
   /** AUTO-COALESCE trigger for positional sidecars: when the LIVE
@@ -4881,12 +4727,8 @@ object TxnTable {
     * add versions only grow past their gate. */
   def coalescePosVectors(spark: SparkSession, table: String): Long = {
     val ctx = fc(spark)
-    var attempt = 0
-    while (attempt < 16) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+    def plan(st0: State): Attempt = {
+      val st = st0.present(table)
       val pos = st.dels.filter(_.keyCols == PosDelKeyCols)
       val live = pos.filter(d =>
         st.files.exists(f => d.gates(f, st.addv.getOrElse(f, 0L))))
@@ -4896,7 +4738,7 @@ object TxnTable {
       // never become applicable again — carrying it would bloat every
       // future manifest forever without ever joining a merge
       val dead = pos.size - live.size
-      if (live.size < 2 && dead == 0) return st.version
+      if (live.size < 2 && dead == 0) return Done(st.version)
       import spark.implicits._
       // fewer than 2 live vectors with dead ones present: a pure
       // SWEEP — carry the live vector (if any) verbatim, write nothing
@@ -4909,19 +4751,8 @@ object TxnTable {
             .reduce(_ unionByName _)
             .join(liveFiles, Seq(PosFileCol), "left_semi")
             .distinct().coalesce(1)
-          val dir =
-            s"w=${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-          merged.write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$dir/_del")
-          val delFiles = {
-            val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-            val it = ctx.listStatus(new Path(s"$table/$dir/_del"))
-            while (it.hasNext) {
-              val s = it.next()
-              if (!s.isDirectory && s.getPath.getName.endsWith(".parquet"))
-                buf += s"$dir/_del/${s.getPath.getName}"
-            }
-            buf.sorted.toSeq
-          }
+          val dir = freshDir()
+          val delFiles = writeUnder(merged, table, dir, "_del")
           val side = spark.read.schema(PosDelSchema)
             .parquet(delFiles.map(f => s"$table/$f"): _*)
           val (n, named) = sidecarSummary(spark, side)
@@ -4937,26 +4768,14 @@ object TxnTable {
                 named = named.getOrElse(Nil))), Some(dir))
           }
         }
-      // dropping del entries needs a FULL manifest (deltas are additive)
-      val next = st.version + 1L
+      // dropping del entries needs a FULL manifest (deltas are
+      // additive); a lost race recomputes everything from the fresh
+      // state — a concurrent commit may have changed the vector set
       val keep = st.dels.filterNot(pos.contains)
-      val content = manifestContent(schema, st.txns, st.stats, st.files,
-        st.blooms, st.rows, st.partCols, op = "vec-coalesce",
-        cdf = st.cdf, mor = st.mor, dels = keep ++ mergedDels,
-        addv = st.addv, checks = st.checks, props = st.props,
-        retired = st.retired, pathpart = st.pathpart, aliases = st.aliases)
-      if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-        writePointer(ctx, table, next)
-        return next
-      }
-      // lost the race: a concurrent commit may have changed the vector
-      // set — recompute everything from the fresh state
-      dataDir.foreach(d => ctx.delete(new Path(s"$table/$d"), true))
-      attempt += 1
-      backoff(attempt)
+      Publish(Change("vec-coalesce", checkpoint = true,
+        header = _.copy(dels = keep ++ mergedDels)), dataDir.toSeq)
     }
-    throw new IllegalStateException(
-      s"vector coalesce of $table lost the manifest race 16 times")
+    Log.commit(spark, table, "vec-coalesce")(plan)
   }
 
   /** What an [[upsertMoR]] `compute` hands back, all derived from the
@@ -5012,16 +4831,17 @@ object TxnTable {
                 compute: (DataFrame, Long) => Option[MorWrite],
                 optimizedWrite: Boolean = false): Long = {
     val ctx = fc(spark)
-    var attempt = 0
-    while (attempt < 16) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+    // set when the plan's publish carries a positional vector: the
+    // auto-coalesce check runs after such a commit only
+    var vector = false
+    def plan(st0: State): Attempt = {
+      val st = st0.present(table)
+      vector = false
+      val schema = st.schemaOf(table)
       val snap = spark.read.format("graft")
         .option("versionAsOf", st.version.toString).load(table)
       compute(snap, st.version) match {
-        case None => return st.version
+        case None => Done(st.version)
         case Some(mw) =>
           // positional tuples (keyCols == [__pos__]) name rows by
           // coordinates, not by schema columns
@@ -5052,22 +4872,11 @@ object TxnTable {
           // one tuple-sidecar leg: write → list → one-job summary
           def writeTuples(dir: String)
               : (Seq[String], Long, Option[Seq[String]]) = {
-            mw.tuples.select(
+            val fs = writeUnder(mw.tuples.select(
               (if (mw.keyCols == PosDelKeyCols)
                 Seq(col(PosFileCol), col(PosOrdCol))
               else mw.keyCols.map(k => col(s"`$k`"))): _*)
-              .distinct().coalesce(1)
-              .write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$dir/_del")
-            val fs = {
-              val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-              val it = ctx.listStatus(new Path(s"$table/$dir/_del"))
-              while (it.hasNext) {
-                val s = it.next()
-                if (!s.isDirectory && s.getPath.getName.endsWith(".parquet"))
-                  buf += s"$dir/_del/${s.getPath.getName}"
-              }
-              buf.sorted.toSeq
-            }
+              .distinct().coalesce(1), table, dir, "_del")
             // count + named files in ONE job over the kilobyte sidecar
             // (positional vectors only; equality tuples record no names)
             if (mw.keyCols == PosDelKeyCols && fs.nonEmpty) {
@@ -5078,8 +4887,6 @@ object TxnTable {
               (fs, fs.map(f =>
                 spark.read.parquet(s"$table/$f").count()).sum, None)
           }
-          def mintDir() =
-            s"w=${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
           val (dataDir, newFiles, newStats, newBlooms, newRows,
               sideDir, delFiles, n, named) =
             appendedG match {
@@ -5093,7 +4900,7 @@ object TxnTable {
                 // they overlap (guide §2.6); the manifest references
                 // both, and a sidecar-only w= dir is already the
                 // deletePosCore shape every reader/vacuum path handles
-                val sd = mintDir()
+                val sd = freshDir()
                 val (w, t) = graft.ops.Par.both(spark)(
                   writeData(df, table, trackedCols, trackedBlooms,
                     st.partCols, optimized = optimizedWrite,
@@ -5102,7 +4909,7 @@ object TxnTable {
                 (w._1, w._2, w._3, w._4, w._5, Some(sd), t._1, t._2, t._3)
               case None =>
                 // no data leg: the sidecar keeps the single-dir shape
-                val dd = mintDir()
+                val dd = freshDir()
                 val t = writeTuples(dd)
                 (dd, Nil, Map.empty[String, Seq[FileStat]],
                   Map.empty[String, Seq[BloomMeta]], Map.empty[String, Long],
@@ -5117,7 +4924,7 @@ object TxnTable {
           // append may still have produced zero-row part files)
           if (n == 0L && newFiles.forall(f => newRows.getOrElse(f, 0L) == 0L)) {
             dropDirs()
-            return st.version
+            return Done(st.version)
           }
           val cdcAdd =
             if (st.cdf) mw.changes.toSeq.flatMap(writeChangeData(_, table, dataDir))
@@ -5127,57 +4934,22 @@ object TxnTable {
             if (n == 0L) Nil
             else delFiles.map(f =>
               DelMeta(f, gate, mw.keyCols, n, named = named.getOrElse(Nil)))
-          var base = st
-          var tries = 0
-          var rebasing = true
-          while (rebasing && tries < 32) {
-            val next = base.version + 1L
-            val content =
-              if (next % checkpointInterval(spark) == 0) {
-                val addvAll = base.addv ++ newFiles.map(_ -> next).toMap
-                val files = base.files ++ newFiles
-                manifestContent(pubSchema, base.txns,
-                  base.stats ++ newStats, files, base.blooms ++ newBlooms,
-                  base.rows ++ newRows, base.partCols, op = op,
-                  cdf = base.cdf, cdcAdd = cdcAdd, mor = true,
-                  dels = (base.dels ++ dels).filter(d =>
-                    files.exists(f => addvAll.getOrElse(f, 0L) < d.version)),
-                  addv = addvAll, checks = base.checks, props = base.props, retired = base.retired,
-                  pathpart = base.pathpart, aliases = base.aliases)
-              } else deltaContent(pubSchema, base.txns, newStats,
-                removed = Nil, added = newFiles, base = base.version,
-                newBlooms = newBlooms, newRows = newRows,
-                partCols = base.partCols, op = op, cdf = base.cdf,
-                cdcAdd = cdcAdd, mor = true, newDels = dels,
-                checks = base.checks, props = base.props, retired = base.retired,
-                pathpart = base.pathpart, aliases = base.aliases)
-            if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-              writePointer(ctx, table, next)
-              if (mw.keyCols == PosDelKeyCols)
-                maybeCoalescePosVectors(spark, table)
-              return next
-            }
-            tries += 1
-            backoff(tries)
-            val fresh = latestState(spark, table).getOrElse(
-              throw new IllegalStateException(s"$table lost its manifests mid-commit"))
+          vector = mw.keyCols == PosDelKeyCols
+          Publish(Change(op, added = newFiles, stats = newStats,
+              blooms = newBlooms, rows = newRows, dels = dels, cdc = cdcAdd,
+              prune = true, header = _.copy(schema = Some(pubSchema), mor = true)),
+            Seq(dataDir) ++ sideDir,
             // only interleaved PURE APPENDS rebase: same file set plus
             // additions, same schema, and IDENTICAL delete entries —
             // an interleaved delete's tuples would not subtract from
             // this commit's appended rows (gate-exempt), silently
             // resurrecting them
-            rebasing = st.files.forall(fresh.files.contains) &&
-              fresh.schema.map(_.json) == st.schema.map(_.json) &&
-              fresh.dels == st.dels
-            if (rebasing) base = fresh
-          }
-          dropDirs()
-          attempt += 1
-          backoff(attempt)
+            rebases = fresh => onlyGrew(st, fresh) && fresh.dels == st.dels)
       }
     }
-    throw new IllegalStateException(
-      s"merge-on-read upsert of $table lost the snapshot race 16 times")
+    val v = Log.commit(spark, table, op)(plan)
+    if (vector) maybeCoalescePosVectors(spark, table)
+    v
   }
 
   /** Plan ONE logical scan over table-relative `rel` data files with
@@ -5515,18 +5287,14 @@ object TxnTable {
     * on a date/timestamp or string column — bounds take the same typed
     * values as `readRangeOn`. */
   def deleteRangeOn(spark: SparkSession, table: String, column: String,
-                    lo: Any, hi: Any): Long = {
-    val ctx = fc(spark)
-    var attempt = 0
-    while (attempt < 16) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
+                    lo: Any, hi: Any): Long =
+    Log.commit(spark, table, "delete") { st0 =>
+      val st = st0.present(table)
       require(st.dels.isEmpty,
         s"$table carries merge-on-read delete files; materialize them " +
           "first (compact / SQL OPTIMIZE) or delete through SQL DELETE, " +
           "which composes with them")
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+      val schema = st.schemaOf(table)
       val dt = schema(column).dataType
       val b = boundRange(lo, hi, dt)
       // metadata-only drop requires PROOF every row is in-range: min/max
@@ -5571,22 +5339,10 @@ object TxnTable {
               table, d)
           (nf, ns, nb, nr, Some(d), cdc)
         }
-      val removedFiles = (covered ++ boundary).sorted
-      publishRewrite(spark, ctx, table, st, schema, removedFiles, newFiles,
-        newStats, newBlooms, newRows, disjointCol = Some(column), bound = b,
-        op = "delete", cdcAdd = cdcAdd,
-        cdcDel = if (st.cdf) covered.sorted else Nil)
-        match {
-          case Some(v) => return v
-          case None => // race invalidated the computation: redo
-            dataDir.foreach(d => ctx.delete(new Path(s"$table/$d"), true))
-            attempt += 1
-            backoff(attempt)
-        }
+      rewritePublish("delete", st, schema, (covered ++ boundary).sorted,
+        dataDir.toSeq, newFiles, newStats, newBlooms, newRows,
+        Some(column -> b), cdcAdd, if (st.cdf) covered.sorted else Nil)
     }
-    throw new IllegalStateException(
-      s"deleteRange on $table lost the snapshot race 16 times")
-  }
 
   /** Delta's `replaceWhere` — the daily-re-ingest primitive: atomically
     * replace exactly the rows with `column` in [lo, hi] by `df`, in ONE
@@ -5663,7 +5419,6 @@ object TxnTable {
                               disjointFrom: (FileStat, DataType) => Boolean,
                               rebaseBound: DataType => Bound): Long = {
     val spark = df.sparkSession
-    val ctx = fc(spark)
     val dtIn = df.schema(column).dataType
     require(df.filter(not(predicate(dtIn))).limit(1).count() == 0L,
       s"replaceWhere scoped-overwrite contract: every incoming row must " +
@@ -5676,15 +5431,13 @@ object TxnTable {
     // boundary rows re-derive to the same values
     refuseIdentity(latestState(spark, table).flatMap(_.schema),
       table, "replaceWhere")
-    var attempt = 0
-    while (attempt < 16) {
-      val st = latestState(spark, table).getOrElse(
-        return commitOverwrite(df, table, statsCols = Seq(column)))
+    def plan(st: State): Attempt = {
+      if (st.version == 0L)
+        return Done(commitOverwrite(df, table, statsCols = Seq(column)))
       require(st.dels.isEmpty,
         s"$table carries merge-on-read delete files; materialize them " +
           "first (compact / SQL OPTIMIZE), then replaceWhere")
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+      val schema = st.schemaOf(table)
       val dt = schema(column).dataType
       val b = rebaseBound(dt)
       val covered = st.files.filter(f =>
@@ -5719,21 +5472,11 @@ object TxnTable {
             deletes.map(_.unionByName(inserts)).getOrElse(inserts),
             table, dataDir)
         }
-      val removed = (covered ++ boundary).sorted
-      publishRewrite(spark, ctx, table, st, schema, removed, newFiles,
-        newStats, newBlooms, newRows,
-        disjointCol = Some(column), bound = b, op = "replace",
-        cdcAdd = cdcAdd, cdcDel = if (st.cdf) covered.sorted else Nil)
-        match {
-          case Some(v) => return v
-          case None =>
-            ctx.delete(new Path(s"$table/$dataDir"), true)
-            attempt += 1
-            backoff(attempt)
-        }
+      rewritePublish("replace", st, schema, (covered ++ boundary).sorted,
+        Seq(dataDir), newFiles, newStats, newBlooms, newRows,
+        Some(column -> b), cdcAdd, if (st.cdf) covered.sorted else Nil)
     }
-    throw new IllegalStateException(
-      s"replaceWhere on $table lost the snapshot race 16 times")
+    Log.commit(spark, table, "replace")(plan)
   }
 
   /** Read the committed snapshot. */
@@ -6234,88 +5977,54 @@ object TxnTable {
     * vacuumed target (stateOf throws on the missing manifest). Written
     * as a FULL manifest — a restore is a natural checkpoint. */
   def restore(spark: SparkSession, table: String, toVersion: Long): Long = {
-    val ctx = fc(spark)
     val target = stateOf(spark, table, toVersion)
     val schema = target.schema.getOrElse(
       throw new IllegalStateException(
         s"$table@v$toVersion predates the schema log — cannot restore"))
-    var attempt = 0
-    while (attempt < 64) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
-      if (st.version == toVersion) return st.version // already there
-      val next = st.version + 1L
-      val content =
-        manifestContent(schema, st.txns, target.stats, target.files,
-          target.blooms, target.rows, target.partCols,
-          op = "restore", cdf = st.cdf,
-          mor = st.mor || target.dels.nonEmpty,
-          dels = target.dels, addv = target.addv,
-          // constraints are POLICY, not data: a restore rolls back table
-          // content but keeps the current constraint set and the full
-          // retired-name memory (old files coming back is precisely when
-          // the resurrection guard matters most)
-          checks = st.checks, props = st.props,
-          retired = (st.retired ++ target.retired).distinct,
-          pathpart = target.pathpart,
-          // aliases are DATA-layout state like the file list: the
-          // restored snapshot's files resolve through ITS alias map
-          aliases = target.aliases)
-      if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-        writePointer(ctx, table, next)
-        return next
-      }
-      attempt += 1
-      backoff(attempt)
+    Log.commit(spark, table, "restore") { st0 =>
+      val st = st0.present(table)
+      if (st.version == toVersion) Done(st.version) // already there
+      // the target's files, stats, deletes, add versions, partition
+      // spec — and aliases and the converted-layout flag, which are
+      // DATA-layout state like the file list (the restored files
+      // resolve through THEIR alias map) — with the current txn
+      // markers. Constraints are POLICY, not data: a restore rolls back
+      // table content but keeps the current constraint set, properties
+      // and the full retired-name memory (old files coming back is
+      // precisely when the resurrection guard matters most)
+      else Publish(Change("restore", checkpoint = true,
+        header = cur => target.copy(txns = cur.txns, schema = Some(schema),
+          cdf = cur.cdf, mor = cur.mor || target.dels.nonEmpty,
+          checks = cur.checks, props = cur.props,
+          retired = (cur.retired ++ target.retired).distinct)))
     }
-    throw new IllegalStateException(
-      s"restore of $table lost the manifest race 64 times")
   }
 
   // ------------------------------------------------------------ ALTER
-  /** Metadata-only commit: identical files/stats/deletes to the latest
-    * snapshot with a new schema / constraint set — the O(1) spelling of
-    * ALTER TABLE at any table size (one small manifest write; zero data
-    * I/O on a 100 TB table). Written FULL: a schema change is a natural
-    * checkpoint. */
-  private def commitMetadata(spark: SparkSession, table: String, op: String,
-      partColsOf: State => Seq[String] = _.partCols)(
-      f: State => (org.apache.spark.sql.types.StructType,
-                   Map[String, Seq[FileStat]],
-                   Map[String, Seq[BloomMeta]],
-                   Map[String, String], Seq[String])): Long = {
-    val ctx = fc(spark)
-    var attempt = 0
-    while (attempt < 64) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
-      val (schema0, stats, blooms, checks, retired) = f(st)
+  /** Metadata-only commit: identical files/deletes to the latest
+    * snapshot with the header (schema, constraints, properties, spec,
+    * aliases, retired names) and skipping metadata `f` derives from it
+    * — the O(1) spelling of ALTER TABLE and SET TBLPROPERTIES at any
+    * table size (one small manifest write; zero data I/O on a 100 TB
+    * table). Written FULL: a schema change is a natural checkpoint. */
+  private def commitMetadata(spark: SparkSession, table: String, op: String)(
+      f: State => State): Long =
+    Log.commit(spark, table, op) { st0 =>
+      val st = st0.present(table)
+      val next = f(st)
       // FIELD-ID choke point: EVERY metadata-only schema change on an
       // id-mode table flows through here — fields the change carried
       // keep their ids (f.copy preserves metadata), brand-new fields
       // (ADD COLUMN, nested adds, evolved elements) mint fresh ids
       // above both the live max and every retired id (never reused)
-      val schema = st.schema match {
-        case Some(prior) if FieldIds.hasIds(prior) =>
-          FieldIds.assign(Some(prior), schema0,
-            (0L +: FieldIds.retiredIds(retired)).max)
-        case _ => schema0
+      val schema = (st.schema, next.schema) match {
+        case (Some(prior), Some(s)) if FieldIds.hasIds(prior) =>
+          Some(FieldIds.assign(Some(prior), s,
+            (0L +: FieldIds.retiredIds(next.retired)).max))
+        case _ => next.schema
       }
-      val next = st.version + 1L
-      val content = manifestContent(schema, st.txns, stats, st.files,
-        blooms, st.rows, partColsOf(st), op = op, cdf = st.cdf, mor = st.mor,
-        dels = st.dels, addv = st.addv, checks = checks, retired = retired, props = st.props,
-        pathpart = st.pathpart, aliases = st.aliases)
-      if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-        writePointer(ctx, table, next)
-        return next
-      }
-      attempt += 1
-      backoff(attempt)
+      Publish(Change(op, checkpoint = true, header = _ => next.copy(schema = schema)))
     }
-    throw new IllegalStateException(
-      s"$op on $table lost the manifest race 64 times")
-  }
 
   /** Column names a SQL expression references — used to refuse schema
     * changes that would orphan a CHECK constraint. */
@@ -6353,9 +6062,8 @@ object TxnTable {
             "surface it as NULL. ADD it nullable, backfill, then ALTER " +
             "COLUMN ... SET NOT NULL")
       }
-      (org.apache.spark.sql.types.StructType(
-         schema.fields ++ cols.map(_.copy(nullable = true))),
-       st.stats, st.blooms, st.checks, st.retired)
+      st.copy(schema = Some(org.apache.spark.sql.types.StructType(
+        schema.fields ++ cols.map(_.copy(nullable = true)))))
     }
 
   /** Widenings Spark's parquet readers perform IN the scan (verified
@@ -6416,10 +6124,9 @@ object TxnTable {
         }
         // nested blooms hash the old type too — drop them like the
         // top-level widen does (skipping degrades, results don't)
-        (ns, st.stats,
-          st.blooms.view.mapValues(_.filterNot(_.col.equalsIgnoreCase(name)))
-            .filter(_._2.nonEmpty).toMap,
-          st.checks, st.retired)
+        st.copy(schema = Some(ns), blooms = st.blooms.view
+          .mapValues(_.filterNot(_.col.equalsIgnoreCase(name)))
+          .filter(_._2.nonEmpty).toMap)
       } else {
       val field = schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
         throw new IllegalArgumentException(s"no such column $name in $table"))
@@ -6450,14 +6157,14 @@ object TxnTable {
           "OPTIMIZE the old layout away first")
       require(!identityColumn(schema).exists(_.col.equalsIgnoreCase(name)),
         s"cannot change the type of IDENTITY column $name")
-      (org.apache.spark.sql.types.StructType(schema.fields.map(f =>
-        if (f.name.equalsIgnoreCase(name)) f.copy(dataType = to) else f)),
-       st.stats,
-       // type-sensitive hashes: the column's blooms are no longer
-       // sound probes — drop them (skipping degrades, results don't)
-       st.blooms.view.mapValues(_.filterNot(_.col.equalsIgnoreCase(name)))
-         .filter(_._2.nonEmpty).toMap,
-       st.checks, st.retired)
+      st.copy(schema = Some(org.apache.spark.sql.types.StructType(
+        schema.fields.map(f =>
+          if (f.name.equalsIgnoreCase(name)) f.copy(dataType = to) else f))),
+        // type-sensitive hashes: the column's blooms are no longer
+        // sound probes — drop them (skipping degrades, results don't)
+        blooms = st.blooms.view
+          .mapValues(_.filterNot(_.col.equalsIgnoreCase(name)))
+          .filter(_._2.nonEmpty).toMap)
       }
     }
 
@@ -6532,7 +6239,7 @@ object TxnTable {
         StructType(inner.fields :+
           StructField(parts.last, dt, nullable = true))
       }
-      (ns, st.stats, st.blooms, st.checks, st.retired)
+      st.copy(schema = Some(ns))
     }
 
   /** `ALTER TABLE … DROP COLUMN s.f` — the nested drop: the field
@@ -6578,13 +6285,12 @@ object TxnTable {
       def gone(c: String): Boolean =
         c.equalsIgnoreCase(dotted) ||
           c.toLowerCase.startsWith(dotted.toLowerCase + ".")
-      (ns,
-        st.stats.view.mapValues(_.filterNot(s => gone(s.col)))
+      st.copy(schema = Some(ns),
+        stats = st.stats.view.mapValues(_.filterNot(s => gone(s.col)))
           .filter(_._2.nonEmpty).toMap,
-        st.blooms.view.mapValues(_.filterNot(b => gone(b.col)))
+        blooms = st.blooms.view.mapValues(_.filterNot(b => gone(b.col)))
           .filter(_._2.nonEmpty).toMap,
-        st.checks,
-        st.retired :+ droppedId.map(i => s"$dotted#$i").getOrElse(dotted))
+        retired = st.retired :+ droppedId.map(i => s"$dotted#$i").getOrElse(dotted))
     }
 
   /** `ALTER TABLE … SET PARTITIONED BY (…)` — PARTITION-SPEC EVOLUTION
@@ -6613,7 +6319,7 @@ object TxnTable {
       case BucketEntry(n, c) => BucketEntry(n, c)
       case c => c
     }
-    commitMetadata(spark, table, "set-partition-spec", _ => norm) { st =>
+    commitMetadata(spark, table, "set-partition-spec") { st =>
       if (st.partCols == norm)
         return st.version // provable no-op: nothing to commit
       val schema = st.schema.getOrElse(
@@ -6635,7 +6341,7 @@ object TxnTable {
           case _ => ()
         }
       }
-      (schema, st.stats, st.blooms, st.checks, st.retired)
+      st.copy(partCols = norm)
     }
   }
 
@@ -6678,21 +6384,21 @@ object TxnTable {
           s"cannot drop ${field.name}: generated column $gn derives from " +
             "it (drop the generated column first)")
       }
-      (org.apache.spark.sql.types.StructType(
-         schema.fields.filterNot(_ eq field)),
-       // prefix too: dropping a struct takes its nested fields' stats
-       // and blooms (keyed by dotted path) with it
-       st.stats.view.mapValues(_.filterNot(s => refs(field.name)(s.col)))
-         .filter(_._2.nonEmpty).toMap,
-       st.blooms.view.mapValues(_.filterNot(b => refs(field.name)(b.col)))
-         .filter(_._2.nonEmpty).toMap,
-       st.checks,
-       // id-mode drops retire `name#id`: the id keeps the never-reuse
-       // floor (FieldIds.assign mints above every retired id) and the
-       // bare name unblocks — a re-add under a FRESH id reads the old
-       // files' same-named bytes as NULL, never resurrecting them
-       (st.retired :+ FieldIds.idOf(field).map(i => s"${field.name}#$i")
-         .getOrElse(field.name)).distinct)
+      st.copy(
+        schema = Some(org.apache.spark.sql.types.StructType(
+          schema.fields.filterNot(_ eq field))),
+        // prefix too: dropping a struct takes its nested fields' stats
+        // and blooms (keyed by dotted path) with it
+        stats = st.stats.view.mapValues(_.filterNot(s => refs(field.name)(s.col)))
+          .filter(_._2.nonEmpty).toMap,
+        blooms = st.blooms.view.mapValues(_.filterNot(b => refs(field.name)(b.col)))
+          .filter(_._2.nonEmpty).toMap,
+        // id-mode drops retire `name#id`: the id keeps the never-reuse
+        // floor (FieldIds.assign mints above every retired id) and the
+        // bare name unblocks — a re-add under a FRESH id reads the old
+        // files' same-named bytes as NULL, never resurrecting them
+        retired = (st.retired :+ FieldIds.idOf(field).map(i => s"${field.name}#$i")
+          .getOrElse(field.name)).distinct)
     }
 
   /** One partitioning entry with its source column renamed —
@@ -6724,14 +6430,9 @@ object TxnTable {
     * rewrite churn rebuilds them. The old name joins the RETIRED list
     * so a later re-add cannot resurrect the aliased bytes. */
   def renameColumn(spark: SparkSession, table: String,
-                   from: String, to: String): Long = {
-    val ctx = fc(spark)
-    var attempt = 0
-    while (attempt < 64) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+                   from: String, to: String): Long =
+    commitMetadata(spark, table, "alter-rename") { st =>
+      val schema = st.schemaOf(table)
       val field = schema.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
         throw new IllegalArgumentException(s"no such column $from in $table"))
       require(!schema.fieldNames.exists(_.equalsIgnoreCase(to)),
@@ -6782,23 +6483,11 @@ object TxnTable {
         if (idMode) st.aliases
         else (st.aliases - field.name) +
           (to -> (field.name +: st.aliases.getOrElse(field.name, Nil)))
-      val next = st.version + 1L
-      val content = manifestContent(newSchema, st.txns, newStats, st.files,
-        newBlooms, st.rows, newPart, op = "alter-rename", cdf = st.cdf,
-        mor = st.mor, dels = st.dels, addv = st.addv, checks = st.checks, props = st.props,
+      st.copy(schema = Some(newSchema), stats = newStats, blooms = newBlooms,
+        partCols = newPart, aliases = newAliases,
         retired = (st.retired :+ FieldIds.idOf(field)
-          .map(i => s"${field.name}#$i").getOrElse(field.name)).distinct,
-        pathpart = st.pathpart, aliases = newAliases)
-      if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-        writePointer(ctx, table, next)
-        return next
-      }
-      attempt += 1
-      backoff(attempt)
+          .map(i => s"${field.name}#$i").getOrElse(field.name)).distinct)
     }
-    throw new IllegalStateException(
-      s"rename on $table lost the manifest race 64 times")
-  }
 
   /** `ALTER TABLE … RENAME COLUMN s.f TO g` — NESTED rename, FIELD-ID
     * tables only: the field's id is unchanged, so every old file serves
@@ -6864,19 +6553,18 @@ object TxnTable {
         else if (c.toLowerCase.startsWith(dotted.toLowerCase + "."))
           newPath + c.substring(dotted.length)
         else c
-      (ns,
+      st.copy(schema = Some(ns),
         // per-file stats rename with the field — the bytes they
         // describe are unchanged, so skipping survives the rename
-        st.stats.view.mapValues(_.map(fs => fs.copy(col = renamed(fs.col))))
+        stats = st.stats.view.mapValues(_.map(fs => fs.copy(col = renamed(fs.col))))
           .toMap,
         // bloom sidecar paths embed the old physical name — drop the
         // metas (point lookups degrade to stats pruning until churn)
-        st.blooms.view.mapValues(_.filterNot(b =>
+        blooms = st.blooms.view.mapValues(_.filterNot(b =>
             b.col.equalsIgnoreCase(dotted) ||
               b.col.toLowerCase.startsWith(dotted.toLowerCase + ".")))
           .filter(_._2.nonEmpty).toMap,
-        st.checks,
-        (st.retired :+ renamedId.map(i => s"$dotted#$i").getOrElse(dotted))
+        retired = (st.retired :+ renamedId.map(i => s"$dotted#$i").getOrElse(dotted))
           .distinct)
     }
 
@@ -6898,11 +6586,11 @@ object TxnTable {
 
   def setProperties(spark: SparkSession, table: String,
                     kv: Map[String, String]): Long =
-    commitProps(spark, table, "set-props")(_ ++ kv)
+    commitMetadata(spark, table, "set-props")(st => st.copy(props = st.props ++ kv))
 
   def unsetProperties(spark: SparkSession, table: String,
                       keys: Seq[String]): Long =
-    commitProps(spark, table, "unset-props")(_ -- keys)
+    commitMetadata(spark, table, "unset-props")(st => st.copy(props = st.props -- keys))
 
   /** Replace the WHOLE property map — what `CREATE OR REPLACE TABLE`
     * needs: a replace is a re-declaration, so properties reset to the
@@ -6912,7 +6600,7 @@ object TxnTable {
                         kv: Map[String, String]): Long = {
     if (tableProperties(spark, table) == kv)
       return latestVersion(spark, table).get
-    commitProps(spark, table, "replace-props")(_ => kv)
+    commitMetadata(spark, table, "replace-props")(_.copy(props = kv))
   }
 
   // ------------------------------------------------------ snapshot tags
@@ -7005,32 +6693,6 @@ object TxnTable {
         k.stripPrefix(TagPropPrefix) -> v.toLong
     }
 
-  private def commitProps(spark: SparkSession, table: String, op: String)(
-      f: Map[String, String] => Map[String, String]): Long = {
-    val ctx = fc(spark)
-    var attempt = 0
-    while (attempt < 64) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
-      val next = st.version + 1L
-      val content = manifestContent(
-        st.schema.getOrElse(throw new IllegalStateException(
-          s"$table predates the schema log")),
-        st.txns, st.stats, st.files, st.blooms, st.rows, st.partCols,
-        op = op, cdf = st.cdf, mor = st.mor, dels = st.dels, addv = st.addv,
-        checks = st.checks, props = f(st.props), retired = st.retired,
-        pathpart = st.pathpart, aliases = st.aliases)
-      if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-        writePointer(ctx, table, next)
-        return next
-      }
-      attempt += 1
-      backoff(attempt)
-    }
-    throw new IllegalStateException(
-      s"$op on $table lost the manifest race 64 times")
-  }
-
   // ------------------------------------------------- CHECK constraints
   /** ALTER TABLE … ADD CONSTRAINT name CHECK (expr) — recorded in the
     * manifest (snapshot state, survives restore/compaction/DML) and
@@ -7075,7 +6737,7 @@ object TxnTable {
         enforceChecks(read(spark, table), table, Map(name -> sql))
     }
     commitMetadata(spark, table, "alter-constraint") { st =>
-      (validate(st), st.stats, st.blooms, st.checks + (name -> sql), st.retired)
+      st.copy(schema = Some(validate(st)), checks = st.checks + (name -> sql))
     }
   }
 
@@ -7084,9 +6746,7 @@ object TxnTable {
     commitMetadata(spark, table, "alter-constraint") { st =>
       require(st.checks.contains(name),
         s"no constraint $name on $table")
-      (st.schema.getOrElse(throw new IllegalStateException(
-         s"$table predates the schema log")),
-       st.stats, st.blooms, st.checks - name, st.retired)
+      st.copy(checks = st.checks - name)
     }
 
   /** The latest snapshot's CHECK constraints (name → SQL). */
@@ -7260,17 +6920,15 @@ object TxnTable {
     // them (and the add versions they gate against) onto clone history
     val (cloneSchema, cloneAddv) =
       rebaseNdefsForClone(source, srcV, schema, st.files, st.addv)
-    val content = manifestContent(cloneSchema, st.txns,
-      st.stats.map { case (f, v) => pf(f) -> v },
-      st.files.map(pf),
-      st.blooms.map { case (f, v) => pf(f) -> v },
-      st.rows.map { case (f, v) => pf(f) -> v },
-      st.partCols, op = "clone", cdf = st.cdf, mor = st.mor,
-      addv = cloneAddv.map { case (f, v) => pf(f) -> v },
-      checks = st.checks, props = st.props, retired = st.retired, aliases = st.aliases)
-    require(tryCreateAtomic(ctx, new Path(dest, manifestName(1L)), content),
+    val clone = st.copy(version = 1L, schema = Some(cloneSchema),
+      stats = st.stats.map { case (f, v) => pf(f) -> v },
+      files = st.files.map(pf),
+      blooms = st.blooms.map { case (f, v) => pf(f) -> v },
+      rows = st.rows.map { case (f, v) => pf(f) -> v },
+      dels = Nil, addv = cloneAddv.map { case (f, v) => pf(f) -> v })
+    require(Log.create(spark, new Path(dest, manifestName(1L)), clone, "clone"),
       s"$dest was concurrently initialized — clone aborted")
-    writePointer(ctx, dest, 1L)
+    Log.repoint(ctx, dest, 1L)
     1L
   }
 
@@ -7346,14 +7004,12 @@ object TxnTable {
     // the read-time fill would overwrite post-declaration files' values
     val (cloneSchema, cloneAddv) =
       rebaseNdefsForClone(source, srcV, schema, st.files, st.addv)
-    val content = manifestContent(cloneSchema, st.txns, st.stats, st.files,
-      st.blooms, st.rows, st.partCols, op = "deep-clone", cdf = st.cdf,
-      mor = st.mor, addv = cloneAddv,
-      checks = st.checks, props = st.props, retired = st.retired,
-      pathpart = st.pathpart, aliases = st.aliases)
-    require(tryCreateAtomic(ctx, new Path(dest, manifestName(1L)), content),
+    val clone = st.copy(version = 1L, schema = Some(cloneSchema), dels = Nil,
+      addv = cloneAddv)
+    require(Log.create(spark, new Path(dest, manifestName(1L)), clone,
+        "deep-clone"),
       s"$dest was concurrently initialized — clone aborted")
-    writePointer(ctx, dest, 1L)
+    Log.repoint(ctx, dest, 1L)
     1L
   }
 
@@ -7389,13 +7045,13 @@ object TxnTable {
           else f))
       case None => rebased
     }
-    val content = manifestContent(fresh, Map.empty, Map.empty, Nil,
-      partCols = st.partCols, op = "create-like", cdf = st.cdf,
-      mor = st.mor, checks = st.checks,
+    val like = State.empty.copy(version = 1L, schema = Some(fresh),
+      partCols = st.partCols, cdf = st.cdf, mor = st.mor, checks = st.checks,
       props = st.props.filterNot(_._1.startsWith(TagPropPrefix)))
-    require(tryCreateAtomic(ctx, new Path(dest, manifestName(1L)), content),
+    require(Log.create(spark, new Path(dest, manifestName(1L)), like,
+        "create-like"),
       s"$dest was concurrently initialized — CREATE TABLE LIKE aborted")
-    writePointer(ctx, dest, 1L)
+    Log.repoint(ctx, dest, 1L)
     1L
   }
 
@@ -7493,11 +7149,13 @@ object TxnTable {
     val stats = perFile.filter(_._2.nonEmpty).map(t => t._1 -> t._2).toMap
     val rowCounts =
       files.map(f => f -> perFile.find(_._1 == f).map(_._3).getOrElse(0L)).toMap
-    val content = manifestContent(schema, Map.empty, stats, files,
-      rows = rowCounts, partCols = partCols, op = "convert", pathpart = true)
-    require(tryCreateAtomic(ctx, new Path(tabAbs, manifestName(1L)), content),
+    val adopted = State.empty.copy(version = 1L, schema = Some(schema),
+      stats = stats, files = files, rows = rowCounts, partCols = partCols,
+      pathpart = true)
+    require(Log.create(spark, new Path(tabAbs, manifestName(1L)), adopted,
+        "convert"),
       s"$table was concurrently initialized — convert aborted")
-    writePointer(ctx, tabAbs, 1L)
+    Log.repoint(ctx, tabAbs, 1L)
     1L
   }
 
@@ -7509,12 +7167,12 @@ object TxnTable {
     * sidecars for every column the table tracked — compaction must never
     * trade small-files for lost pruning. */
   def compact(spark: SparkSession, table: String, targetFiles: Int = 1): Long =
-    // routed through the pinned-CAS rewrite loop (smallBytes = ∞ makes
-    // every file "small"), NOT through commit(append = false): an
-    // overwrite's data files are written ONCE before its CAS loop, so a
-    // compact losing the race to an interleaved delete/update/merge
-    // would re-publish STALE content and silently undo it (found by
-    // DmlFuzzSpec). The loop recomputes the whole rewrite per attempt.
+    // routed through the pinned rewrite (smallBytes = ∞ makes every
+    // file "small"), NOT through commit(append = false): an overwrite
+    // re-publishes its written files after a lost CAS, so a compact
+    // losing the race to an interleaved delete/update/merge would
+    // re-publish STALE content and silently undo it (found by
+    // DmlFuzzSpec). compactSmall recomputes the whole rewrite per try.
     compactSmall(spark, table, smallBytes = Long.MaxValue,
       targetFiles = targetFiles, checkpoint = true)
 
@@ -7609,12 +7267,9 @@ object TxnTable {
                    opName: String = "compact",
                    purgeOnly: Boolean = false): Long = {
     val ctx = fc(spark)
-    var attempt = 0
-    while (attempt < 16) {
-      val st = latestState(spark, table).getOrElse(
-        throw new IllegalStateException(s"no committed version in $table"))
-      val schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"$table predates the schema log"))
+    def plan(st0: State): Attempt = {
+      val st = st0.present(table)
+      val schema = st.schemaOf(table)
       val inScope: String => Boolean = scope match {
         case None => _ => true
         case Some((c, lo, hi)) =>
@@ -7656,7 +7311,7 @@ object TxnTable {
       if (if (purgeOnly) small.isEmpty
           else small.isEmpty ||
             (small.size <= 1 && st.dels.isEmpty && transform.isEmpty))
-        return st.version
+        return Done(st.version)
       val carried = st.files.filterNot(small.toSet)
       val trackedCols =
         (st.stats.values.flatten.map(_.col).toSet ++ extraStatsCols)
@@ -7679,57 +7334,28 @@ object TxnTable {
       val (dataDir, newFiles, newStats, newBlooms, newRows) =
         writeData(packed, table, trackedCols, trackedBlooms, st.partCols,
           declared = st.schema)
-      val files = carried ++ newFiles
-      val removed = small.sorted
-      val next = st.version + 1L
       // `checkpoint` forces a FULL manifest: a compaction is a natural
       // checkpoint, and the SQL OPTIMIZE spelling uses it so a
       // follow-up VACUUM can reclaim the packed history instead of
-      // being pinned by a delta chain
-      val content =
-        if (checkpoint || next % checkpointInterval(spark) == 0)
-          manifestContent(schema, st.txns,
-            (st.stats -- removed) ++ newStats, files,
-            (st.blooms -- removed) ++ newBlooms,
-            (st.rows -- removed) ++ newRows, st.partCols,
-            op = opName, cdf = st.cdf, mor = st.mor,
-            dels = {
-              val addvAll = (st.addv -- removed) ++ newFiles.map(_ -> next).toMap
-              val present = files.toSet
-              st.dels.filter { d =>
-                val gateLive =
-                  files.exists(f => addvAll.getOrElse(f, 0L) < d.version)
-                // an exhausted positional vector (every file it names
-                // rewritten away) is dead even under a live gate —
-                // its coordinates can match nothing
-                val posLive = d.keyCols != PosDelKeyCols ||
-                  (if (d.named.nonEmpty) d.named.exists(present)
-                   else !purgeOnly ||
-                     posNamedByDel.getOrElse(d.file, Set.empty)
-                       .exists(present))
-                gateLive && posLive
-              }
-            },
-            addv = (st.addv -- removed) ++ newFiles.map(_ -> next).toMap,
-            checks = st.checks, props = st.props, retired = st.retired,
-            pathpart = st.pathpart && files.exists(!_.startsWith("w=")),
-            aliases = st.aliases)
-        else deltaContent(schema, st.txns, newStats,
-          removed = removed, added = newFiles, base = st.version,
-          newBlooms = newBlooms, newRows = newRows, partCols = st.partCols,
-          op = opName, cdf = st.cdf, mor = st.mor,
-          checks = st.checks, props = st.props, retired = st.retired,
-          pathpart = st.pathpart, aliases = st.aliases)
-      if (tryCreateAtomic(ctx, new Path(table, manifestName(next)), content)) {
-        writePointer(ctx, table, next)
-        return next
-      }
-      ctx.delete(new Path(s"$table/$dataDir"), true)
-      attempt += 1 // lost the race: re-pick against the new snapshot
-      backoff(attempt)
+      // being pinned by a delta chain. A full manifest drops the delete
+      // entries no surviving file is gated by — an exhausted positional
+      // vector (every file it names rewritten away) included. A purge
+      // also drops the legacy unnamed vectors whose scanned files are
+      // all rewritten (their coordinates can match nothing), so it is
+      // always a checkpoint. A lost race re-picks against the new
+      // snapshot.
+      val carriedSet = carried.toSet
+      Publish(Change(opName, added = newFiles, stats = newStats,
+          blooms = newBlooms, rows = newRows, removed = small.sorted,
+          checkpoint = checkpoint || purgeOnly, prune = true,
+          header = h => h.copy(
+            pathpart = h.keepsAdopted(small.toSet),
+            dels = if (!purgeOnly) h.dels else h.dels.filter(d =>
+              d.keyCols != PosDelKeyCols || d.named.nonEmpty ||
+                posNamedByDel.getOrElse(d.file, Set.empty).exists(carriedSet)))),
+        Seq(dataDir))
     }
-    throw new IllegalStateException(
-      s"compactSmall on $table lost the snapshot race 16 times")
+    Log.commit(spark, table, opName)(plan)
   }
 
   /** Drop snapshot manifests older than `latest - keep` and delete data
@@ -7968,7 +7594,7 @@ object TxnTable {
           }
         }
       }
-      if (!dryRun) writePointer(ctx, table, latest) // keep discovery fresh
+      if (!dryRun) Log.repoint(ctx, table, latest) // keep discovery fresh
     }
     planned.toSeq.sorted
   }

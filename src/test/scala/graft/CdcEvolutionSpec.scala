@@ -188,4 +188,35 @@ class CdcEvolutionSpec extends AnyFunSuite {
         s"expected the rename-vintage refusal, got: ${e.getMessage}")
     }
   }
+
+  test("a bounded historical read ending before a drop-via-overwrite is " +
+      "served; the same read past the drop still refuses") {
+    withZone { zone =>
+      val t = s"$zone/corpus"
+      TxnTable.commitOverwrite(
+        (0L until 3L).map(k => (k, k * 10L)).toDF("k", "v"), t,
+        cdf = Some(true))
+      TxnTable.commitAppend(Seq((7L, 70L)).toDF("k", "v"), t)
+      val beforeDrop = TxnTable.latestVersion(spark, t).get
+      // `v` leaves through an OVERWRITE: no retired or alias marker
+      TxnTable.commitOverwrite(Seq(9L).toDF("k"), t)
+      // the subscriber's handle pins the pre-drop schema (k, v)
+      def feed(until: Long) = spark.read.format("graft")
+        .option("readChangeFeed", "true")
+        .option("versionAsOf", beforeDrop.toString)
+        .option("startingVersion", "0")
+        .option("endingVersion", until.toString).load(t)
+      val served = feed(beforeDrop)
+        .select($"k", $"v", $"_change_type").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+      assert(served == Set((0L, 0L, "insert"), (1L, 10L, "insert"),
+        (2L, 20L, "insert"), (7L, 70L, "insert")),
+        "every commit of the window stores `v` under its subscribed name")
+      val e = intercept[IllegalArgumentException] {
+        feed(beforeDrop + 1L).collect()
+      }
+      assert(e.getMessage.contains("no longer has column 'v'"),
+        s"expected the drop-via-overwrite refusal, got: ${e.getMessage}")
+    }
+  }
 }

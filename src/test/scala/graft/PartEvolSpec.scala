@@ -234,6 +234,48 @@ class PartEvolSpec extends AnyFunSuite {
     }
   }
 
+  test("an implicit-spec overwrite racing a spec change lays out under " +
+      "the spec its own commit records") {
+    withZone { table =>
+      import spark.implicits._
+      Seq.range(0L, 50L).map(k => (k, k % 5L)).toDF("k", "g").coalesce(1)
+        .write.format("graft").mode("overwrite").save(table)
+      // the overwrite reads the unpartitioned spec, then spends its data
+      // write racing the evolution (which starts a beat later, so it
+      // usually lands inside that write). An overwrite's files are the
+      // table's ENTIRE content: whichever CAS order results, they must
+      // be laid out under the spec recorded by the overwrite's commit
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      import scala.concurrent.{ExecutionContext, Future, Await}
+      import scala.concurrent.duration._
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val fA = Future {
+        TxnTable.commitOverwrite(
+          Seq.range(100L, 150L).map(k => (k, k % 5L)).toDF("k", "g"), table)
+      }
+      val fB = Future {
+        Thread.sleep(100)
+        TxnTable.setPartitionSpec(spark, table, Seq("g"))
+      }
+      try {
+        Await.result(fA, 120.seconds); Await.result(fB, 120.seconds)
+      } finally pool.shutdown()
+      assert(TxnTable.partitionColumns(spark, table) == Seq("g"))
+      val latest = TxnTable.commitLog(spark, table).head
+      val files = TxnTable.snapshotFiles(spark, table, latest.version)
+      if (latest.op == "overwrite")
+        // lost the CAS to the evolution: rewritten under the new spec
+        assert(files.nonEmpty && files.forall(_.contains("__gp_g=")), files)
+      else
+        // landed first: its flat files are one more vintage under the
+        // spec evolved after them
+        assert(files.nonEmpty && files.forall(!_.contains("__gp_")), files)
+      val df = spark.read.format("graft").load(table)
+      assert(df.count() == 50L)
+      assert(df.agg(sum($"k")).head().getLong(0) == (100L until 150L).sum)
+    }
+  }
+
   test("a running stream's next microbatch honors an evolved sink spec") {
     withZone { zone =>
       import spark.implicits._
