@@ -3817,8 +3817,12 @@ object TxnTable {
                 withIdentity = true)
               .select(col(keyCol), col(IdPathCol).as("__f"))
           // no broadcast hint: AQE picks broadcast when the key set is
-          // small and falls back to shuffle when a bulk merge isn't
-          scan.join(keys, Seq(keyCol))
+          // small and falls back to shuffle when a bulk merge isn't.
+          // A semi-join, so only the keys can be the build side: a
+          // broadcast candidate scan is a hash relation of every
+          // candidate row (~17 MB at 60k rows), held in memory until
+          // the context cleaner next runs
+          scan.join(keys, Seq(keyCol), "left_semi")
             .select(col("__f")).distinct().collect()
             .map(r => toRel(r.getString(0))).toSet
         }
