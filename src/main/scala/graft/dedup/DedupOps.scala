@@ -2896,22 +2896,30 @@ object DedupOps {
   private def d55(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.io.TxnTable
+    val docs = Tables.documents(spark, dir)
+      .select($"doc_id", $"lang", $"text")
+    val maxId = docs.agg(max($"doc_id")).head().getLong(0)
+    val cycles = 10
+    val step = maxId / cycles + 1L
+    // DRY count of the takedown-bearing cycles, before any churn: the
+    // cycles whose id window holds a doc_id % 17 == 0 document
+    val dry = docs.filter($"doc_id" >= 0L && $"doc_id" % 17 === 0)
+      .select(($"doc_id" / step).cast("long").as("c")).distinct().count().toInt
+    require(dry >= 2,
+      s"d55 needs takedowns in at least 2 of its $cycles cycles to prove " +
+        s"auto-coalesce engagement; the input has doc_id % 17 == 0 " +
+        s"documents in only $dry (too few documents in $dir)")
+    // pin the auto-coalesce threshold BELOW the takedown-bearing cycle
+    // count so the engagement proof is conf- and data-independent (a
+    // threshold >= the takedown count would fail the tdVectors guard by
+    // construction); restored in the finally
     val zone = java.nio.file.Files
       .createTempDirectory("graft_d55_churn").toFile.getAbsolutePath
-    // pin the auto-coalesce threshold BELOW the cycle count so the
-    // engagement proof is conf-independent (a deployment running
-    // posCoalesceAt >= the cycle count would otherwise fail the
-    // tdVectors guard by construction); restored in the finally
     val prevAt = spark.conf.getOption("graft.txn.posCoalesceAt")
-    spark.conf.set("graft.txn.posCoalesceAt", "8")
+    spark.conf.set("graft.txn.posCoalesceAt", math.min(8, dry - 1).toString)
     try {
       val corpus = s"$zone/corpus_txn"
       val sigs = s"$zone/sigs_txn"
-      val docs = Tables.documents(spark, dir)
-        .select($"doc_id", $"lang", $"text")
-      val maxId = docs.agg(max($"doc_id")).head().getLong(0)
-      val cycles = 10
-      val step = maxId / cycles + 1L
       var tdVectors = 0
       (0 until cycles).foreach { c =>
         val lo = c * step

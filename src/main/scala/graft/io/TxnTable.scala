@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, Options, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, concat, count, date_format, hash, input_file_name, lit, max, min, not, pmod, raise_error, trunc, when}
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -187,7 +187,7 @@ object TxnTable {
   private val StatSep = "|"
   // Per-file ROW COUNTS ride ON the file entry itself — a manifest file
   // line is `<file>` or `<file>|<rows>` (a delta add line `+<file>|<rows>`)
-  // — collected in the same read-back pass as column stats at write time
+  // — collected by the write tasks together with the column stats
   // and carried forward with the file. They make COUNT(*) (and, with
   // stats, COUNT/MIN/MAX of a column) a pure manifest computation — the
   // metadata-only aggregate a 100 TB table answers without touching a
@@ -240,9 +240,11 @@ object TxnTable {
     * assert CAS losers REBASE instead of recomputing when the race was
     * with provably-disjoint appends. Monotonic. */
   val dataWrites = new java.util.concurrent.atomic.AtomicLong(0L)
-  /** Commits whose stats/bloom pass ran OVERLAPPED with the write from
-    * the input frame (vs the serial read-back job) — spec observability
-    * for the r21 optimization, not a behavior switch. */
+  /** Data writes whose stats, row counts and blooms came from the
+    * write tasks themselves (no serial read-back job) — every
+    * writeData call since the write tasks collect them, so it tracks
+    * [[dataWrites]]; kept as the benchmark's overlap-ratio numerator.
+    * Monotonic. */
   val overlapStatsPasses = new java.util.concurrent.atomic.AtomicLong(0L)
 
   private def readSmall(ctx: FileContext, p: Path): String = {
@@ -1356,15 +1358,16 @@ object TxnTable {
 
   /** Write `df` under a fresh unique data dir; return (dir, its files,
     * per-file min/max of each designated stats column, per-file bloom
-    * metas of each designated bloom column — extra passes over the NEW
-    * data only, never the table). Bloom bitsets are built distributed
-    * (one Aggregator per file group over `xxhash64(col)`), collected as
-    * bounded per-file metadata (bits/8 bytes per file per column), and
-    * written as sidecar objects next to their data files. */
+    * metas of each designated bloom column, per-file row counts). ONE
+    * Spark job: the parquet write tasks collect all of it as they write
+    * ([[WriteStatsTracker]]) — over the NEW data only, never the table,
+    * and no pass re-reads the fresh files. Bloom bitsets come back as
+    * bounded per-file metadata (bits/8 bytes per file per column) and
+    * are written as sidecar objects next to their data files. */
   private def writeData(df0: DataFrame, table: String,
                         statsCols: Seq[String],
-                        bloomCols: Seq[String] = Nil,
-                        partitionCols: Seq[String] = Nil,
+                        bloomCols: Seq[String],
+                        partitionCols: Seq[String],
                         optimized: Boolean = false,
                         declared: Option[StructType] = None)
       : (String, Seq[String], Map[String, Seq[FileStat]],
@@ -1393,467 +1396,222 @@ object TxnTable {
     // metadata-only GROUP BY pushdown treat partitions as groups — no
     // separate partition-pruning code path to keep correct.
     val partCols = partitionCols.filter(e => df.columns.contains(partSource(e)))
-    val withDirs0: Option[DataFrame] =
-      if (partCols.isEmpty) None
-      else Some(partCols.foldLeft(df)((d, e) =>
-        d.withColumn(partDirName(e), partDirExpr(e))))
-    def runWrite(): Unit =
-      if (partCols.isEmpty)
-        df.write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$dataDir")
+    val shaped =
+      if (partCols.isEmpty) df
       else {
-        val withDirs = withDirs0.get
+        val withDirs = partCols.foldLeft(df)((d, e) =>
+          d.withColumn(partDirName(e), partDirExpr(e)))
         // OPTIMIZED WRITE (Delta's optimizeWrite): shuffle rows to their
         // partition value before writing, so each value lands in ONE file
         // instead of one-per-task-per-value — a 1000-task append into 100
         // partitions writes 100 files, not up to 100,000. Costs one
         // shuffle; a skewed value lands one big file (OPTIMIZE rebalances
         // later). Opt-in because compaction tests pin exact file counts.
-        val shaped =
-          if (optimized)
-            withDirs.repartition(partCols.map(e => col(partDirName(e))): _*)
-          else withDirs
-        shaped.write.mode(SaveMode.ErrorIfExists)
-          .partitionBy(partCols.map(partDirName): _*)
-          .parquet(s"$table/$dataDir")
+        if (optimized)
+          withDirs.repartition(partCols.map(e => col(partDirName(e))): _*)
+        else withDirs
       }
-    // OVERLAPPED STATS/BLOOM PASS for optimized partitioned commits
-    // (r21): optimizedWrite repartitions by the partition-dir columns,
-    // so each dir VALUE lands in exactly one file — a per-file
-    // read-back aggregation over the fresh parquet therefore equals a
-    // per-VALUE aggregation over the INPUT frame, and that one can run
-    // CONCURRENTLY with the write itself (guide §2.6) instead of as a
-    // serial job re-reading just-written bytes (guide §6). Gated to
-    // frames whose plan is a cheap re-read (checkpointed leaves,
-    // projections/filters only — the incremental operators' sig/gram
-    // appends) and to integral/string dir values whose path rendering
-    // is verifiable; the value→file mapping is checked for exact
-    // bijection after listing and ANY doubt falls back to the
-    // read-back job, so recorded stats can never diverge from what the
-    // distributed pass would compute.
-    val dirNames = partCols.map(partDirName)
-    def cheapReRead(d: DataFrame): Boolean = {
-      import org.apache.spark.sql.catalyst.plans.logical._
-      val plan = d.queryExecution.analyzed
-      plan.collectLeaves().forall {
-        // checkpointed intermediates: re-read = block fetch
-        case _: org.apache.spark.sql.execution.LogicalRDD => true
-        // V1 file relations (raw parquet inputs): the FileIndex was
-        // pinned when the frame was built and the files are immutable,
-        // so a re-execution reads exactly the bytes the write read —
-        // and CONCURRENTLY with it, vs. the fallback's SERIAL read-back
-        // of the (same-sized) written output. V2/graft relations stay
-        // excluded: their scans re-resolve the manifest per execution,
-        // so a concurrent commit could make the overlapped aggregation
-        // diverge from the written bytes.
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          l.relation.isInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-        case _ => false
-      } &&
-        plan.collect {
-          case j: Join => j
-          case a: Aggregate => a
-          case w: Window => w
-          case s: Sort => s
-          case r: RepartitionOperation => r
-        }.isEmpty &&
-        // a nondeterministic projection/filter (rand(), uuid()) would
-        // re-draw on re-execution and record stats diverging from the
-        // written bytes — refuse the overlap, take the read-back
-        plan.find(p => p.expressions.exists(!_.deterministic)).isEmpty
-    }
-    val overlapEligible = optimized && partCols.nonEmpty &&
-      (statsCols.nonEmpty || bloomCols.nonEmpty) &&
-      spark.conf.getOption("graft.stats.overlapPartitionedPass")
-        .forall(_ != "false") &&
-      withDirs0.exists(wd => dirNames.forall(n =>
-        wd.schema.find(_.name == n).exists(_.dataType match {
-          case ByteType | ShortType | IntegerType | LongType |
-               StringType => true
-          case _ => false
-        }))) && cheapReRead(df)
-    val overlapRows: Option[Array[org.apache.spark.sql.Row]] =
-      if (!overlapEligible) { runWrite(); None }
-      else {
-        val wd = withDirs0.get
-        val (aggs, _, _) = statAggExprs(spark, df.schema, statsCols, bloomCols)
-        val grouped = wd.groupBy(dirNames.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*)
-        val (rows, _) = graft.ops.Par.both(spark)(grouped.collect(), runWrite())
-        Some(rows)
-      }
-    val newFiles = listParquet(spark, table, dataDir)
-    // URI → table-relative key, matching listParquet's raw names (the
-    // URI form may percent-encode; decode through the path)
-    def relKey(uri: String): String = {
-      val path = new Path(new java.net.URI(uri)).toUri.getPath
-      val i = path.indexOf(s"/$dataDir/")
-      require(i >= 0, s"read-back file $uri outside $dataDir")
-      path.substring(i + 1)
-    }
-    // ONE read-back pass over the NEW files: per-file row counts
-    // (always — they're what makes COUNT(*) metadata-only) plus min/
-    // max/nulls for each designated stats column. With no stats columns
-    // the pass references zero data columns, so the vectorized reader
-    // drives it from row-group metadata.
-    val (stats, rowCounts, blooms) = if (newFiles.isEmpty) {
-      // an empty PARTITIONED frame lands no part files at all (the
-      // non-partitioned writer emits one empty file) — e.g. a catalog
-      // CREATE TABLE ... PARTITIONED BY commit; nothing to read back
-      (Map.empty[String, Seq[FileStat]], Map.empty[String, Long],
-        Map.empty[String, Seq[BloomMeta]])
-    } else {
-      val (_, tracked, bloomTracked) =
-        statAggExprs(spark, df.schema, statsCols, bloomCols)
-      val bBits = bloomBits(spark)
-      val bHashes = bloomHashes(spark)
-      // sidecar writes + stats/rows assembly, shared by the overlapped
-      // input-side pass and the read-back job (both produce rows of the
-      // SAME statAggExprs aggregates, keyed differently)
-      def assemble(collected: Seq[(String, org.apache.spark.sql.Row)])
-          : (Map[String, Seq[FileStat]], Map[String, Long],
-             Map[String, Seq[BloomMeta]]) = {
-        // bloom sidecars from the SAME collected rows; a file with zero
-        // non-null values gets no sidecar (parity with the pre-filtered
-        // two-pass spelling this replaces: absent sidecar = no pruning).
-        // The sidecar creates are independent small files — issued
-        // CONCURRENTLY (FileContext is thread-safe): a bucketed commit
-        // writes one per (file, bloom column) and object-store creates
-        // are latency-bound, so the sequential spelling paid
-        // files × columns × RTT per commit
-        val bl: Map[String, Seq[BloomMeta]] =
-          if (bloomTracked.isEmpty) Map.empty
-          else {
-            import scala.jdk.CollectionConverters._
-            val ctxB = fc(spark)
-            val pending = collected.flatMap { case (key, r) =>
-              bloomTracked.flatMap { c =>
-                if (r.getAs[Long](s"__bv_$c") == 0L) None
-                else Some((key, c, r.getAs[Array[Byte]](s"__bl_$c")))
-              }
-            }
-            pending.asJava.parallelStream().forEach { t =>
-              val (key, c, bytes) = t
-              val out = ctxB.create(bloomSidecar(table, key, c),
-                java.util.EnumSet.of(
-                  org.apache.hadoop.fs.CreateFlag.CREATE,
-                  org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-                Options.CreateOpts.createParent())
-              try out.write(bytes) finally out.close()
-            }
-            pending.map { case (key, c, _) => key -> BloomMeta(c, bBits, bHashes) }
-              .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-          }
-        val perFile = collected.map { case (key, r) =>
-          val ss = tracked.flatMap { case (c, _, kind) =>
-            val nn = r.getAs[Long](s"__nn_$c")
-            (r.getAs[Any](s"__mn_$c"), r.getAs[Any](s"__mx_$c")) match {
-              // all rows null: record that PROOF (kind "null") — it
-              // prunes every value range, IS NOT NULL, and spares the
-              // delete paths a pointless boundary rewrite
-              case (null, _) if nn > 0L => Some(FileStat(c, "null", "", "", nn))
-              case (null, _) => None
-              // LONG-STRING CAP: manifests carry stats inline, so a
-              // statsCols entry on a document-sized text column would
-              // bloat every file line by its full min/max (10^6 files x
-              // multi-KB strings = manifest explosion at corpus scale).
-              // Truncated bounds are NOT recorded instead because the
-              // metadata-only MIN/MAX pushdown reads stats as exact
-              // values — an absent stat is conservative EVERYWHERE
-              // (pruning keeps the file, aggregates refuse pushdown).
-              case (mn, mx) if kind == "str" && {
-                val cap = statMaxStringLen(spark)
-                mn.toString.length > cap || mx.toString.length > cap
-              } => None
-              case (mn, mx) => Some(FileStat(c, kind, mn.toString, mx.toString, nn))
-            }
-          }
-          (key, ss, r.getAs[Long]("__rows"))
-        }
-        // a new file the groupBy never surfaced has zero rows (an empty
-        // task's parquet output) — a KNOWN count, distinct from the
-        // missing-line "unknown" of pre-rows manifests
-        val counts = perFile.map(t => t._1 -> t._3).toMap
-        (perFile.filter(_._2.nonEmpty).map(t => t._1 -> t._2).toMap,
-          newFiles.map(f => f -> counts.getOrElse(f, 0L)).toMap, bl)
-      }
-      // value→file mapping for the overlapped pass: every listed file's
-      // partition-dir segments must match exactly one agg row and vice
-      // versa — ANY irregularity (two files for one value, an unclaimed
-      // file, a null dir value, an unparseable segment) abandons the
-      // overlapped rows and falls back to the read-back job, so the
-      // recorded stats can never diverge from the distributed pass
-      def mapOverlap(rows: Array[org.apache.spark.sql.Row])
-          : Option[Seq[(String, org.apache.spark.sql.Row)]] = {
-        // hive path unescape: %XX hex back to the char (the writer
-        // escapes exactly this way; values that need no escaping —
-        // bucket ids, plain enum strings — round-trip verbatim)
-        def unescape(s: String): String =
-          if (s.indexOf('%') < 0) s
-          else {
-            val sb = new java.lang.StringBuilder(s.length)
-            var i = 0
-            while (i < s.length) {
-              val ch = s.charAt(i)
-              if (ch == '%' && i + 2 < s.length) {
-                try {
-                  sb.append(
-                    Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-                  i += 3
-                } catch { case _: NumberFormatException =>
-                  sb.append(ch); i += 1 }
-              } else { sb.append(ch); i += 1 }
-            }
-            sb.toString
-          }
-        val byKey = scala.collection.mutable.Map.empty[Seq[String], String]
-        newFiles.foreach { f =>
-          val segs = f.split('/')
-          if (segs.length != dirNames.length + 2) return None
-          val key = dirNames.zip(segs.slice(1, segs.length - 1).toSeq).map {
-            case (n, seg) =>
-              if (!seg.startsWith(n + "=")) return None
-              unescape(seg.substring(n.length + 1))
-          }
-          if (byKey.put(key, f).isDefined) return None
-        }
-        val pairs = rows.toSeq.map { r =>
-          val key = dirNames.map { n =>
-            val v = r.getAs[Any](n)
-            if (v == null) return None
-            String.valueOf(v)
-          }
-          byKey.remove(key) match {
-            case Some(f) => (f, r)
-            case None => return None
-          }
-        }
-        if (byKey.nonEmpty) return None
-        Some(pairs)
-      }
-      overlapRows.flatMap(mapOverlap) match {
-        case Some(pairs) =>
-          overlapStatsPasses.incrementAndGet()
-          assemble(pairs)
-        case None =>
-          // COMMIT FAST PATH: small non-partitioned commits with
-          // footer-exact stats columns (see footerStats' gate) read their
-          // stats from the freshly-written parquet footers on the driver
-          // instead of scheduling a Spark job — the job is most of the
-          // commit latency the incremental-maintenance operators pay once
-          // per ingest. Non-partitioned only: those file names are always
-          // Spark-generated (no partition-value dirs), so plain
-          // Path(table/relKey) addressing cannot mis-parse.
-          val fast =
-            if (partCols.nonEmpty || bloomCols.nonEmpty ||
-                newFiles.size > 64 ||
-                spark.conf.getOption("graft.stats.footerFastPath")
-                  .contains("false"))
-              None
-            else footerStats(spark, table, newFiles, statsCols, df.schema)
-          if (fast.isDefined) {
-            val (st, rc) = fast.get
-            (st, rc, Map.empty[String, Seq[BloomMeta]])
-          } else {
-            // the in-file schema IS df's on BOTH layouts — the partitioned
-            // writer strips only the duplicated `__gp_` DIRECTORY columns
-            // from file bytes, never the real data columns — so passing the
-            // schema and addressing the listed files directly skips the
-            // footer schema-inference job AND the partition-discovery
-            // listing (one fewer Spark job per partitioned stats/bloom
-            // commit; stats columns are always data columns, so nothing
-            // read here ever needed the reconstructed `__gp_` dir columns)
-            val back =
-              spark.read.schema(df.schema)
-                .parquet(newFiles.map(f => s"$table/$f"): _*)
-            val (aggs, _, _) =
-              statAggExprs(spark, df.schema, statsCols, bloomCols)
-            val collected = back.groupBy(input_file_name().as("f"))
-              .agg(aggs.head, aggs.tail: _*)
-              .collect()
-            assemble(collected.toSeq.map(r => (relKey(r.getString(0)), r)))
-          }
-      }
-    }
-    (dataDir, newFiles, stats, blooms, rowCounts)
+    val (tracked, bloomTracked) = statTargets(df.schema, statsCols, bloomCols)
+    val written = trackedWrite(df, shaped, table, dataDir,
+      partCols.map(partDirName), tracked, bloomTracked)
+    overlapStatsPasses.incrementAndGet()
+    val (stats, rowCounts, bitsets) =
+      fileMeta(spark, written, tracked, bloomTracked)
+    (dataDir, written.map(_._1), stats,
+      writeBloomSidecars(spark, table, bitsets), rowCounts)
   }
 
-  /** The per-group stats/bloom aggregate expressions shared by the
-    * read-back pass (grouped by input_file_name) and the overlapped
-    * input-side pass (grouped by partition-dir value): one (col, dtype,
-    * kind) per stats column the data carries AND the kind system
-    * supports — others get no stats, not errors. Dotted entries
-    * (`meta.score`) resolve through struct chains: nested fields carry
-    * per-file skipping stats exactly like top-level ones (normExpr's
-    * col() resolves the same path). Bloom builds RIDE the same pass: a
-    * null-skipping aggregator ORs per-group bitsets next to the
-    * min/max/null aggregates. */
-  private def statAggExprs(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      statsCols: Seq[String], bloomCols: Seq[String])
-      : (Seq[org.apache.spark.sql.Column],
-         Seq[(String, org.apache.spark.sql.types.DataType, String)],
-         Seq[String]) = {
-    val tracked = statsCols.flatMap(c =>
-      typeAt(schema, c).flatMap(dt =>
-        statKind(dt).map(k => (c, dt, k))))
-    val bloomTracked = bloomCols.distinct.filter(c =>
-      typeAt(schema, c).exists(bloomSupported))
+  /** Stats targets of a frame schema: one (col, dtype, kind) per stats
+    * column the data carries AND the kind system supports, and the
+    * bloom columns of a bloomable type — others get no stats, not
+    * errors. Dotted entries (`meta.score`) resolve through struct
+    * chains: nested fields carry per-file skipping stats exactly like
+    * top-level ones (normExpr's col() resolves the same path). */
+  private def statTargets(schema: StructType, statsCols: Seq[String],
+                          bloomCols: Seq[String])
+      : (Seq[(String, DataType, String)], Seq[String]) =
+    (statsCols.flatMap(c =>
+      typeAt(schema, c).flatMap(dt => statKind(dt).map(k => (c, dt, k)))),
+      bloomCols.distinct.filter(c => typeAt(schema, c).exists(bloomSupported)))
+
+  /** Write `shaped` as parquet under `<table>/<dir>` in ONE Spark job
+    * and return its table-relative files (sorted) with what the write
+    * tasks aggregated per file: row counts always (they're what makes
+    * COUNT(*) metadata-only), plus min/max/nulls of each `tracked`
+    * column and the bloom bitset of each `bloomTracked` column.
+    *
+    * The tracker's expressions come from `frame.select(...)`'s ANALYZED
+    * projection — normExpr's casts carry the session time zone — bound
+    * to `frame`'s columns, which are exactly the data columns each
+    * written row holds (`shaped` only appends the `partitionBy` dir
+    * columns, and those leave the file contents). The listing stays the
+    * file list of record: a tracker file set that differs from it
+    * fails the commit. */
+  private def trackedWrite(frame: DataFrame, shaped: DataFrame,
+      table: String, dir: String, partitionBy: Seq[String],
+      tracked: Seq[(String, DataType, String)], bloomTracked: Seq[String])
+      : Seq[(String, FileAgg)] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val spark = frame.sparkSession
+    // TIMESTAMP_MILLIS parquet output floors the microseconds of
+    // TIMESTAMP (not TIMESTAMP_NTZ) values: the stats must describe the
+    // stored value, not the frame's
+    val millis = spark.sessionState.conf.parquetOutputTimestampType ==
+      org.apache.spark.sql.internal.SQLConf.ParquetOutputTimestampType.TIMESTAMP_MILLIS
+    val exprs = tracked.map {
+      case (c, TimestampType, _) if millis =>
+        org.apache.spark.sql.functions.date_trunc("millisecond", col(c))
+          .cast("timestamp").cast("double")
+      case (c, dt, _) => normExpr(c, dt)
+    } ++
+      bloomTracked.map(c => when(col(c).isNotNull,
+        org.apache.spark.sql.functions.xxhash64(col(c))))
+    val bound: Seq[Expression] =
+      if (exprs.isEmpty) Nil
+      else frame.select(exprs: _*).queryExecution.analyzed match {
+        case Project(list, child) => list.map { e =>
+          val body = e match { case a: Alias => a.child; case x => x }
+          BindReferences.bindReference(body, child.output)
+        }
+        case p => throw new IllegalStateException(
+          s"stats projection did not analyze to a Project: ${p.nodeName}")
+      }
+    val out = new Path(s"$table/$dir")
+    val base = out.getFileSystem(spark.sessionState.newHadoopConf())
+      .makeQualified(out).toUri.getPath
+    val tracker = new WriteStatsTracker(base, bound.take(tracked.size),
+      bound.drop(tracked.size), bloomBits(spark), bloomHashes(spark))
+    org.apache.spark.sql.GraftBridge.writeParquet(
+      shaped, s"$table/$dir", partitionBy, Seq(tracker))
+    val listed = listParquet(spark, table, dir)
+    val aggs = tracker.files.map { case (rel, a) => s"$dir/$rel" -> a }
+    if (aggs.keySet != listed.toSet)
+      throw new IllegalStateException(
+        s"write of $table/$dir: the write tasks reported " +
+          s"${aggs.keySet.toSeq.sorted.mkString(", ")} but the dir " +
+          s"lists ${listed.mkString(", ")}")
+    listed.map(f => f -> aggs(f))
+  }
+
+  /** Manifest stats and row counts of written files, and the bloom
+    * bitsets to store as (file, col, bytes) — shared by the commit path
+    * and the read-back reference, so the two derive the SAME records
+    * from the same per-file aggregates. A file with zero non-null
+    * values in a bloom column gets no bitset (absent sidecar = no
+    * pruning). */
+  private def fileMeta(spark: SparkSession, files: Seq[(String, FileAgg)],
+      tracked: Seq[(String, DataType, String)], bloomTracked: Seq[String])
+      : (Map[String, Seq[FileStat]], Map[String, Long],
+         Seq[(String, String, Array[Byte])]) = {
+    val cap = statMaxStringLen(spark)
+    val stats = files.flatMap { case (f, a) =>
+      val ss = tracked.zipWithIndex.flatMap { case ((c, _, kind), i) =>
+        val nn = a.nulls(i)
+        (a.mins(i), a.maxs(i)) match {
+          // all rows null: record that PROOF (kind "null") — it prunes
+          // every value range, IS NOT NULL, and spares the delete paths
+          // a pointless boundary rewrite
+          case (null, _) if nn > 0L => Some(FileStat(c, "null", "", "", nn))
+          case (null, _) => None
+          // LONG-STRING CAP: manifests carry stats inline, so a
+          // statsCols entry on a document-sized text column would bloat
+          // every file line by its full min/max (10^6 files x multi-KB
+          // strings = manifest explosion at corpus scale). Truncated
+          // bounds are NOT recorded instead because the metadata-only
+          // MIN/MAX pushdown reads stats as exact values — an absent
+          // stat is conservative EVERYWHERE (pruning keeps the file,
+          // aggregates refuse pushdown).
+          case (mn, mx) if kind == "str" &&
+              (mn.length > cap || mx.length > cap) => None
+          case (mn, mx) => Some(FileStat(c, kind, mn, mx, nn))
+        }
+      }
+      if (ss.isEmpty) None else Some(f -> ss)
+    }.toMap
+    val bitsets = for {
+      (f, a) <- files
+      (c, j) <- bloomTracked.zipWithIndex
+      if a.bloomRows(j) > 0L
+    } yield (f, c, a.blooms(j))
+    (stats, files.map { case (f, a) => f -> a.rows }.toMap, bitsets)
+  }
+
+  /** Write each (file, col, bitset) as its bloom sidecar and return the
+    * manifest metas. The creates are independent small files — issued
+    * CONCURRENTLY (FileContext is thread-safe): a bucketed commit writes
+    * one per (file, bloom column) and object-store creates are
+    * latency-bound, so a sequential loop pays files × columns × RTT. */
+  private def writeBloomSidecars(spark: SparkSession, table: String,
+      bitsets: Seq[(String, String, Array[Byte])])
+      : Map[String, Seq[BloomMeta]] = {
+    import scala.jdk.CollectionConverters._
+    val ctx = fc(spark)
+    bitsets.asJava.parallelStream().forEach { t =>
+      val (f, c, bytes) = t
+      val out = ctx.create(bloomSidecar(table, f, c),
+        java.util.EnumSet.of(
+          org.apache.hadoop.fs.CreateFlag.CREATE,
+          org.apache.hadoop.fs.CreateFlag.OVERWRITE),
+        Options.CreateOpts.createParent())
+      try out.write(bytes) finally out.close()
+    }
+    val (bBits, bHashes) = (bloomBits(spark), bloomHashes(spark))
+    bitsets.map { case (f, c, _) => f -> BloomMeta(c, bBits, bHashes) }
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+  }
+
+  /** REFERENCE ONLY, on no commit path: the per-file stats, row counts
+    * and bloom bitsets (keyed by (file, col)) of `files` as a
+    * distributed read-back aggregation grouped by input file computes
+    * them — what commits recorded before the write tasks collected
+    * them. Parity specs compare commits against it. `schema` is the
+    * written frame's. */
+  private[graft] def readBackStats(spark: SparkSession, table: String,
+      files: Seq[String], schema: StructType, statsCols: Seq[String],
+      bloomCols: Seq[String])
+      : (Map[String, Seq[FileStat]], Map[String, Long],
+         Map[(String, String), Seq[Byte]]) = {
+    val (tracked, bloomTracked) = statTargets(schema, statsCols, bloomCols)
     val buildAgg = org.apache.spark.sql.functions.udaf(
       new Bloom.BuildAggNullable(bloomBits(spark), bloomHashes(spark)))
-    val aggs = (count(lit(1)).as("__rows") +:
+    val aggs = count(lit(1)).as("__rows") +:
       (tracked.flatMap { case (c, dt, _) => Seq(
         min(normExpr(c, dt)).as(s"__mn_$c"),
         max(normExpr(c, dt)).as(s"__mx_$c"),
         org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.when(
-            normExpr(c, dt).isNull, 1L).otherwise(0L)).as(s"__nn_$c"))
+          when(normExpr(c, dt).isNull, 1L).otherwise(0L)).as(s"__nn_$c"))
       } ++ bloomTracked.flatMap { c => Seq(
-        buildAgg(org.apache.spark.sql.functions.when(col(c).isNotNull,
-          org.apache.spark.sql.functions.xxhash64(col(c))))
-          .as(s"__bl_$c"),
+        buildAgg(when(col(c).isNotNull,
+          org.apache.spark.sql.functions.xxhash64(col(c)))).as(s"__bl_$c"),
         org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.when(col(c).isNotNull, 1L)
-            .otherwise(0L)).as(s"__bv_$c"))
-      }))
-    (aggs, tracked, bloomTracked)
-  }
-
-  /** Driver-side per-file stats straight from parquet footers — the
-    * small-commit fast path. The stats read-back is otherwise a full
-    * Spark job whose answers the just-written footers already hold;
-    * for the one-commit-per-ingest incremental operators that job IS
-    * most of the commit latency. Reading ≤64 footers on the driver
-    * costs a few ms each; larger commits keep the distributed pass (a
-    * bulk load's footer reads belong on executors, and its fixed job
-    * overhead amortizes over real data anyway).
-    *
-    * EXACTNESS GATE — the metadata-only MIN/MAX pushdown reads stats
-    * as exact values, so this path must never record a stat that
-    * differs from what the distributed pass would compute. Returns
-    * None (caller falls back to the job) unless every stats column is
-    * provably footer-exact:
-    *   - integral/boolean: chunk min/max are exact, and long→double
-    *     here equals the read-back's cast("double")
-    *   - DateType only under a UTC session zone (normExpr casts dates
-    *     through the session zone; footer day counts are zoneless)
-    *   - float/double NEVER (parquet-mr excludes NaN from stats while
-    *     Spark's min/max rank NaN above every value), string NEVER
-    *     (chunk stats may be truncated by the writer), timestamp
-    *     NEVER (INT96 carries no usable stats; INT64 zoning differs)
-    *   - any chunk with absent stats or unknown null counts bails the
-    *     whole commit (absent stats would be SAFE — pruning keeps the
-    *     file — but specs pin exact pruning counts, so parity, not
-    *     mere safety, is the bar). */
-  private def footerStats(spark: SparkSession, table: String,
-      newFiles: Seq[String], statsCols: Seq[String],
-      fileSchema: org.apache.spark.sql.types.StructType)
-      : Option[(Map[String, Seq[FileStat]], Map[String, Long])] = {
-    val tracked = statsCols.flatMap(c =>
-      typeAt(fileSchema, c).flatMap(dt =>
-        statKind(dt).map(k => (c, dt, k))))
-    val utc = spark.sessionState.conf.sessionLocalTimeZone == "UTC"
-    // LEGACY rebase writes Julian-calendar day counts for pre-1582
-    // dates: the footer int differs from what the read-back computes
-    // on the rebased-back value, so dates are only footer-exact under
-    // the proleptic modes (CORRECTED, or EXCEPTION which refuses
-    // ancient dates at write time)
-    val proleptic = spark.conf.getOption(
-      "spark.sql.parquet.datetimeRebaseModeInWrite")
-      .forall(_.toUpperCase(java.util.Locale.ROOT) != "LEGACY")
-    val eligible = tracked.forall {
-      case (_, ByteType | ShortType | IntegerType | LongType |
-               BooleanType, _) => true
-      case (_, DateType, _) => utc && proleptic
-      case _ => false
-    }
-    if (!eligible) return None
-    val conf = spark.sessionState.newHadoopConf()
-    val stats = Map.newBuilder[String, Seq[FileStat]]
-    val rows = Map.newBuilder[String, Long]
-    // local bail signal: any gap in any footer abandons the whole
-    // commit's fast path (ControlThrowable: skips NonFatal handlers)
-    object Inexact extends scala.util.control.ControlThrowable
-    try {
-      import scala.jdk.CollectionConverters._
-      newFiles.foreach { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new Path(s"$table/$f"), conf))
-        try {
-          val blocks = rd.getFooter.getBlocks.asScala.toSeq
-          val nRows = blocks.map(_.getRowCount).sum
-          rows += f -> nRows
-          if (nRows > 0L) {
-            val ss = tracked.flatMap { case (c, dt, kind) =>
-              val want = c.toLowerCase(java.util.Locale.ROOT)
-              var mn = Double.PositiveInfinity
-              var mx = Double.NegativeInfinity
-              var nulls = 0L
-              var any = false
-              blocks.foreach { b =>
-                // bind case-sensitively first; only an UNAMBIGUOUS
-                // case-insensitive fallback is allowed — two chunk
-                // paths folding to the same name (legal under
-                // spark.sql.caseSensitive=true) would record one
-                // column's min/max as the other's EXACT stats, so
-                // ambiguity bails to the distributed pass
-                val cols = b.getColumns.asScala
-                val chunk = cols.find(_.getPath.toDotString == c)
-                  .getOrElse {
-                    val ci = cols.filter(_.getPath.toDotString
-                      .toLowerCase(java.util.Locale.ROOT) == want)
-                    if (ci.size == 1) ci.head else throw Inexact
-                  }
-                val st = chunk.getStatistics
-                if (st == null || st.isEmpty || st.getNumNulls < 0L)
-                  throw Inexact
-                nulls += st.getNumNulls
-                if (st.hasNonNullValue) {
-                  any = true
-                  val (lo, hi) =
-                    footerRange(st, dt).getOrElse(throw Inexact)
-                  if (lo < mn) mn = lo
-                  if (hi > mx) mx = hi
-                } else if (st.getNumNulls != b.getRowCount) throw Inexact
-              }
-              if (!any) {
-                // every row null: the same kind-"null" proof the
-                // distributed pass records (nulls == nRows > 0 here)
-                if (nulls > 0L) Some(FileStat(c, "null", "", "", nulls))
-                else None
-              } else Some(FileStat(c, kind, mn.toString, mx.toString, nulls))
-            }
-            if (ss.nonEmpty) stats += f -> ss
-          }
-        } finally rd.close()
+          when(col(c).isNotNull, 1L).otherwise(0L)).as(s"__bv_$c"))
+      })
+    val toRel = relOfAbs(spark, table, files)
+    val byFile =
+      if (files.isEmpty) Map.empty[String, org.apache.spark.sql.Row]
+      else spark.read.schema(schema)
+        .parquet(files.map(f => s"$table/$f"): _*)
+        .groupBy(input_file_name().as("f"))
+        .agg(aggs.head, aggs.tail: _*).collect()
+        .map(r => toRel(r.getString(0)) -> r).toMap
+    def str(v: Any): String = if (v == null) null else v.toString
+    // a file the groupBy never surfaced has zero rows
+    val perFile = files.map { f =>
+      f -> byFile.get(f).fold(FileAgg(0L,
+        Array.fill(tracked.size)(null), Array.fill(tracked.size)(null),
+        Array.fill(tracked.size)(0L), Array.fill(bloomTracked.size)(null),
+        Array.fill(bloomTracked.size)(0L))) { r =>
+        FileAgg(r.getAs[Long]("__rows"),
+          tracked.map(t => str(r.getAs[Any](s"__mn_${t._1}"))).toArray,
+          tracked.map(t => str(r.getAs[Any](s"__mx_${t._1}"))).toArray,
+          tracked.map(t => r.getAs[Long](s"__nn_${t._1}")).toArray,
+          bloomTracked.map(c => r.getAs[Array[Byte]](s"__bl_$c")).toArray,
+          bloomTracked.map(c => r.getAs[Long](s"__bv_$c")).toArray)
       }
-      Some((stats.result(), rows.result()))
-    } catch {
-      case Inexact => None
-      case scala.util.control.NonFatal(_) => None
     }
-  }
-
-  /** Normalized [min, max] of one footer chunk under [[normExpr]]'s
-    * semantics, for the types [[footerStats]] admits. */
-  private def footerRange(
-      st: org.apache.parquet.column.statistics.Statistics[_],
-      dt: DataType): Option[(Double, Double)] = {
-    import org.apache.parquet.column.statistics._
-    (st, dt) match {
-      // date days → epoch seconds, matching cast(date→timestamp→
-      // double) under the UTC session zone the caller verified
-      case (s: IntStatistics, DateType) =>
-        Some((s.getMin * 86400.0, s.getMax * 86400.0))
-      case (s: IntStatistics, _) =>
-        Some((s.getMin.toDouble, s.getMax.toDouble))
-      case (s: LongStatistics, _) =>
-        Some((s.getMin.toDouble, s.getMax.toDouble))
-      case (s: BooleanStatistics, _) =>
-        Some(((if (s.getMin) 1.0 else 0.0), if (s.getMax) 1.0 else 0.0))
-      case _ => None
-    }
+    val (stats, rows, bitsets) = fileMeta(spark, perFile, tracked, bloomTracked)
+    (stats, rows, bitsets.map { case (f, c, b) => (f, c) -> b.toSeq }.toMap)
   }
 
   /** A fresh writer-unique data dir name: two racing writers can never
@@ -1862,27 +1620,19 @@ object TxnTable {
     s"w=${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
 
   /** Write `df` under `<dataDir>/<sub>/` and return its table-relative
-    * parquet files. The `_`-prefixed `sub` keeps the files out of every
-    * data read, and they share the data dir's lifecycle (a discarded CAS
-    * loser takes them with it): `_cdc` holds a commit's eager change
-    * files (`#cdc=` lines), `_del` its delete sidecars (`#del=`). */
+    * parquet files with their row counts (counted by the write tasks).
+    * The `_`-prefixed `sub` keeps the files out of every data read, and
+    * they share the data dir's lifecycle (a discarded CAS loser takes
+    * them with it): `_cdc` holds a commit's eager change files (`#cdc=`
+    * lines), `_del` its delete sidecars (`#del=`). */
   private def writeUnder(df: DataFrame, table: String, dataDir: String,
-                         sub: String): Seq[String] = {
-    df.write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$dataDir/$sub")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fc(df.sparkSession).listStatus(new Path(s"$table/$dataDir/$sub"))
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (!st.isDirectory && n.endsWith(".parquet"))
-        buf += s"$dataDir/$sub/$n"
-    }
-    buf.sorted.toSeq
-  }
+                         sub: String): Seq[(String, Long)] =
+    trackedWrite(df, df, table, s"$dataDir/$sub", Nil, Nil, Nil)
+      .map { case (f, a) => f -> a.rows }
 
   private def writeChangeData(changes: DataFrame, table: String,
                               dataDir: String): Seq[String] =
-    writeUnder(changes, table, dataDir, "_cdc")
+    writeUnder(changes, table, dataDir, "_cdc").map(_._1)
 
   private def partColsLine(partCols: Seq[String]): Seq[String] =
     if (partCols.isEmpty) Nil
@@ -3770,9 +3520,11 @@ object TxnTable {
       val keys = updates.select(col(keyCol)).distinct()
       // typed key bounds: strings min/max lexicographically (a numeric
       // cast would NULL out and silently no-op the whole merge),
-      // temporals as epoch — one normalization shared with the stats
+      // temporals as epoch — one normalization shared with the stats.
+      // Over the raw update keys, not `keys`: count/min/max need no
+      // distinct (count only gates the no-op), so no shuffle job
       val keyDt = updates.schema(keyCol).dataType
-      val bounds = keys.agg(
+      val bounds = updates.select(col(keyCol)).agg(
         count(col(keyCol)),
         min(normExpr(keyCol, keyDt)), max(normExpr(keyCol, keyDt))).head()
       if (bounds.getLong(0) == 0L) return Done(st.version) // no non-null keys: no-op
@@ -4183,9 +3935,9 @@ object TxnTable {
       val tuples = matched
         .select(keyCols.map(k => col(s"`$k`")): _*).distinct().coalesce(1)
       val dataDir = freshDir()
-      val delFiles = writeUnder(tuples, table, dataDir, "_del")
-      val n = delFiles.map(f =>
-        spark.read.parquet(s"$table/$f").count()).sum
+      val written = writeUnder(tuples, table, dataDir, "_del")
+      val delFiles = written.map(_._1)
+      val n = written.map(_._2).sum
       if (n == 0L) { // nothing matched: provable no-op
         ctx.delete(new Path(s"$table/$dataDir"), true)
         return Done(st.version)
@@ -4606,7 +4358,7 @@ object TxnTable {
         case None => matched.select(col(PosFileCol), col(PosOrdCol))
       }).coalesce(1)
       val dataDir = freshDir()
-      val delFiles = writeUnder(tuples, table, dataDir, "_del")
+      val delFiles = writeUnder(tuples, table, dataDir, "_del").map(_._1)
       val side = spark.read.schema(PosDelSchema)
         .parquet(delFiles.map(f => s"$table/$f"): _*)
       // count + named files in ONE job over the kilobyte sidecar
@@ -4756,7 +4508,7 @@ object TxnTable {
             .join(liveFiles, Seq(PosFileCol), "left_semi")
             .distinct().coalesce(1)
           val dir = freshDir()
-          val delFiles = writeUnder(merged, table, dir, "_del")
+          val delFiles = writeUnder(merged, table, dir, "_del").map(_._1)
           val side = spark.read.schema(PosDelSchema)
             .parquet(delFiles.map(f => s"$table/$f"): _*)
           val (n, named) = sidecarSummary(spark, side)
@@ -4871,25 +4623,24 @@ object TxnTable {
           val pubSchema = mw.identityHwm.flatMap(h =>
             identityColumn(schema).map(d => patchIdentityHwm(schema, d.col, h)))
             .getOrElse(schema)
-          // appended rows first: writeData's stats read-back pass must
-          // run before anything else lands under the commit's data dir
-          // one tuple-sidecar leg: write → list → one-job summary
+          // one tuple-sidecar leg: write → list (+ a one-job summary of
+          // the named files for positional vectors)
           def writeTuples(dir: String)
               : (Seq[String], Long, Option[Seq[String]]) = {
-            val fs = writeUnder(mw.tuples.select(
+            val written = writeUnder(mw.tuples.select(
               (if (mw.keyCols == PosDelKeyCols)
                 Seq(col(PosFileCol), col(PosOrdCol))
               else mw.keyCols.map(k => col(s"`$k`"))): _*)
               .distinct().coalesce(1), table, dir, "_del")
+            val fs = written.map(_._1)
             // count + named files in ONE job over the kilobyte sidecar
-            // (positional vectors only; equality tuples record no names)
+            // (positional vectors only; equality tuples record no names
+            // and take their count from the write tasks)
             if (mw.keyCols == PosDelKeyCols && fs.nonEmpty) {
               val (n0, nm) = sidecarSummary(spark, spark.read
                 .schema(PosDelSchema).parquet(fs.map(f => s"$table/$f"): _*))
               (fs, n0, nm)
-            } else
-              (fs, fs.map(f =>
-                spark.read.parquet(s"$table/$f").count()).sum, None)
+            } else (fs, written.map(_._2).sum, None)
           }
           val (dataDir, newFiles, newStats, newBlooms, newRows,
               sideDir, delFiles, n, named) =
@@ -7115,7 +6866,7 @@ object TxnTable {
     partCols.foreach(c => require(full.columns.contains(c),
       s"partition column $c missing from discovered schema of $table"))
     val schema = org.apache.spark.sql.GraftBridge.nullableSchema(full.schema)
-    // ONE distributed stats pass (same shape as writeData's read-back):
+    // ONE distributed stats pass (same shape as [[readBackStats]]):
     // per-file row counts always; min/max/nulls for the designated stats
     // columns plus every partition column
     val tracked = (statsCols ++ partCols).distinct.flatMap(c =>

@@ -262,6 +262,53 @@ object GraftBridge {
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 
+  /** Write `df` as parquet under `path`, which must not exist yet, in
+    * ONE Spark job whose write tasks also run `trackers` — what
+    * `df.write.mode(ErrorIfExists).partitionBy(..).parquet(path)` runs,
+    * with the caller's stats trackers in place of the basic one and
+    * without the post-write cache refresh (a path no plan has read yet
+    * has nothing cached to refresh). `partitionColumns` become
+    * hive-style value dirs and leave the file contents. */
+  def writeParquet(
+      df: DataFrame,
+      path: String,
+      partitionColumns: Seq[String],
+      trackers: Seq[org.apache.spark.sql.execution.datasources.WriteJobStatsTracker])
+      : Unit = {
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val hadoopConf = cs.sessionState.newHadoopConf()
+    val out = new org.apache.hadoop.fs.Path(path)
+    val fs = out.getFileSystem(hadoopConf)
+    val qualified = out.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    if (fs.exists(qualified))
+      throw errors.QueryCompilationErrors.outputPathAlreadyExistsError(qualified)
+    util.SchemaUtils.checkColumnNameDuplication(
+      df.schema.fieldNames.toSeq, cs.sessionState.conf.caseSensitiveAnalysis)
+    // a fresh execution per write, as each DataFrameWriter save plans one
+    val qe = cs.sessionState.executePlan(df.queryExecution.analyzed)
+    execution.SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val plan = qe.executedPlan
+      // the parquet writer takes field ids from the column metadata
+      val output = plan.output.zip(qe.analyzed.output).map {
+        case (a, l) => a.withMetadata(l.metadata)
+      }
+      val partAttrs = partitionColumns.map(c => output.find(_.name == c)
+        .getOrElse(throw new IllegalArgumentException(
+          s"partition column $c is not a column of the written frame")))
+      val committer = org.apache.spark.internal.io.FileCommitProtocol
+        .instantiate(cs.sessionState.conf.fileCommitProtocolClass,
+          jobId = java.util.UUID.randomUUID().toString,
+          outputPath = qualified.toString)
+      FileFormatWriter.write(cs, plan,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        committer,
+        FileFormatWriter.OutputSpec(qualified.toString, Map.empty, output),
+        hadoopConf, partAttrs, None, trackers, Map.empty)
+    }
+    ()
+  }
+
   /** Drain the shared listener bus — QueryExecutionListener events are
     * delivered asynchronously through it, so a test that registers one
     * to observe executed plans must flush before asserting (the

@@ -5,14 +5,17 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.io.TxnTable
 
-/** The commit fast path (driver-side parquet-footer stats,
-  * TxnTable.footerStats) must be OBSERVATIONALLY IDENTICAL to the
-  * distributed stats read-back it bypasses: same per-file min/max/null
-  * stats (the metadata MIN/MAX pushdown reads them as exact values),
-  * same row counts, same null-kind proofs. Each case commits the same
-  * frame twice — fast path enabled vs disabled via
-  * `graft.stats.footerFastPath` — and compares the manifests
-  * stat-for-stat. */
+/** Commit stats come from the parquet WRITE TASKS: per-file min/max/
+  * nulls, row counts and bloom bitsets are collected while the files
+  * are written, so a commit's data write is one Spark job. They must be
+  * OBSERVATIONALLY IDENTICAL to the distributed read-back the commit
+  * path used to run — the metadata MIN/MAX pushdown reads stats as
+  * exact values. Each case commits a frame and compares the manifest's
+  * stats and row counts, and the bloom sidecar bytes on disk, with
+  * `TxnTable.readBackStats` (the read-back reference) over the same
+  * files. ("Footer" and "fast path" in the older case names are this
+  * spec's original subject, the driver-side footer stats path the
+  * write-task stats replaced.) */
 class FooterStatsSpec extends AnyFunSuite {
 
   lazy val spark = Spec.spark
@@ -21,25 +24,13 @@ class FooterStatsSpec extends AnyFunSuite {
     val zone =
       java.nio.file.Files.createTempDirectory("graft_footer").toFile
     try f(zone.getAbsolutePath)
-    finally {
-      def rm(x: java.io.File): Unit = {
-        if (x.isDirectory) x.listFiles().foreach(rm)
-        x.delete(); ()
-      }
-      rm(zone)
-    }
+    finally graft.io.Tables.deleteTree(zone)
   }
 
-  /** Commit `df` twice (fast on / fast off) and return the two
-    * manifests' (per-file sorted stats, row count) multisets, aligned
-    * by part-file ordinal (same frame → same task layout → same file
-    * ordering by name). Also returns the Spark job counts each commit
-    * scheduled, to prove the fast path actually skipped a job. */
-  private def both(zone: String, df: DataFrame, statsCols: Seq[String])
-      : (Seq[(Seq[TxnTable.FileStat], Long)],
-         Seq[(Seq[TxnTable.FileStat], Long)], Int, Int) = {
-    // incremented from the listener-bus thread, reset/read from the
-    // test thread — atomic, or the jFast < jSlow proof can go flaky
+  /** Spark jobs `body` schedules (listener-counted, bus drained). */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    // incremented from the listener-bus thread, read from the test
+    // thread — atomic, or the count can go flaky
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -47,25 +38,55 @@ class FooterStatsSpec extends AnyFunSuite {
         jobs.incrementAndGet(); ()
       }
     }
-    def run(table: String, knob: String): (Seq[(Seq[TxnTable.FileStat], Long)], Int) = {
-      spark.conf.set("graft.stats.footerFastPath", knob)
-      try {
-        spark.sparkContext.addSparkListener(listener)
-        jobs.set(0)
-        val v = TxnTable.commitOverwrite(df, table, statsCols = statsCols)
-        org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-        val n = jobs.get()
-        spark.sparkContext.removeSparkListener(listener)
-        val stats = TxnTable.fileStats(spark, table, v)
-        val rows = TxnTable.fileRows(spark, table, v)
-        val keys = rows.keys.toSeq.sorted // part ordinal order
-        (keys.map(k =>
-          (stats.getOrElse(k, Nil).sortBy(_.col), rows(k))), n)
-      } finally spark.conf.unset("graft.stats.footerFastPath")
-    }
-    val (fast, jFast) = run(s"$zone/fast", "true")
-    val (slow, jSlow) = run(s"$zone/slow", "false")
-    (fast, slow, jFast, jSlow)
+    org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+      (a, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Bloom sidecar bytes on disk, keyed by (table-relative file, col). */
+  private def sidecars(table: String): Map[(String, String), Seq[Byte]] = {
+    val root = new java.io.File(table).toPath
+    def walk(d: java.io.File): Seq[java.io.File] =
+      if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
+    // skip hidden entries: the local filesystem's `.<name>.crc` twins
+    walk(root.toFile).filter(f => f.getName.contains(".bloom.") &&
+        !f.getName.startsWith(".")).map { f =>
+      val rel = root.relativize(f.toPath).toString
+      val i = rel.indexOf(".bloom.")
+      (rel.take(i), java.net.URLDecoder.decode(
+        rel.drop(i + ".bloom.".length), "UTF-8")) ->
+        java.nio.file.Files.readAllBytes(f.toPath).toSeq
+    }.toMap
+  }
+
+  /** Commit `df` as an overwrite of `table` and assert its manifest
+    * stats, row counts and bloom sidecars equal the read-back
+    * reference's over the same files. Returns the per-file (stats
+    * sorted by column, rows) in file order and the Spark jobs the
+    * commit scheduled. */
+  private def check(table: String, df: DataFrame, statsCols: Seq[String],
+                    bloomCols: Seq[String] = Nil,
+                    partitionCols: Seq[String] = Nil)
+      : (Seq[(Seq[TxnTable.FileStat], Long)], Int) = {
+    val (v, jobs) = jobsOf(TxnTable.commitOverwrite(df, table,
+      statsCols = statsCols, bloomCols = bloomCols,
+      partitionCols = partitionCols))
+    val files = TxnTable.snapshotFiles(spark, table, v).sorted
+    val stats = TxnTable.fileStats(spark, table, v)
+      .view.mapValues(_.sortBy(_.col)).toMap
+    val rows = TxnTable.fileRows(spark, table, v)
+    val (refStats, refRows, refBlooms) = TxnTable.readBackStats(
+      spark, table, files, df.schema, statsCols, bloomCols)
+    assert(stats == refStats.view.mapValues(_.sortBy(_.col)).toMap,
+      s"\nwrite tasks=$stats\n  read-back=$refStats")
+    assert(rows == refRows, s"\nwrite tasks=$rows\n  read-back=$refRows")
+    assert(sidecars(table) == refBlooms,
+      "bloom sidecar bytes differ from the read-back reference's")
+    (files.map(f => (stats.getOrElse(f, Nil), rows(f))), jobs)
   }
 
   test("footer stats equal the distributed read-back on integral/bool/" +
@@ -83,38 +104,42 @@ class FooterStatsSpec extends AnyFunSuite {
             ($"id" % 365).cast("int"))).as("d"),
         lit(null).cast("long").as("allnull"),
         concat(lit("txt"), $"id").as("t"))
-      val (fast, slow, jFast, jSlow) =
-        both(zone, df, Seq("id", "i", "s", "b", "d", "allnull"))
-      assert(fast == slow, s"\nfast=$fast\nslow=$slow")
-      // the proof the fast path ENGAGED: one job (the write) vs the
-      // write plus the distributed stats pass
-      assert(jFast < jSlow, s"fast=$jFast slow=$jSlow jobs")
-      // and the stats are the real thing: min/max of `id` per 3-split
-      // range partitions, all-null proof recorded
-      assert(fast.flatMap(_._1).exists(s => s.col == "allnull" &&
+      val before = TxnTable.overlapStatsPasses.get()
+      val (got, jobs) = check(s"$zone/t", df,
+        Seq("id", "i", "s", "b", "d", "allnull"), bloomCols = Seq("id", "t"))
+      // the proof the read-back is gone: a stats+bloom commit of a
+      // spark.range frame is ONE Spark job — the write
+      assert(jobs == 1, s"$jobs jobs")
+      assert(TxnTable.overlapStatsPasses.get() == before + 1)
+      // and the stats are the real thing: all-null proof recorded,
+      // every row counted
+      assert(got.flatMap(_._1).exists(s => s.col == "allnull" &&
         s.kind == "null"))
-      assert(fast.map(_._2).sum == 1000L)
+      assert(got.map(_._2).sum == 1000L)
     }
   }
 
-  test("ineligible stats columns (string, double-with-NaN, timestamp) " +
-      "fall back to the distributed pass with identical results") {
+  test("string, NaN/-0.0 double and timestamp stats equal the read-back") {
     import spark.implicits._
     withZone { zone =>
       val df = spark.range(0, 200, 1, 2).select(
         $"id",
         concat(lit("k"), lpad($"id".cast("string"), 5, "0")).as("str"),
         when($"id" === 13, lit(Double.NaN))
+          .when($"id" === 14, lit(-0.0))
+          .when($"id" === 15, lit(0.0))
           .otherwise($"id".cast("double") / 3.0).as("dbl"),
+        // a file whose only zeros are -0.0 then 0.0: min keeps the first
+        when($"id" === 120, lit(-0.0)).when($"id" === 121, lit(0.0))
+          .otherwise($"id".cast("double") + 1.0).as("z"),
         timestamp_seconds($"id" * 1000).as("ts"))
-      val (fast, slow, _, _) =
-        both(zone, df, Seq("id", "str", "dbl", "ts"))
-      assert(fast == slow, s"\nfast=$fast\nslow=$slow")
-      // Spark ranks NaN above every double: the max stat must be NaN,
-      // which parquet footers cannot represent — pinning WHY doubles
-      // are ineligible for the footer path
-      assert(fast.flatMap(_._1).exists(s =>
+      val (got, _) = check(s"$zone/t", df,
+        Seq("id", "str", "dbl", "z", "ts"), bloomCols = Seq("str"))
+      // Spark ranks NaN above every double: the max stat must be NaN
+      assert(got.flatMap(_._1).exists(s =>
         s.col == "dbl" && s.maxV == "NaN"))
+      assert(got.flatMap(_._1).exists(s =>
+        s.col == "z" && s.minV == "-0.0"), got)
     }
   }
 
@@ -124,19 +149,16 @@ class FooterStatsSpec extends AnyFunSuite {
     withZone { zone =>
       spark.conf.set("spark.sql.caseSensitive", "true")
       try {
-        // V FIRST in schema order: a lowercase-folded find() would bind
-        // V's chunk for the tracked column v and record disjoint-range
-        // stats (100..110) as v's EXACT min/max — the fast/slow compare
-        // catches exactly that
+        // V FIRST in schema order: a lowercase-folded binding would
+        // record V's disjoint range (100..110) as v's EXACT min/max
         val df = spark.range(0, 100, 1, 2).select(
           $"id",
           ($"id" % 11 + 100).cast("int").as("V"),
           ($"id" % 7).cast("int").as("v"))
-        val (fast, slow, _, _) = both(zone, df, Seq("v"))
-        assert(fast == slow, s"\nfast=$fast\nslow=$slow")
-        assert(fast.flatMap(_._1).filter(_.col == "v")
+        val (got, _) = check(s"$zone/t", df, Seq("v"))
+        assert(got.flatMap(_._1).filter(_.col == "v")
             .forall(s => s.maxV.toDouble < 7.0),
-          s"v's stats must come from v's chunk, not V's: $fast")
+          s"v's stats must come from v, not V: $got")
       } finally spark.conf.unset("spark.sql.caseSensitive")
     }
   }
@@ -149,10 +171,9 @@ class FooterStatsSpec extends AnyFunSuite {
         struct(($"id" * 2).as("n"),
           when($"id" % 5 === 0, lit(null)).otherwise($"id" % 17)
             .cast("int").as("m")).as("meta"))
-      val (fast, slow, jFast, jSlow) =
-        both(zone, df, Seq("id", "meta.n", "meta.m"))
-      assert(fast == slow, s"\nfast=$fast\nslow=$slow")
-      assert(jFast < jSlow)
+      val (got, jobs) = check(s"$zone/t", df, Seq("id", "meta.n", "meta.m"))
+      assert(jobs == 1, s"$jobs jobs")
+      assert(got.flatMap(_._1).count(_.col == "meta.m") == 2)
     }
   }
 
@@ -160,13 +181,11 @@ class FooterStatsSpec extends AnyFunSuite {
     import spark.implicits._
     withZone { zone =>
       val empty = spark.range(0).select($"id")
-      val (f0, s0, _, _) = both(s"$zone/e", empty, Seq("id"))
-      assert(f0 == s0)
-      assert(f0.forall(_._2 == 0L))
+      val (e, _) = check(s"$zone/e", empty, Seq("id"), bloomCols = Seq("id"))
+      assert(e.nonEmpty && e.forall(_._2 == 0L))
       val one = spark.range(41, 42).select($"id")
-      val (f1, s1, _, _) = both(s"$zone/o", one, Seq("id"))
-      assert(f1 == s1)
-      assert(f1.flatMap(_._1).exists(s =>
+      val (o, _) = check(s"$zone/o", one, Seq("id"))
+      assert(o.flatMap(_._1).exists(s =>
         s.col == "id" && s.minV == "41.0" && s.maxV == "41.0"))
     }
   }
@@ -191,10 +210,157 @@ class FooterStatsSpec extends AnyFunSuite {
         .find(_.col == "id").forall(_.mayOverlap(bound)))
       assert(kept < files.size && kept >= 1,
         s"stats must prune: kept $kept of ${files.size}")
-      // metadata-only MIN/MAX folds from the footer-derived stats
+      // metadata-only MIN/MAX folds from the write-task stats
       val agg = spark.read.format("graft").load(t)
         .agg(min($"id"), max($"id")).collect()(0)
       assert(agg.getLong(0) == 0L && agg.getLong(1) == 9999L)
+    }
+  }
+
+  test("partitioned writes key files by path: part names repeat across " +
+      "partition dirs") {
+    import spark.implicits._
+    withZone { zone =>
+      // every one of the 4 tasks writes into each of the 5 value dirs,
+      // so the same part-N name lands in several dirs
+      val df = spark.range(0, 400, 1, 4).select(
+        $"id", ($"id" % 5).as("g"),
+        when($"id" % 9 === 0, lit(null)).otherwise(concat(lit("h"), $"id"))
+          .as("h"))
+      val (got, _) = check(s"$zone/t", df, Seq("id", "g", "h"),
+        bloomCols = Seq("h", "id"), partitionCols = Seq("g"))
+      val v = TxnTable.latestVersion(spark, s"$zone/t").get
+      val files = TxnTable.snapshotFiles(spark, s"$zone/t", v)
+      val names = files.map(_.split('/').last)
+      assert(names.distinct.size < names.size,
+        s"expected repeated part names across dirs: $files")
+      assert(got.map(_._2).sum == 400L)
+      // each file holds one partition value: min == max on g
+      assert(got.forall(_._1.find(_.col == "g").exists(s => s.minV == s.maxV)))
+    }
+  }
+
+  test("strings longer than graft.stats.maxStringLen record no stat") {
+    import spark.implicits._
+    withZone { zone =>
+      spark.conf.set("graft.stats.maxStringLen", "8")
+      try {
+        // file 0 holds only short strings, file 1 one long one
+        val df = spark.range(0, 100, 1, 2).select($"id",
+          when($"id" === 77, lit("x" * 9))
+            .otherwise(concat(lit("s"), $"id")).as("s"))
+        val (got, _) = check(s"$zone/t", df, Seq("id", "s"))
+        assert(got.map(_._1.exists(_.col == "s")) == Seq(true, false), got)
+      } finally spark.conf.unset("graft.stats.maxStringLen")
+    }
+  }
+
+  test("date/timestamp stats under a non-UTC session zone equal the " +
+      "read-back") {
+    import spark.implicits._
+    withZone { zone =>
+      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      try {
+        val df = spark.range(0, 300, 1, 3).select($"id",
+          date_add(lit("2021-03-01").cast("date"), ($"id" % 40).cast("int"))
+            .as("d"),
+          timestamp_seconds($"id" * 3600).as("ts"),
+          timestamp_seconds($"id" * 60).cast("timestamp_ntz").as("ntz"))
+        val (got, _) = check(s"$zone/t", df, Seq("d", "ts", "ntz"))
+        // epoch seconds of the LOCAL midnight: not a multiple of a day
+        assert(got.flatMap(_._1).filter(_.col == "d")
+          .forall(s => s.minV.toDouble % 86400.0 != 0.0), got)
+      } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+    }
+  }
+
+  test("TIMESTAMP_MILLIS output: timestamp stats describe the stored " +
+      "milliseconds") {
+    import spark.implicits._
+    withZone { zone =>
+      val key = "spark.sql.parquet.outputTimestampType"
+      spark.conf.set(key, "TIMESTAMP_MILLIS")
+      try {
+        // sub-millisecond parts the writer floors away; TIMESTAMP_NTZ
+        // stays microseconds
+        val df = spark.range(0, 100, 1, 2).select($"id",
+          timestamp_micros($"id" * 1234567L + 789L).as("ts"),
+          timestamp_micros($"id" * 7654321L + 999L).cast("timestamp_ntz")
+            .as("ntz"))
+        val (got, _) = check(s"$zone/t", df, Seq("ts", "ntz"))
+        def whole(c: String) = got.flatMap(_._1).filter(_.col == c)
+          .map(s => (BigDecimal(s.maxV) * 1000).isWhole)
+        assert(whole("ts") == Seq(true, true) &&
+          whole("ntz") == Seq(false, false), got)
+      } finally spark.conf.set(key, "TIMESTAMP_MICROS")
+    }
+  }
+
+  test("id-mode (field-id) tables stamp ids and record read-back stats") {
+    import spark.implicits._
+    withZone { zone =>
+      val df = TxnTable.withFieldIds(spark.range(0, 200, 1, 2)
+        .select($"id", ($"id" % 13).cast("int").as("k"),
+          concat(lit("v"), $"id").as("v")))
+      val (got, _) = check(s"$zone/t", df, Seq("id", "k", "v"),
+        bloomCols = Seq("k"))
+      assert(got.map(_._2).sum == 200L)
+      val v = TxnTable.latestVersion(spark, s"$zone/t").get
+      TxnTable.snapshotFiles(spark, s"$zone/t", v).foreach { f =>
+        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(s"$zone/t/$f"),
+            spark.sparkContext.hadoopConfiguration))
+        try {
+          val ids = rd.getFooter.getFileMetaData.getSchema.getFields
+          assert((0 until ids.size).forall(i => ids.get(i).getId != null),
+            s"$f carries no field ids: ${rd.getFooter.getFileMetaData.getSchema}")
+        } finally rd.close()
+      }
+    }
+  }
+
+  test("the tracked write's footers equal DataFrameWriter's: schema, " +
+      "key-value metadata keys, row counts") {
+    import spark.implicits._
+    withZone { zone =>
+      def footers(dir: String)
+          : Seq[(String, Set[String], Long)] = {
+        def walk(d: java.io.File): Seq[java.io.File] =
+          if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
+        walk(new java.io.File(dir))
+          .filter(f => f.getName.endsWith(".parquet") &&
+            !f.getName.startsWith("_"))
+          .sortBy(_.getName).map { f =>
+            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                new org.apache.hadoop.fs.Path(f.toString),
+                spark.sparkContext.hadoopConfiguration))
+            try {
+              val meta = rd.getFooter.getFileMetaData
+              import scala.jdk.CollectionConverters._
+              (meta.getSchema.toString, meta.getKeyValueMetaData.keySet.asScala.toSet,
+                rd.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
+            } finally rd.close()
+          }
+      }
+      val frames = Seq(
+        "mixed" -> spark.range(0, 500, 1, 3).select($"id",
+          when($"id" % 3 === 0, lit(null)).otherwise($"id" % 7).as("n"),
+          concat(lit("s"), $"id").as("s"),
+          struct($"id".as("a"), lit(1.5).as("b")).as("st")),
+        "empty" -> spark.range(0).select($"id", lit("x").as("s")))
+      frames.foreach { case (name, df) =>
+        val t = s"$zone/$name"
+        TxnTable.commitOverwrite(df, t, statsCols = Seq("id"))
+        df.write.parquet(s"$zone/${name}_plain")
+        val ours = footers(t)
+        val theirs = footers(s"$zone/${name}_plain")
+        assert(ours.nonEmpty)
+        assert(ours == theirs, s"\n$name tracked=$ours\n$name plain=$theirs")
+      }
+      // a non-nullable column is REQUIRED on both sides
+      assert(footers(s"$zone/mixed").head._1.contains("required int64 id"))
     }
   }
 }

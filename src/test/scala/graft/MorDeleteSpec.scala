@@ -70,6 +70,30 @@ class MorDeleteSpec extends AnyFunSuite {
     }
   }
 
+  test("deleteWhereMoR counts its tuples in the write job, not per file") {
+    withZone { (table, tn) =>
+      seed(table, tn)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        TxnTable.deleteWhereMoR(spark, table, Seq("g"), t => t("g") === 2)
+        org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      // the distinct's shuffle stage and the tuple-file write, whose
+      // tasks count the tuples: no job reads the tuple file back
+      assert(jobs.get() <= 2, s"${jobs.get()} jobs")
+      assert(dels(table).map(_.rows) == Seq(1L))
+      assert(spark.read.format("graft").load(table).count() == 80L)
+    }
+  }
+
   test("metadata-shape DELETE routes merge-on-read; re-insert survives the gate") {
     import spark.implicits._
     withZone { (table, tn) =>

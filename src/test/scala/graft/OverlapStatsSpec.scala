@@ -4,13 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.io.TxnTable
 
-/** The overlapped stats/bloom pass (r21): an optimizedWrite partitioned
-  * commit over a cheap-re-read frame computes its per-file stats and
-  * bloom bitsets from the INPUT, concurrently with the write, instead
-  * of re-reading the fresh parquet in a serial job. This spec pins the
-  * EXACTNESS bar: the recorded stats, row counts, and bloom sidecar
-  * bytes must be byte-identical to what the read-back job records for
-  * the same rows — and the overlap must actually have engaged (counter)
+/** The stats/bloom pass runs INSIDE the write (the write tasks collect
+  * it) for every frame shape — optimizedWrite partitioned commits,
+  * plain partitioned ones, V1 parquet scans, graft-scan (V2) sources
+  * and nondeterministic projections alike, including the shapes whose
+  * re-execution could differ from the written rows. This spec pins
+  * the EXACTNESS bar per shape: the recorded stats, row
+  * counts and bloom sidecar bytes must be byte-identical to what the
+  * read-back reference (`TxnTable.readBackStats`) computes over the
+  * written files — and the write-task pass must have engaged (counter)
   * so the parity assert cannot go vacuous. */
 class OverlapStatsSpec extends AnyFunSuite {
   lazy val spark = Spec.spark
@@ -23,8 +25,8 @@ class OverlapStatsSpec extends AnyFunSuite {
     finally graft.io.Tables.deleteTree(zone)
   }
 
-  // checkpointed frame (the cheap-re-read gate) with nulls in both a
-  // stats and a bloom column, several buckets, and a skewed key
+  // checkpointed frame with nulls in both a stats and a bloom column,
+  // several buckets, and a skewed key
   private def frame() = {
     val rows = (1L to 500L).map { i =>
       (i,
@@ -35,133 +37,91 @@ class OverlapStatsSpec extends AnyFunSuite {
     rows.toDF("doc_id", "h", "grp").localCheckpoint()
   }
 
-  private def write(df: org.apache.spark.sql.DataFrame, table: String,
-      overlap: Boolean): Unit = {
-    val key = "graft.stats.overlapPartitionedPass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, overlap.toString)
-    try df.write.format("graft")
-      .option("partitionBy", "bucket(8, h)")
-      .option("statsCols", "doc_id,h,grp").option("bloomCols", "h,doc_id")
-      .option("optimizedWrite", "true")
-      .mode("overwrite").save(table)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+  private val statsCols = Seq("doc_id", "h", "grp")
+  private val bloomCols = Seq("h", "doc_id")
+
+  /** Bloom sidecar bytes on disk, keyed by (table-relative file, col). */
+  private def sidecars(table: String): Map[(String, String), Seq[Byte]] = {
+    val root = new java.io.File(table).toPath
+    def walk(d: java.io.File): Seq[java.io.File] =
+      if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
+    // skip hidden entries: the local filesystem's `.<name>.crc` twins
+    walk(root.toFile).filter(f => f.getName.contains(".bloom.") &&
+        !f.getName.startsWith(".")).map { f =>
+      val rel = root.relativize(f.toPath).toString
+      val i = rel.indexOf(".bloom.")
+      (rel.take(i), rel.drop(i + ".bloom.".length)) ->
+        java.nio.file.Files.readAllBytes(f.toPath).toSeq
+    }.toMap
   }
 
-  /** Per-file records re-keyed by the partition-value dir segment (the
-    * one file per value), so two commits' different w=/part- names
-    * compare. */
-  private def byDir[A](m: Map[String, A]): Map[String, A] =
-    m.map { case (k, v) =>
-      val segs = k.split('/')
-      assert(segs.length == 3, s"unexpected layout: $k")
-      segs(1) -> v
-    }
+  /** Write `df` as a bucketed graft table and assert the write-task
+    * pass engaged and recorded exactly the read-back reference's
+    * stats, rows and bloom bytes. */
+  private def writeAndCheck(df: org.apache.spark.sql.DataFrame,
+      table: String, optimized: Boolean = true): Unit = {
+    val before = TxnTable.overlapStatsPasses.get()
+    df.write.format("graft")
+      .option("partitionBy", "bucket(8, h)")
+      .option("statsCols", statsCols.mkString(","))
+      .option("bloomCols", bloomCols.mkString(","))
+      .option("optimizedWrite", optimized.toString)
+      .mode("overwrite").save(table)
+    assert(TxnTable.overlapStatsPasses.get() == before + 1,
+      "the write tasks must have collected the stats")
+    val v = TxnTable.latestVersion(spark, table).get
+    val files = TxnTable.snapshotFiles(spark, table, v)
+    val (refStats, refRows, refBlooms) = TxnTable.readBackStats(
+      spark, table, files, df.schema, statsCols, bloomCols)
+    def sorted(m: Map[String, Seq[TxnTable.FileStat]]) =
+      m.view.mapValues(_.sortBy(_.col)).toMap
+    assert(sorted(TxnTable.fileStats(spark, table, v)) == sorted(refStats),
+      "stats diverge from the read-back reference")
+    assert(TxnTable.fileRows(spark, table, v) == refRows)
+    val bl = sidecars(table)
+    assert(bl.nonEmpty, "expected bloom sidecars")
+    assert(bl == refBlooms, "bloom bitsets diverge from the read-back's")
+  }
 
   test("overlapped pass records byte-identical stats/rows/blooms") {
     withZone { zone =>
       val df = frame()
-      val before = TxnTable.overlapStatsPasses.get()
-      write(df, s"$zone/on", overlap = true)
-      assert(TxnTable.overlapStatsPasses.get() == before + 1,
-        "the overlapped pass must actually engage for this shape")
-      write(df, s"$zone/off", overlap = false)
-      assert(TxnTable.overlapStatsPasses.get() == before + 1,
-        "conf off must take the read-back job")
-
-      val vOn = TxnTable.latestVersion(spark, s"$zone/on").get
-      val vOff = TxnTable.latestVersion(spark, s"$zone/off").get
-      val statsOn = byDir(TxnTable.fileStats(spark, s"$zone/on", vOn)
-        .view.mapValues(_.sortBy(_.col)).toMap)
-      val statsOff = byDir(TxnTable.fileStats(spark, s"$zone/off", vOff)
-        .view.mapValues(_.sortBy(_.col)).toMap)
-      assert(statsOn == statsOff,
-        s"stats diverge:\n on=$statsOn\noff=$statsOff")
-      val rowsOn = byDir(TxnTable.fileRows(spark, s"$zone/on", vOn))
-      val rowsOff = byDir(TxnTable.fileRows(spark, s"$zone/off", vOff))
-      assert(rowsOn == rowsOff)
-
-      // bloom sidecar BYTES per (partition value, column)
-      def sidecars(table: String): Map[(String, String), Seq[Byte]] = {
-        def walk(d: java.io.File): Seq[java.io.File] =
-          if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
-        walk(new java.io.File(table))
-          .filter(_.getName.contains(".bloom."))
-          .map { f =>
-            val col = f.getName.split("\\.bloom\\.").last
-            val dir = f.getParentFile.getName
-            (dir, col) ->
-              java.nio.file.Files.readAllBytes(f.toPath).toSeq
-          }.toMap
-      }
-      val blOn = sidecars(s"$zone/on")
-      val blOff = sidecars(s"$zone/off")
-      assert(blOn.nonEmpty, "expected bloom sidecars")
-      assert(blOn == blOff, "bloom bitsets diverge between the passes")
-
-      // and the data itself reads back identically
+      writeAndCheck(df, s"$zone/on")
+      // one file per bucket value under optimizedWrite
+      val v = TxnTable.latestVersion(spark, s"$zone/on").get
+      val files = TxnTable.snapshotFiles(spark, s"$zone/on", v)
+      assert(files.map(_.split('/')(1)).distinct.size == files.size)
+      // and the data itself reads back as written
       val a = spark.read.format("graft").load(s"$zone/on")
         .orderBy($"doc_id").collect().toSeq
-      val b = spark.read.format("graft").load(s"$zone/off")
-        .orderBy($"doc_id").collect().toSeq
-      assert(a == b)
+      assert(a == df.orderBy($"doc_id").collect().toSeq)
     }
   }
 
-  test("ineligible shapes fall back (non-optimized write; graft-scan frame)") {
+  test("non-optimized and graft-scan (V2) frames record read-back-exact " +
+      "stats") {
     withZone { zone =>
-      val before = TxnTable.overlapStatsPasses.get()
-      // not optimizedWrite: several files per value possible -> no overlap
-      frame().write.format("graft")
-        .option("partitionBy", "bucket(8, h)")
-        .option("statsCols", "doc_id").mode("overwrite")
-        .save(s"$zone/plain")
-      // graft-scan (V2) frame: the scan re-resolves the manifest per
-      // execution, so a concurrent commit could make the overlapped
-      // aggregation diverge from the written bytes — must fall back
-      spark.read.format("graft").load(s"$zone/plain")
-        .write.format("graft")
-        .option("partitionBy", "bucket(8, h)")
-        .option("statsCols", "doc_id").option("optimizedWrite", "true")
-        .mode("overwrite").save(s"$zone/scanned")
-      assert(TxnTable.overlapStatsPasses.get() == before,
-        "neither shape may take the overlapped pass")
+      // not optimizedWrite: several files per value
+      writeAndCheck(frame(), s"$zone/plain", optimized = false)
+      // graft-scan (V2) frame: its scan re-resolves the manifest per
+      // execution, so only the write tasks see exactly the rows written
+      writeAndCheck(spark.read.format("graft").load(s"$zone/plain"),
+        s"$zone/scanned")
     }
   }
 
-  test("V1 parquet-scan frames engage; nondeterministic projections fall back") {
+  test("V1 parquet-scan and rand() frames record read-back-exact stats") {
     withZone { zone =>
       frame().write.mode("overwrite").parquet(s"$zone/raw")
       val scan = spark.read.parquet(s"$zone/raw")
         .filter($"doc_id" % 2 === 0)
         .select($"doc_id", $"h", $"grp")
-      val before = TxnTable.overlapStatsPasses.get()
-      // immutable-file V1 relation + projection/filter only: the
-      // re-execution reads exactly the bytes the write read -> engages
-      write(scan, s"$zone/v1on", overlap = true)
-      assert(TxnTable.overlapStatsPasses.get() == before + 1,
-        "a V1 parquet-scan projection must take the overlapped pass")
-      // byte-identical vs the read-back job on the same frame
-      write(scan, s"$zone/v1off", overlap = false)
-      val vOn = TxnTable.latestVersion(spark, s"$zone/v1on").get
-      val vOff = TxnTable.latestVersion(spark, s"$zone/v1off").get
-      assert(
-        byDir(TxnTable.fileStats(spark, s"$zone/v1on", vOn)
-          .view.mapValues(_.sortBy(_.col)).toMap) ==
-        byDir(TxnTable.fileStats(spark, s"$zone/v1off", vOff)
-          .view.mapValues(_.sortBy(_.col)).toMap),
-        "V1-scan overlapped stats diverge from the read-back job's")
-      assert(byDir(TxnTable.fileRows(spark, s"$zone/v1on", vOn)) ==
-        byDir(TxnTable.fileRows(spark, s"$zone/v1off", vOff)))
-      // a nondeterministic projection would re-draw on re-execution:
-      // stats could diverge from the written bytes -> must fall back
-      val after = TxnTable.overlapStatsPasses.get()
-      write(scan.withColumn("r", rand()), s"$zone/nondet", overlap = true)
-      assert(TxnTable.overlapStatsPasses.get() == after,
-        "a nondeterministic projection must take the read-back job")
+      writeAndCheck(scan, s"$zone/v1")
+      // a nondeterministic projection draws once, in the write tasks:
+      // the stats describe the written bytes
+      val r = scan.withColumn("r", rand())
+        .withColumn("grp", when($"r" < 0.5, $"grp"))
+      writeAndCheck(r, s"$zone/nondet")
     }
   }
 }
