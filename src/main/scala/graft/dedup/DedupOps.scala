@@ -982,7 +982,7 @@ object DedupOps {
     import graft.io.TxnTable
     val total = TxnTable.snapshotFiles(spark, persisted,
       TxnTable.latestVersion(spark, persisted).get).size
-    val keyLimit = probeKeyLimit(spark)
+    val keyLimit = graft.io.KeySet.probeKeyLimit(spark)
     // ONE job serves both decisions (this was a count() plus a
     // distinct+limit collect — two driver round trips per probe): each
     // partition counts its rows and gathers its distinct keys CAPPED at
@@ -1107,18 +1107,6 @@ object DedupOps {
       } catch { case scala.util.control.NonFatal(_) => () }
     }
   }
-
-  /** Distinct band keys at or below which an increment's probe pushes
-    * a STATIC `h IN (...)` filter into the signature scan: bucket
-    * pruning + (b,h) stats + per-file h blooms then skip signature
-    * files at PLAN time (a dynamic runtime filter never fires here —
-    * the broadcast side carries no selective predicate for DPP to
-    * derive from, so the claim must be established statically). The
-    * bounded driver sync is ≤ limit+1 longs; a batch with more keys
-    * touches every bucket anyway and gains nothing from pruning. */
-  private[graft] def probeKeyLimit(spark: SparkSession): Int =
-    spark.conf.getOption("graft.dedup.probeKeyLimit")
-      .map(_.toInt).getOrElse(1024)
 
   /** Signature rows above which an increment abandons `broadcast(sig)`
     * (Spark's 8 GB hard cap, driver memory in practice) for the

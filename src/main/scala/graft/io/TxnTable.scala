@@ -3436,13 +3436,27 @@ object TxnTable {
     * same-key rows; unmatched keys insert. Delta's two-phase shape:
     *
     *   phase 1  find the files that actually CONTAIN an update key —
-    *            stats pre-prune the candidate files (min/max vs the
-    *            update key set's bounds, which bound MATCHES; inserts
-    *            outside every file's range can't match anything), then
-    *            a key-column-only scan of the candidates joined with
-    *            the update keys yields the exact touched-file set
-    *   phase 2  rewrite ONLY those files (anti-join + union); every
-    *            other file carries forward BY REFERENCE
+    *            one job gathers the update keys (non-null count, typed
+    *            min/max, and the distinct keys when at most
+    *            `KeySet.probeKeyLimit` of them exist and their type's
+    *            `IN` equality is the join's), once per merge, before
+    *            the commit loop; stats pre-prune the candidate files
+    *            (min/max vs the keys' bounds, which bound MATCHES;
+    *            inserts outside every file's range can't match
+    *            anything), then a key-column-only scan of the
+    *            candidates yields the exact touched-file set: filtered
+    *            by a static `IN` of the gathered keys and collected in
+    *            the same job (literal branch), or semi-joined with the
+    *            update keys (join branch: many keys, or float/double/
+    *            binary/complex keys, whose NaN and -0.0 compare
+    *            differently under `IN`)
+    *   phase 2  rewrite ONLY those files (the touched rows minus the
+    *            update keys — a `NOT IN` filter or an anti-join, by
+    *            branch — union the updates); every other file carries
+    *            forward BY REFERENCE
+    *
+    * A small literal-branch merge is three Spark jobs: gather, probe,
+    * write (CDF adds its change-file write).
     *
     * At 100 TB a merge touching 0.1% of the key space rewrites ~0.1%
     * of the files and phase 1 reads one column of a pruned candidate
@@ -3495,7 +3509,8 @@ object TxnTable {
     // column (ALWAYS semantics, same as the append path). Generated
     // columns recompute over the incoming frame (fill for inserts,
     // staleness repair for updates) before any gate sees it.
-    val mergeSchema = latestState(spark, table).flatMap(_.schema)
+    val latest = latestState(spark, table)
+    val mergeSchema = latest.flatMap(_.schema)
     mergeSchema.flatMap(identityColumn).foreach { d =>
       require(!updates0.columns.exists(_.equalsIgnoreCase(d.col)),
         s"IDENTITY column ${d.col} is GENERATED ALWAYS — the merge " +
@@ -3507,34 +3522,31 @@ object TxnTable {
     // write). Checks referencing the identity column can't evaluate
     // over the pre-enrichment frame — they hold by construction
     // (inherited and minted values are never NULL), so they skip here.
-    latestState(spark, table).map { st0 =>
+    latest.map { st0 =>
       val idCol = st0.schema.flatMap(identityColumn).map(_.col)
       st0.checks.filterNot { case (_, sql) =>
         idCol.exists(c => exprRefs(spark, sql).exists(_.equalsIgnoreCase(c)))
       }
     }.foreach(enforceChecks(updates, table, _))
+    // the update keys, gathered ONCE per merge (the keys do not depend
+    // on the snapshot, so a lost CAS re-plans without re-reading them;
+    // lazy: the first commit of a table is an append and never needs
+    // them): non-null count, typed bounds — strings min/max by UTF-8
+    // bytes (a numeric cast would NULL out and silently no-op the whole
+    // merge), temporals as epoch, one normalization shared with the
+    // stats — and the distinct keys when few enough for a static IN
+    val keyDt = updates.schema(keyCol).dataType
+    lazy val upd = KeySet.gather(updates, keyCol, KeySet.probeKeyLimit(spark))
     def plan(st: State): Attempt = {
       if (st.version == 0L)
         return Done(commitAppend(updates, table, statsCols = Seq(keyCol)))
+      if (upd.count == 0L) return Done(st.version) // no non-null keys: no-op
       val schema = st.schemaOf(table)
-      val keys = updates.select(col(keyCol)).distinct()
-      // typed key bounds: strings min/max lexicographically (a numeric
-      // cast would NULL out and silently no-op the whole merge),
-      // temporals as epoch — one normalization shared with the stats.
-      // Over the raw update keys, not `keys`: count/min/max need no
-      // distinct (count only gates the no-op), so no shuffle job
-      val keyDt = updates.schema(keyCol).dataType
-      val bounds = updates.select(col(keyCol)).agg(
-        count(col(keyCol)),
-        min(normExpr(keyCol, keyDt)), max(normExpr(keyCol, keyDt))).head()
-      if (bounds.getLong(0) == 0L) return Done(st.version) // no non-null keys: no-op
-      val keyBound: Option[Bound] =
-        (bounds.get(1), bounds.get(2)) match {
-          case (l: String, h: String) => Some(Bound("str", loS = l, hiS = h))
-          case (l: Number, h: Number) =>
-            Some(Bound("num", lo = l.doubleValue(), hi = h.doubleValue()))
-          case _ => None // keys resist normalization: no pre-prune
-        }
+      // literal branch: `IN` of the gathered keys, when the table's key
+      // column has the frame's key type (no coercion on either side)
+      val isKey = upd.keys.filter(_ => typeAt(schema, keyCol).contains(keyDt))
+        .map(KeySet.isIn(keyCol, keyDt, _))
+      val keyBound = upd.bound // None: keys resist normalization, no pre-prune
       // stats pre-prune: only files whose range intersects the update
       // keys' range can contain a match (statless files always qualify)
       val candidates = keyBound match {
@@ -3568,15 +3580,29 @@ object TxnTable {
             else delAppliedRead(spark, table, st, candidates,
                 withIdentity = true)
               .select(col(keyCol), col(IdPathCol).as("__f"))
-          // no broadcast hint: AQE picks broadcast when the key set is
-          // small and falls back to shuffle when a bulk merge isn't.
-          // A semi-join, so only the keys can be the build side: a
-          // broadcast candidate scan is a hash relation of every
-          // candidate row (~17 MB at 60k rows), held in memory until
-          // the context cleaner next runs
-          scan.join(keys, Seq(keyCol), "left_semi")
-            .select(col("__f")).distinct().collect()
-            .map(r => toRel(r.getString(0))).toSet
+          val hits = isKey match {
+            case Some(k) =>
+              // one job: the static IN filters the scan (parquet
+              // pushdown included) and each task returns its distinct
+              // file names — no join, no distinct shuffle
+              scan.filter(k).select(col("__f")).queryExecution.toRdd
+                .mapPartitions { it =>
+                  val fs = new java.util.HashSet[String]()
+                  it.foreach(r => fs.add(r.getUTF8String(0).toString))
+                  Iterator.single(fs.toArray(new Array[String](fs.size)))
+                }.collect().flatten
+            case None =>
+              // no broadcast hint: AQE picks broadcast when the key set
+              // is small and falls back to shuffle when a bulk merge
+              // isn't. A semi-join, so only the keys can be the build
+              // side: a broadcast candidate scan is a hash relation of
+              // every candidate row (~17 MB at 60k rows), held in
+              // memory until the context cleaner next runs
+              scan.join(updates.select(col(keyCol)).distinct(),
+                  Seq(keyCol), "left_semi")
+                .select(col("__f")).distinct().collect().map(_.getString(0))
+          }
+          hits.map(toRel).toSet
         }
       // IDENTITY enrichment: matched keys inherit the target's value
       // (min over same-key rows — the merge replaces them all with one
@@ -3615,11 +3641,17 @@ object TxnTable {
       // surface it as NULL) or omit one (update rows get NULL) — the
       // same merged schema the commit records, so the advertised
       // evolution actually goes through the data path
+      // (identity enrichment never changes a key, so the gathered keys
+      // are exactly `enriched`'s: the literal branch filters the touched
+      // rows instead of anti-joining them; NULL keys never match)
       val merged =
         if (touched.isEmpty) enriched
-        else readFiles(touched.toSeq)
-          .join(enriched, Seq(keyCol), "left_anti")
-          .unionByName(enriched, allowMissingColumns = true)
+        else {
+          val rows = readFiles(touched.toSeq)
+          isKey.fold(rows.join(enriched, Seq(keyCol), "left_anti"))(k =>
+            rows.filter(col(keyCol).isNull || !k))
+            .unionByName(enriched, allowMissingColumns = true)
+        }
       // rewritten files keep stats for EVERY column the table tracks —
       // a merge must not degrade later skipping on other dimensions.
       // (A column the merged frame doesn't carry — pure-insert updates
@@ -3666,8 +3698,9 @@ object TxnTable {
           val touchedDf =
             if (touched.isEmpty) None
             else Some(planFiles(spark, table, schema, touched.toSeq, st.pathpart, st.aliases, retired = st.retired, addv = st.addv))
-          val updKeys = enriched.select(col(keyCol)).distinct()
-          val pre = touchedDf.map(_.join(updKeys, Seq(keyCol), "left_semi")
+          val pre = touchedDf.map(t => isKey
+            .fold(t.join(enriched.select(col(keyCol)).distinct(), Seq(keyCol),
+              "left_semi"))(k => t.filter(k))
             .withColumn(ChangeTypeCol, lit("update_preimage")))
           val matchedKeys = touchedDf.map(_.select(col(keyCol)).distinct())
           val post = matchedKeys.map(mk =>
@@ -3692,7 +3725,9 @@ object TxnTable {
         Seq(dataDir), newFiles, newStats, newBlooms, newRows,
         if (idDef.isDefined) None else keyBound.map(keyCol -> _), cdcAdd)
     }
-    Log.commit(spark, table, "merge")(plan)
+    // the first try plans on the snapshot read above: one latest-state
+    // read per merge until a CAS is lost
+    Log.commit(spark, table, "merge", Some(latest.getOrElse(State.empty)))(plan)
   }
 
   /** The publish of a computed file rewrite: `removed` (snapshot files

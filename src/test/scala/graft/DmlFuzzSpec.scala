@@ -171,6 +171,18 @@ class DmlFuzzSpec extends AnyFunSuite {
   }
 
   test("concurrent DML equals its version-order serial replay (seeded)") {
+    serialReplayFuzz()
+  }
+
+  // the 3-key merges above take merge's literal-key branch; this arm
+  // races the same schedule through its semi-join/anti-join branch
+  test("concurrent DML with join-branch merges equals its serial replay") {
+    spark.conf.set("graft.dedup.probeKeyLimit", "0")
+    try serialReplayFuzz()
+    finally spark.conf.unset("graft.dedup.probeKeyLimit")
+  }
+
+  private def serialReplayFuzz(): Unit = {
     val threads = 4
     val opsPerThread = 4
     // dev knob: GRAFT_DMLFUZZ_EXTRA widens the sweep for bug hunts
