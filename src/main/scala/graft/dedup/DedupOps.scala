@@ -889,36 +889,6 @@ object DedupOps {
     }
   }
   // ---------------------------------------------------------------- d47
-  /** INCREMENTAL cross-batch dedup — the production shape of MinHash
-    * dedup at 100 TB: band signatures PERSIST as a graft table, and
-    * each incoming batch dedups against them with a band-key join
-    * sized to the BATCH, then positional-deletes its in-batch losers
-    * and appends its own signatures — no corpus rescan, ever. The
-    * corpus here ingests as two id-ordered batches; each ingest:
-    *
-    *   1. appends the batch to the merge-on-read corpus table;
-    *   2. computes the batch's band signatures (native one-pass
-    *      `minhash_sig`, the same bands d36 persists);
-    *   3. marks a doc a DUP iff some band key matches the signature
-    *      table (a strictly earlier doc — cross-batch) or an
-    *      earlier-id doc of the same batch (per-band min-id window);
-    *   4. removes the dups by POSITIONAL delete (kilobyte vector, no
-    *      data-file rewrite — REQUIREd);
-    *   5. appends ALL the batch's signatures (survivors AND dups, so
-    *      the pairwise earlier-id rule stays exactly recomputable).
-    *
-    * Per-increment cost: one batch signature pass + one SHUFFLE-FREE
-    * probe of the signature table + one metadata commit. The batch
-    * side BROADCASTS into the band join, so the corpus-sized sigs
-    * side streams straight out of its scan with zero Exchange
-    * (REQUIREd in-query); the sigs table is written `bucket(16, h)`-
-    * partitioned with (b,h) stats and an h bloom per file, so the
-    * scan itself prunes signature files the batch's key set cannot
-    * match (runtime filtering, k137 machinery) — nothing ever
-    * shuffles the corpus, and the scan narrows with key locality.
-    * The oracle recomputes the SAME pairwise rule from scratch in
-    * DuckDB over the full corpus: incremental and batch answers must
-    * agree exactly. */
   /** Shuffle Exchanges in an executed (possibly adaptive) plan. */
   private def d47Shuffles(
       p: org.apache.spark.sql.execution.SparkPlan): Int =
@@ -1118,14 +1088,6 @@ object DedupOps {
     spark.conf.getOption("graft.dedup.sigBroadcastLimit")
       .map(_.toLong).getOrElse(50L * 1000 * 1000)
 
-  /** One incremental-dedup ingest (the d47 step, reusable by specs):
-    * append `batch` to the merge-on-read `corpus`, probe the persisted
-    * `sigs` table for cross-batch band matches, positional-delete the
-    * batch's losers, append the batch's signatures. Returns the
-    * probe's (scanned, total) signature file counts (0,0 on the first
-    * ingest) so callers can REQUIRE real file pruning. The probe plan
-    * REQUIREs zero shuffle Exchanges on every path — the corpus-sized
-    * signature side must always stream out of its scan. */
   /** The batch's exploded band signatures, materialized — the
     * batch-PURE prefix of a d47 ingest (a function of the batch text
     * only), extractable so callers can pipeline the NEXT batch's
@@ -1137,6 +1099,14 @@ object DedupOps {
         .as(Seq("b", "h"))).localCheckpoint()
   }
 
+  /** One incremental-dedup ingest (the d47 step, reusable by specs):
+    * append `batch` to the merge-on-read `corpus`, probe the persisted
+    * `sigs` table for cross-batch band matches, positional-delete the
+    * batch's losers, append the batch's signatures. Returns the
+    * probe's (scanned, total) signature file counts (0,0 on the first
+    * ingest) so callers can REQUIRE real file pruning. The probe plan
+    * REQUIREs zero shuffle Exchanges on every path — the corpus-sized
+    * signature side must always stream out of its scan. */
   private[graft] def d47Ingest(spark: SparkSession, corpus: String,
       sigs: String, batch: DataFrame, first: Boolean,
       inBatchPred: org.apache.spark.sql.Column,
@@ -2140,6 +2110,36 @@ object DedupOps {
       |  FROM corpus) t
       |WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
+  /** INCREMENTAL cross-batch dedup — the production shape of MinHash
+    * dedup at 100 TB: band signatures PERSIST as a graft table, and
+    * each incoming batch dedups against them with a band-key join
+    * sized to the BATCH, then positional-deletes its in-batch losers
+    * and appends its own signatures — no corpus rescan, ever. The
+    * corpus here ingests as two id-ordered batches; each ingest:
+    *
+    *   1. appends the batch to the merge-on-read corpus table;
+    *   2. computes the batch's band signatures (native one-pass
+    *      `minhash_sig`, the same bands d36 persists);
+    *   3. marks a doc a DUP iff some band key matches the signature
+    *      table (a strictly earlier doc — cross-batch) or an
+    *      earlier-id doc of the same batch (per-band min-id window);
+    *   4. removes the dups by POSITIONAL delete (kilobyte vector, no
+    *      data-file rewrite — REQUIREd);
+    *   5. appends ALL the batch's signatures (survivors AND dups, so
+    *      the pairwise earlier-id rule stays exactly recomputable).
+    *
+    * Per-increment cost: one batch signature pass + one SHUFFLE-FREE
+    * probe of the signature table + one metadata commit. The batch
+    * side BROADCASTS into the band join, so the corpus-sized sigs
+    * side streams straight out of its scan with zero Exchange
+    * (REQUIREd in-query); the sigs table is written `bucket(16, h)`-
+    * partitioned with (b,h) stats and an h bloom per file, so the
+    * scan itself prunes signature files the batch's key set cannot
+    * match (runtime filtering, k137 machinery) — nothing ever
+    * shuffles the corpus, and the scan narrows with key locality.
+    * The oracle recomputes the SAME pairwise rule from scratch in
+    * DuckDB over the full corpus: incremental and batch answers must
+    * agree exactly. */
   private def d47(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.io.TxnTable

@@ -347,7 +347,8 @@ private[io] class GraftWriteBuilder(table: String, info: LogicalWriteInfo,
   /** SQL `INSERT OVERWRITE t PARTITION (p = 'x')` plans an
     * OverwriteByExpression whose filters land here: a single provable
     * equality/range routes to the scoped-overwrite primitive
-    * (TxnTable.replaceRange — same machinery as the writer option),
+    * (TxnTable.replaceValues / replaceRange — same machinery as the
+    * writer option),
     * AlwaysTrue is the whole-table overwrite, anything else refuses
     * loudly rather than overwriting the wrong rows. */
   override def overwrite(filters: Array[Filter]): WriteBuilder = {
@@ -525,26 +526,32 @@ private[io] class GraftWriteBuilder(table: String, info: LogicalWriteInfo,
         }
         // `.option("replaceWhere", "c = v" | "c BETWEEN a AND b")` with
         // mode("overwrite"): Delta's scoped overwrite — replace exactly
-        // the predicate's rows atomically (TxnTable.replaceRange). Only
-        // the two provable shapes are accepted; anything else refuses
-        // rather than overwriting the wrong rows.
+        // the predicate's rows atomically: an equality through
+        // TxnTable.replaceValues' equality scope (exact `===`, the
+        // semantics of SQL DELETE … WHERE c = v), a closed range through
+        // TxnTable.replaceRange. Only these provable shapes are
+        // accepted; anything else refuses rather than overwriting the
+        // wrong rows.
         if (overwriteFilters.nonEmpty) {
           // SQL INSERT OVERWRITE ... PARTITION / OverwriteByExpression
-          val (c, lo, hi) = overwriteFilters.toSeq match {
-            case Seq(EqualTo(cn, v)) if v != null => (cn, v, v)
+          overwriteFilters.toSeq match {
+            case Seq(EqualTo(c, v)) if v != null =>
+              TxnTable.replaceValues(coerced1, table, c, Seq(v))
             // static partition values arrive null-safe (p <=> 'x')
-            case Seq(org.apache.spark.sql.sources.EqualNullSafe(cn, v))
-                if v != null => (cn, v, v)
+            case Seq(org.apache.spark.sql.sources.EqualNullSafe(c, v))
+                if v != null =>
+              TxnTable.replaceValues(coerced1, table, c, Seq(v))
             case Seq(GreaterThanOrEqual(c1, l), LessThanOrEqual(c2, h))
-                if c1 == c2 && l != null && h != null => (c1, l, h)
+                if c1 == c2 && l != null && h != null =>
+              TxnTable.replaceRange(coerced1, table, c1, l, h)
             case Seq(LessThanOrEqual(c2, h), GreaterThanOrEqual(c1, l))
-                if c1 == c2 && l != null && h != null => (c1, l, h)
+                if c1 == c2 && l != null && h != null =>
+              TxnTable.replaceRange(coerced1, table, c1, l, h)
             case other => throw new UnsupportedOperationException(
               "graft INSERT OVERWRITE supports one equality (static " +
                 "partition) or one closed-range filter, got " +
                 other.mkString(", "))
           }
-          TxnTable.replaceRange(coerced1, table, c, lo, hi)
           return
         }
         // `.option("dynamicPartitionOverwrite", "true")` with
@@ -588,14 +595,15 @@ private[io] class GraftWriteBuilder(table: String, info: LogicalWriteInfo,
               else t.toLongOption.getOrElse(
                 t.toDoubleOption.getOrElse(t): Any)
             }
-            val (c, lo, hi) = pred match {
-              case Eq(cn, value) => (cn, v(value), v(value))
-              case Btw(cn, l, h) => (cn, v(l), v(h))
+            pred match {
+              case Eq(c, value) =>
+                TxnTable.replaceValues(coerced1, table, c, Seq(v(value)))
+              case Btw(c, l, h) =>
+                TxnTable.replaceRange(coerced1, table, c, v(l), v(h))
               case other => throw new IllegalArgumentException(
                 s"replaceWhere supports `col = v` and `col BETWEEN a AND " +
                   s"b`, got: $other")
             }
-            TxnTable.replaceRange(coerced1, table, c, lo, hi)
           case None => (overwrite, txn) match {
             case (false, None) =>
               TxnTable.commitAppend(coerced1, table, statsCols, bloomCols,
@@ -968,21 +976,12 @@ private[io] class GraftScanBuilder(
       case Some((schema, rows)) => return new GraftAggScan(table, version, schema, rows)
       case None => ()
     }
-    // compositional pruning: a file survives iff EVERY pushed filter
-    // (top-level conjuncts) may match it — the recursion inside
-    // StatsPruner.mayMatch handles And/Or/null/prefix/range leaves
-    // uniformly. Equality constraints additionally probe bloom
-    // sidecars — the pruning min/max can't do on a hash-partitioned
-    // point lookup.
-    val eqPruned = pushed.flatMap(pruner.eqConstraints).distinct
-      .foldLeft(statsChosen) { case (fs, (c, vs)) =>
-        TxnTable.pruneByBloom(spark, table, version, c, vs, fs)
-      }
-    // BUCKET pruning: `WHERE user_id = x` on a bucketed 100 TB table
-    // reads 1/n of the files before any bloom probe (see
-    // TxnTable.pruneByBucket).
-    val chosen = TxnTable.pruneByBucket(eqPruned, meta.partCols,
-      dataSchema, pushed.toSeq.flatMap(pruner.eqConstraints))
+    // the one file-skipping decision (TxnTable.chooseFiles): stats per
+    // pushed filter, then bucket ids and bloom sidecars of its equality
+    // constraints — what min/max cannot prune on a hash-partitioned
+    // point lookup
+    val chosen = TxnTable.chooseFiles(spark, table, version, pushed.toSeq,
+      statsChosen)
     // field-id tables resolve read columns BY ID — make sure the
     // session-wide reader flag is on before any task plans
     if (FieldIds.hasIds(dataSchema)) FieldIds.enableRead(spark)
@@ -1220,8 +1219,8 @@ private[io] class GraftScan(
   // re-pruning the chosen files against manifest stats + blooms means a
   // star join reads only the fact files the dim filter selects — at
   // 100 TB the difference between scanning the year and scanning the
-  // week the dimension matched. Same machinery as planning-time
-  // skipping (StatsPruner + bloom sidecars), just fed later.
+  // week the dimension matched. The same decision as planning-time
+  // skipping (TxnTable.chooseFiles), just fed later.
   @volatile private var runtimeFiles: Seq[String] = chosenFiles
   private def currentFiles: Seq[String] = runtimeFiles
   private lazy val rtPruner = new StatsPruner(dataSchema, fileStats)
@@ -1240,17 +1239,10 @@ private[io] class GraftScan(
 
   override def filter(filters: Array[Filter]): Unit = {
     val fs = filters.filter(rtPruner.prunable)
-    if (fs.isEmpty) return
-    val statsPruned =
-      runtimeFiles.filter(f => fs.forall(rtPruner.mayMatch(f, _)))
-    val eqCons = fs.toSeq.flatMap(rtPruner.eqConstraints)
-    val bloomPruned = eqCons.distinct
-      .foldLeft(statsPruned) { case (acc, (c, vs)) =>
-        TxnTable.pruneByBloom(spark, table, version, c, vs, acc)
-      }
     // a runtime In-list on a bucketed join key keeps only its buckets
-    runtimeFiles =
-      TxnTable.pruneByBucket(bloomPruned, partCols, dataSchema, eqCons)
+    if (fs.nonEmpty)
+      runtimeFiles = TxnTable.chooseFiles(spark, table, version, fs.toSeq,
+        runtimeFiles)
   }
 
   /** KeyGroupedPartitioning when the builder proved per-file partition

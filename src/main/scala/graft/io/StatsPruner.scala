@@ -6,9 +6,15 @@ import org.apache.spark.sql.types.StructType
 import TxnTable.{Bound, FileStat}
 
 /** Manifest-stats file pruning for a pushed-filter set — the ONE
-  * implementation both the batch scan builder (GraftScanBuilder) and
-  * the streaming source (GraftMicroBatchStream) consult, so a filtered
-  * stream skips exactly the files a filtered batch scan would.
+  * implementation every file-skipping decision consults: the batch scan
+  * builder (GraftScanBuilder) and its runtime filters, the streaming
+  * source (GraftMicroBatchStream), and every TxnTable path that chooses
+  * or proves files — point and range reads, the key-scoped deletes and
+  * replaces, OPTIMIZE … WHERE, and the V1 read's keep-callback — the
+  * last ones through `TxnTable.chooseFiles`, which adds bucket and
+  * bloom pruning on `eqConstraints`. A filtered stream, a DSv2 scan and
+  * a `readEquals` therefore skip exactly the same files, and a delete
+  * drops a file unread only on `mustMatch`'s proof.
   *
   * Three verdicts per (file, filter), all decided from the manifest:
   *   - `mayMatch`   false only on PROOF the file holds no matching row
@@ -95,6 +101,23 @@ private[io] final class StatsPruner(
         case _ => Nil
       }
     case _ => Nil
+  }
+
+  /** The one-column envelope `f` implies on `c`: a point for EqualTo,
+    * the [min, max] hull of the points for In, the meet of both sides
+    * for a conjunction (kinds that disagree meet in "conflict", which
+    * refutes nothing). None when a value resists normalization. The
+    * bound a key-scoped rewrite's append-rebase proof refutes. */
+  def envelope(c: String, f: Filter): Option[Bound] = f match {
+    case And(a, b) =>
+      def meet(x: String, y: String, pick: (String, String) => String) =
+        if (x == null) y else if (y == null) x else pick(x, y)
+      for (x <- envelope(c, a); y <- envelope(c, b)) yield
+        if (x.kind != y.kind) Bound("conflict")
+        else Bound(x.kind, lo = math.max(x.lo, y.lo), hi = math.min(x.hi, y.hi),
+          loS = meet(x.loS, y.loS, TxnTable.Utf8Ordering.max),
+          hiS = meet(x.hiS, y.hiS, TxnTable.Utf8Ordering.min))
+    case leaf => bounds(leaf).get(c)
   }
 
   /** Can this filter tree contribute ANY file pruning? Mirrors the

@@ -3,6 +3,7 @@ package graft.io
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, concat, count, date_format, hash, input_file_name, lit, max, min, not, pmod, raise_error, trunc, when}
+import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThanOrEqual, In, LessThanOrEqual}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Minimal TRANSACTIONAL parquet table: per-version FILE MANIFESTS whose
@@ -431,6 +432,20 @@ object TxnTable {
     buf.sorted.toSeq
   }
 
+  /** Binary (UTF-8 byte) string ordering — the order Spark's min/max
+    * compute string stats in (UTF8String.compareTo). JVM String
+    * comparison orders by UTF-16 code units, which DISAGREES for
+    * supplementary-plane text vs U+E000..U+FFFF (surrogates sort low in
+    * UTF-16, high in UTF-8) — a stat comparison in the wrong order
+    * could prune a file that holds matching rows, or fold a MIN/MAX
+    * that differs from the scan it claims to equal. Every string
+    * stat/bound comparison goes through THIS ordering. */
+  private[io] val Utf8Ordering: Ordering[String] =
+    (a: String, b: String) =>
+      org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+  private[io] def strLt(a: String, b: String): Boolean = Utf8Ordering.lt(a, b)
+
   /** Per-file min/max of one designated stats column — the
     * data-skipping metadata (Delta/Iceberg file stats): collected once
     * at commit over the NEW files only, carried forward with the file.
@@ -452,20 +467,6 @@ object TxnTable {
     * so it is only droppable without being read when `nulls == 0`.
     * `-1` = unknown (pre-nulls manifest): never trust it for a
     * destructive metadata-only action. */
-  /** Binary (UTF-8 byte) string ordering — the order Spark's min/max
-    * compute string stats in (UTF8String.compareTo). JVM String
-    * comparison orders by UTF-16 code units, which DISAGREES for
-    * supplementary-plane text vs U+E000..U+FFFF (surrogates sort low in
-    * UTF-16, high in UTF-8) — a stat comparison in the wrong order
-    * could prune a file that holds matching rows, or fold a MIN/MAX
-    * that differs from the scan it claims to equal. Every string
-    * stat/bound comparison goes through THIS ordering. */
-  private[io] val Utf8Ordering: Ordering[String] =
-    (a: String, b: String) =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-  private[io] def strLt(a: String, b: String): Boolean = Utf8Ordering.lt(a, b)
-
   final case class FileStat(col: String, kind: String,
                             minV: String, maxV: String, nulls: Long = -1L) {
     /** Numeric accessors (valid when kind == "num"). */
@@ -482,14 +483,6 @@ object TxnTable {
       case _ => false // kind mismatch: cannot prove anything
     }
     def mayOverlap(b: Bound): Boolean = !disjointFrom(b)
-    /** Every non-null row PROVABLY inside the bound. */
-    def containedIn(b: Bound): Boolean = (kind, b.kind) match {
-      case ("num", "num") => min >= b.lo && max <= b.hi
-      case ("str", "str") =>
-        (b.loS == null || !strLt(minV, b.loS)) &&
-          (b.hiS == null || !strLt(b.hiS, maxV))
-      case _ => false
-    }
   }
 
   /** A normalized query range: numeric [lo, hi] or lexicographic
@@ -502,8 +495,6 @@ object TxnTable {
 
   import org.apache.spark.sql.types._
 
-  /** Stats representation a column type gets, if any: unsupported types
-    * simply collect no stats (conservative scans, never an error). */
   /** Partition entries are identity column names (`c`) or a time
     * transform — `days(c)`, `hours(c)`, `months(c)`, `years(c)` (the
     * Delta/Iceberg temporal layouts; days is the events/streaming
@@ -659,6 +650,8 @@ object TxnTable {
     spark.conf.getOption("graft.stats.maxStringLen")
       .map(_.toInt).getOrElse(256)
 
+  /** Stats representation a column type gets, if any: unsupported types
+    * simply collect no stats (conservative scans, never an error). */
   private[io] def statKind(dt: DataType): Option[String] = dt match {
     case StringType => Some("str")
     case DateType | TimestampType | TimestampNTZType => Some("num")
@@ -735,21 +728,16 @@ object TxnTable {
       }
     } catch { case _: IllegalArgumentException => None }
 
-  private[graft] def boundRange(lo: Any, hi: Any, dt: DataType): Bound =
-    (boundValue(lo, dt), boundValue(hi, dt)) match {
-      case (Right(l), Right(h)) => Bound("num", lo = l, hi = h)
-      case (Left(l), Left(h)) => Bound("str", loS = l, hiS = h)
-      case _ => throw new IllegalArgumentException(
-        s"mixed bound kinds for [$lo, $hi] against $dt")
-    }
-
-  /** Row-level range predicate matching `boundRange`'s semantics. */
+  /** Row-level range predicate on the NORMALIZED value — the semantics
+    * the manifest stats are computed in (strings lexicographic, numbers
+    * and temporals as doubles); refuses bounds of mixed kinds. */
   private def rangeFilter(c: String, dt: DataType, lo: Any, hi: Any)
       : org.apache.spark.sql.Column =
     (boundValue(lo, dt), boundValue(hi, dt)) match {
       case (Left(l), Left(h)) => col(c).between(lit(l), lit(h))
       case (Right(l), Right(h)) => normExpr(c, dt).between(lit(l), lit(h))
-      case _ => throw new IllegalArgumentException("mixed bound kinds")
+      case _ => throw new IllegalArgumentException(
+        s"mixed bound kinds for [$lo, $hi] against $dt")
     }
 
   /** Manifest record of one file's bloom sidecar: the column it covers
@@ -3274,33 +3262,86 @@ object TxnTable {
     * forms) — the retention scan on a date column that numeric-only
     * stats could not serve. */
   def readRangeOn(spark: SparkSession, table: String, column: String,
-                  lo: Any, hi: Any): (DataFrame, Int, Int) = {
+                  lo: Any, hi: Any): (DataFrame, Int, Int) =
+    readScope(spark, table, Scope.range(column, lo, hi))
+
+  /** POINT-LOOKUP read: rows with `column = value`, planned over only
+    * the files that stats, bucket ids AND bloom sidecars cannot rule
+    * out. On a hash-partitioned high-cardinality key, min/max stats
+    * prune nothing (every file spans the key range) — the bloom is what
+    * turns a 100 TB point lookup into a handful of file reads.
+    * Returns (rows, filesScanned, filesTotal). */
+  def readEquals(spark: SparkSession, table: String, column: String,
+                 value: Any): (DataFrame, Int, Int) = {
+    require(value != null, "readEquals probes a value; use isNull filters for NULLs")
+    readScope(spark, table, Scope.equal(column, value))
+  }
+
+  /** The latest snapshot's rows in `scope`, planned over the files
+    * [[chooseFiles]] keeps: (rows, filesScanned, filesTotal). */
+  private def readScope(spark: SparkSession, table: String,
+                        scope: Scope): (DataFrame, Int, Int) = {
     val st = latestState(spark, table).getOrElse(
       throw new IllegalStateException(s"no committed version in $table"))
-    val schema = st.schema.getOrElse(
-      throw new IllegalStateException(s"$table predates the schema log"))
-    val dt = schema(column).dataType
-    val b = boundRange(lo, hi, dt)
-    val chosen = st.files.filter(f => st.mayOverlap(f, column, b))
+    val schema = st.schemaOf(table)
+    val inScope = scope.rows(schema(scope.column).dataType)
+    val chosen = chooseFiles(spark, table, st, Seq(scope.filter), st.files)
     val rows =
       if (chosen.isEmpty)
         spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
       else planFiles(spark, table, schema, chosen, st.pathpart, st.aliases, retired = st.retired, addv = st.addv)
-        .filter(rangeFilter(column, dt, lo, hi))
+        .filter(inScope)
     (rows, chosen.size, st.files.size)
   }
 
-  private def pointBound(v: Any, dt: DataType): Bound = boundValue(v, dt) match {
-    case Left(s) => Bound("str", loS = s, hiS = s)
-    case Right(d) => Bound("num", lo = d, hi = d)
-  }
+  /** THE file-skipping decision of every TxnTable and DSv2 path that
+    * chooses files for filters — readEquals/readRangeOn, the key-scoped
+    * rewrite, the V1 read's keep-callback, and the DSv2 scan's planning
+    * and runtime filters: the files of `files` the manifest cannot
+    * prove hold no row matching every filter. Three proofs, cheapest
+    * first: StatsPruner.mayMatch per filter (min/max, null counts,
+    * prefixes); the bucket ids of the filters' equality constraints
+    * (min/max span every bucket of a hash-partitioned key); then the
+    * bloom sidecars of those constraints — one small GET per file the
+    * first two kept. */
+  private[io] def chooseFiles(spark: SparkSession, table: String, st: State,
+                              filters: Seq[Filter],
+                              files: Seq[String]): Seq[String] =
+    st.schema match {
+      case Some(schema) if files.nonEmpty && filters.nonEmpty =>
+        val pruner = new StatsPruner(schema, st.stats)
+        val eqCons = filters.flatMap(pruner.eqConstraints).distinct
+        val kept = pruneByBucket(
+          files.filter(f => filters.forall(pruner.mayMatch(f, _))),
+          st.partCols, schema, eqCons)
+        // a NULL or uncoercible constant defeats its constraint's probe
+        val probes = eqCons.flatMap { case (c, vs) =>
+          val hashes = typeAt(schema, c).toSeq.flatMap(dt =>
+            vs.filter(_ != null).flatMap(hashForColumn(_, dt)))
+          if (hashes.size == vs.size) Some(c -> hashes) else None
+        }
+        if (probes.isEmpty) kept
+        else {
+          val ctx = fc(spark)
+          kept.filter(f => probes.forall { case (c, hs) =>
+            bloomKeep(ctx, table, st, c, hs)(f) })
+        }
+      case _ => files
+    }
+
+  /** [[chooseFiles]] against snapshot `version` — the DSv2 scan's
+    * entry (its manifest read is the builder's, cached). */
+  private[io] def chooseFiles(spark: SparkSession, table: String,
+                              version: Long, filters: Seq[Filter],
+                              files: Seq[String]): Seq[String] =
+    if (files.isEmpty || filters.isEmpty) files
+    else chooseFiles(spark, table, stateOf(spark, table, version), filters, files)
 
   /** Does `f` possibly contain a row whose `column` hashes to one of
     * `hashes`? True unless the file HAS a bloom for the column and
     * every hash probes negative — missing/lost sidecars degrade to a
-    * conservative scan, never a wrong prune. One small sidecar GET per
-    * probed file, and only for files that survived stats pruning. */
+    * conservative scan, never a wrong prune. */
   private def bloomKeep(ctx: FileContext, table: String, st: State,
                         column: String, hashes: Seq[Long])(f: String): Boolean =
     st.bloom(f, column) match {
@@ -3317,152 +3358,19 @@ object TxnTable {
         } catch { case scala.util.control.NonFatal(_) => true }
     }
 
-  /** POINT-LOOKUP read: rows with `column = value`, planned over only
-    * the files that stats AND bloom sidecars cannot rule out. On a
-    * hash-partitioned high-cardinality key, min/max stats prune
-    * nothing (every file spans the key range) — the bloom is what
-    * turns a 100 TB point lookup into a handful of file reads.
-    * Returns (rows, filesScanned, filesTotal). */
-  def readEquals(spark: SparkSession, table: String, column: String,
-                 value: Any): (DataFrame, Int, Int) = {
-    require(value != null, "readEquals probes a value; use isNull filters for NULLs")
-    val st = latestState(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed version in $table"))
-    val schema = st.schema.getOrElse(
-      throw new IllegalStateException(s"$table predates the schema log"))
-    val dt = schema(column).dataType
-    val b = pointBound(value, dt)
-    val statsPass = st.files.filter(f => st.mayOverlap(f, column, b))
-    val bucketPass = pruneByBucket(statsPass, st.partCols, schema,
-      Seq(column -> Seq(value)))
-    val chosen = hashForColumn(value, dt) match {
-      case Some(h) => bucketPass.filter(bloomKeep(fc(spark), table, st, column, Seq(h)))
-      case None => bucketPass
-    }
-    val rows =
-      if (chosen.isEmpty)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-      else planFiles(spark, table, schema, chosen, st.pathpart, st.aliases, retired = st.retired, addv = st.addv)
-        .filter(col(column) === lit(value))
-    (rows, chosen.size, st.files.size)
-  }
-
   /** POINT DELETE — the GDPR erasure-by-key primitive: remove every row
-    * with `column = value`, rewriting ONLY the files whose stats and
-    * bloom cannot prove the key absent; every other file carries
+    * with `column = value`, rewriting ONLY the files whose stats, bucket
+    * and bloom cannot prove the key absent; every other file carries
     * forward by reference. NULL-keyed rows are retained (SQL DELETE
-    * semantics — the predicate is NULL, not true — same coalesce guard
-    * as deleteRange). A file provably all-equal to the key with no
-    * NULLs is dropped without being read. Same optimistic pinned-CAS
-    * commit as merge/deleteRange. */
+    * semantics — the predicate is NULL, not true). A file provably
+    * all-equal to the key with no NULLs is dropped without being read.
+    * The key-scoped rewrite [[scopedOverwrite]] with nothing landing. */
   def deleteEquals(spark: SparkSession, table: String, column: String,
                    value: Any): Long = {
     require(value != null, "deleteEquals removes a key; NULLs are retained by design")
-    val ctx = fc(spark)
-    Log.commit(spark, table, "delete") { st0 =>
-      val st = st0.present(table)
-      require(st.dels.isEmpty,
-        s"$table carries merge-on-read delete files; materialize them " +
-          "first (compact / SQL OPTIMIZE) or delete through SQL DELETE, " +
-          "which composes with them")
-      val schema = st.schemaOf(table)
-      val dt = schema(column).dataType
-      val b = pointBound(value, dt)
-      val statsPass = st.files.filter(f => st.mayOverlap(f, column, b))
-      // bucketed key: min/max stats span every bucket, but the value's
-      // own bucket is computable — the rewrite set shrinks to 1/n of
-      // the files before any bloom probe
-      val bucketPass = pruneByBucket(statsPass, st.partCols, schema,
-        Seq(column -> Seq(value)))
-      val candidates = hashForColumn(value, dt) match {
-        case Some(h) => bucketPass.filter(bloomKeep(ctx, table, st, column, Seq(h)))
-        case None => bucketPass
-      }
-      // metadata-only drop: min == max == value and known-zero NULLs
-      val covered = candidates.filter(f =>
-        st.stat(f, column).exists(s => s.containedIn(b) && s.nulls == 0L))
-      val boundary = candidates.filterNot(covered.toSet)
-      val trackedCols =
-        (st.stats.values.flatten.map(_.col).toSet + column).toSeq.sorted
-      val trackedBlooms = st.bloomCols.toSeq.sorted
-      val (newFiles, newStats, newBlooms, newRows, dataDir, cdcAdd) =
-        if (boundary.isEmpty)
-          (Nil, Map.empty[String, Seq[FileStat]],
-            Map.empty[String, Seq[BloomMeta]], Map.empty[String, Long],
-            None, Nil)
-        else {
-          val matchExpr = coalesce(col(column) === lit(value), lit(false))
-          val complement = planFiles(spark, table, schema, boundary, st.pathpart, st.aliases, retired = st.retired, addv = st.addv)
-            .filter(not(matchExpr))
-          val (d, nf, ns, nb, nr) =
-            writeData(complement, table, trackedCols, trackedBlooms,
-              st.partCols, declared = st.schema)
-          // CDF: the boundary files' DELETED rows become eager change
-          // files; covered files go as lazy `#cdcdel=` lines below
-          val cdc =
-            if (!st.cdf) Nil
-            else writeChangeData(
-              planFiles(spark, table, schema, boundary, st.pathpart, st.aliases, retired = st.retired, addv = st.addv)
-                .filter(matchExpr)
-                .withColumn(ChangeTypeCol, lit("delete")),
-              table, d)
-          (nf, ns, nb, nr, Some(d), cdc)
-        }
-      rewritePublish("delete", st, schema, (covered ++ boundary).sorted,
-        dataDir.toSeq, newFiles, newStats, newBlooms, newRows,
-        Some(column -> b), cdcAdd, if (st.cdf) covered.sorted else Nil)
-    }
+    scopedOverwrite(spark, table, Scope.equal(column, value), None)
   }
 
-  /** Bloom-prune `files` for an equality/IN constraint: keep a file iff
-    * ANY of `values` might be present (or the file has no bloom for the
-    * column). The DSv2 scan builder calls this after stats pruning so
-    * `spark.read.format("graft").load(t).filter($"k" === x)` gets point
-    * skipping with no blessed API. */
-  def pruneByBloom(spark: SparkSession, table: String, version: Long,
-                   column: String, values: Seq[Any],
-                   files: Seq[String]): Seq[String] = {
-    val st = stateOf(spark, table, version)
-    val dt = st.schema.flatMap(typeAt(_, column))
-      .getOrElse(return files)
-    val hashes = values.filter(_ != null).flatMap(v => hashForColumn(v, dt))
-    // a NULL or uncoercible constant defeats the prune (conservative)
-    if (hashes.size != values.size) files
-    else files.filter(bloomKeep(fc(spark), table, st, column, hashes))
-  }
-
-  /** FILE-SURGICAL UPSERT (MERGE INTO): rows of `updates` replace
-    * same-key rows; unmatched keys insert. Delta's two-phase shape:
-    *
-    *   phase 1  find the files that actually CONTAIN an update key —
-    *            one job gathers the update keys (non-null count, typed
-    *            min/max, and the distinct keys when at most
-    *            `KeySet.probeKeyLimit` of them exist and their type's
-    *            `IN` equality is the join's), once per merge, before
-    *            the commit loop; stats pre-prune the candidate files
-    *            (min/max vs the keys' bounds, which bound MATCHES;
-    *            inserts outside every file's range can't match
-    *            anything), then a key-column-only scan of the
-    *            candidates yields the exact touched-file set: filtered
-    *            by a static `IN` of the gathered keys and collected in
-    *            the same job (literal branch), or semi-joined with the
-    *            update keys (join branch: many keys, or float/double/
-    *            binary/complex keys, whose NaN and -0.0 compare
-    *            differently under `IN`)
-    *   phase 2  rewrite ONLY those files (the touched rows minus the
-    *            update keys — a `NOT IN` filter or an anti-join, by
-    *            branch — union the updates); every other file carries
-    *            forward BY REFERENCE
-    *
-    * A small literal-branch merge is three Spark jobs: gather, probe,
-    * write (CDF adds its change-file write).
-    *
-    * At 100 TB a merge touching 0.1% of the key space rewrites ~0.1%
-    * of the files and phase 1 reads one column of a pruned candidate
-    * subset. Optimistic commit: the CAS is pinned to the snapshot the
-    * merge was computed against; losing it recomputes against the new
-    * snapshot (merge correctness, unlike append, depends on the base). */
   /** Translate ABSOLUTE scan-emitted paths (`input_file_name()` /
     * `_metadata.file_path`) back to snapshot-relative files by
     * QUALIFIED URI PATH — never by basename: a partitioned write task
@@ -3499,6 +3407,37 @@ object TxnTable {
     }
   }
 
+  /** FILE-SURGICAL UPSERT (MERGE INTO): rows of `updates` replace
+    * same-key rows; unmatched keys insert. Delta's two-phase shape:
+    *
+    *   phase 1  find the files that actually CONTAIN an update key —
+    *            one job gathers the update keys (non-null count, typed
+    *            min/max, and the distinct keys when at most
+    *            `KeySet.probeKeyLimit` of them exist and their type's
+    *            `IN` equality is the join's), once per merge, before
+    *            the commit loop; stats pre-prune the candidate files
+    *            (min/max vs the keys' bounds, which bound MATCHES;
+    *            inserts outside every file's range can't match
+    *            anything), then a key-column-only scan of the
+    *            candidates yields the exact touched-file set: filtered
+    *            by a static `IN` of the gathered keys and collected in
+    *            the same job (literal branch), or semi-joined with the
+    *            update keys (join branch: many keys, or float/double/
+    *            binary/complex keys, whose NaN and -0.0 compare
+    *            differently under `IN`)
+    *   phase 2  rewrite ONLY those files (the touched rows minus the
+    *            update keys — a `NOT IN` filter or an anti-join, by
+    *            branch — union the updates); every other file carries
+    *            forward BY REFERENCE
+    *
+    * A small literal-branch merge is three Spark jobs: gather, probe,
+    * write (CDF adds its change-file write).
+    *
+    * At 100 TB a merge touching 0.1% of the key space rewrites ~0.1%
+    * of the files and phase 1 reads one column of a pruned candidate
+    * subset. Optimistic commit: the CAS is pinned to the snapshot the
+    * merge was computed against; losing it recomputes against the new
+    * snapshot (merge correctness, unlike append, depends on the base). */
   def merge(updates0: DataFrame, table: String, keyCol: String): Long = {
     val spark = updates0.sparkSession
     // GENERATED ALWAYS AS IDENTITY: a merge MAY run — matched rows
@@ -3771,20 +3710,6 @@ object TxnTable {
       })
   }
 
-  /** COPY-ON-WRITE COMMIT — the generic file-surgical primitive SQL
-    * UPDATE and MERGE INTO rewrite onto. Each attempt hands `compute`
-    * the pinned snapshot (as a DSv2 frame, so its own filters get
-    * manifest-stats + bloom file skipping) and the pinned version;
-    * `compute` returns the files to REPLACE (absolute or table-relative
-    * — matched back to the snapshot's file list) and the replacement
-    * rows (which may include pure inserts; `removed = Nil` makes the
-    * commit append-only), or None for a provable no-op. Untouched files
-    * carry forward BY REFERENCE with their stats/blooms/row counts; the
-    * replacement re-collects skipping metadata for every column the
-    * table tracks. Optimistic pinned CAS, same as merge/deleteRange:
-    * losing the race discards the written data dir and recomputes
-    * against the new snapshot — a row-level rewrite's correctness
-    * depends on its base. */
   /** What a [[rewriteCommit]] `compute` hands back:
     *   - `removed`: snapshot files to replace (absolute or relative)
     *   - `replacement`: their surviving/updated rows (plus any pure
@@ -3819,6 +3744,20 @@ object TxnTable {
       identityHandled: Boolean = false,
       identityHwm: Option[Long] = None)
 
+  /** COPY-ON-WRITE COMMIT — the generic file-surgical primitive SQL
+    * UPDATE and MERGE INTO rewrite onto. Each attempt hands `compute`
+    * the pinned snapshot (as a DSv2 frame, so its own filters get
+    * manifest-stats + bloom file skipping) and the pinned version;
+    * `compute` returns the files to REPLACE (absolute or table-relative
+    * — matched back to the snapshot's file list) and the replacement
+    * rows (which may include pure inserts; `removed = Nil` makes the
+    * commit append-only), or None for a provable no-op. Untouched files
+    * carry forward BY REFERENCE with their stats/blooms/row counts; the
+    * replacement re-collects skipping metadata for every column the
+    * table tracks. Optimistic pinned CAS, same as merge/deleteRange:
+    * losing the race discards the written data dir and recomputes
+    * against the new snapshot — a row-level rewrite's correctness
+    * depends on its base. */
   def rewriteCommit(spark: SparkSession, table: String, op: String,
                     compute: (DataFrame, Long) => Option[Rewrite]): Long =
     Log.commit(spark, table, op) { st0 =>
@@ -4297,12 +4236,6 @@ object TxnTable {
         Some(appended), Some(changes)))
     })
 
-  /** The distinct data files a positional sidecar names, when not
-    * more than `graft.txn.posNamedLimit` of them (default 1024) —
-    * None past the limit, so a corpus-wide vector (in-place dedup
-    * touching most files) records nothing instead of bloating the
-    * manifest line; readers then fall back to version-gate-only
-    * subtraction, which is always sound. */
   /** Row count AND named-file set of a positional sidecar in ONE Spark
     * job (the commit path previously paid two — a count() plus a
     * distinct-collect of the file names — per MoR delete/replace
@@ -4742,6 +4675,24 @@ object TxnTable {
     v
   }
 
+  /** keep-callback for GraftBridge.statsPrunedParquetFrame: pushed
+    * data filters → (absolute path → may match), judged by
+    * [[chooseFiles]] over the snapshot's files — the V1 read path's
+    * manifest skipping. Absolute↔relative translation uses the same
+    * makeQualified rendering as [[relToAbs]]; a path the map doesn't
+    * know is NEVER pruned (defensive). */
+  private def statsKeep(spark: SparkSession, table: String, st: State,
+                        rel: Seq[String]): Seq[Filter] => (String => Boolean) = {
+    val fsys = new Path(table)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val byAbs: Map[String, String] = rel.map(r =>
+      fsys.makeQualified(new Path(s"$table/$r")).toString -> r).toMap
+    filters => {
+      val kept = chooseFiles(spark, table, st, filters, rel).toSet
+      abs => byAbs.get(abs).forall(kept)
+    }
+  }
+
   /** Plan ONE logical scan over table-relative `rel` data files with
     * the manifest `schema`. On a converted table (`#pathpart`) files
     * adopted in place (never under `w=`) read with basePath=<table> so
@@ -4750,39 +4701,6 @@ object TxnTable {
     * column in the file bytes and read plain. Both legs surface exactly
     * `schema`, so the union is loss-free; on non-converted tables this
     * is byte-identical to the single-scan plan it replaced. */
-  /** keep-callback for GraftBridge.statsPrunedParquetFrame: pushed
-    * data filters → (absolute path → may match), judged by the
-    * snapshot's skipping stats and bloom sidecars — the V1 read path's
-    * manifest skipping. Absolute↔relative translation uses the same
-    * makeQualified rendering as [[relToAbs]]; a path the map doesn't
-    * know is NEVER pruned (defensive). */
-  private def statsKeep(spark: SparkSession, table: String, st: State,
-                        rel: Seq[String])
-      : Seq[org.apache.spark.sql.sources.Filter] => (String => Boolean) = {
-    val schema = st.schema.get
-    val pruner = new StatsPruner(schema, st.stats)
-    val ctx = fc(spark)
-    val fsys = new Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val byAbs: Map[String, String] = rel.map(r =>
-      fsys.makeQualified(new Path(s"$table/$r")).toString -> r).toMap
-    filters => {
-      val prunable = filters.filter(pruner.prunable)
-      val eqCons = filters.flatMap(pruner.eqConstraints).distinct
-      abs => byAbs.get(abs) match {
-        case None => true
-        case Some(r) =>
-          prunable.forall(pruner.mayMatch(r, _)) &&
-            eqCons.forall { case (c, vs) =>
-              val hashes = typeAt(schema, c).toSeq
-                .flatMap(dt =>
-                  vs.filter(_ != null).flatMap(v => hashForColumn(v, dt)))
-              hashes.size != vs.size || bloomKeep(ctx, table, st, c, hashes)(r)
-            }
-      }
-    }
-  }
-
   private def planFiles(spark: SparkSession, table: String,
                         schema: org.apache.spark.sql.types.StructType,
                         rel: Seq[String], pathpart: Boolean,
@@ -5056,19 +4974,11 @@ object TxnTable {
   }
 
   /** RANGE DELETE: remove every row with the stats column in [lo, hi] —
-    * the GDPR / retention primitive. Three file classes, decided from
-    * manifest stats alone:
-    *
-    *   fully covered   min >= lo && max <= hi → DROPPED from the new
-    *                   manifest without ever being read (metadata-only
-    *                   delete — at 100 TB, retention usually deletes
-    *                   whole time-ranges and this is zero data I/O)
-    *   disjoint        carried forward by reference
-    *   boundary        rewritten with the complement filter
-    *
-    * Same optimistic pinned-CAS commit as merge. Physical bytes of
-    * dropped/rewritten files are reclaimed by `vacuum`, as for any
-    * superseded snapshot. */
+    * the GDPR / retention primitive: [[scopedOverwrite]] with nothing
+    * landing, so files whose stats prove them wholly in range drop
+    * without being read, stats-disjoint files carry by reference, and
+    * boundary files are rewritten with the complement. Rows match on
+    * the normalized value ([[rangeFilter]]). */
   def deleteRange(spark: SparkSession, table: String, column: String,
                   lo: Double, hi: Double): Long =
     deleteRangeOn(spark, table, column, lo, hi)
@@ -5078,61 +4988,7 @@ object TxnTable {
     * values as `readRangeOn`. */
   def deleteRangeOn(spark: SparkSession, table: String, column: String,
                     lo: Any, hi: Any): Long =
-    Log.commit(spark, table, "delete") { st0 =>
-      val st = st0.present(table)
-      require(st.dels.isEmpty,
-        s"$table carries merge-on-read delete files; materialize them " +
-          "first (compact / SQL OPTIMIZE) or delete through SQL DELETE, " +
-          "which composes with them")
-      val schema = st.schemaOf(table)
-      val dt = schema(column).dataType
-      val b = boundRange(lo, hi, dt)
-      // metadata-only drop requires PROOF every row is in-range: min/max
-      // bound only the normalizable non-null rows, so a file is
-      // droppable without being read only when its recorded null count
-      // is known-zero (nulls == -1 means a pre-nulls manifest — rewrite)
-      val covered = st.files.filter(f =>
-        st.stat(f, column).exists(s => s.containedIn(b) && s.nulls == 0L))
-      val disjoint = st.files.filter(f =>
-        st.stat(f, column).exists(_.disjointFrom(b)))
-      val boundary = st.files.filterNot((covered ++ disjoint).toSet)
-      val trackedCols =
-        (st.stats.values.flatten.map(_.col).toSet + column).toSeq.sorted
-      val trackedBlooms = st.bloomCols.toSeq.sorted
-      val (newFiles, newStats, newBlooms, newRows, dataDir, cdcAdd) =
-        if (boundary.isEmpty)
-          (Nil, Map.empty[String, Seq[FileStat]],
-            Map.empty[String, Seq[BloomMeta]], Map.empty[String, Long],
-            None, Nil)
-        else {
-          // three-valued logic trap: for a NULL (or uncastable) key the
-          // bare `!between` predicate is NULL, which filter treats as
-          // drop — rows OUTSIDE the delete range would silently vanish.
-          // SQL DELETE retains NULL-keyed rows, so default the match to
-          // false before negating.
-          val matchExpr = coalesce(rangeFilter(column, dt, lo, hi), lit(false))
-          val complement = planFiles(spark, table, schema, boundary, st.pathpart, st.aliases, retired = st.retired, addv = st.addv)
-            .filter(not(matchExpr))
-          val (d, nf, ns, nb, nr) =
-            writeData(complement, table, trackedCols, trackedBlooms,
-              st.partCols, declared = st.schema)
-          // CDF: eager change files for the boundary files' deleted rows;
-          // fully-covered files stay METADATA-ONLY deletes — they go as
-          // lazy `#cdcdel=` lines (the reader tags the superseded file's
-          // rows), so CDF costs the retention sweep zero extra data I/O
-          val cdc =
-            if (!st.cdf) Nil
-            else writeChangeData(
-              planFiles(spark, table, schema, boundary, st.pathpart, st.aliases, retired = st.retired, addv = st.addv)
-                .filter(matchExpr)
-                .withColumn(ChangeTypeCol, lit("delete")),
-              table, d)
-          (nf, ns, nb, nr, Some(d), cdc)
-        }
-      rewritePublish("delete", st, schema, (covered ++ boundary).sorted,
-        dataDir.toSeq, newFiles, newStats, newBlooms, newRows,
-        Some(column -> b), cdcAdd, if (st.cdf) covered.sorted else Nil)
-    }
+    scopedOverwrite(spark, table, Scope.range(column, lo, hi), None)
 
   /** Delta's `replaceWhere` — the daily-re-ingest primitive: atomically
     * replace exactly the rows with `column` in [lo, hi] by `df`, in ONE
@@ -5149,12 +5005,7 @@ object TxnTable {
     * append-rebase against stats-disjoint concurrent commits. */
   def replaceRange(df: DataFrame, table: String, column: String,
                    lo: Any, hi: Any): Long =
-    scopedOverwrite(df, table, column,
-      predicate = dt => coalesce(rangeFilter(column, dt, lo, hi), lit(false)),
-      contractMsg = s"$column in [$lo, $hi]",
-      coveredBy = (s, dt) => s.containedIn(boundRange(lo, hi, dt)),
-      disjointFrom = (s, dt) => s.disjointFrom(boundRange(lo, hi, dt)),
-      rebaseBound = dt => boundRange(lo, hi, dt))
+    scopedOverwrite(df.sparkSession, table, Scope.range(column, lo, hi), Some(df))
 
   /** Dynamic-partition overwrite (`partitionOverwriteMode=dynamic`
     * semantics): atomically replace exactly the rows whose `column`
@@ -5165,7 +5016,8 @@ object TxnTable {
     * writes whatever days it recomputed and each lands file-surgically.
     * Same machinery as replaceWhere with a value set instead of a
     * range; an empty frame is a no-op (nothing to replace), matching
-    * Delta's dynamic mode. */
+    * Delta's dynamic mode. One value is the equality scope that
+    * `replaceWhere "col = v"` and INSERT OVERWRITE … PARTITION take. */
   def replaceValues(df: DataFrame, table: String, column: String,
                     values0: Seq[Any]): Long = {
     val values = values0.distinct
@@ -5173,100 +5025,127 @@ object TxnTable {
       return latestVersion(spark = df.sparkSession, table = table).getOrElse(
         throw new IllegalStateException(
           s"dynamic overwrite of empty frame into uncommitted $table"))
-    def bounds(dt: DataType): Seq[Bound] = values.map(v => pointBound(v, dt))
-    def overall(dt: DataType): Bound = {
-      val bs = bounds(dt)
-      val kinds = bs.map(_.kind).distinct
-      kinds match {
-        case Seq("num") =>
-          bs.reduce((a, b) => Bound("num",
-            lo = math.min(a.lo, b.lo), hi = math.max(a.hi, b.hi)))
-        case Seq("str") =>
-          bs.reduce((a, b) => Bound("str",
-            loS = if (strLt(a.loS, b.loS)) a.loS else b.loS,
-            hiS = if (strLt(a.hiS, b.hiS)) b.hiS else a.hiS))
-        case _ => Bound("conflict") // mixed/unbound: no rebase, still correct
-      }
-    }
-    scopedOverwrite(df, table, column,
-      predicate = _ => coalesce(
-        col(column).isInCollection(values), lit(false)),
-      contractMsg = s"$column in {${values.mkString(", ")}}",
-      coveredBy = (s, dt) => s.nulls == 0L &&
-        bounds(dt).exists(b => s.containedIn(b)),
-      disjointFrom = (s, dt) => bounds(dt).forall(b => s.disjointFrom(b)),
-      rebaseBound = overall)
+    scopedOverwrite(df.sparkSession, table, Scope.values(column, values), Some(df))
   }
 
-  /** The shared core of replaceRange / replaceValues: one atomic
-    * scoped-overwrite commit, with metadata drops for files the
-    * per-file predicate proves fully replaced and complement rewrites
-    * for boundary files. */
-  private def scopedOverwrite(df: DataFrame, table: String, column: String,
-                              predicate: DataType => org.apache.spark.sql.Column,
-                              contractMsg: String,
-                              coveredBy: (FileStat, DataType) => Boolean,
-                              disjointFrom: (FileStat, DataType) => Boolean,
-                              rebaseBound: DataType => Bound): Long = {
-    val spark = df.sparkSession
-    val dtIn = df.schema(column).dataType
-    require(df.filter(not(predicate(dtIn))).limit(1).count() == 0L,
-      s"replaceWhere scoped-overwrite contract: every incoming row must " +
-        s"have $contractMsg — found rows outside (or NULL-keyed)")
-    latestState(spark, table).map(_.checks)
-      .foreach(enforceChecks(df, table, _))
-    // replaceWhere lands NEW rows: identity refuses (values are minted
-    // only on the append path); generated columns recompute (fill for
-    // frames that omit them, staleness repair otherwise) — carried
-    // boundary rows re-derive to the same values
-    refuseIdentity(latestState(spark, table).flatMap(_.schema),
-      table, "replaceWhere")
-    def plan(st: State): Attempt = {
-      if (st.version == 0L)
-        return Done(commitOverwrite(df, table, statsCols = Seq(column)))
-      require(st.dels.isEmpty,
-        s"$table carries merge-on-read delete files; materialize them " +
-          "first (compact / SQL OPTIMIZE), then replaceWhere")
-      val schema = st.schemaOf(table)
-      val dt = schema(column).dataType
-      val b = rebaseBound(dt)
-      val covered = st.files.filter(f =>
-        st.stat(f, column).exists(s => s.nulls == 0L && coveredBy(s, dt)))
-      val disjoint = st.files.filter(f =>
-        st.stat(f, column).exists(disjointFrom(_, dt)))
-      val boundary = st.files.filterNot((covered ++ disjoint).toSet)
-      val trackedCols =
-        (st.stats.values.flatten.map(_.col).toSet + column).toSeq.sorted
-      val trackedBlooms = st.bloomCols.toSeq.sorted
-      val incoming = recomputeGenerated(df, st.schema)
-        .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      val matchExpr = predicate(dt)
-      def boundaryRead = planFiles(spark, table, schema, boundary, st.pathpart, st.aliases, retired = st.retired, addv = st.addv)
-      // NULL-keyed rows in boundary files are OUTSIDE the range (SQL
-      // semantics, same as deleteRangeOn) and survive the replace
-      val payload =
-        if (boundary.isEmpty) incoming
-        else boundaryRead.filter(not(matchExpr)).unionByName(incoming)
-      val (dataDir, newFiles, newStats, newBlooms, newRows) =
-        writeData(payload, table, trackedCols, trackedBlooms, st.partCols,
-          declared = Some(schema))
-      val cdcAdd =
-        if (!st.cdf) Nil
-        else {
-          val deletes =
-            if (boundary.isEmpty) None
-            else Some(boundaryRead.filter(matchExpr)
-              .withColumn(ChangeTypeCol, lit("delete")))
-          val inserts = incoming.withColumn(ChangeTypeCol, lit("insert"))
-          writeChangeData(
-            deletes.map(_.unionByName(inserts)).getOrElse(inserts),
-            table, dataDir)
-        }
-      rewritePublish("replace", st, schema, (covered ++ boundary).sorted,
-        Seq(dataDir), newFiles, newStats, newBlooms, newRows,
-        Some(column -> b), cdcAdd, if (st.cdf) covered.sorted else Nil)
+  /** The rows a key-scoped op owns on `column`. `filter` — an EqualTo,
+    * an In, or GreaterThanOrEqual ∧ LessThanOrEqual — chooses files
+    * through [[chooseFiles]] and proves them covered through
+    * StatsPruner.mustMatch; `rows` is the same predicate per row
+    * against the column's declared type: exact `===`/`isin` for
+    * equality and IN, the normalized [[rangeFilter]] for ranges. */
+  private final case class Scope(column: String, filter: Filter,
+                                 rows: DataType => org.apache.spark.sql.Column) {
+    override def toString: String = filter match {
+      case EqualTo(_, v) => s"$column = $v"
+      case In(_, vs) => s"$column in {${vs.mkString(", ")}}"
+      case And(GreaterThanOrEqual(_, lo), LessThanOrEqual(_, hi)) =>
+        s"$column in [$lo, $hi]"
+      case f => f.toString
     }
-    Log.commit(spark, table, "replace")(plan)
+  }
+  private object Scope {
+    def equal(c: String, v: Any): Scope =
+      Scope(c, EqualTo(c, v), _ => col(c) === lit(v))
+    /** A one-value set is an equality. */
+    def values(c: String, vs: Seq[Any]): Scope =
+      if (vs.size == 1) equal(c, vs.head)
+      else Scope(c, In(c, vs.toArray), _ => col(c).isInCollection(vs))
+    def range(c: String, lo: Any, hi: Any): Scope =
+      Scope(c, And(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi)),
+        dt => rangeFilter(c, dt, lo, hi))
+  }
+
+  /** THE key-scoped copy-on-write commit under deleteEquals,
+    * deleteRangeOn, replaceRange and replaceValues: the rows `scope`
+    * owns go and `incoming` (if any) lands, in one commit. Three file
+    * classes, decided from the manifest alone:
+    *
+    *   carried    ruled out by [[chooseFiles]] — kept by reference
+    *   covered    chosen, and StatsPruner.mustMatch proves every row in
+    *              scope (known-zero NULLs) → dropped WITHOUT being read
+    *              (retention deleting whole time ranges is zero data
+    *              I/O); CDF tables record them as lazy `#cdcdel=` lines
+    *   boundary   the rest of the chosen files → rewritten with their
+    *              out-of-scope rows; their in-scope rows become eager
+    *              CDF delete files
+    *
+    * NULL-keyed rows are out of scope (SQL semantics: the predicate is
+    * NULL, not true) and survive. A landing frame must lie wholly in
+    * scope (Delta's replaceWhere contract) and passes the table's CHECK
+    * constraints and identity refusal; a delete lands nothing and skips
+    * both. Optimistic pinned CAS; a loss rebases over interleaved
+    * appends whose stats refute the scope's envelope (rewritePublish).
+    * Physical bytes of dropped/rewritten files are reclaimed by
+    * `vacuum`, as for any superseded snapshot. */
+  private def scopedOverwrite(spark: SparkSession, table: String,
+                              scope: Scope, incoming: Option[DataFrame]): Long = {
+    val column = scope.column
+    val op = if (incoming.isEmpty) "delete" else "replace"
+    incoming.foreach { df =>
+      require(df.filter(not(coalesce(scope.rows(df.schema(column).dataType),
+          lit(false)))).limit(1).count() == 0L,
+        s"replaceWhere scoped-overwrite contract: every incoming row must " +
+          s"have $scope — found rows outside (or NULL-keyed)")
+      latestState(spark, table).map(_.checks)
+        .foreach(enforceChecks(df, table, _))
+      // replaceWhere lands NEW rows: identity refuses (values are minted
+      // only on the append path); generated columns recompute (fill for
+      // frames that omit them, staleness repair otherwise) — carried
+      // boundary rows re-derive to the same values
+      refuseIdentity(latestState(spark, table).flatMap(_.schema),
+        table, "replaceWhere")
+    }
+    def plan(st0: State): Attempt = incoming match {
+      case Some(df) if st0.version == 0L =>
+        Done(commitOverwrite(df, table, statsCols = Seq(column)))
+      case _ =>
+        val st = st0.present(table)
+        require(st.dels.isEmpty,
+          s"$table carries merge-on-read delete files; materialize them " +
+            "first (compact / SQL OPTIMIZE)" + (if (incoming.isEmpty)
+              " or delete through SQL DELETE, which composes with them"
+            else ", then replaceWhere"))
+        val schema = st.schemaOf(table)
+        val dt = schema(column).dataType
+        val matchExpr = coalesce(scope.rows(dt), lit(false))
+        val pruner = new StatsPruner(schema, st.stats)
+        val bound = pruner.envelope(column, scope.filter).getOrElse(
+          throw new IllegalArgumentException(
+            s"cannot normalize $scope against $dt"))
+        val chosen = chooseFiles(spark, table, st, Seq(scope.filter), st.files)
+        val covered = chosen.filter(pruner.mustMatch(_, scope.filter))
+        val boundary = chosen.filterNot(covered.toSet)
+        def boundaryRead = planFiles(spark, table, schema, boundary, st.pathpart, st.aliases, retired = st.retired, addv = st.addv)
+        val landing = incoming.map(df => recomputeGenerated(df, st.schema)
+          .select(schema.fieldNames.toIndexedSeq.map(col): _*))
+        val kept =
+          if (boundary.isEmpty) None else Some(boundaryRead.filter(not(matchExpr)))
+        val (dirs, added, stats, blooms, rows, cdc) =
+          (kept ++ landing).reduceOption(_ unionByName _) match {
+            case None =>
+              (Nil, Nil, Map.empty[String, Seq[FileStat]],
+                Map.empty[String, Seq[BloomMeta]], Map.empty[String, Long], Nil)
+            case Some(payload) =>
+              val trackedCols =
+                (st.stats.values.flatten.map(_.col).toSet + column).toSeq.sorted
+              val (d, nf, ns, nb, nr) = writeData(payload, table, trackedCols,
+                st.bloomCols.toSeq.sorted, st.partCols, declared = Some(schema))
+              val changes =
+                (if (boundary.isEmpty) None
+                  else Some(boundaryRead.filter(matchExpr)
+                    .withColumn(ChangeTypeCol, lit("delete")))) ++
+                  landing.map(_.withColumn(ChangeTypeCol, lit("insert")))
+              val cdc =
+                if (!st.cdf) Nil
+                else writeChangeData(changes.reduce(_ unionByName _), table, d)
+              (Seq(d), nf, ns, nb, nr, cdc)
+          }
+        rewritePublish(op, st, schema, chosen.sorted, dirs, added, stats,
+          blooms, rows, Some(column -> bound), cdc,
+          if (st.cdf) covered.sorted else Nil)
+    }
+    Log.commit(spark, table, op)(plan)
   }
 
   /** Read the committed snapshot. */
@@ -7020,16 +6899,25 @@ object TxnTable {
       throw new IllegalStateException(s"$table predates the schema log"))
     cols.foreach(c => require(typeAt(schema, c).isDefined,
       s"ZORDER BY column $c is not a column of $table"))
-    val b = boundRange(lo, hi, typeAt(schema, column).getOrElse(
-      throw new IllegalArgumentException(
-        s"no such column $column in $table")))
-    val scoped = st.files.filter(f =>
-      st.stat(f, column).exists(s => s.nulls == 0L && s.containedIn(b)))
-    val n = targetFiles.getOrElse(math.max(1, scoped.size))
+    val n = targetFiles.getOrElse(math.max(1,
+      st.files.count(rangeCovers(st, schema, table, column, lo, hi))))
     compactSmall(spark, table, smallBytes = Long.MaxValue, targetFiles = n,
       checkpoint = true, scope = Some((column, lo, hi)),
       transform = Some(df => graft.ops.ZOrder.clusterN(df, cols, n)),
       extraStatsCols = cols, opName = "zorder")
+  }
+
+  /** OPTIMIZE … WHERE's scope: the files StatsPruner.mustMatch proves
+    * wholly inside `c` ∈ [lo, hi], with known-zero NULLs. Bounds that
+    * do not normalize against the column refuse. */
+  private def rangeCovers(st: State, schema: StructType, table: String,
+                          c: String, lo: Any, hi: Any): String => Boolean = {
+    val dt = typeAt(schema, c).getOrElse(throw new IllegalArgumentException(
+      s"OPTIMIZE WHERE column $c is not a column of $table"))
+    rangeFilter(c, dt, lo, hi)
+    val pruner = new StatsPruner(schema, st.stats)
+    val inRange = Scope.range(c, lo, hi).filter
+    pruner.mustMatch(_, inRange)
   }
 
   /** PARTIAL compaction — the scale-correct OPTIMIZE: bin-pack only the
@@ -7062,11 +6950,7 @@ object TxnTable {
       val schema = st.schemaOf(table)
       val inScope: String => Boolean = scope match {
         case None => _ => true
-        case Some((c, lo, hi)) =>
-          val b = boundRange(lo, hi, typeAt(schema, c).getOrElse(
-            throw new IllegalArgumentException(
-              s"OPTIMIZE WHERE column $c is not a column of $table")))
-          f => st.stat(f, c).exists(s => s.nulls == 0L && s.containedIn(b))
+        case Some((c, lo, hi)) => rangeCovers(st, schema, table, c, lo, hi)
       }
       // REORG/PURGE: per-vector named-file sets. Equality deletes gate
       // every older file; positional vectors NAME their files — one

@@ -109,6 +109,83 @@ class BloomSkipSpec extends AnyFunSuite {
     }
   }
 
+  // manifest stats normalize longs to doubles: 2^60 and 2^60+1 share
+  // one, so stats alone cannot prove a file holding only 2^60+1 equal
+  // to 2^60 — the delete must read it and keep its row
+  test("deleteEquals beyond 2^53 keeps a row its stats cannot tell apart") {
+    import spark.implicits._
+    withZone { table =>
+      val big = 1L << 60
+      TxnTable.commitOverwrite(Seq((big + 1L, 1L)).toDF("k", "v").coalesce(1),
+        table, statsCols = Seq("k"))
+      TxnTable.commitAppend(Seq((1L, 2L), (2L, 3L)).toDF("k", "v").coalesce(1),
+        table, statsCols = Seq("k"))
+      TxnTable.deleteEquals(spark, table, "k", big)
+      assert(TxnTable.read(spark, table).select($"k").as[Long].collect()
+        .sorted.toSeq == Seq(1L, 2L, big + 1L))
+    }
+  }
+
+  test("deleteEquals drops a provably covered file without a Spark job") {
+    import spark.implicits._
+    withZone { table =>
+      TxnTable.commitOverwrite(Seq((7L, 1L), (7L, 2L)).toDF("k", "v").coalesce(1),
+        table, statsCols = Seq("k"))
+      val covered = TxnTable.snapshotFiles(spark, table, 1L)
+      val v2 = TxnTable.commitAppend(
+        Seq((1L, 3L), (2L, 4L)).toDF("k", "v").coalesce(1), table,
+        statsCols = Seq("k"))
+      val other = TxnTable.snapshotFiles(spark, table, v2).filterNot(covered.toSet)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+      spark.sparkContext.addSparkListener(listener)
+      val v3 = try {
+        val v = TxnTable.deleteEquals(spark, table, "k", 7L)
+        org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+        v
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.get() == 0, s"a metadata-only delete ran ${jobs.get()} jobs")
+      assert(TxnTable.snapshotFiles(spark, table, v3) == other)
+      assert(TxnTable.read(spark, table).select($"k").as[Long].collect()
+        .sorted.toSeq == Seq(1L, 2L))
+    }
+  }
+
+  test("readEquals and readRangeOn choose the files a DSv2 scan does") {
+    import spark.implicits._
+    withZone { table =>
+      // three commits over a bucket(4, k) layout: per bucket, files of
+      // disjoint key ranges — bucket ids, min/max and blooms all prune
+      (0 until 3).foreach { c =>
+        TxnTable.commitAppend(
+          spark.range(200L * c, 200L * (c + 1)).select($"id".as("k"), $"id".as("v")),
+          table, statsCols = Seq("k"), bloomCols = Seq("k"),
+          partitionCols = Seq("bucket(4,k)"))
+      }
+      val total = TxnTable.snapshotFiles(spark, table,
+        TxnTable.latestVersion(spark, table).get).size
+      def dsv2(f: org.apache.spark.sql.Column): Int =
+        org.apache.spark.sql.GraftBridge.dsv2ScannedFiles(
+          spark.read.format("graft").load(table).filter(f))
+          .getOrElse(fail("no DSv2 scan in plan"))
+      Seq(250L, 7L, 999L).foreach { v =>
+        val (rows, scanned, _) = TxnTable.readEquals(spark, table, "k", v)
+        assert(scanned == dsv2($"k" === v), s"k = $v")
+        assert(rows.count() == (if (v < 600L) 1L else 0L))
+      }
+      val (rows, scanned, _) = TxnTable.readRangeOn(spark, table, "k", 150L, 260L)
+      assert(scanned == dsv2($"k" >= 150L && $"k" <= 260L))
+      assert(scanned < total && rows.count() == 111L)
+      assert(TxnTable.readEquals(spark, table, "k", 250L)._2 < total)
+    }
+  }
+
   test("merge rewrite preserves bloom coverage; vacuum reaps sidecars") {
     import spark.implicits._
     withZone { table =>

@@ -66,6 +66,16 @@ class DmlFuzzSpec extends AnyFunSuite {
     val canNoOp = false
   }
   private case object Optimize extends Op { val canNoOp = true }
+  // the key-scoped copy-on-write ops (deleteEquals, deleteRangeOn,
+  // replaceValues): they refuse merge-on-read tables, so they race on
+  // a copy-on-write one (see randomScopedOp)
+  private case class KeyDelete(k: Long) extends Op { val canNoOp = true }
+  private case class RangeDelete(lo: Long, hi: Long) extends Op {
+    val canNoOp = true
+  }
+  private case class ValuesReplace(rows: Seq[(Long, Long)]) extends Op {
+    val canNoOp = false
+  }
 
   private def applyModel(state: Map[Long, Long], op: Op): Map[Long, Long] =
     op match {
@@ -80,6 +90,10 @@ class DmlFuzzSpec extends AnyFunSuite {
       case Replace(m, r, rows) =>
         state.filterNot { case (k, _) => k % m == r } ++ rows
       case Optimize => state
+      case KeyDelete(k) => state - k
+      case RangeDelete(lo, hi) =>
+        state.filterNot { case (k, _) => k >= lo && k <= hi }
+      case ValuesReplace(rows) => state -- rows.map(_._1) ++ rows
     }
 
   private def run(op: Op, table: String,
@@ -107,6 +121,11 @@ class DmlFuzzSpec extends AnyFunSuite {
         enrich(rows.toDF("k", "v")))
     case Optimize =>
       TxnTable.compact(spark, table, targetFiles = 2)
+    case KeyDelete(k) => TxnTable.deleteEquals(spark, table, "k", k)
+    case RangeDelete(lo, hi) =>
+      TxnTable.deleteRangeOn(spark, table, "k", lo, hi)
+    case ValuesReplace(rows) =>
+      TxnTable.replaceValues(rows.toDF("k", "v"), table, "k", rows.map(_._1))
   }
 
   /** Key-class discipline: the positional ops (vector delete/update)
@@ -149,6 +168,29 @@ class DmlFuzzSpec extends AnyFunSuite {
       case _ => Optimize
     }
 
+  /** The key-scoped copy-on-write mix: every op commits against the
+    * snapshot it publishes on (a lost CAS recomputes, or rebases over
+    * appends whose stats refute the op's key envelope), so no key
+    * discipline is needed — deletes, replaces and merges all hit one
+    * shared pool [0, 60) while appends land far above it, the
+    * stats-disjoint shape the rebase serves. */
+  private def randomScopedOp(rnd: scala.util.Random, tid: Int, i: Int): Op =
+    rnd.nextInt(8) match {
+      case 0 | 1 =>
+        val base = 1000000L * (tid + 1) + 1000L * i + 7L
+        Append((0L until 3L).map(j => (base + j, base + j)))
+      case 2 | 3 =>
+        Merge(Seq.fill(3)(rnd.nextInt(60).toLong).distinct
+          .map(k => (k, 7000L + rnd.nextInt(1000))))
+      case 4 | 5 => KeyDelete(rnd.nextInt(60).toLong)
+      case 6 =>
+        val lo = rnd.nextInt(56).toLong
+        RangeDelete(lo, lo + 4L)
+      case _ =>
+        ValuesReplace(Seq.fill(2)(rnd.nextInt(60).toLong).distinct
+          .map(k => (k, 9000L + rnd.nextInt(1000))))
+    }
+
   /** Every consistent owner assignment over the multi-claim versions:
     * per version pick one claimant as the real committer (the rest were
     * no-op returns). Versions with a no-op-incapable claimant are
@@ -182,7 +224,16 @@ class DmlFuzzSpec extends AnyFunSuite {
     finally spark.conf.unset("graft.dedup.probeKeyLimit")
   }
 
-  private def serialReplayFuzz(): Unit = {
+  // the scoped rewrite core under race: point and range deletes, value
+  // replaces and merges over shared keys, appends stats-disjoint from
+  // them, on a copy-on-write table with stats and a bloom on the key
+  test("concurrent key-scoped deletes and replaces equal their serial replay") {
+    serialReplayFuzz(Map("bloomCols" -> "k"), randomScopedOp)
+  }
+
+  private def serialReplayFuzz(
+      tableOpts: Map[String, String] = Map("mergeOnRead" -> "true"),
+      nextOp: (scala.util.Random, Int, Int) => Op = randomOp): Unit = {
     val threads = 4
     val opsPerThread = 4
     // dev knob: GRAFT_DMLFUZZ_EXTRA widens the sweep for bug hunts
@@ -204,14 +255,14 @@ class DmlFuzzSpec extends AnyFunSuite {
         val init = (0L until 50L).map(k => (k, k))
         init.toDF("k", "v").coalesce(2)
           .write.format("graft").option("statsCols", "k")
-          .option("mergeOnRead", "true").mode("overwrite").save(table)
+          .options(tableOpts).mode("overwrite").save(table)
         val claimsQ =
           new java.util.concurrent.ConcurrentLinkedQueue[(Long, Op)]()
         val futures = (0 until threads).map { tid =>
           Future {
             val rnd = new scala.util.Random(seed * 1000 + tid)
             (0 until opsPerThread).foreach { i =>
-              val op = randomOp(rnd, tid, i)
+              val op = nextOp(rnd, tid, i)
               // CAS retries internally; a throw here fails the test —
               // every op must eventually commit (or no-op cleanly)
               claimsQ.add(run(op, table) -> op)

@@ -152,6 +152,33 @@ class ReplaceWhereSpec extends AnyFunSuite {
     }
   }
 
+  // 2^60 and 2^60+1 share one normalized double in the manifest stats:
+  // an equality replace of 2^60 must not treat a file holding only
+  // 2^60+1 as covered
+  private val big = 1L << 60
+  private def replacesOnlyBig(
+      replace: (org.apache.spark.sql.DataFrame, String) => Unit): Unit =
+    withZone { zone =>
+      import spark.implicits._
+      val table = s"$zone/t"
+      TxnTable.commitOverwrite(Seq((big + 1L, 1.0)).toDF("id", "v").coalesce(1),
+        table, statsCols = Seq("id"))
+      TxnTable.commitAppend(Seq((1L, 2.0)).toDF("id", "v").coalesce(1),
+        table, statsCols = Seq("id"))
+      replace(Seq((big, 5.0)).toDF("id", "v"), table)
+      assert(TxnTable.read(spark, table).select($"id").as[Long].collect()
+        .sorted.toSeq == Seq(1L, big, big + 1L))
+    }
+
+  test("replaceValues beyond 2^53 keeps a row its stats cannot tell apart") {
+    replacesOnlyBig((df, table) => { TxnTable.replaceValues(df, table, "id", Seq(big)); () })
+  }
+
+  test("replaceWhere `id = v` beyond 2^53 keeps a row its stats cannot tell apart") {
+    replacesOnlyBig((df, table) => df.write.format("graft").mode("overwrite")
+      .option("replaceWhere", s"id = $big").save(table))
+  }
+
   test("NULL-keyed rows survive a replace (SQL range semantics)") {
     withZone { zone =>
       import spark.implicits._
