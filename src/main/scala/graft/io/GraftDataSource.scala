@@ -976,11 +976,11 @@ private[io] class GraftScanBuilder(
       case Some((schema, rows)) => return new GraftAggScan(table, version, schema, rows)
       case None => ()
     }
-    // the one file-skipping decision (TxnTable.chooseFiles): stats per
-    // pushed filter, then bucket ids and bloom sidecars of its equality
-    // constraints — what min/max cannot prune on a hash-partitioned
-    // point lookup
-    val chosen = TxnTable.chooseFiles(spark, table, version, pushed.toSeq,
+    // the one file-skipping decision (TxnTable.chooseFiles): its stats
+    // step is statsChosen, shared with aggregate planning; the key step
+    // adds bucket ids and bloom sidecars of the equality constraints —
+    // what min/max cannot prune on a hash-partitioned point lookup
+    val chosen = TxnTable.keyFiles(spark, table, version, pruner, pushed.toSeq,
       statsChosen)
     // field-id tables resolve read columns BY ID — make sure the
     // session-wide reader flag is on before any task plans
@@ -1241,8 +1241,8 @@ private[io] class GraftScan(
     val fs = filters.filter(rtPruner.prunable)
     // a runtime In-list on a bucketed join key keeps only its buckets
     if (fs.nonEmpty)
-      runtimeFiles = TxnTable.chooseFiles(spark, table, version, fs.toSeq,
-        runtimeFiles)
+      runtimeFiles = TxnTable.chooseFiles(spark, table, version, rtPruner,
+        fs.toSeq, runtimeFiles)
   }
 
   /** KeyGroupedPartitioning when the builder proved per-file partition

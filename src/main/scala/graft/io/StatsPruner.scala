@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import TxnTable.{Bound, FileStat}
 
@@ -105,20 +105,20 @@ private[io] final class StatsPruner(
 
   /** The one-column envelope `f` implies on `c`: a point for EqualTo,
     * the [min, max] hull of the points for In, the meet of both sides
-    * for a conjunction (kinds that disagree meet in "conflict", which
-    * refutes nothing). None when a value resists normalization. The
-    * bound a key-scoped rewrite's append-rebase proof refutes. */
-  def envelope(c: String, f: Filter): Option[Bound] = f match {
+    * for a conjunction. None when a value resists normalization or the
+    * values' kinds disagree (a number against a string) — no one bound
+    * describes them. The bound a key-scoped rewrite's append-rebase
+    * proof refutes, and the check that its bounds normalize at all. */
+  def envelope(c: String, f: Filter): Option[Bound] = (f match {
     case And(a, b) =>
       def meet(x: String, y: String, pick: (String, String) => String) =
         if (x == null) y else if (y == null) x else pick(x, y)
-      for (x <- envelope(c, a); y <- envelope(c, b)) yield
-        if (x.kind != y.kind) Bound("conflict")
-        else Bound(x.kind, lo = math.max(x.lo, y.lo), hi = math.min(x.hi, y.hi),
+      for (x <- envelope(c, a); y <- envelope(c, b) if x.kind == y.kind) yield
+        Bound(x.kind, lo = math.max(x.lo, y.lo), hi = math.min(x.hi, y.hi),
           loS = meet(x.loS, y.loS, TxnTable.Utf8Ordering.max),
           hiS = meet(x.hiS, y.hiS, TxnTable.Utf8Ordering.min))
     case leaf => bounds(leaf).get(c)
-  }
+  }).filter(_.kind != "conflict")
 
   /** Can this filter tree contribute ANY file pruning? Mirrors the
     * leaves mayMatch understands. */
@@ -194,19 +194,34 @@ private[io] final class StatsPruner(
     def statOf(c: String) = stats.getOrElse(f, Nil).find(_.col == c)
     def valued(c: String): Option[FileStat] =
       statOf(c).filter(s => s.kind != "null" && s.nulls == 0L)
-    // Numeric stats are NORMALIZED doubles: beyond ~2^53 two distinct
+    // Numeric stats are NORMALIZED doubles: from 2^53 on two distinct
     // longs collapse to one double, and an equality/range proof on the
     // rounded values would be a false claim about the true ones (the
-    // rows would NOT be re-filtered). Exactness is only asserted in the
-    // provably-roundtrip magnitude range; pruning (mayMatch) never
-    // needed this — over-approximation there is safe.
-    def exactish(x: Double): Boolean = math.abs(x) <= 1.125899906842624e15 // 2^50
+    // rows would NOT be re-filtered). Exactness is only asserted below
+    // 2^53, where every long is its own double (rounding is monotone,
+    // so a long at or past 2^53 never normalizes below it); pruning
+    // (mayMatch) never needed this — over-approximation there is safe.
+    def exactish(x: Double): Boolean = math.abs(x) < 9.007199254740992e15 // 2^53
+    // A decimal column is its doubles only when whole and at most 15
+    // digits wide; a decimal filter value only when its double is
+    // exactly it (1.000000000000000001 normalizes to 1.0).
+    def exactCol(c: String): Boolean = TxnTable.typeAt(dataSchema, c).forall {
+      case d: DecimalType => d.scale == 0 && d.precision <= 15
+      case _ => true
+    }
+    def exactVal(v: Any, d: Double): Boolean = v match {
+      case b: java.math.BigDecimal => b.compareTo(new java.math.BigDecimal(d)) == 0
+      case b: BigDecimal => b.bigDecimal.compareTo(new java.math.BigDecimal(d)) == 0
+      case _ => true
+    }
+    def exactNum(c: String, v: Any, d: Double, s: FileStat): Boolean =
+      s.kind == "num" && exactCol(c) && exactish(d) && exactVal(v, d) &&
+        exactish(s.min) && exactish(s.max)
     def cmp(c: String, v: Any)(
         num: (FileStat, Double) => Boolean,
         str: (FileStat, String) => Boolean): Boolean =
       valued(c).exists(s => value(c, v).exists {
-        case Right(d) => s.kind == "num" &&
-          exactish(d) && exactish(s.min) && exactish(s.max) && num(s, d)
+        case Right(d) => exactNum(c, v, d, s) && num(s, d)
         case Left(x) => s.kind == "str" && str(s, x)
       })
     filter match {
@@ -233,8 +248,7 @@ private[io] final class StatsPruner(
         // the envelope proves nothing)
         valued(c).exists(s =>
           s.minV == s.maxV && vs.exists(v => value(c, v).exists {
-            case Right(d) => s.kind == "num" && exactish(d) &&
-              exactish(s.min) && s.min == d
+            case Right(d) => exactNum(c, v, d, s) && s.min == d
             case Left(x) => s.kind == "str" && s.minV == x
           }))
       case _ => false

@@ -682,32 +682,42 @@ object TxnTable {
       ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
     }
 
-  private def parseEpoch(s: String): Double = {
-    val t = s.trim
-    if (t.length <= 10) java.time.LocalDate.parse(t).toEpochDay * 86400.0
-    else java.time.LocalDateTime.parse(t.replace(' ', 'T'))
-      .toEpochSecond(java.time.ZoneOffset.UTC).toDouble
-  }
-
-  /** One query-bound value, normalized against the column's type:
-    * Left(lexicographic) or Right(numeric/epoch-seconds). Strings
-    * against temporal columns parse as dates ("2020-01-31") or
-    * timestamps ("2020-01-31 12:00:00", UTC). */
-  private[io] def boundValue(v: Any, dt: DataType): Either[String, Double] =
+  /** One query-bound value, normalized against the column's type the
+    * way [[normExpr]] normalizes the column: Left(lexicographic) or
+    * Right(numeric/epoch-seconds). Temporal values take the instant of
+    * the SESSION zone's local time, as the cast to TIMESTAMP does —
+    * dates their local midnight, TIMESTAMP_NTZ values and strings their
+    * local wall clock; a string parses as Spark casts it to the
+    * column's type, so a bound agrees with `col === v` and with the
+    * manifest stats written under the same session zone. */
+  private[io] def boundValue(v: Any, dt: DataType): Either[String, Double] = {
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils._
+    lazy val zone = getZoneId(
+      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+    def local(micros: Long) = convertTz(micros, zone, java.time.ZoneOffset.UTC)
+    def seconds(micros: Long) = Right(micros / 1000000.0)
+    def refuse = throw new IllegalArgumentException(
+      s"cannot interpret bound $v (${v.getClass.getSimpleName}) against $dt")
     (v, dt) match {
       case (s: String, StringType) => Left(s)
       case (s: String, DateType | TimestampType | TimestampNTZType) =>
-        Right(parseEpoch(s))
+        val u = org.apache.spark.unsafe.types.UTF8String.fromString(s.trim)
+        (dt match {
+          case DateType => stringToDate(u).map(d => daysToMicros(d, zone))
+          case TimestampType => stringToTimestamp(u, zone)
+          case _ => stringToTimestampWithoutTimeZone(u).map(local)
+        }).map(seconds).getOrElse(refuse)
       case (n: Number, _) => Right(n.doubleValue())
-      case (t: java.sql.Timestamp, _) => Right(t.getTime / 1000.0)
-      case (d: java.sql.Date, _) => Right(d.toLocalDate.toEpochDay * 86400.0)
-      case (i: java.time.Instant, _) => Right(i.toEpochMilli / 1000.0)
-      case (ld: java.time.LocalDate, _) => Right(ld.toEpochDay * 86400.0)
+      case (t: java.sql.Timestamp, _) => seconds(fromJavaTimestamp(t))
+      case (d: java.sql.Date, _) => seconds(daysToMicros(fromJavaDate(d), zone))
+      case (i: java.time.Instant, _) => seconds(instantToMicros(i))
+      case (ld: java.time.LocalDate, _) =>
+        seconds(daysToMicros(localDateToDays(ld), zone))
       case (ldt: java.time.LocalDateTime, _) =>
-        Right(ldt.toEpochSecond(java.time.ZoneOffset.UTC).toDouble)
-      case _ => throw new IllegalArgumentException(
-        s"cannot interpret bound $v (${v.getClass.getSimpleName}) against $dt")
+        seconds(local(localDateTimeToMicros(ldt)))
+      case _ => refuse
     }
+  }
 
   /** Possibly-open bound from optional endpoints, normalized against the
     * column type — what the SQL DML lowering derives from a WHERE's
@@ -3285,7 +3295,8 @@ object TxnTable {
       throw new IllegalStateException(s"no committed version in $table"))
     val schema = st.schemaOf(table)
     val inScope = scope.rows(schema(scope.column).dataType)
-    val chosen = chooseFiles(spark, table, st, Seq(scope.filter), st.files)
+    val chosen = chooseFiles(spark, table, st, new StatsPruner(schema, st.stats),
+      Seq(scope.filter), st.files)
     val rows =
       if (chosen.isEmpty)
         spark.createDataFrame(
@@ -3300,21 +3311,28 @@ object TxnTable {
     * rewrite, the V1 read's keep-callback, and the DSv2 scan's planning
     * and runtime filters: the files of `files` the manifest cannot
     * prove hold no row matching every filter. Three proofs, cheapest
-    * first: StatsPruner.mayMatch per filter (min/max, null counts,
-    * prefixes); the bucket ids of the filters' equality constraints
-    * (min/max span every bucket of a hash-partitioned key); then the
-    * bloom sidecars of those constraints — one small GET per file the
-    * first two kept. */
+    * first: `pruner.mayMatch` per filter (min/max, null counts,
+    * prefixes), then [[keyFiles]]' bucket ids and bloom sidecars. The
+    * caller's `pruner` (over `st`'s stats) is the one it also asks for
+    * coverage proofs, so each decision builds one. */
   private[io] def chooseFiles(spark: SparkSession, table: String, st: State,
-                              filters: Seq[Filter],
+                              pruner: StatsPruner, filters: Seq[Filter],
                               files: Seq[String]): Seq[String] =
+    keyFiles(spark, table, st, pruner, filters,
+      files.filter(f => filters.forall(pruner.mayMatch(f, _))))
+
+  /** The key steps of [[chooseFiles]] over `files` its stats step
+    * already kept: the bucket ids of the filters' equality constraints
+    * (min/max span every bucket of a hash-partitioned key), then the
+    * bloom sidecars of those constraints — one small GET per file the
+    * bucket step kept. */
+  private[io] def keyFiles(spark: SparkSession, table: String, st: State,
+                           pruner: StatsPruner, filters: Seq[Filter],
+                           files: Seq[String]): Seq[String] =
     st.schema match {
       case Some(schema) if files.nonEmpty && filters.nonEmpty =>
-        val pruner = new StatsPruner(schema, st.stats)
         val eqCons = filters.flatMap(pruner.eqConstraints).distinct
-        val kept = pruneByBucket(
-          files.filter(f => filters.forall(pruner.mayMatch(f, _))),
-          st.partCols, schema, eqCons)
+        val kept = pruneByBucket(files, st.partCols, schema, eqCons)
         // a NULL or uncoercible constant defeats its constraint's probe
         val probes = eqCons.flatMap { case (c, vs) =>
           val hashes = typeAt(schema, c).toSeq.flatMap(dt =>
@@ -3330,13 +3348,22 @@ object TxnTable {
       case _ => files
     }
 
-  /** [[chooseFiles]] against snapshot `version` — the DSv2 scan's
-    * entry (its manifest read is the builder's, cached). */
+  /** [[chooseFiles]] and [[keyFiles]] against snapshot `version` — the
+    * DSv2 scan's entries (its manifest read is the builder's, cached). */
   private[io] def chooseFiles(spark: SparkSession, table: String,
-                              version: Long, filters: Seq[Filter],
+                              version: Long, pruner: StatsPruner,
+                              filters: Seq[Filter],
                               files: Seq[String]): Seq[String] =
     if (files.isEmpty || filters.isEmpty) files
-    else chooseFiles(spark, table, stateOf(spark, table, version), filters, files)
+    else chooseFiles(spark, table, stateOf(spark, table, version), pruner,
+      filters, files)
+  private[io] def keyFiles(spark: SparkSession, table: String,
+                           version: Long, pruner: StatsPruner,
+                           filters: Seq[Filter],
+                           files: Seq[String]): Seq[String] =
+    if (files.isEmpty || filters.isEmpty) files
+    else keyFiles(spark, table, stateOf(spark, table, version), pruner,
+      filters, files)
 
   /** Does `f` possibly contain a row whose `column` hashes to one of
     * `hashes`? True unless the file HAS a bloom for the column and
@@ -4687,8 +4714,9 @@ object TxnTable {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val byAbs: Map[String, String] = rel.map(r =>
       fsys.makeQualified(new Path(s"$table/$r")).toString -> r).toMap
+    val pruner = new StatsPruner(st.schemaOf(table), st.stats)
     filters => {
-      val kept = chooseFiles(spark, table, st, filters, rel).toSet
+      val kept = chooseFiles(spark, table, st, pruner, filters, rel).toSet
       abs => byAbs.get(abs).forall(kept)
     }
   }
@@ -5113,7 +5141,8 @@ object TxnTable {
         val bound = pruner.envelope(column, scope.filter).getOrElse(
           throw new IllegalArgumentException(
             s"cannot normalize $scope against $dt"))
-        val chosen = chooseFiles(spark, table, st, Seq(scope.filter), st.files)
+        val chosen = chooseFiles(spark, table, st, pruner, Seq(scope.filter),
+          st.files)
         val covered = chosen.filter(pruner.mustMatch(_, scope.filter))
         val boundary = chosen.filterNot(covered.toSet)
         def boundaryRead = planFiles(spark, table, schema, boundary, st.pathpart, st.aliases, retired = st.retired, addv = st.addv)
@@ -6914,9 +6943,10 @@ object TxnTable {
                           c: String, lo: Any, hi: Any): String => Boolean = {
     val dt = typeAt(schema, c).getOrElse(throw new IllegalArgumentException(
       s"OPTIMIZE WHERE column $c is not a column of $table"))
-    rangeFilter(c, dt, lo, hi)
     val pruner = new StatsPruner(schema, st.stats)
     val inRange = Scope.range(c, lo, hi).filter
+    pruner.envelope(c, inRange).getOrElse(throw new IllegalArgumentException(
+      s"cannot normalize OPTIMIZE WHERE $c in [$lo, $hi] against $dt"))
     pruner.mustMatch(_, inRange)
   }
 

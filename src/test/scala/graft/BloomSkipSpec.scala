@@ -126,34 +126,77 @@ class BloomSkipSpec extends AnyFunSuite {
     }
   }
 
-  test("deleteEquals drops a provably covered file without a Spark job") {
+  // a DECIMAL(38,18) value normalizes to the same double as its
+  // neighbours: stats cannot prove a file equal to the deleted key
+  test("deleteEquals on a wide decimal keeps a row its stats cannot tell apart") {
+    withZone { table =>
+      def frame(k: String, v: Long) = spark.sql(
+        s"SELECT CAST('$k' AS DECIMAL(38,18)) AS k, ${v}L AS v").coalesce(1)
+      TxnTable.commitOverwrite(frame("1.000000000000000002", 1L), table,
+        statsCols = Seq("k"))
+      TxnTable.commitAppend(frame("2", 2L), table, statsCols = Seq("k"))
+      TxnTable.deleteEquals(spark, table, "k",
+        new java.math.BigDecimal("1.000000000000000001"))
+      assert(TxnTable.read(spark, table).count() == 2L)
+    }
+  }
+
+  /** Spark jobs `body` schedules (listener-counted, bus drained). */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+      (a, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  // 1.7e15 is past 2^50 but inside 2^53, where a long and its
+  // normalized double still agree — the epoch-microsecond key range
+  Seq(7L, 1700000000000000L).foreach { key =>
+    test(s"deleteEquals drops a provably covered file of key $key without a Spark job") {
+      import spark.implicits._
+      withZone { table =>
+        TxnTable.commitOverwrite(Seq((key, 1L), (key, 2L)).toDF("k", "v").coalesce(1),
+          table, statsCols = Seq("k"))
+        val covered = TxnTable.snapshotFiles(spark, table, 1L)
+        val v2 = TxnTable.commitAppend(
+          Seq((1L, 3L), (2L, 4L)).toDF("k", "v").coalesce(1), table,
+          statsCols = Seq("k"))
+        val other = TxnTable.snapshotFiles(spark, table, v2).filterNot(covered.toSet)
+        val (v3, jobs) = jobsOf(TxnTable.deleteEquals(spark, table, "k", key))
+        assert(jobs == 0, s"a metadata-only delete ran $jobs jobs")
+        assert(TxnTable.snapshotFiles(spark, table, v3) == other)
+        assert(TxnTable.read(spark, table).select($"k").as[Long].collect()
+          .sorted.toSeq == Seq(1L, 2L))
+      }
+    }
+  }
+
+  test("readEquals, readRangeOn and a boundary deleteEquals keep their job counts") {
     import spark.implicits._
     withZone { table =>
-      TxnTable.commitOverwrite(Seq((7L, 1L), (7L, 2L)).toDF("k", "v").coalesce(1),
-        table, statsCols = Seq("k"))
-      val covered = TxnTable.snapshotFiles(spark, table, 1L)
-      val v2 = TxnTable.commitAppend(
-        Seq((1L, 3L), (2L, 4L)).toDF("k", "v").coalesce(1), table,
-        statsCols = Seq("k"))
-      val other = TxnTable.snapshotFiles(spark, table, v2).filterNot(covered.toSet)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-      spark.sparkContext.addSparkListener(listener)
-      val v3 = try {
-        val v = TxnTable.deleteEquals(spark, table, "k", 7L)
-        org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-        v
-      } finally spark.sparkContext.removeSparkListener(listener)
-      assert(jobs.get() == 0, s"a metadata-only delete ran ${jobs.get()} jobs")
-      assert(TxnTable.snapshotFiles(spark, table, v3) == other)
-      assert(TxnTable.read(spark, table).select($"k").as[Long].collect()
-        .sorted.toSeq == Seq(1L, 2L))
+      // eight range files of 100 keys, stats and a bloom on k
+      TxnTable.commitOverwrite(
+        spark.range(0L, 800L).select($"id".as("k"), ($"id" * 2).as("v"))
+          .repartitionByRange(8, $"k"),
+        table, statsCols = Seq("k"), bloomCols = Seq("k"))
+      TxnTable.readEquals(spark, table, "k", 1L)._1.count() // warm caches
+      val (eq, eqJobs) = jobsOf(TxnTable.readEquals(spark, table, "k", 250L)._1.count())
+      val (rng, rngJobs) = jobsOf(TxnTable.readRangeOn(spark, table, "k", 150L, 260L)._1.count())
+      val (_, delJobs) = jobsOf(TxnTable.deleteEquals(spark, table, "k", 250L))
+      assert((eq, rng) == ((1L, 111L)))
+      assert((eqJobs, rngJobs, delJobs) == ((2, 2, 1)),
+        s"jobs per call: readEquals $eqJobs, readRangeOn $rngJobs, deleteEquals $delJobs")
+      assert(TxnTable.read(spark, table).count() == 799L)
     }
   }
 

@@ -179,6 +179,60 @@ class ReplaceWhereSpec extends AnyFunSuite {
       .option("replaceWhere", s"id = $big").save(table))
   }
 
+  // outside UTC, DATE stats are the epoch seconds of the session zone's
+  // local midnight and a timestamp string parses in the session zone:
+  // file choice must normalize bounds the same way, or the replaced
+  // rows' files look disjoint and carry forward next to the new rows
+  private def inLosAngeles(body: => Unit): Unit = {
+    val key = "spark.sql.session.timeZone"
+    spark.conf.set(key, "America/Los_Angeles")
+    try body finally spark.conf.set(key, "UTC")
+  }
+
+  test("INSERT OVERWRITE PARTITION on a DATE column outside UTC") {
+    inLosAngeles { withZone { zone =>
+      val table = s"$zone/t"
+      spark.sql("DROP TABLE IF EXISTS rw_date_t")
+      spark.sql(
+        s"""CREATE TABLE rw_date_t (id BIGINT, d DATE)
+           |USING graft PARTITIONED BY (d)
+           |OPTIONS (path '$table')""".stripMargin)
+      try {
+        spark.sql("INSERT INTO rw_date_t VALUES (1, DATE'2024-01-01'), " +
+          "(2, DATE'2024-01-01'), (3, DATE'2024-01-02')")
+        spark.sql("INSERT OVERWRITE rw_date_t PARTITION (d = DATE'2024-01-01') " +
+          "VALUES (10)")
+        def rows = spark.table("rw_date_t").selectExpr("id", "CAST(d AS STRING)")
+          .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+        assert(rows == Set((10L, "2024-01-01"), (3L, "2024-01-02")))
+        assert(spark.table("rw_date_t")
+          .filter(col("d") === lit("2024-01-02").cast("date")).count() == 1L)
+        assert(TxnTable.readEquals(spark, table, "d",
+          java.time.LocalDate.parse("2024-01-01"))._1.count() == 1L)
+        TxnTable.deleteEquals(spark, table, "d", java.time.LocalDate.parse("2024-01-02"))
+        assert(rows == Set((10L, "2024-01-01")))
+      } finally spark.sql("DROP TABLE rw_date_t")
+    }}
+  }
+
+  test("replaceWhere `ts = '…'` outside UTC replaces the rows `===` matches") {
+    inLosAngeles { withZone { zone =>
+      import spark.implicits._
+      val table = s"$zone/t"
+      def frame(rows: (Long, String)*) = rows.toDF("id", "ts")
+        .select($"id", $"ts".cast("timestamp").as("ts")).coalesce(1)
+      TxnTable.commitOverwrite(frame((1L, "2024-01-01 10:00:00"),
+        (2L, "2024-01-01 10:00:00")), table, statsCols = Seq("ts"))
+      TxnTable.commitAppend(frame((3L, "2024-01-02 10:00:00")), table,
+        statsCols = Seq("ts"))
+      frame((10L, "2024-01-01 10:00:00")).write.format("graft")
+        .mode("overwrite").option("replaceWhere", "ts = '2024-01-01 10:00:00'")
+        .save(table)
+      assert(TxnTable.read(spark, table).select($"id").as[Long].collect()
+        .sorted.toSeq == Seq(3L, 10L))
+    }}
+  }
+
   test("NULL-keyed rows survive a replace (SQL range semantics)") {
     withZone { zone =>
       import spark.implicits._
