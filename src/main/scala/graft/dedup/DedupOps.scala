@@ -355,19 +355,10 @@ object DedupOps {
       .agg(min($"dst").as("m"))
       .select($"src".as("id"), least($"src", $"m").as("label"))
       .localCheckpoint(eager = false)
-    // dev-only per-round timing (unset in driver/bench protocol runs)
-    val prof = sys.env.contains("GRAFT_D40_PROF")
-    var profT0 = System.nanoTime()
-    def lap(phase: String): Unit = if (prof) {
-      val t1 = System.nanoTime()
-      println(f"[d40prof] $phase%-12s ${(t1 - profT0) / 1e9}%.3f s")
-      profT0 = t1
-    }
     def labelSum(df: DataFrame): Long =
       df.agg(coalesce(sum($"label"), lit(0L))).as[Long].head()
     var prev = -1L
     var cur = labelSum(labels)
-    lap("init+round1")
     var rounds = 0
     // early hybrid switch: min-label needs ~diameter rounds, star
     // contraction ~log(component size). A graph still moving after 10
@@ -394,7 +385,6 @@ object DedupOps {
       prev = cur
       cur = labelSum(labels)
       rounds += 1
-      lap(s"round${rounds + 1}")
     }
     // (measured: batching two propagation steps per checkpoint halves the
     // action count but doubles the join work of the confirming rounds —
@@ -1113,14 +1103,6 @@ object DedupOps {
       pre: Option[() => DataFrame] = None): (Int, Int) = {
     import spark.implicits._
     import graft.io.TxnTable
-    // dev-only phase timing (unset in driver/bench protocol runs)
-    val prof = sys.env.contains("GRAFT_D47_PROF")
-    var t0 = System.nanoTime()
-    def lap(phase: String): Unit = if (prof) {
-      val t1 = System.nanoTime()
-      println(f"[d47prof] $phase%-16s ${(t1 - t0) / 1e9}%.3f s")
-      t0 = t1
-    }
     // corpus append ∥ signature materialization: independent legs (one
     // commits the batch rows, the other hashes them into band keys) —
     // overlapped per guide §2.6 so the signature compute back-fills the
@@ -1133,7 +1115,6 @@ object DedupOps {
         .option("statsCols", "doc_id")
         .mode(if (first) "overwrite" else "append").save(corpus),
       pre.map(_()).getOrElse(d47Sig(spark, batch)))
-    lap("corpus_append+sig")
     // cross-batch dups: batch docs whose band key already exists in
     // the persisted signatures (all strictly earlier ids) — the shared
     // probePersisted contract: broadcast or SPJ, zero shuffles of the
@@ -1152,7 +1133,6 @@ object DedupOps {
         val r = probePersisted(spark, sigs, sig,
           joinCols = Seq("b", "h"), out = Seq("doc_id"),
           keyCol = "h", cat = "gd47spj")
-        lap("probe_exec")
         r
       }
     // in-batch dups: per band key, everything above the min id — a
@@ -1173,9 +1153,7 @@ object DedupOps {
     val losers = cross.union(inBatch).distinct().localCheckpoint()
     // a loser-free increment (the common small-batch case) skips the
     // whole positional-delete leg — identity read, join, and commit
-    lap("losers_probe_pre")
     val anyLosers = losers.limit(1).count() > 0L
-    lap("losers_check")
     // the corpus delete leg — its own commit on the CORPUS table,
     // independent of the signature append below (different tables), so
     // the two commits overlap (guide §2.6); the re-probe recovery runs
@@ -1206,7 +1184,6 @@ object DedupOps {
           .option("optimizedWrite", "true")
           .option("partitionBy", "bucket(16, h)").mode("overwrite")
           .save(sigs))
-      lap("pos_delete+sig_w")
     } else {
       // commitAppend (same code path as the writer; sticky bucket(16,h)
       // carries from the snapshot) RETURNS the landed version — this
@@ -1217,7 +1194,6 @@ object DedupOps {
         TxnTable.commitAppend(sig, sigs,
           statsCols = Seq("b", "h"), bloomCols = Seq("h"),
           optimizedWrite = true))
-      lap("pos_delete+sig_append")
       // CONCURRENT-INGEST RECOVERY, part 2 (re-probe on CAS loss):
       // foreign signature appends in (vProbe, vLanded) landed after
       // this ingest's probe read but BEFORE its own signatures — in
@@ -1242,7 +1218,6 @@ object DedupOps {
           rows.join(broadcast(late), Seq("doc_id"), "left_semi"))
         ()
       }
-      lap("reprobe")
     }
     pruneCounts
   }
@@ -1527,18 +1502,9 @@ object DedupOps {
       grams: String, batch: DataFrame, first: Boolean,
       pre: Option[() => DataFrame] = None): (Int, Int) = {
     import spark.implicits._
-    // dev-only phase timing (unset in driver/bench protocol runs)
-    val prof = sys.env.contains("GRAFT_D49_PROF")
-    var t0 = System.nanoTime()
-    def lap(phase: String): Unit = if (prof) {
-      val t1 = System.nanoTime()
-      println(f"[d49prof] $phase%-16s ${(t1 - t0) / 1e9}%.3f s")
-      t0 = t1
-    }
     val k = d48K
     val docs = batch.select($"doc_id", split($"text", " ").as("w"))
     val g = pre.map(_()).getOrElse(d49Grams(spark, batch))
-    lap("gram_checkpoint")
     // CONCURRENT-INGEST RECOVERY, part 1 (the d47 move): pin the
     // version the probe judges against; over-reading is idempotent
     val vProbe: Long =
@@ -1551,7 +1517,6 @@ object DedupOps {
         val r = probePersisted(spark, grams, g,
           joinCols = Seq("h"), out = Seq("doc_id", "pos"),
           keyCol = "h", cat = "gd49spj")
-        lap("probe")
         r
       }
     // in-batch keep-first: the min-agg + dup-tail join (no window —
@@ -1606,14 +1571,12 @@ object DedupOps {
           .option("optimizedWrite", "true")
           .option("partitionBy", "bucket(16, h)").mode("overwrite")
           .save(grams))
-      lap("cleaned+gram_w")
     } else {
       val (_, vLanded) = graft.ops.Par.both(spark)(
         cleanedLeg(),
         graft.io.TxnTable.commitAppend(g, grams,
           statsCols = Seq("h"), bloomCols = Seq("h"),
           optimizedWrite = true))
-      lap("cleaned+gram_append")
       // CONCURRENT-INGEST RECOVERY, part 2 — the d47 re-probe, with
       // the d49 twist: a stale probe doesn't just admit a row, it
       // writes WRONG CLEANED TEXT (the foreign batch's shingles came
@@ -1649,7 +1612,6 @@ object DedupOps {
             .filter(col("doc_id") >= blo && col("doc_id") <= bhi)
             .join(broadcast(affected), Seq("doc_id"), "left_semi"),
           relCleaned)
-        lap("reprobe_replace")
       }
     }
     pruneCounts
@@ -2357,39 +2319,26 @@ object DedupOps {
       pre: Option[DataFrame] = None): (Int, Int, Long) = {
     import spark.implicits._
     import graft.io.TxnTable
-    // dev-only phase timing (unset in driver/bench protocol runs)
-    val prof = sys.env.contains("GRAFT_D52_PROF")
-    var profT0 = System.nanoTime()
-    def lap(phase: String): Unit = if (prof) {
-      val t1 = System.nanoTime()
-      println(f"[d52prof] $phase%-12s ${(t1 - profT0) / 1e9}%.3f s")
-      profT0 = t1
-    }
     val bex = pre.getOrElse(d52Bex(spark, batch))
-    lap("sig")
     val inPairs = bex.as("a")
       .join(bex.as("b"),
         $"a.bk" === $"b.bk" && $"a.bdoc" < $"b.bdoc")
       .select($"a.bdoc".as("u"), $"b.bdoc".as("v")).distinct()
     if (first) {
       val lab0 = connectedComponents(inPairs)
-      lap("contract0")
       lab0.select($"id".as("doc_id"), $"label")
         .write.format("graft").option("statsCols", "doc_id,label")
         .option("mergeOnRead", "true").mode("overwrite").save(labels)
-      lap("labels0_w")
       bex.select($"bk", $"bdoc".as("doc_id"))
         .write.format("graft").option("partitionBy", "bucket(16, bk)")
         .option("statsCols", "bk").option("bloomCols", "bk")
         .option("optimizedWrite", "true").option("mergeOnRead", "true")
         .mode("overwrite").save(sigsT)
-      lap("sigs0_w")
       return (0, 0, 0L)
     }
     val (hits, pruneCounts) = probePersisted(spark, sigsT, bex,
       joinCols = Seq("bk"), out = Seq("bdoc", "doc_id"),
       keyCol = "bk", cat = "gd52spj", scanPayload = Seq("doc_id"))
-    lap("probe")
     val cur = spark.read.format("graft").load(labels)
     // cross edges with the corpus endpoint contracted to its label
     // (an unlabeled corpus doc — isolated until now — enters as
@@ -2402,7 +2351,6 @@ object DedupOps {
     val graph = inPairs.unionByName(cross.select($"u", $"v"))
     val lab2 = connectedComponents(graph)
       .select($"id", $"label").localCheckpoint()
-    lap("contract")
     // existing components whose min changed (to relabel), and first
     // label rows for batch docs + freshly-connected corpus isolates —
     // the two frames depend only on lab2/cross/bex (all checkpointed)
@@ -2455,7 +2403,6 @@ object DedupOps {
         .write.format("graft").option("statsCols", "bk")
         .option("bloomCols", "bk").option("optimizedWrite", "true")
         .mode("append").save(sigsT))
-    lap("labels+sigs_w")
     (pruneCounts._1, pruneCounts._2, nChanged)
   }
 

@@ -624,7 +624,7 @@ object FormatOps {
       TxnTable.commitAppend(extra, table, statsCols = Seq("k"))
       val nullsBefore = TxnTable.read(spark, table)
         .filter($"k".isNull).count()
-      val v = TxnTable.deleteRange(spark, table, "k", lo = 100, hi = 400)
+      TxnTable.deleteRange(spark, table, "k", lo = 100, hi = 400)
       val nullsAfter = TxnTable.read(spark, table)
         .filter($"k".isNull).count()
       require(nullsBefore > 0 && nullsAfter == nullsBefore,

@@ -1650,10 +1650,11 @@ object TxnTable {
     *   - `checkpoint` forces a full manifest. A delta can only add and
     *     remove files and add deletes, so a change whose header also
     *     rewrites the layout (restore, vector coalesce, ALTER dropping
-    *     stats) must set it; the renderer refuses otherwise.
-    *   - `prune`: a full manifest of this change drops delete entries
-    *     that no surviving file is gated by (the commit that rewrote or
-    *     replaced their files materialized them). */
+    *     stats) must set it; the renderer refuses otherwise. A full
+    *     manifest drops every delete entry that gates no surviving
+    *     file: the commit that rewrote or replaced those files
+    *     materialized it, and add versions only grow, so it can never
+    *     apply again. */
   private final case class Change(
       op: String,
       added: Seq[String] = Nil,
@@ -1665,8 +1666,7 @@ object TxnTable {
       cdc: Seq[String] = Nil,
       cdcDel: Seq[String] = Nil,
       header: State => State = identity,
-      checkpoint: Boolean = false,
-      prune: Boolean = false) {
+      checkpoint: Boolean = false) {
     /** The snapshot this change produces on `base` as `version`. */
     def applyTo(base: State, version: Long): State = layout(header(base), version)
 
@@ -1717,23 +1717,31 @@ object TxnTable {
       * `first` seeds the first try with a snapshot the op already read
       * (an empty table is [[State.empty]]). */
     def commit(spark: SparkSession, table: String, op: String,
-               first: Option[State] = None)(plan: State => Attempt): Long = {
+               first: Option[State] = None)(plan: State => Attempt): Long =
+      commitPublished(spark, table, op, first)(plan)._1
+
+    /** [[commit]], also returning the change it published (None when
+      * the plan settled with [[Done]]). */
+    def commitPublished(spark: SparkSession, table: String, op: String,
+                        first: Option[State] = None)(plan: State => Attempt)
+        : (Long, Option[Change]) = {
       val ctx = fc(spark)
       def drop(p: Publish): Unit =
         p.dirs.foreach(d => ctx.delete(new Path(s"$table/$d"), true))
       @annotation.tailrec
-      def attempt(base: State, lost: Int, held: Option[Publish]): Long =
+      def attempt(base: State, lost: Int,
+                  held: Option[Publish]): (Long, Option[Change]) =
         held.filter(_.rebases(base)).getOrElse {
           held.foreach(drop)
           plan(base)
         } match {
-          case Done(v) => v
+          case Done(v) => (v, None)
           case p: Publish =>
             val v = base.version + 1L
             if (tryCreateAtomic(ctx, new Path(table, manifestName(v)),
                 render(spark, table, base, p.change, v))) {
               writePointer(ctx, table, v)
-              v
+              (v, Some(p.change))
             } else if (lost + 1 >= Budget) {
               drop(p)
               throw new IllegalStateException(
@@ -1790,9 +1798,7 @@ object TxnTable {
       lazy val filesSet = s.files.toSet
       val dels =
         if (!full) c.dels
-        else if (c.prune)
-          s.dels.filter(d => s.files.exists(f => d.gates(f, s.addv.getOrElse(f, 0L))))
-        else s.dels
+        else s.dels.filter(d => s.files.exists(f => d.gates(f, s.addv.getOrElse(f, 0L))))
       // add-version lines exist to gate equality deletes AND the
       // nested-default existence fill; on a table using neither they
       // are O(files) dead weight per checkpoint (500 appends ≈ +45 KB
@@ -2613,7 +2619,7 @@ object TxnTable {
     }
     def publish(w: Written) = Publish(
       Change(op, added = w.files, stats = w.stats, blooms = w.blooms,
-        rows = w.rows, checkpoint = !append, prune = true,
+        rows = w.rows, checkpoint = !append,
         header = { h0 =>
           // an OVERWRITE replaces table content wholesale — every file
           // and every equality-delete entry drops — and is a natural
@@ -3100,7 +3106,7 @@ object TxnTable {
       Publish(Change("wap-publish", added = staged.flatMap(_.files),
         stats = staged.flatMap(_.stats).toMap,
         blooms = staged.flatMap(_.blooms).toMap,
-        rows = staged.flatMap(_.rows).toMap, checkpoint = true, prune = true,
+        rows = staged.flatMap(_.rows).toMap, checkpoint = true,
         header = _.copy(schema = Some(schema),
           txns = st.txns ++ plain.map(wapMarker(_) -> 1L) ++ seqUpdates)))
     }
@@ -3719,7 +3725,7 @@ object TxnTable {
     // rewrite read its rows through the delete-applying path, so their
     // deletions are materialized
     Publish(Change(op, added, stats, blooms, rows, removed, cdc = cdc,
-        cdcDel = cdcDel, prune = true,
+        cdcDel = cdcDel,
         header = h => h.copy(schema = Some(schema),
           pathpart = h.keepsAdopted(gone))),
       dirs,
@@ -3914,55 +3920,21 @@ object TxnTable {
     * when their tuples match — snapshot-isolation semantics, same as a
     * copy-on-write delete racing an append.
     *
-    * CAS losses against interleaved APPENDS or other merge-on-read
-    * deletes REBASE (the gate/composition make them commutative);
-    * interleaved rewrites recompute. */
+    * Commits through [[morCommit]]: a lost CAS rebases over interleaved
+    * pure appends only (the gate exempts their files); any interleaved
+    * delete or rewrite recomputes the tuples from the fresh snapshot. */
   def deleteWhereMoR(spark: SparkSession, table: String,
                      keyCols: Seq[String],
                      cond: DataFrame => org.apache.spark.sql.Column): Long = {
     require(keyCols.nonEmpty, "merge-on-read delete needs at least one key column")
-    val ctx = fc(spark)
-    def plan(st0: State): Attempt = {
-      val st = st0.present(table)
-      val schema = st.schemaOf(table)
-      keyCols.foreach(k => require(schema.fieldNames.contains(k),
-        s"merge-on-read delete key '$k' is not a column of $table"))
-      // pinned graft read: stats/bloom skipping prunes the scan to the
-      // predicate's files, and LIVE deletes are already applied — a
-      // tuple deleted twice is harmless, but CDF must not re-record it
-      val snap = spark.read.format("graft")
-        .option("versionAsOf", st.version.toString).load(table)
+    // the pinned graft read: stats/bloom skipping prunes the scan to the
+    // predicate's files, and LIVE deletes are already applied — a tuple
+    // deleted twice is harmless, but CDF must not re-record it
+    upsertMoR(spark, table, "delete", (snap, _) => {
       val matched = snap.filter(cond(snap))
-      val tuples = matched
-        .select(keyCols.map(k => col(s"`$k`")): _*).distinct().coalesce(1)
-      val dataDir = freshDir()
-      val written = writeUnder(tuples, table, dataDir, "_del")
-      val delFiles = written.map(_._1)
-      val n = written.map(_._2).sum
-      if (n == 0L) { // nothing matched: provable no-op
-        ctx.delete(new Path(s"$table/$dataDir"), true)
-        return Done(st.version)
-      }
-      val cdcAdd =
-        if (st.cdf)
-          writeChangeData(
-            matched.withColumn(ChangeTypeCol, lit("delete")), table, dataDir)
-        else Nil
-      // the gate pins the delete to its READ snapshot: it subtracts
-      // only from files whose add version is below st.version + 1,
-      // i.e. exactly the files it was computed against
-      val gate = st.version + 1L
-      Publish(Change("delete", cdc = cdcAdd,
-          dels = delFiles.map(f => DelMeta(f, gate, keyCols, n)),
-          header = _.copy(mor = true)),
-        Seq(dataDir),
-        // interleaved appends: exempt via the gate; interleaved MoR
-        // deletes: both tuple sets apply. Removed files or a schema
-        // change invalidate the computed tuples — recompute.
-        rebases = fresh => onlyGrew(st, fresh) &&
-          st.dels.forall(fresh.dels.contains))
-    }
-    Log.commit(spark, table, "delete")(plan)
+      Some(MorWrite(keyCols, matched, None,
+        Some(matched.withColumn(ChangeTypeCol, lit("delete")))))
+    })
   }
 
   /** Did the commits between `on` and `fresh` keep every file of `on`
@@ -4029,7 +4001,8 @@ object TxnTable {
     * the same snapshot-isolation gate semantics as equality deletes. */
   def deleteWherePos(spark: SparkSession, table: String,
                      cond: DataFrame => org.apache.spark.sql.Column): Long =
-    deletePosCore(spark, table, snap => snap.filter(cond(snap)))
+    morCommit(spark, table, "delete")(st =>
+      Some(posDelete(spark, table, st, snap => snap.filter(cond(snap)))))
 
   /** Delete rows by explicit identity: `positions` carries `_gfile` /
     * `_gpos` pairs (from [[readWithRowIdentity]] — e.g. the rank>1 rows
@@ -4058,9 +4031,25 @@ object TxnTable {
       positions.columns.contains(PosOrdCol),
       s"positions frame needs $PosFileCol and $PosOrdCol columns")
     val pos = positions.select(col(PosFileCol), col(PosOrdCol))
-    deletePosCore(spark, table,
-      snap => snap.join(pos, Seq(PosFileCol, PosOrdCol), "left_semi"),
-      positionsOnly = Some(pos), requirePresent = requirePresent)
+    // CDF off: a pure-metadata commit — the caller's coordinates ARE the
+    // sidecar (no data scan), and the commit core proves the files they
+    // name listed from its sidecar summary. CDF on: the deleted rows
+    // must be recorded, so the snapshot is semi-joined once; that join
+    // would drop stale coordinates unseen, so the caller's frame is
+    // proved first.
+    morCommit(spark, table, "delete",
+        provesListed = st => requirePresent && !st.cdf) { st =>
+      if (st.cdf) {
+        if (requirePresent) refuseUnlisted(spark, table, st, pos, None)
+        Some(posDelete(spark, table, st,
+          _.join(pos, Seq(PosFileCol, PosOrdCol), "left_semi")))
+      } else {
+        // requirePresent = false opts into dropping stale coordinates
+        val held = if (requirePresent) pos
+          else pos.join(listedFiles(spark, table, st), Seq(PosFileCol), "left_semi")
+        Some(MorWrite(PosDelKeyCols, held.distinct(), None))
+      }
+    }
   }
 
   /** POSITIONAL delete FROM A SOURCE FRAME: rows whose `keyCols` tuple
@@ -4104,12 +4093,59 @@ object TxnTable {
     keyCols.foreach(c => require(keys.columns.contains(c),
       s"key column '$c' is not a column of the keys frame"))
     val k = keys.select(keyCols.map(c => col(s"`$c`")): _*).distinct()
-    deletePosCore(spark, table, { snap =>
-      keyCols.foreach(c => require(snap.columns.contains(c),
-        s"key column '$c' is not a column of $table"))
-      snap.join(k, keyCols, "left_semi")
-    }, txn = txn)
+    morCommit(spark, table, "delete", txn = txn)(st =>
+      Some(posDelete(spark, table, st, { snap =>
+        keyCols.foreach(c => require(snap.columns.contains(c),
+          s"key column '$c' is not a column of $table"))
+        snap.join(k, keyCols, "left_semi")
+      })))
   }
+
+  /** The positional delete of the rows `select` picks from `st`'s
+    * identity read (live deletes applied, so an already-deleted row is
+    * never re-recorded or re-fed to CDF). With CDF on the selection
+    * feeds two actions, the sidecar and the change feed: it is
+    * materialized once, so a nondeterministic selection (sampling,
+    * ranking with ties) cannot record coordinates that diverge from the
+    * change rows. */
+  private def posDelete(spark: SparkSession, table: String, st: State,
+                        select: DataFrame => DataFrame): MorWrite = {
+    val m = select(readIdentityOf(spark, table, st))
+    val matched = if (st.cdf) m.localCheckpoint() else m
+    MorWrite(PosDelKeyCols, matched.select(col(PosFileCol), col(PosOrdCol)),
+      None, Some(matched.drop(PosFileCol, PosOrdCol)
+        .withColumn(ChangeTypeCol, lit("delete"))))
+  }
+
+  /** Staleness refusal for caller-held coordinates: a file the pinned
+    * snapshot does not list means a rewrite (OPTIMIZE/REORG/copy-on-
+    * write DML) landed after the identity read, so those rows now live
+    * under NEW coordinates — dropping the entries would silently no-op
+    * part of the delete. `named` is the sidecar summary's file list
+    * when it has one (checked on the driver); otherwise `coords` is
+    * probed in one distributed job. */
+  private def refuseUnlisted(spark: SparkSession, table: String, st: State,
+                             coords: DataFrame,
+                             named: Option[Seq[String]]): Unit = {
+    val missing = named match {
+      case Some(ns) => ns.filterNot(st.files.toSet).take(20)
+      case None => coords.select(col(PosFileCol)).distinct()
+        .join(listedFiles(spark, table, st), Seq(PosFileCol), "left_anti")
+        .limit(20).collect().map(_.getString(0)).toSeq
+    }
+    if (missing.nonEmpty)
+      throw new java.util.ConcurrentModificationException(
+        s"positional delete of $table names files absent from " +
+          s"snapshot v${st.version} (rewritten since the identity " +
+          s"read?): ${missing.mkString(", ")} — re-derive the " +
+          "coordinates from a fresh readWithRowIdentity, or pass " +
+          "requirePresent=false to drop stale entries")
+  }
+
+  /** `st`'s data files as one table-relative `_gfile` column. */
+  private def listedFiles(spark: SparkSession, table: String,
+                          st: State): DataFrame =
+    relToAbs(spark, table, st.files).select(col("_grel").as(PosFileCol))
 
   /** POSITIONAL (deletion-vector) UPDATE: one commit appends the
     * updated rows and records a positional delete of the originals by
@@ -4133,8 +4169,7 @@ object TxnTable {
                          cond: DataFrame => org.apache.spark.sql.Column,
                          setOf: DataFrame =>
                            Map[String, org.apache.spark.sql.Column]): Long =
-    upsertMoR(spark, table, "update", (_, v) => {
-      val st = stateOf(spark, table, v)
+    morCommit(spark, table, "update") { st =>
       val snap = readIdentityOf(spark, table, st)
       val set = setOf(snap)
       val fields = st.schema.get.fields.toIndexedSeq
@@ -4158,9 +4193,9 @@ object TxnTable {
         .unionByName(
           updated.withColumn(ChangeTypeCol, lit("update_postimage")))
       Some(MorWrite(PosDelKeyCols,
-        matched.select(col(PosFileCol), col(PosOrdCol)),
+        matched.select(col(PosFileCol), col(PosOrdCol)).distinct(),
         Some(updated), Some(changes)))
-    })
+    }
 
   /** POSITIONAL update FROM A SOURCE FRAME: rows whose `keyCols` tuple
     * matches an `updates` row take that row's non-key columns (cast to
@@ -4181,8 +4216,7 @@ object TxnTable {
     * nothing are ignored (they name keys this table doesn't have). */
   def updateFromPos(spark: SparkSession, table: String,
                     updates: DataFrame, keyCols: Seq[String]): Long =
-    upsertMoR(spark, table, "update", (_, v) => {
-      val st = stateOf(spark, table, v)
+    morCommit(spark, table, "update") { st =>
       val snap = readIdentityOf(spark, table, st)
       val fields = st.schema.get.fields.toIndexedSeq
       keyCols.foreach(c => require(fields.exists(_.name == c),
@@ -4217,9 +4251,9 @@ object TxnTable {
         .unionByName(
           updated.withColumn(ChangeTypeCol, lit("update_postimage")))
       Some(MorWrite(PosDelKeyCols,
-        matched.select(col(PosFileCol), col(PosOrdCol)),
+        matched.select(col(PosFileCol), col(PosOrdCol)).distinct(),
         Some(updated), Some(changes)))
-    })
+    }
 
   /** ONE-COMMIT positional REPLACE: positionally delete the rows
     * `selector` picks from the pinned identity read and append
@@ -4239,9 +4273,7 @@ object TxnTable {
                        selector: DataFrame => DataFrame,
                        appended: DataFrame,
                        optimizedWrite: Boolean = false): Long =
-    upsertMoR(spark, table, "replace", optimizedWrite = optimizedWrite,
-      compute = (_, v) => {
-      val st = stateOf(spark, table, v)
+    morCommit(spark, table, "replace", optimizedWrite = optimizedWrite) { st =>
       val snap = readIdentityOf(spark, table, st)
       val fields = st.schema.getOrElse(throw new IllegalStateException(
         s"$table predates the schema log")).fields.toIndexedSeq
@@ -4259,168 +4291,51 @@ object TxnTable {
             col(s"`${f.name}`").cast(f.dataType).as(f.name)): _*)
           .withColumn(ChangeTypeCol, lit("insert")))
       Some(MorWrite(PosDelKeyCols,
-        matched.select(col(PosFileCol), col(PosOrdCol)),
+        matched.select(col(PosFileCol), col(PosOrdCol)).distinct(),
         Some(appended), Some(changes)))
-    })
+    }
 
-  /** Row count AND named-file set of a positional sidecar in ONE Spark
-    * job (the commit path previously paid two — a count() plus a
-    * distinct-collect of the file names — per MoR delete/replace
-    * commit). Group-by-file with a limit+1 collect: when every group
-    * arrived, the exact total is the sum of the group counts and the
-    * names are complete; at limit+1 groups (a corpus-wide vector,
-    * `graft.txn.posNamedLimit` default 1024) the names are dropped —
-    * readers then fall back to version-gate-only subtraction, which is
-    * always sound — and the rare exact-count fallback job runs.
-    * Semantics are identical to the two-job spelling by construction. */
-  private def sidecarSummary(spark: SparkSession, side: DataFrame)
-      : (Long, Option[Seq[String]]) = {
+  /** The sidecar leg of a merge-on-read commit: write `tuples` —
+    * DISTINCT key tuples, or `_gfile`/`_gpos` coordinates when
+    * `keyCols` is [[PosDelKeyCols]] — as one file under `<dir>/_del`,
+    * and return its files, its row count and, for a positional vector,
+    * the data files it names. Equality tuples take their count from the
+    * write tasks and record no names. A positional vector's count AND
+    * names come from ONE job over the kilobyte sidecar: group by file
+    * with a limit+1 collect. When every group arrived, the total is the
+    * sum of the group counts and the names are complete; at limit+1
+    * groups (a corpus-wide vector, `graft.txn.posNamedLimit`, default
+    * 1024) the names are dropped — readers then fall back to
+    * version-gate-only subtraction, which is always sound — and an
+    * exact-count job runs. */
+  private def writeSidecar(spark: SparkSession, table: String, dir: String,
+                           keyCols: Seq[String], tuples: DataFrame)
+      : (Seq[String], Long, Option[Seq[String]]) = {
+    val written = writeUnder(
+      tuples.select(sidecarCols(keyCols): _*).coalesce(1), table, dir, "_del")
+    val files = written.map(_._1)
+    if (keyCols != PosDelKeyCols || files.isEmpty)
+      return (files, written.map(_._2).sum, None)
+    val side = posSidecar(spark, table, files)
     val limit = spark.conf.get("graft.txn.posNamedLimit", "1024").toInt
-    if (limit <= 0) return (side.count(), None)
-    val groups = side.groupBy(col(PosFileCol))
-      .agg(count(lit(1)).as("_gn"))
-      .limit(limit + 1).collect()
-    if (groups.length > limit) (side.count(), None)
-    else (groups.map(_.getAs[Long]("_gn")).sum,
+    val groups =
+      if (limit <= 0) Array.empty[org.apache.spark.sql.Row]
+      else side.groupBy(col(PosFileCol)).agg(count(lit(1)).as("_gn"))
+        .limit(limit + 1).collect()
+    if (limit <= 0 || groups.length > limit) (files, side.count(), None)
+    else (files, groups.map(_.getAs[Long]("_gn")).sum,
       Some(groups.map(_.getString(0)).toSeq.sorted))
   }
 
-  private def deletePosCore(spark: SparkSession, table: String,
-                            compute: DataFrame => DataFrame,
-                            positionsOnly: Option[DataFrame] = None,
-                            requirePresent: Boolean = true,
-                            txn: Option[(String, Long)] = None)
-      : Long = {
-    val ctx = fc(spark)
-    // exactly-once per (appId, batchId): the marker commits ATOMICALLY
-    // with the deletion vector, and a replayed batch is recognized by
-    // the marker — NOT by re-matching, which would wrongly erase rows
-    // admitted after the original application
-    def appliedIn(s: State): Boolean = txn.exists { case (a, b) =>
-      s.txns.get(a).exists(_ >= b) }
-    def withTxn(s: State): State = s.copy(txns =
-      s.txns ++ txn.map { case (a, b) =>
-        a -> math.max(b, s.txns.getOrElse(a, Long.MinValue)) })
-    // set when the plan's publish carries a vector: the auto-coalesce
-    // check runs after a published positional commit only
-    var vector = false
-    def plan(st0: State): Attempt = {
-      val st = st0.present(table)
-      vector = false
-      if (appliedIn(st)) return Done(st.version)
-      // CDF off + caller-supplied coordinates: pure-metadata commit, no
-      // data scan — the coordinates go to the sidecar as written and
-      // are validated against the manifest from the sidecar read-back
-      // below (no second pass over the caller's frame). Otherwise:
-      // pinned identity read with live deletes applied, so an
-      // already-deleted row is never re-recorded (or re-fed to CDF).
-      // With CDF on, `matched` feeds TWO actions (the sidecar write
-      // and the change-feed write) — materialize it once so a
-      // nondeterministic selection (sampling, ranking with ties)
-      // cannot record coordinates that diverge from the CDC rows.
-      val metadataOnly = positionsOnly.filter(_ => !st.cdf)
-      lazy val matched = {
-        val m = compute(readIdentityOf(spark, table, st))
-        if (st.cdf) m.localCheckpoint() else m
-      }
-      // concurrent-rewrite staleness: caller-held coordinates naming a
-      // file the CURRENT manifest no longer lists (OPTIMIZE/REORG/
-      // copy-on-write landed since the identity read) mean those rows
-      // now live under NEW coordinates — silently dropping the entries
-      // would no-op part of the delete with a successful return. With
-      // CDF on the snapshot semi-join would drop them before the
-      // sidecar, so probe the caller's frame directly.
-      if (requirePresent && st.cdf && positionsOnly.isDefined) {
-        val knownDf = relToAbs(spark, table, st.files)
-          .select(col("_grel").as(PosFileCol))
-        val missing = positionsOnly.get.select(col(PosFileCol)).distinct()
-          .join(knownDf, Seq(PosFileCol), "left_anti")
-          .limit(20).collect().map(_.getString(0))
-        if (missing.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"positional delete of $table names files absent from " +
-              s"snapshot v${st.version} (rewritten since the identity " +
-              s"read?): ${missing.mkString(", ")} — re-derive the " +
-              "coordinates from a fresh readWithRowIdentity, or pass " +
-              "requirePresent=false to drop stale entries")
-      }
-      val tuples = (metadataOnly match {
-        case Some(pos) if requirePresent => pos.distinct()
-        case Some(pos) => // opt-out: silently drop stale coordinates
-          val known = relToAbs(spark, table, st.files)
-            .select(col("_grel").as(PosFileCol))
-          pos.join(known, Seq(PosFileCol), "left_semi").distinct()
-        case None => matched.select(col(PosFileCol), col(PosOrdCol))
-      }).coalesce(1)
-      val dataDir = freshDir()
-      val delFiles = writeUnder(tuples, table, dataDir, "_del").map(_._1)
-      val side = spark.read.schema(PosDelSchema)
-        .parquet(delFiles.map(f => s"$table/$f"): _*)
-      // count + named files in ONE job over the kilobyte sidecar
-      val (n, named) = sidecarSummary(spark, side)
-      if (n == 0L) { // nothing matched
-        ctx.delete(new Path(s"$table/$dataDir"), true)
-        if (txn.isEmpty) return Done(st.version) // provable no-op
-        // EXACTLY-ONCE consumers record the batch even when it matched
-        // nothing: without the marker, a crash-replay arriving AFTER a
-        // later admission of matching rows would re-match and wrongly
-        // erase them — the marker-only commit closes that window; it
-        // rebases onto any snapshot that has not applied the batch
-        return Publish(Change("txn-marker", header = withTxn),
-          rebases = fresh => !appliedIn(fresh))
-      }
-      // `named` (from the sidecarSummary job above): (a) the strict
-      // staleness gate for metadata-only commits, (b) recorded in the
-      // manifest so readers confine the identity subtraction — and its
-      // fast-path loss — to exactly these files (see DelMeta.named)
-      if (requirePresent && metadataOnly.isDefined) {
-        val missing = (named match {
-          case Some(ns) => ns.filterNot(st.files.toSet)
-          case None => // over-limit vector: probe distributed
-            val knownDf = relToAbs(spark, table, st.files)
-              .select(col("_grel").as(PosFileCol))
-            side.select(col(PosFileCol)).distinct()
-              .join(knownDf, Seq(PosFileCol), "left_anti")
-              .limit(20).collect().map(_.getString(0)).toSeq
-        }).take(20)
-        if (missing.nonEmpty) {
-          ctx.delete(new Path(s"$table/$dataDir"), true)
-          throw new java.util.ConcurrentModificationException(
-            s"positional delete of $table names files absent from " +
-              s"snapshot v${st.version} (rewritten since the identity " +
-              s"read?): ${missing.mkString(", ")} — re-derive the " +
-              "coordinates from a fresh readWithRowIdentity, or pass " +
-              "requirePresent=false to drop stale entries")
-        }
-      }
-      val cdcAdd =
-        if (st.cdf)
-          writeChangeData(
-            matched.drop(PosFileCol, PosOrdCol)
-              .withColumn(ChangeTypeCol, lit("delete")), table, dataDir)
-        else Nil
-      // the gate pins the delete to its READ snapshot, exactly like the
-      // equality flavor — positions can only name files that existed
-      val gate = st.version + 1L
-      vector = true
-      Publish(Change("delete", cdc = cdcAdd,
-          dels = delFiles.map(f =>
-            DelMeta(f, gate, PosDelKeyCols, n, named = named.getOrElse(Nil))),
-          header = s => withTxn(s).copy(mor = true)),
-        Seq(dataDir),
-        // a concurrent replica applied the SAME (appId, batchId): its
-        // commit carries this batch's effect — applying ours on top
-        // would double-delete, so the plan settles instead. Interleaved
-        // appends: exempt via the gate; interleaved deletes of either
-        // flavor: both sets apply. Removed files or a schema change
-        // invalidate the recorded coordinates — recompute.
-        rebases = fresh => !appliedIn(fresh) && onlyGrew(st, fresh) &&
-          st.dels.forall(fresh.dels.contains))
-    }
-    val v = Log.commit(spark, table, "delete")(plan)
-    if (vector) maybeCoalescePosVectors(spark, table)
-    v
-  }
+  /** A sidecar's columns: the key tuple, or a vector's coordinates. */
+  private def sidecarCols(keyCols: Seq[String]): Seq[org.apache.spark.sql.Column] =
+    if (keyCols == PosDelKeyCols) Seq(col(PosFileCol), col(PosOrdCol))
+    else keyCols.map(k => col(s"`$k`"))
+
+  /** Read positional sidecar files (table-relative) as coordinates. */
+  private def posSidecar(spark: SparkSession, table: String,
+                         files: Seq[String]): DataFrame =
+    spark.read.schema(PosDelSchema).parquet(files.map(f => s"$table/$f"): _*)
 
   /** AUTO-COALESCE trigger for positional sidecars: when the LIVE
     * vector count reaches `graft.txn.posCoalesceAt` (default 8) — or
@@ -4497,16 +4412,13 @@ object TxnTable {
         if (live.size < 2) (live, None)
         else {
           val liveFiles = spark.createDataset(st.files).toDF(PosFileCol)
-          val merged = live.map(d =>
-              spark.read.schema(PosDelSchema).parquet(s"$table/${d.file}"))
+          val merged = live.map(d => posSidecar(spark, table, Seq(d.file)))
             .reduce(_ unionByName _)
             .join(liveFiles, Seq(PosFileCol), "left_semi")
-            .distinct().coalesce(1)
+            .distinct()
           val dir = freshDir()
-          val delFiles = writeUnder(merged, table, dir, "_del").map(_._1)
-          val side = spark.read.schema(PosDelSchema)
-            .parquet(delFiles.map(f => s"$table/$f"): _*)
-          val (n, named) = sidecarSummary(spark, side)
+          val (delFiles, n, named) =
+            writeSidecar(spark, table, dir, PosDelKeyCols, merged)
           // n == 0: every live vector's pairs name rewritten-away
           // files — collectively dead; drop them, commit no sidecar
           if (n == 0L) {
@@ -4531,9 +4443,12 @@ object TxnTable {
 
   /** What an [[upsertMoR]] `compute` hands back, all derived from the
     * pinned snapshot it received:
-    *   - `keyCols`: the equality-delete key columns
-    *   - `tuples`: the DISTINCT `keyCols` tuples of every superseded
-    *     target row (the rows the commit logically removes)
+    *   - `keyCols`: the equality-delete key columns ([[PosDelKeyCols]]
+    *     for a positional vector)
+    *   - `tuples`: the `keyCols` tuples (or `_gfile`/`_gpos`
+    *     coordinates) of every superseded target row — the rows the
+    *     commit logically removes. [[upsertMoR]] deduplicates them; the
+    *     internal callers of [[morCommit]] hand over distinct ones
     *   - `appended`: the replacement/new rows to append as ordinary
     *     data files (None = pure delete), table schema
     *   - `changes`: row-level change feed (written iff CDF enabled)
@@ -4580,125 +4495,142 @@ object TxnTable {
     * commits changed, so re-publishing could resurrect their deletions. */
   def upsertMoR(spark: SparkSession, table: String, op: String,
                 compute: (DataFrame, Long) => Option[MorWrite],
-                optimizedWrite: Boolean = false): Long = {
-    val ctx = fc(spark)
-    // set when the plan's publish carries a positional vector: the
-    // auto-coalesce check runs after such a commit only
-    var vector = false
-    def plan(st0: State): Attempt = {
-      val st = st0.present(table)
-      vector = false
-      val schema = st.schemaOf(table)
+                optimizedWrite: Boolean = false): Long =
+    morCommit(spark, table, op, optimizedWrite = optimizedWrite) { st =>
       val snap = spark.read.format("graft")
         .option("versionAsOf", st.version.toString).load(table)
-      compute(snap, st.version) match {
-        case None => Done(st.version)
-        case Some(mw) =>
-          // positional tuples (keyCols == [__pos__]) name rows by
-          // coordinates, not by schema columns
-          if (mw.keyCols != PosDelKeyCols)
-            mw.keyCols.foreach(k => require(schema.fieldNames.contains(k),
-              s"merge-on-read upsert key '$k' is not a column of $table"))
-          // appended rows are NEW data: the constraint gate applies.
-          // MoR merge can INSERT rows — refused on identity tables
-          // unless the lowering declared it minted/inherited the values
-          // itself (GraftDml.runMerge does); MoR update re-inserts
-          // modified rows carrying their ids and passes. Generated
-          // columns recompute over the appended rows: staleness repair
-          // for updates, fill for merge inserts.
-          if (op == "merge" && mw.appended.isDefined && !mw.identityHandled)
-            refuseIdentity(st.schema, table, "MERGE")
-          val appendedG =
-            mw.appended.map(recomputeGenerated(_, st.schema))
-          appendedG.foreach(enforceChecks(_, table, st.checks))
-          // minted identity values publish their high-water mark
-          // atomically with the rows that consumed it — the declaration
-          // itself carries verbatim from the pinned schema, only the
-          // mark moves
-          val pubSchema = mw.identityHwm.flatMap(h =>
-            identityColumn(schema).map(d => patchIdentityHwm(schema, d.col, h)))
-            .getOrElse(schema)
-          // one tuple-sidecar leg: write → list (+ a one-job summary of
-          // the named files for positional vectors)
-          def writeTuples(dir: String)
-              : (Seq[String], Long, Option[Seq[String]]) = {
-            val written = writeUnder(mw.tuples.select(
-              (if (mw.keyCols == PosDelKeyCols)
-                Seq(col(PosFileCol), col(PosOrdCol))
-              else mw.keyCols.map(k => col(s"`$k`"))): _*)
-              .distinct().coalesce(1), table, dir, "_del")
-            val fs = written.map(_._1)
-            // count + named files in ONE job over the kilobyte sidecar
-            // (positional vectors only; equality tuples record no names
-            // and take their count from the write tasks)
-            if (mw.keyCols == PosDelKeyCols && fs.nonEmpty) {
-              val (n0, nm) = sidecarSummary(spark, spark.read
-                .schema(PosDelSchema).parquet(fs.map(f => s"$table/$f"): _*))
-              (fs, n0, nm)
-            } else (fs, written.map(_._2).sum, None)
-          }
-          val (dataDir, newFiles, newStats, newBlooms, newRows,
-              sideDir, delFiles, n, named) =
-            appendedG match {
-              case Some(df) =>
-                val trackedCols = st.stats.values.flatten.map(_.col).toSet
-                  .intersect(df.columns.toSet).toSeq.sorted
-                val trackedBlooms =
-                  st.bloomCols.intersect(df.columns.toSet).toSeq.sorted
-                // the appended-rows write and the tuple sidecar are
-                // INDEPENDENT jobs — land them in separate w= dirs so
-                // they overlap (guide §2.6); the manifest references
-                // both, and a sidecar-only w= dir is already the
-                // deletePosCore shape every reader/vacuum path handles
-                val sd = freshDir()
-                val (w, t) = graft.ops.Par.both(spark)(
-                  writeData(df, table, trackedCols, trackedBlooms,
-                    st.partCols, optimized = optimizedWrite,
-                    declared = Some(schema)),
-                  writeTuples(sd))
-                (w._1, w._2, w._3, w._4, w._5, Some(sd), t._1, t._2, t._3)
-              case None =>
-                // no data leg: the sidecar keeps the single-dir shape
-                val dd = freshDir()
-                val t = writeTuples(dd)
-                (dd, Nil, Map.empty[String, Seq[FileStat]],
-                  Map.empty[String, Seq[BloomMeta]], Map.empty[String, Long],
-                  None, t._1, t._2, t._3)
-            }
-          def dropDirs(): Unit = {
-            ctx.delete(new Path(s"$table/$dataDir"), true)
-            sideDir.foreach(d => ctx.delete(new Path(s"$table/$d"), true))
-            ()
-          }
-          // provable no-op: no tuples AND no appended rows (an empty
-          // append may still have produced zero-row part files)
-          if (n == 0L && newFiles.forall(f => newRows.getOrElse(f, 0L) == 0L)) {
-            dropDirs()
-            return Done(st.version)
-          }
-          val cdcAdd =
-            if (st.cdf) mw.changes.toSeq.flatMap(writeChangeData(_, table, dataDir))
-            else Nil
-          val gate = st.version + 1L
-          val dels =
-            if (n == 0L) Nil
-            else delFiles.map(f =>
-              DelMeta(f, gate, mw.keyCols, n, named = named.getOrElse(Nil)))
-          vector = mw.keyCols == PosDelKeyCols
-          Publish(Change(op, added = newFiles, stats = newStats,
-              blooms = newBlooms, rows = newRows, dels = dels, cdc = cdcAdd,
-              prune = true, header = _.copy(schema = Some(pubSchema), mor = true)),
-            Seq(dataDir) ++ sideDir,
-            // only interleaved PURE APPENDS rebase: same file set plus
-            // additions, same schema, and IDENTICAL delete entries —
-            // an interleaved delete's tuples would not subtract from
-            // this commit's appended rows (gate-exempt), silently
-            // resurrecting them
-            rebases = fresh => onlyGrew(st, fresh) && fresh.dels == st.dels)
+      compute(snap, st.version).map { mw =>
+        // coordinates name rows by file and ordinal, not by columns
+        if (mw.keyCols != PosDelKeyCols)
+          mw.keyCols.foreach(k => require(st.schemaOf(table).fieldNames.contains(k),
+            s"merge-on-read key '$k' is not a column of $table"))
+        mw.copy(tuples = mw.tuples.select(sidecarCols(mw.keyCols): _*).distinct())
       }
     }
-    val v = Log.commit(spark, table, op)(plan)
-    if (vector) maybeCoalescePosVectors(spark, table)
+
+  /** THE MERGE-ON-READ COMMIT CORE — the one body every deletion-vector
+    * and equality-delete commit goes through (only [[coalescePosVectors]]'
+    * own vector merge commits elsewhere). `compute` derives a
+    * [[MorWrite]] from the pinned snapshot; the core then, once each:
+    *   - writes the appended rows (if any) and the delete sidecar
+    *     ([[writeSidecar]]) as two independent jobs;
+    *   - drops a provable no-op: no tuples and no appended rows — except
+    *     that an exactly-once `txn` batch still commits its marker, so a
+    *     crash-replay arriving after matching rows were lawfully
+    *     RE-ADMITTED cannot re-match and erase them;
+    *   - with `provesListed`, refuses a positional vector naming a file
+    *     the snapshot does not list ([[refuseUnlisted]]);
+    *   - writes the change feed, and gates the delete at the READ
+    *     snapshot's successor: it subtracts only from files that existed
+    *     when it was computed, never from the commit's own appends;
+    *   - publishes with ONE rebase rule: a lost CAS re-publishes only
+    *     over interleaved PURE APPENDS — same files plus additions, same
+    *     schema, identical delete entries — and never once the fresh
+    *     snapshot applied the same `txn` batch. Anything else recomputes:
+    *     an interleaved delete already removed rows this commit's change
+    *     feed records, and would not subtract from its appended rows;
+    *   - runs the auto-coalesce check when what it published carries a
+    *     positional vector.
+    * The txn marker (`appId` → highest `batchId`) commits atomically with
+    * the change, and a batch the pinned snapshot already applied settles
+    * without recomputing. */
+  private def morCommit(spark: SparkSession, table: String, op: String,
+                        txn: Option[(String, Long)] = None,
+                        optimizedWrite: Boolean = false,
+                        provesListed: State => Boolean = _ => false)
+                       (compute: State => Option[MorWrite]): Long = {
+    val ctx = fc(spark)
+    def appliedIn(s: State): Boolean = txn.exists { case (a, b) =>
+      s.txns.get(a).exists(_ >= b) }
+    def withTxn(s: State): State = s.copy(txns =
+      s.txns ++ txn.map { case (a, b) =>
+        a -> math.max(b, s.txns.getOrElse(a, Long.MinValue)) })
+    def noop(st: State): Attempt =
+      if (txn.isEmpty) Done(st.version)
+      else Publish(Change("txn-marker", header = withTxn),
+        rebases = fresh => !appliedIn(fresh))
+    def plan(st0: State): Attempt = {
+      val st = st0.present(table)
+      if (appliedIn(st)) return Done(st.version)
+      val mw = compute(st) match {
+        case Some(w) => w
+        case None => return noop(st)
+      }
+      val schema = st.schemaOf(table)
+      // appended rows are NEW data: the constraint gate applies.
+      // MoR merge can INSERT rows — refused on identity tables
+      // unless the lowering declared it minted/inherited the values
+      // itself (GraftDml.runMerge does); MoR update re-inserts
+      // modified rows carrying their ids and passes. Generated
+      // columns recompute over the appended rows: staleness repair
+      // for updates, fill for merge inserts.
+      if (op == "merge" && mw.appended.isDefined && !mw.identityHandled)
+        refuseIdentity(st.schema, table, "MERGE")
+      val appendedG = mw.appended.map(recomputeGenerated(_, st.schema))
+      appendedG.foreach(enforceChecks(_, table, st.checks))
+      // minted identity values publish their high-water mark
+      // atomically with the rows that consumed it — the declaration
+      // itself carries verbatim from the pinned schema, only the
+      // mark moves
+      val pubSchema = mw.identityHwm.flatMap(h =>
+        identityColumn(schema).map(d => patchIdentityHwm(schema, d.col, h)))
+        .getOrElse(schema)
+      val (dataDir, newFiles, newStats, newBlooms, newRows,
+          sideDir, (delFiles, n, named)) =
+        appendedG match {
+          case Some(df) =>
+            val trackedCols = st.stats.values.flatten.map(_.col).toSet
+              .intersect(df.columns.toSet).toSeq.sorted
+            val trackedBlooms =
+              st.bloomCols.intersect(df.columns.toSet).toSeq.sorted
+            // the appended-rows write and the sidecar are INDEPENDENT
+            // jobs — land them in separate w= dirs so they overlap
+            // (guide §2.6); the manifest references both
+            val sd = freshDir()
+            val (w, t) = graft.ops.Par.both(spark)(
+              writeData(df, table, trackedCols, trackedBlooms,
+                st.partCols, optimized = optimizedWrite,
+                declared = Some(schema)),
+              writeSidecar(spark, table, sd, mw.keyCols, mw.tuples))
+            (w._1, w._2, w._3, w._4, w._5, Some(sd), t)
+          case None =>
+            // no data leg: the sidecar keeps the single-dir shape
+            val dd = freshDir()
+            (dd, Nil, Map.empty[String, Seq[FileStat]],
+              Map.empty[String, Seq[BloomMeta]], Map.empty[String, Long],
+              None, writeSidecar(spark, table, dd, mw.keyCols, mw.tuples))
+        }
+      val dirs = Seq(dataDir) ++ sideDir
+      def dropDirs(): Unit =
+        dirs.foreach(d => ctx.delete(new Path(s"$table/$d"), true))
+      // no tuples AND no appended rows (an empty append may still have
+      // produced zero-row part files)
+      if (n == 0L && newFiles.forall(f => newRows.getOrElse(f, 0L) == 0L)) {
+        dropDirs()
+        return noop(st)
+      }
+      if (mw.keyCols == PosDelKeyCols && provesListed(st))
+        try refuseUnlisted(spark, table, st,
+          posSidecar(spark, table, delFiles), named)
+        catch { case scala.util.control.NonFatal(e) => dropDirs(); throw e }
+      val cdcAdd =
+        if (st.cdf) mw.changes.toSeq.flatMap(writeChangeData(_, table, dataDir))
+        else Nil
+      val gate = st.version + 1L
+      val dels =
+        if (n == 0L) Nil
+        else delFiles.map(f =>
+          DelMeta(f, gate, mw.keyCols, n, named = named.getOrElse(Nil)))
+      Publish(Change(op, added = newFiles, stats = newStats,
+          blooms = newBlooms, rows = newRows, dels = dels, cdc = cdcAdd,
+          header = s => withTxn(s).copy(schema = Some(pubSchema), mor = true)),
+        dirs,
+        rebases = fresh => !appliedIn(fresh) && onlyGrew(st, fresh) &&
+          fresh.dels == st.dels)
+    }
+    val (v, published) = Log.commitPublished(spark, table, op)(plan)
+    if (published.exists(_.dels.exists(_.keyCols == PosDelKeyCols)))
+      maybeCoalescePosVectors(spark, table)
     v
   }
 
@@ -7051,7 +6983,7 @@ object TxnTable {
       val carriedSet = carried.toSet
       Publish(Change(opName, added = newFiles, stats = newStats,
           blooms = newBlooms, rows = newRows, removed = small.sorted,
-          checkpoint = checkpoint || purgeOnly, prune = true,
+          checkpoint = checkpoint || purgeOnly,
           header = h => h.copy(
             pathpart = h.keepsAdopted(small.toSet),
             dels = if (!purgeOnly) h.dels else h.dels.filter(d =>

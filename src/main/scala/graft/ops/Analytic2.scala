@@ -21,9 +21,6 @@ import graft.io.Tables
   */
 object Analytic2 {
 
-  private def viewsThen(sql: String): (SparkSession, String) => DataFrame =
-    (spark, dir) => { Tables.registerViews(spark, dir); spark.sql(sql) }
-
   // ---------------------------------------------------------------- a43
   /** The ranking/navigation window family over one keyed window: LAG /
     * LEAD / DENSE_RANK / NTILE / FIRST_VALUE / PERCENT_RANK / CUME_DIST.
