@@ -14,6 +14,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    build time (the canonical Spark mechanism), or
   *  - `GraftExtensions.install(spark)` on a live session (what Verify and
   *    the query registry use, since the driver owns session construction).
+  *
+  * Like the DML analyzer rules, the codegen parameter rule
+  * ([[graft.plans.ParamLiterals]]) exists only on the config path: a
+  * live session has no hook for columnar rules.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -69,6 +73,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // does not know; the delegating parser intercepts exactly those
     e.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
     e.injectPlannerStrategy(_ => graft.plans.GraftMaintenanceStrategy)
+    // one generated class per plan shape: primitive literals of Filter
+    // and Project become codegen parameters (a columnar rule is the one
+    // physical hook that runs before CollapseCodegenStages)
+    e.injectColumnar(_ => graft.plans.ParamLiterals.columnar)
   }
 }
 
@@ -123,9 +131,10 @@ object GraftExtensions {
   /** Idempotent registration on an existing session: native functions,
     * planner strategies for the custom operators, and the window→TopK
     * optimizer rewrite. NOTE: the SQL DML analyzer rule (UPDATE/MERGE
-    * INTO on graft tables) can NOT be added here — live sessions have
-    * no extension point for resolution rules; build the session with
-    * `spark.sql.extensions=graft.functions.GraftExtensions` to get it. */
+    * INTO on graft tables) and the codegen parameter rule can NOT be
+    * added here — live sessions have no extension point for resolution
+    * or columnar rules; build the session with
+    * `spark.sql.extensions=graft.functions.GraftExtensions` to get them. */
   def install(spark: SparkSession): Unit = {
     functions.foreach { case (ident, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)

@@ -649,11 +649,11 @@ private[io] class GraftScanBuilder(
   // same pruner per batch, so filtered streams skip identically)
   private lazy val pruner = new StatsPruner(dataSchema, meta.stats)
 
-  /** Files surviving stats pruning under ALL pushed filters -- the
-    * universe both build() and the metadata-only aggregate planner
-    * work over. */
+  /** Files surviving stats pruning under ALL pushed filters, files
+    * recorded with 0 rows dropped -- the universe both build() and the
+    * metadata-only aggregate planner work over. */
   private lazy val statsChosen: Seq[String] =
-    universe.filter(f => pushed.forall(pruner.mayMatch(f, _)))
+    universe.filter(TxnTable.statsMayMatch(meta.rows, pruner, pushed.toSeq))
 
   /** EXACT FILTER HANDLING: a pushed filter that every surviving file
     * PROVABLY fully-matches (StatsPruner.mustMatch) needs no row-level

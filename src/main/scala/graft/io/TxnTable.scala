@@ -1433,10 +1433,11 @@ object TxnTable {
       bloomCols.distinct.filter(c => typeAt(schema, c).exists(bloomSupported)))
 
   /** Write `shaped` as parquet under `<table>/<dir>` in ONE Spark job
-    * and return its table-relative files (sorted) with what the write
-    * tasks aggregated per file: row counts always (they're what makes
-    * COUNT(*) metadata-only), plus min/max/nulls of each `tracked`
-    * column and the bloom bitset of each `bloomTracked` column.
+    * and return its table-relative files that hold rows (sorted; empty
+    * ones are deleted) with what the write tasks aggregated per file:
+    * row counts always (they're what makes COUNT(*) metadata-only),
+    * plus min/max/nulls of each `tracked` column and the bloom bitset
+    * of each `bloomTracked` column.
     *
     * The tracker's expressions come from `frame.select(...)`'s ANALYZED
     * projection — normExpr's casts carry the session time zone — bound
@@ -1476,8 +1477,8 @@ object TxnTable {
           s"stats projection did not analyze to a Project: ${p.nodeName}")
       }
     val out = new Path(s"$table/$dir")
-    val base = out.getFileSystem(spark.sessionState.newHadoopConf())
-      .makeQualified(out).toUri.getPath
+    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+    val base = fs.makeQualified(out).toUri.getPath
     val tracker = new WriteStatsTracker(base, bound.take(tracked.size),
       bound.drop(tracked.size), bloomBits(spark), bloomHashes(spark))
     org.apache.spark.sql.GraftBridge.writeParquet(
@@ -1489,7 +1490,13 @@ object TxnTable {
         s"write of $table/$dir: the write tasks reported " +
           s"${aggs.keySet.toSeq.sorted.mkString(", ")} but the dir " +
           s"lists ${listed.mkString(", ")}")
-    listed.map(f => f -> aggs(f))
+    // Spark writes partition 0's file even when it holds no rows (it
+    // carries the schema): no such file is committed — the manifest
+    // keeps the schema, and a kept empty file has no stats or bloom, so
+    // every later file choice would scan it
+    val (empty, kept) = listed.partition(f => aggs(f).rows == 0L)
+    empty.foreach(f => fs.delete(new Path(s"$table/$f"), false))
+    kept.map(f => f -> aggs(f))
   }
 
   /** Manifest stats and row counts of written files, and the bloom
@@ -3316,16 +3323,26 @@ object TxnTable {
     * chooses files for filters — readEquals/readRangeOn, the key-scoped
     * rewrite, the V1 read's keep-callback, and the DSv2 scan's planning
     * and runtime filters: the files of `files` the manifest cannot
-    * prove hold no row matching every filter. Three proofs, cheapest
-    * first: `pruner.mayMatch` per filter (min/max, null counts,
-    * prefixes), then [[keyFiles]]' bucket ids and bloom sidecars. The
-    * caller's `pruner` (over `st`'s stats) is the one it also asks for
-    * coverage proofs, so each decision builds one. */
+    * prove hold no row matching every filter. Four proofs, cheapest
+    * first: a recorded row count of 0 (tables written before commits
+    * dropped empty files still list them), `pruner.mayMatch` per filter
+    * (min/max, null counts, prefixes), then [[keyFiles]]' bucket ids
+    * and bloom sidecars. The caller's `pruner` (over `st`'s stats) is
+    * the one it also asks for coverage proofs, so each decision builds
+    * one. */
   private[io] def chooseFiles(spark: SparkSession, table: String, st: State,
                               pruner: StatsPruner, filters: Seq[Filter],
                               files: Seq[String]): Seq[String] =
     keyFiles(spark, table, st, pruner, filters,
-      files.filter(f => filters.forall(pruner.mayMatch(f, _))))
+      files.filter(statsMayMatch(st.rows, pruner, filters)))
+
+  /** The first two proofs of [[chooseFiles]] for one file — no recorded
+    * row count of 0, no filter `pruner` rules out. The DSv2 scan's
+    * planning runs them on its own, as it shares their result with
+    * metadata-only aggregate planning. */
+  private[io] def statsMayMatch(rows: Map[String, Long], pruner: StatsPruner,
+                                filters: Seq[Filter])(f: String): Boolean =
+    !rows.get(f).contains(0L) && filters.forall(pruner.mayMatch(f, _))
 
   /** The key steps of [[chooseFiles]] over `files` its stats step
     * already kept: the bucket ids of the filters' equality constraints
@@ -4192,8 +4209,9 @@ object TxnTable {
         .withColumn(ChangeTypeCol, lit("update_preimage"))
         .unionByName(
           updated.withColumn(ChangeTypeCol, lit("update_postimage")))
+      // one identity row per coordinate: already distinct
       Some(MorWrite(PosDelKeyCols,
-        matched.select(col(PosFileCol), col(PosOrdCol)).distinct(),
+        matched.select(col(PosFileCol), col(PosOrdCol)),
         Some(updated), Some(changes)))
     }
 
@@ -4250,8 +4268,10 @@ object TxnTable {
         .withColumn(ChangeTypeCol, lit("update_preimage"))
         .unionByName(
           updated.withColumn(ChangeTypeCol, lit("update_postimage")))
+      // one identity row per coordinate, joined to at most one
+      // `updates` row (unique per key): already distinct
       Some(MorWrite(PosDelKeyCols,
-        matched.select(col(PosFileCol), col(PosOrdCol)).distinct(),
+        matched.select(col(PosFileCol), col(PosOrdCol)),
         Some(updated), Some(changes)))
     }
 
@@ -4603,9 +4623,8 @@ object TxnTable {
       val dirs = Seq(dataDir) ++ sideDir
       def dropDirs(): Unit =
         dirs.foreach(d => ctx.delete(new Path(s"$table/$d"), true))
-      // no tuples AND no appended rows (an empty append may still have
-      // produced zero-row part files)
-      if (n == 0L && newFiles.forall(f => newRows.getOrElse(f, 0L) == 0L)) {
+      // no tuples AND no appended rows (a write commits no empty file)
+      if (n == 0L && newFiles.isEmpty) {
         dropDirs()
         return noop(st)
       }

@@ -141,24 +141,6 @@ class BloomSkipSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs `body` schedules (listener-counted, bus drained). */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val a = body
-      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-      (a, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   // 1.7e15 is past 2^50 but inside 2^53, where a long and its
   // normalized double still agree — the epoch-microsecond key range
   Seq(7L, 1700000000000000L).foreach { key =>
@@ -172,7 +154,7 @@ class BloomSkipSpec extends AnyFunSuite {
           Seq((1L, 3L), (2L, 4L)).toDF("k", "v").coalesce(1), table,
           statsCols = Seq("k"))
         val other = TxnTable.snapshotFiles(spark, table, v2).filterNot(covered.toSet)
-        val (v3, jobs) = jobsOf(TxnTable.deleteEquals(spark, table, "k", key))
+        val (v3, Spec.Counts(jobs, _)) = Spec.counted(TxnTable.deleteEquals(spark, table, "k", key))
         assert(jobs == 0, s"a metadata-only delete ran $jobs jobs")
         assert(TxnTable.snapshotFiles(spark, table, v3) == other)
         assert(TxnTable.read(spark, table).select($"k").as[Long].collect()
@@ -190,9 +172,9 @@ class BloomSkipSpec extends AnyFunSuite {
           .repartitionByRange(8, $"k"),
         table, statsCols = Seq("k"), bloomCols = Seq("k"))
       TxnTable.readEquals(spark, table, "k", 1L)._1.count() // warm caches
-      val (eq, eqJobs) = jobsOf(TxnTable.readEquals(spark, table, "k", 250L)._1.count())
-      val (rng, rngJobs) = jobsOf(TxnTable.readRangeOn(spark, table, "k", 150L, 260L)._1.count())
-      val (_, delJobs) = jobsOf(TxnTable.deleteEquals(spark, table, "k", 250L))
+      val (eq, Spec.Counts(eqJobs, _)) = Spec.counted(TxnTable.readEquals(spark, table, "k", 250L)._1.count())
+      val (rng, Spec.Counts(rngJobs, _)) = Spec.counted(TxnTable.readRangeOn(spark, table, "k", 150L, 260L)._1.count())
+      val (_, Spec.Counts(delJobs, _)) = Spec.counted(TxnTable.deleteEquals(spark, table, "k", 250L))
       assert((eq, rng) == ((1L, 111L)))
       assert((eqJobs, rngJobs, delJobs) == ((2, 2, 1)),
         s"jobs per call: readEquals $eqJobs, readRangeOn $rngJobs, deleteEquals $delJobs")
@@ -226,6 +208,49 @@ class BloomSkipSpec extends AnyFunSuite {
       assert(scanned == dsv2($"k" >= 150L && $"k" <= 260L))
       assert(scanned < total && rows.count() == 111L)
       assert(TxnTable.readEquals(spark, table, "k", 250L)._2 < total)
+    }
+  }
+
+  test("a zero-row file an older manifest lists is never chosen") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    withZone { table =>
+      TxnTable.commitOverwrite(
+        spark.range(0L, 400L).select($"id".as("k"), ($"id" * 2L).as("v"))
+          .repartitionByRange(4, $"k"),
+        table, statsCols = Seq("k"), bloomCols = Seq("k"))
+      // what writes left before empty files were dropped: a schema-only
+      // part file in a data dir, listed with 0 rows and no stats or bloom
+      val v1 = TxnTable.latestVersion(spark, table).get
+      val files = TxnTable.snapshotFiles(spark, table, v1)
+      val empty = s"${files.head.takeWhile(_ != '/')}/part-empty.parquet"
+      val side = s"$table-empty"
+      spark.range(0L, 0L).select($"id".as("k"), $"id".as("v"))
+        .coalesce(1).write.parquet(side)
+      val fs = new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
+      val written = fs.listStatus(new Path(side)).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
+      assert(written.length == 1)
+      assert(fs.rename(written.head, new Path(s"$table/$empty")))
+      val manifest = new Path(table, f"_v$v1%05d.manifest")
+      val in = fs.open(manifest)
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+        finally in.close()
+      val out = fs.create(manifest, true)
+      try out.write((lines :+ s"$empty|0").mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally out.close()
+      assert(TxnTable.snapshotFiles(spark, table, v1).toSet == files.toSet + empty)
+
+      val (one, scanned, total) = TxnTable.readEquals(spark, table, "k", 150L)
+      assert(one.collect().map(_.getLong(1)).toSeq == Seq(300L))
+      assert(scanned == 1 && total == files.size + 1, s"$scanned of $total")
+      assert(TxnTable.readRangeOn(spark, table, "k", 0L, 399L)._2 == files.size)
+      assert(org.apache.spark.sql.GraftBridge.dsv2ScannedFiles(
+        spark.read.format("graft").load(table).filter($"k" === 150L)) == Some(1))
+      // the delete rewrites the key's file and carries the empty one
+      val v2 = TxnTable.deleteEquals(spark, table, "k", 150L)
+      assert(TxnTable.snapshotFiles(spark, table, v2).contains(empty))
+      assert(TxnTable.read(spark, table).count() == 399L)
     }
   }
 

@@ -41,25 +41,6 @@ class MergeProbeSpec extends AnyFunSuite {
     } finally walk.close()
   }
 
-  /** Spark jobs `body` schedules, counted through a listener with the
-    * bus drained on both sides. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
-
   private def withKeyLimit[A](limit: Int)(body: => A): A = {
     spark.conf.set("graft.dedup.probeKeyLimit", limit.toString)
     try body finally spark.conf.unset("graft.dedup.probeKeyLimit")
@@ -104,13 +85,12 @@ class MergeProbeSpec extends AnyFunSuite {
       copyDir(s"$zone/base", s"$zone/b")
       def run(t: String, limit: Option[Int]): Outcome = {
         val before = TxnTable.latestVersion(spark, t).get
-        val jobs = jobsOf {
+        val jobs = Spec.counted {
           limit match {
             case Some(l) => withKeyLimit(l)(TxnTable.merge(updates, t, "k"))
             case None => TxnTable.merge(updates, t, "k")
           }
-          ()
-        }
+        }._2.jobs
         val after = TxnTable.latestVersion(spark, t).get
         assert(after == before + 1, s"merge into $t must commit once")
         val removed = TxnTable.snapshotFiles(spark, t, before).toSet --
@@ -153,7 +133,7 @@ class MergeProbeSpec extends AnyFunSuite {
         TxnTable.latestVersion(spark, t).get).size == 8)
       val updates = spark.range(1000L, 1400L)
         .select(col("id").as("k"), (col("id") * 3L + 1L).as("v"))
-      val jobs = jobsOf { TxnTable.merge(updates, t, "k"); () }
+      val jobs = Spec.counted(TxnTable.merge(updates, t, "k"))._2.jobs
       // the key gather, the touched-file probe, the rewrite's write
       assert(jobs <= 3, s"$jobs jobs")
       val got = TxnTable.read(spark, t)

@@ -88,20 +88,7 @@ class MorCommitSpec extends AnyFunSuite {
       withZone { table =>
         seed(table, cdf)
         op(table)
-        val n = new java.util.concurrent.atomic.AtomicInteger(0)
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            n.incrementAndGet(); ()
-          }
-        }
-        org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          op(table)
-          org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-        } finally spark.sparkContext.removeSparkListener(listener)
-        jobs = n.get()
+        jobs = Spec.counted(op(table))._2.jobs
       }
       jobs
     }
@@ -143,11 +130,11 @@ class MorCommitSpec extends AnyFunSuite {
       // call's live delete
       assert(Seq(false, true).map(jobsPerOp) == Seq(
         Map("deleteWhereMoR" -> 3, "deleteWherePos" -> 5,
-          "deleteFromPos" -> 8, "updateWherePos" -> 9,
-          "updateFromPos" -> 13, "replacePositions" -> 9),
+          "deleteFromPos" -> 8, "updateWherePos" -> 8,
+          "updateFromPos" -> 12, "replacePositions" -> 9),
         Map("deleteWhereMoR" -> 5, "deleteWherePos" -> 7,
-          "deleteFromPos" -> 10, "updateWherePos" -> 10,
-          "updateFromPos" -> 14, "replacePositions" -> 10)))
+          "deleteFromPos" -> 10, "updateWherePos" -> 9,
+          "updateFromPos" -> 13, "replacePositions" -> 10)))
     } finally spark.conf.unset("graft.txn.posCoalesceAt")
   }
 }

@@ -73,22 +73,11 @@ class MorDeleteSpec extends AnyFunSuite {
   test("deleteWhereMoR counts its tuples in the write job, not per file") {
     withZone { (table, tn) =>
       seed(table, tn)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        TxnTable.deleteWhereMoR(spark, table, Seq("g"), t => t("g") === 2)
-        org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val jobs = Spec.counted(
+        TxnTable.deleteWhereMoR(spark, table, Seq("g"), t => t("g") === 2))._2.jobs
       // the distinct's shuffle stage and the tuple-file write, whose
       // tasks count the tuples: no job reads the tuple file back
-      assert(jobs.get() <= 2, s"${jobs.get()} jobs")
+      assert(jobs <= 2, s"$jobs jobs")
       assert(dels(table).map(_.rows) == Seq(1L))
       assert(spark.read.format("graft").load(table).count() == 80L)
     }
