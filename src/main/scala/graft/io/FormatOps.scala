@@ -748,7 +748,7 @@ object FormatOps {
 
   // ---------------------------------------------------------------- k96
   /** TYPED file stats: data skipping expressed directly on a TIMESTAMP
-    * column (epoch-normalized min/max — the retention predicate k91
+    * column (min/max in the column's own type — the retention predicate k91
     * could not serve when stats were numeric-only) and on a STRING
     * column (lexicographic min/max; Spark's UTF8 binary order equals
     * DuckDB's default collation, so the oracle agrees). Two tables,
@@ -1015,8 +1015,8 @@ object FormatOps {
     * oracle computes the same aggregates from the raw parquet, so a
     * hash match proves the metadata path returns EXACTLY what a full
     * scan would: long keys, lexicographic string min/max, and
-    * microsecond-exact timestamp reconstruction from the normalized
-    * stats all round-trip. */
+    * microsecond-exact timestamps from the typed stats all
+    * round-trip. */
   private def k101(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val zone = tmpZone("graft_k101_aggpush")
@@ -1806,15 +1806,16 @@ object FormatOps {
       val v = TxnTable.latestVersion(spark, table).get
       val stats = TxnTable.fileStats(spark, table, v)
       val files = TxnTable.snapshotFiles(spark, table, v)
-      def day(sec: String): Long = math.floorDiv(sec.toDouble.toLong, 86400L)
+      def day(us: String): Long = math.floorDiv(us.toLong, 86400000000L)
       require(files.nonEmpty && files.forall(f =>
         stats.getOrElse(f, Nil).exists(s =>
           s.col == "ts" && s.nulls == 0L && day(s.minV) == day(s.maxV))),
         "every day-partitioned file must be day-tight on ts")
-      val d10 = java.time.LocalDate.parse("2024-01-10").toEpochDay * 86400.0
-      val d12 = java.time.LocalDate.parse("2024-01-12").toEpochDay * 86400.0
+      // ts is TIMESTAMP_NTZ: its stats are local micros
+      val d10 = java.time.LocalDate.parse("2024-01-10").toEpochDay * 86400000000L
+      val d12 = java.time.LocalDate.parse("2024-01-12").toEpochDay * 86400000000L
       val expected = files.count(f => stats(f).exists(s =>
-        s.col == "ts" && s.minV.toDouble >= d10 && s.maxV.toDouble < d12))
+        s.col == "ts" && s.minV.toLong >= d10 && s.maxV.toLong < d12))
       val ranged = spark.read.format("graft").load(table)
         .filter($"ts" >= lit("2024-01-10 00:00:00").cast("timestamp_ntz") &&
           $"ts" < lit("2024-01-12 00:00:00").cast("timestamp_ntz"))
@@ -3053,10 +3054,11 @@ object FormatOps {
       val files = TxnTable.snapshotFiles(spark, table, v)
       require(files.forall(f => stats.getOrElse(f, Nil).exists(_.col == "ts")),
         "the generation source column must carry per-file stats")
-      val d10 = java.time.LocalDate.parse("2024-01-10").toEpochDay * 86400.0
-      val d12 = java.time.LocalDate.parse("2024-01-12").toEpochDay * 86400.0
+      // ts is TIMESTAMP_NTZ: its stats are local micros
+      val d10 = java.time.LocalDate.parse("2024-01-10").toEpochDay * 86400000000L
+      val d12 = java.time.LocalDate.parse("2024-01-12").toEpochDay * 86400000000L
       val expected = files.count(f => stats(f).exists(s =>
-        s.col == "ts" && s.maxV.toDouble >= d10 && s.minV.toDouble < d12))
+        s.col == "ts" && s.maxV.toLong >= d10 && s.minV.toLong < d12))
       val ranged = full
         .filter($"ts" >= lit("2024-01-10 00:00:00").cast("timestamp_ntz") &&
           $"ts" < lit("2024-01-12 00:00:00").cast("timestamp_ntz"))

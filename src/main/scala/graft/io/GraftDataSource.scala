@@ -8,6 +8,7 @@ import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -687,8 +688,8 @@ private[io] class GraftScanBuilder(
   // subset. ZERO data files are opened — on a 100 TB table the query
   // costs one manifest read. Everything is proof-gated: any file whose
   // metadata can't prove the answer (pre-rows manifest, missing stat, a
-  // multi-valued group column, a type whose normalized stat doesn't
-  // reconstruct exactly) rejects the pushdown and the query falls back
+  // multi-valued group column, a stat that does not decode exactly)
+  // rejects the pushdown and the query falls back
   // to the ordinary scan. Spark only offers the pushdown when no
   // post-scan filters remain, and graft keeps every filter residual, so
   // a filtered aggregate can never take this path.
@@ -755,36 +756,20 @@ private[io] class GraftScanBuilder(
 
   import org.apache.spark.sql.types._
 
-  /** 2^52: the integral range where a Double is provably exact. */
-  private val ExactD = 4503599627370496.0
-
-  private def exactLong(d: Double): Option[Long] =
-    if (math.abs(d) <= ExactD && d == math.rint(d)) Some(d.toLong) else None
-
-  /** Internal (catalyst) value of a num-kind stat bound for column type
-    * `dt` — None unless the normalized double provably reconstructs the
-    * exact original value. Decimals and anything unexpected refuse. */
-  private def fromNum(dt: DataType, d: Double): Option[Any] = dt match {
-    case ByteType => exactLong(d).map(_.toByte)
-    case ShortType => exactLong(d).map(_.toShort)
-    case IntegerType => exactLong(d).map(_.toInt)
-    case LongType => exactLong(d)
-    case FloatType => Some(d.toFloat) // stat was the float cast to double: exact
-    case DoubleType => Some(d)
-    case BooleanType => Some(d != 0.0)
-    case DateType => // stat = epochDay * 86400.0, exact in double
-      val days = d / 86400.0
-      if (days == math.rint(days) && math.abs(days) <= Int.MaxValue.toDouble)
-        Some(math.rint(days).toInt)
-      else None
-    case TimestampType | TimestampNTZType =>
-      // stat = micros / 1e6 rounded to double; for |µs| < 2^51 the
-      // representation error is under half a microsecond, so rint
-      // recovers the original micros exactly
-      val us = d * 1e6
-      if (math.abs(us) < ExactD / 2) Some(math.rint(us).toLong) else None
-    case _ => None
-  }
+  /** The one value file `f`'s stat on `field` proves every row holds
+    * (min equal to max, zero nulls), as a Catalyst value — the
+    * single-valued partition a group key or a storage-partitioned join
+    * key reads. A zero of either sign is 0.0, as Spark's grouping
+    * normalizes it. */
+  private def onlyValue(f: String, field: StructField): Option[Any] =
+    meta.stats.getOrElse(f, Nil).find(_.col == field.name)
+      .filter(_.nulls == 0L).flatMap(_.bounds(field.dataType))
+      .collect { case (mn, mx) if PhysicalDataType.ordering(field.dataType)
+          .equiv(mn, mx) => mn match {
+        case d: Double if d == 0.0 => 0.0
+        case x: Float if x == 0.0f => 0.0f
+        case x => x
+      }}
 
   private def columnField(
       e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
@@ -809,25 +794,10 @@ private[io] class GraftScanBuilder(
     // its recorded min/max no longer proves the live extreme
     if (files.exists(posGate.contains)) return None
     // kind "null" = proven all-null file: contributes nothing to MIN/MAX
-    val ss = files.flatMap(statOf).filterNot(_.kind == "null")
-    if (ss.isEmpty) return Some(null) // no non-null rows: MIN/MAX is NULL
-    val kind = ss.head.kind
-    if (!ss.forall(_.kind == kind)) return None
-    (kind, field.dataType) match {
-      case ("str", StringType) =>
-        // fold in UTF8 binary order — the order the per-file stats were
-        // computed in; JVM String order disagrees on supplementary-plane
-        // text and would make the "metadata-only" answer differ from the
-        // scan it replaces
-        val v =
-          if (wantMin) ss.map(_.minV).min(TxnTable.Utf8Ordering)
-          else ss.map(_.maxV).max(TxnTable.Utf8Ordering)
-        Some(org.apache.spark.unsafe.types.UTF8String.fromString(v))
-      case ("num", dt) =>
-        val v = if (wantMin) ss.map(_.min).min else ss.map(_.max).max
-        fromNum(dt, v)
-      case _ => None
-    }
+    val ss = files.flatMap(statOf)
+    if (ss.forall(_.kind == "null")) Some(null) // no non-null rows: NULL
+    else TxnTable.foldBounds(ss, field.dataType)
+      .map { case (lo, hi) => if (wantMin) lo else hi }
   }
 
   /** The aggregate cells (schema fields + values) over a file subset —
@@ -892,7 +862,6 @@ private[io] class GraftScanBuilder(
     // The aggregate then folds over the PRUNED file set — the filtered
     // files' rows are exactly the filtered rows, so `SELECT count(*)
     // FROM t WHERE p = 'x'` stays metadata-only.
-    val (_, stats, _) = aggState
     val files = statsChosen
     // group columns: single-column references whose stat proves every
     // file single-valued (min == max, zero nulls) — the partitioned-
@@ -901,22 +870,17 @@ private[io] class GraftScanBuilder(
       agg.groupByExpressions().toSeq.map(columnField)
     if (groupFields.exists(_.isEmpty)) return None
     val gFields = groupFields.flatten
-    val grouped: Option[Seq[(Seq[(String, String)], Seq[String])]] =
+    val grouped: Option[Seq[(Seq[Any], Seq[String])]] =
       if (gFields.isEmpty) Some(Seq((Nil, files)))
       else {
         val keyed = files.map { f =>
-          val key = gFields.map { gf =>
-            stats.getOrElse(f, Nil).find(_.col == gf.name) match {
-              case Some(s) if s.minV == s.maxV && s.nulls == 0L =>
-                (s.kind, s.minV)
-              case _ => return None // multi-valued / nullable / statless
-            }
-          }
-          key -> f
+          // multi-valued / nullable / statless files refuse
+          gFields.map(onlyValue(f, _).getOrElse(return None)) -> f
         }
-        Some(keyed.groupBy(_._1).toSeq
-          .map { case (k, fs) => k -> fs.map(_._2) }
-          .sortBy(_._1.map(_._2).mkString("\u0000")))
+        // grouped by stat text: boxed NaNs are never `==`, their text is
+        Some(keyed.groupBy(_._1.map(TxnTable.statText)).toSeq
+          .sortBy(_._1.mkString("\u0000"))
+          .map { case (_, kfs) => kfs.head._1 -> kfs.map(_._2) })
       }
     grouped.flatMap { gs =>
       // a group whose every row a vector deleted must NOT be emitted
@@ -934,14 +898,7 @@ private[io] class GraftScanBuilder(
         }
       }
       val rowsOut = alive.map { case (key, fs) =>
-        val gVals: Seq[Option[Any]] = key.zip(gFields).map {
-          case (("str", v), gf) if gf.dataType == StringType =>
-            Some(org.apache.spark.unsafe.types.UTF8String.fromString(v))
-          case (("num", v), gf) => fromNum(gf.dataType, v.toDouble)
-          case _ => None
-        }
-        if (gVals.exists(_.isEmpty)) return None
-        aggCells(fs, agg).map(cells => (cells.map(_._1), gVals.flatten ++ cells.map(_._2)))
+        aggCells(fs, agg).map(cells => (cells.map(_._1), key ++ cells.map(_._2)))
       }
       if (rowsOut.exists(_.isEmpty) || rowsOut.isEmpty && gFields.isEmpty) None
       else {
@@ -1036,17 +993,7 @@ private[io] class GraftScanBuilder(
         (f: String) => TxnTable.bucketIdOf(f, n, c).map(Integer.valueOf)
       case c =>
         val gf = dataSchema.find(_.name == c).getOrElse(return None)
-        (f: String) =>
-          meta.stats.getOrElse(f, Nil).find(_.col == gf.name) match {
-            case Some(s) if s.minV == s.maxV && s.nulls == 0L =>
-              (s.kind, gf.dataType) match {
-                case ("str", StringType) =>
-                  Some(org.apache.spark.unsafe.types.UTF8String.fromString(s.minV))
-                case ("num", dt) => fromNum(dt, s.min)
-                case _ => None
-              }
-            case _ => None
-          }
+        (f: String) => onlyValue(f, gf)
     }
     val keyed: Seq[(Seq[Any], String)] = chosen.map { f =>
       val key: Seq[Any] =
@@ -1140,24 +1087,13 @@ private[io] class GraftScan(
           // complete coverage only (a statless file voids the bound),
           // typed to the column's CATALYST value class so the CBO's
           // range-selectivity estimation can consume them directly
-          val minMax: Option[(Any, Any)] =
-            if (fs.isEmpty || !perFile.forall(_.exists(_.kind == "num")))
-              None
-            else {
-              import org.apache.spark.sql.types._
-              val vals = perFile.flatten
-              val lo = vals.map(_.min).min
-              val hi = vals.map(_.max).max
-              dataSchema(c).dataType match {
-                case LongType if math.abs(lo) < 9.0e15 && math.abs(hi) < 9.0e15 =>
-                  Some((Long.box(lo.toLong), Long.box(hi.toLong)))
-                case IntegerType => Some((Int.box(lo.toInt), Int.box(hi.toInt)))
-                case ShortType => Some((Short.box(lo.toShort), Short.box(hi.toShort)))
-                case DoubleType => Some((Double.box(lo), Double.box(hi)))
-                case FloatType => Some((Float.box(lo.toFloat), Float.box(hi.toFloat)))
-                case _ => None
-              }
-            }
+          import org.apache.spark.sql.types._
+          val minMax: Option[(Any, Any)] = dataSchema(c).dataType match {
+            case dt @ (LongType | IntegerType | ShortType | DoubleType | FloatType)
+                if fs.nonEmpty && perFile.forall(_.isDefined) =>
+              TxnTable.foldBounds(perFile.flatten, dt)
+            case _ => None
+          }
           val d = ndv.get(c)
           // ANALYZE's equi-height histogram, when present — Spark's
           // transformV2Stats folds it into the catalyst ColumnStat, and

@@ -9,21 +9,18 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A frame's key column as one Spark job saw it: the non-null key
-  * count, the min/max of the key's stats normalization
-  * (`TxnTable.normExpr`, null when no key normalizes) and, when at
+  * count, the keys' min/max (null when there is no key) and, when at
   * most the probe key limit of them exist and the type's `IN` equality
-  * is its join equality, the distinct non-null keys in Catalyst's
-  * internal form. */
-private[io] final case class KeySet(count: Long, lo: Any, hi: Any,
+  * is its join equality, the distinct non-null keys — all Catalyst
+  * values of the key's type `keyDt`. */
+private[io] final case class KeySet(count: Long, keyDt: DataType, lo: Any, hi: Any,
                                     keys: Option[Seq[Any]]) {
 
-  /** The keys' range as a stats bound; None when it cannot prune. */
-  def bound: Option[TxnTable.Bound] = (lo, hi) match {
-    case (l: UTF8String, h: UTF8String) =>
-      Some(TxnTable.Bound("str", loS = l.toString, hiS = h.toString))
-    case (l: Double, h: Double) => Some(TxnTable.Bound("num", lo = l, hi = h))
-    case _ => None
-  }
+  /** The keys' range as a stats bound on a column of type `dt`. */
+  def bound(dt: DataType): Option[TxnTable.Bound] =
+    if (dt == keyDt) Some(TxnTable.Bound(dt, Option(lo), Option(hi)))
+    else TxnTable.boundOf(Option(lo).map(Literal(_, keyDt)),
+      Option(hi).map(Literal(_, keyDt)), dt)
 }
 
 private[graft] object KeySet {
@@ -60,18 +57,16 @@ private[graft] object KeySet {
       org.apache.spark.sql.GraftBridge.column(Literal(k, dt))): _*)
 
   /** One job over `df`'s `keyCol`: each partition counts its non-null
-    * keys, keeps the min/max of their normalization under Spark's own
-    * min/max ordering (`PhysicalDataType.ordering`, as the write-task
-    * stats do) and gathers its distinct keys CAPPED at `limit` — past
-    * the cap it drops the set and only counts. Keys are gathered only
-    * for a [[literalEquality]] type. */
+    * keys, keeps their min/max under Spark's own min/max ordering
+    * (`PhysicalDataType.ordering`, as the write-task stats do) and
+    * gathers its distinct keys CAPPED at `limit` — past the cap it
+    * drops the set and only counts. Keys are gathered only for a
+    * [[literalEquality]] type. */
   private[io] def gather(df: DataFrame, keyCol: String, limit: Int): KeySet = {
     val keyDt = df.schema(keyCol).dataType
-    val frame = df.select(col(keyCol), TxnTable.normExpr(keyCol, keyDt))
-    val normDt = frame.schema(1).dataType
     val gatherKeys = literalEquality(keyDt)
-    val parts = frame.queryExecution.toRdd.mapPartitions { it =>
-      val ord = PhysicalDataType.ordering(normDt)
+    val parts = df.select(col(keyCol)).queryExecution.toRdd.mapPartitions { it =>
+      val ord = PhysicalDataType.ordering(keyDt)
       def own(v: Any): Any = v match {
         case s: UTF8String => s.clone()
         case x => x
@@ -85,28 +80,26 @@ private[graft] object KeySet {
         val r = it.next()
         if (!r.isNullAt(0)) {
           n += 1
-          if (!r.isNullAt(1)) {
-            // strings point into the reused input row: copy on keep
-            val v = r.get(1, normDt)
-            if (lo == null || ord.lt(v, lo)) lo = own(v)
-            if (hi == null || ord.gt(v, hi)) hi = own(v)
-          }
+          // strings point into the reused input row: copy on keep
+          val v = r.get(0, keyDt)
+          if (lo == null || ord.lt(v, lo)) lo = own(v)
+          if (hi == null || ord.gt(v, hi)) hi = own(v)
           if (!over) {
-            s.add(own(r.get(0, keyDt)))
+            s.add(own(v))
             if (s.size > limit) { s.clear(); over = true }
           }
         }
       }
       Iterator.single((n, lo, hi, if (over) None else Some(s.toArray)))
     }.collect()
-    val ord = PhysicalDataType.ordering(normDt)
+    val ord = PhysicalDataType.ordering(keyDt)
     def pick(vs: Seq[Any], better: (Any, Any) => Boolean): Any =
       vs.filter(_ != null).reduceOption((a, b) => if (better(b, a)) b else a).orNull
     val keys =
       if (parts.exists(_._4.isEmpty)) None
       else Some(parts.iterator.flatMap(_._4.get).toSet.toSeq)
         .filter(_.size <= limit)
-    KeySet(parts.iterator.map(_._1).sum,
+    KeySet(parts.iterator.map(_._1).sum, keyDt,
       pick(parts.map(_._2).toSeq, ord.lt), pick(parts.map(_._3).toSeq, ord.gt),
       keys)
   }

@@ -3,7 +3,10 @@ package graft.io
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, concat, count, date_format, hash, input_file_name, lit, max, min, not, pmod, raise_error, trunc, when}
-import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThanOrEqual, In, LessThanOrEqual}
+import org.apache.spark.sql.sources.{AlwaysTrue, And, EqualTo, Filter, GreaterThanOrEqual, In, LessThanOrEqual}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Minimal TRANSACTIONAL parquet table: per-version FILE MANIFESTS whose
@@ -432,19 +435,7 @@ object TxnTable {
     buf.sorted.toSeq
   }
 
-  /** Binary (UTF-8 byte) string ordering — the order Spark's min/max
-    * compute string stats in (UTF8String.compareTo). JVM String
-    * comparison orders by UTF-16 code units, which DISAGREES for
-    * supplementary-plane text vs U+E000..U+FFFF (surrogates sort low in
-    * UTF-16, high in UTF-8) — a stat comparison in the wrong order
-    * could prune a file that holds matching rows, or fold a MIN/MAX
-    * that differs from the scan it claims to equal. Every string
-    * stat/bound comparison goes through THIS ordering. */
-  private[io] val Utf8Ordering: Ordering[String] =
-    (a: String, b: String) =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-  private[io] def strLt(a: String, b: String): Boolean = Utf8Ordering.lt(a, b)
+  import org.apache.spark.sql.types._
 
   /** Per-file min/max of one designated stats column — the
     * data-skipping metadata (Delta/Iceberg file stats): collected once
@@ -452,16 +443,18 @@ object TxnTable {
     * A file may carry stats for several columns (z-ordered layouts
     * record both curve dimensions, so reads skip on either).
     *
-    * TYPED: `kind` is "num" (numbers, booleans; dates/timestamps
-    * normalized to epoch seconds — UTC sessions assumed, as Verify
-    * pins) with `minV`/`maxV` holding doubles, or "str" with raw
-    * strings compared lexicographically (Spark's UTF8 binary order ==
-    * DuckDB's default collation, so skipping agrees with the oracle).
-    * A bound whose kind mismatches the stat's can never prune.
+    * `kind` says what `minV`/`maxV` hold: "str" raw strings, [[TypedKind]]
+    * the column's own Catalyst value as text ([[statText]]), "null" an
+    * all-NULL column (no min/max), and legacy "num" a double of the
+    * writer's session-zone normalization. Only [[bounds]] reads them;
+    * every consumer compares what it returns with the column type's
+    * `PhysicalDataType.ordering` — the order Spark's own min/max use,
+    * UTF-8 binary for strings (== DuckDB's default collation, so
+    * skipping agrees with the oracle). A line that cannot say
+    * exactly what its column holds has no bounds: it never prunes.
     *
-    * `nulls` counts rows whose NORMALIZED value is NULL (genuine NULLs
-    * or values the normalization can't represent) — the rows min/max
-    * say NOTHING about (aggregates skip them). It gates metadata-only
+    * `nulls` counts the column's NULL rows — the rows min/max say
+    * NOTHING about (aggregates skip them). It gates metadata-only
     * decisions: a file whose min/max sit inside a delete range may
     * still hide NULL-keyed rows that SQL DELETE semantics must retain,
     * so it is only droppable without being read when `nulls == 0`.
@@ -469,31 +462,62 @@ object TxnTable {
     * destructive metadata-only action. */
   final case class FileStat(col: String, kind: String,
                             minV: String, maxV: String, nulls: Long = -1L) {
-    /** Numeric accessors (valid when kind == "num"). */
-    def min: Double = minV.toDouble
-    def max: Double = maxV.toDouble
-    def disjointFrom(b: Bound): Boolean = (kind, b.kind) match {
-      case ("num", "num") => max < b.lo || min > b.hi
-      case ("str", "str") =>
-        (b.loS != null && strLt(maxV, b.loS)) ||
-          (b.hiS != null && strLt(b.hiS, minV))
-      // an ALL-NULL column (kind "null": every row normalization-null)
-      // has no row any value-range predicate can select
-      case ("null", _) => true
-      case _ => false // kind mismatch: cannot prove anything
+    /** (min, max) as Catalyst values of column type `dt`, or None. A
+      * typed line reads as the type it names, so a column widened by
+      * ALTER COLUMN reads its narrower stats. A legacy line reads only
+      * where its double is exact: integrals within 2^52, whole-day
+      * DATEs (a UTC writer), TIMESTAMPs within 2^51 µs, floats and
+      * doubles — never TIMESTAMP_NTZ (the writer's zone was not
+      * recorded) nor decimals. */
+    def bounds(dt: DataType): Option[(Any, Any)] = {
+      val exact = 4503599627370496.0 // 2^52
+      def whole(d: Double) =
+        Option.when(math.abs(d) <= exact && d == math.rint(d))(d.toLong)
+      val one: String => Option[Any] = (kind, dt) match {
+        case ("str", StringType) => s => Some(UTF8String.fromString(s))
+        case (TypedKind, _) => s => scala.util.Try(dt match {
+          case BooleanType => s.toBoolean
+          case ByteType => s.toByte
+          case ShortType => s.toShort
+          case IntegerType | DateType => s.toInt
+          case LongType | TimestampType | TimestampNTZType => s.toLong
+          case FloatType => s.toFloat
+          case DoubleType => s.toDouble
+          case d: DecimalType => Some(Decimal(new java.math.BigDecimal(s)))
+              .filter(_.changePrecision(d.precision, d.scale)).orNull
+        }).toOption.filter(_ != null)
+        case (LegacyKind, _) => s => s.toDoubleOption.flatMap(d => dt match {
+          case ByteType => whole(d).map(_.toByte)
+          case ShortType => whole(d).map(_.toShort)
+          case IntegerType => whole(d).map(_.toInt)
+          case LongType => whole(d)
+          case FloatType => Some(d.toFloat)
+          case DoubleType => Some(d)
+          case BooleanType => Some(d != 0.0)
+          case DateType => whole(d / 86400.0).filter(_.isValidInt).map(_.toInt)
+          case TimestampType => Option.when(math.abs(d * 1e6) < exact / 2)(
+            math.rint(d * 1e6).toLong)
+          case _ => None
+        })
+        case _ => _ => None
+      }
+      for (mn <- one(minV); mx <- one(maxV)) yield (mn, mx)
     }
+    /** Stats PROVE no row's value lies inside `b`: the range misses
+      * [min, max], or the column is all NULL. */
+    def disjointFrom(b: Bound): Boolean = kind == "null" ||
+      bounds(b.dt).exists { case (mn, mx) =>
+        b.lo.exists(b.ordering.lt(mx, _)) || b.hi.exists(b.ordering.lt(_, mn))
+      }
     def mayOverlap(b: Bound): Boolean = !disjointFrom(b)
   }
 
-  /** A normalized query range: numeric [lo, hi] or lexicographic
-    * [loS, hiS] (null string endpoint = unbounded). Any other `kind`
-    * (e.g. "conflict") prunes nothing — always safe. */
-  final case class Bound(kind: String,
-                         lo: Double = Double.NegativeInfinity,
-                         hi: Double = Double.PositiveInfinity,
-                         loS: String = null, hiS: String = null)
-
-  import org.apache.spark.sql.types._
+  /** A query range on a column of type `dt`: inclusive lo/hi Catalyst
+    * values of that type (None = unbounded), ordered like the stats. */
+  final case class Bound(dt: DataType, lo: Option[Any] = None,
+                         hi: Option[Any] = None) {
+    @transient lazy val ordering: Ordering[Any] = PhysicalDataType.ordering(dt)
+  }
 
   /** Partition entries are identity column names (`c`) or a time
     * transform — `days(c)`, `hours(c)`, `months(c)`, `years(c)` (the
@@ -628,7 +652,7 @@ object TxnTable {
   /** The declared type at a possibly-dotted column path: top-level
     * name first (a literal dotted name wins), then a struct-chain walk
     * — the one resolution rule shared by stats collection, the pruner,
-    * and bloom probes, so a nested stats column can never normalize
+    * and bloom probes, so a nested stats column can never resolve
     * differently on the write and read sides. */
   private[io] def typeAt(schema: StructType, c: String): Option[DataType] =
     schema.fields.find(_.name == c).map(_.dataType).orElse {
@@ -650,26 +674,30 @@ object TxnTable {
     spark.conf.getOption("graft.stats.maxStringLen")
       .map(_.toInt).getOrElse(256)
 
-  /** Stats representation a column type gets, if any: unsupported types
-    * simply collect no stats (conservative scans, never an error). */
+  /** The stats kind of a column type, if any: unsupported types simply
+    * collect no stats (conservative scans, never an error). */
   private[io] def statKind(dt: DataType): Option[String] = dt match {
     case StringType => Some("str")
-    case DateType | TimestampType | TimestampNTZType => Some("num")
-    case _: NumericType | BooleanType => Some("num")
+    case DateType | TimestampType | TimestampNTZType | BooleanType |
+         _: NumericType => Some(TypedKind)
     case _ => None
   }
 
-  /** The normalization every stats/bounds/filter comparison goes
-    * through: strings stay strings, temporals become epoch seconds,
-    * everything else casts to double. ONE definition, used by stat
-    * collection AND query filtering, so they can never disagree. */
-  private[io] def normExpr(c: String, dt: DataType): org.apache.spark.sql.Column =
-    dt match {
-      case StringType => col(c)
-      case DateType | TimestampType | TimestampNTZType =>
-        col(c).cast("timestamp").cast("double")
-      case _ => col(c).cast("double")
-    }
+  /** The kind of a stat written in its column's own type, and of a
+    * legacy line (its kind field absent on the oldest ones). */
+  private[io] val TypedKind = "typed"
+  private val LegacyKind = "num"
+
+  /** The manifest text of a Catalyst min/max: DATE as epoch days,
+    * TIMESTAMP as UTC micros, TIMESTAMP_NTZ as local micros, decimals
+    * as plain text, the rest as Java text — a float as its exact double,
+    * so a column widened to DOUBLE reads back the stored value.
+    * `NaN` and `-0.0` round-trip. */
+  private[io] def statText(v: Any): String = v match {
+    case f: Float => f.toDouble.toString
+    case d: Decimal => d.toJavaBigDecimal.toPlainString
+    case x => x.toString
+  }
 
   /** Timestamp option parsing shared by snapshot pinning and the change
     * feed: epoch millis, or "yyyy-MM-dd[ HH:mm:ss]" interpreted UTC. */
@@ -682,73 +710,60 @@ object TxnTable {
       ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
     }
 
-  /** One query-bound value, normalized against the column's type the
-    * way [[normExpr]] normalizes the column: Left(lexicographic) or
-    * Right(numeric/epoch-seconds). Temporal values take the instant of
-    * the SESSION zone's local time, as the cast to TIMESTAMP does —
-    * dates their local midnight, TIMESTAMP_NTZ values and strings their
-    * local wall clock; a string parses as Spark casts it to the
-    * column's type, so a bound agrees with `col === v` and with the
-    * manifest stats written under the same session zone. */
-  private[io] def boundValue(v: Any, dt: DataType): Either[String, Double] = {
-    import org.apache.spark.sql.catalyst.util.DateTimeUtils._
-    lazy val zone = getZoneId(
-      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
-    def local(micros: Long) = convertTz(micros, zone, java.time.ZoneOffset.UTC)
-    def seconds(micros: Long) = Right(micros / 1000000.0)
-    def refuse = throw new IllegalArgumentException(
-      s"cannot interpret bound $v (${v.getClass.getSimpleName}) against $dt")
-    (v, dt) match {
-      case (s: String, StringType) => Left(s)
-      case (s: String, DateType | TimestampType | TimestampNTZType) =>
-        val u = org.apache.spark.unsafe.types.UTF8String.fromString(s.trim)
-        (dt match {
-          case DateType => stringToDate(u).map(d => daysToMicros(d, zone))
-          case TimestampType => stringToTimestamp(u, zone)
-          case _ => stringToTimestampWithoutTimeZone(u).map(local)
-        }).map(seconds).getOrElse(refuse)
-      case (n: Number, _) => Right(n.doubleValue())
-      case (t: java.sql.Timestamp, _) => seconds(fromJavaTimestamp(t))
-      case (d: java.sql.Date, _) => seconds(daysToMicros(fromJavaDate(d), zone))
-      case (i: java.time.Instant, _) => seconds(instantToMicros(i))
-      case (ld: java.time.LocalDate, _) =>
-        seconds(daysToMicros(localDateToDays(ld), zone))
-      case (ldt: java.time.LocalDateTime, _) =>
-        seconds(local(localDateTimeToMicros(ldt)))
-      case _ => refuse
+  /** Query value `v` as a Catalyst value of column type `dt`, as
+    * Spark's `Cast` converts it under the session zone; None = it
+    * bounds nothing. A value of the column's type is itself; a number
+    * (to a numeric column) or a java temporal (to a temporal column)
+    * converts only when casting the result back gives `v`, so 2^60 + 1
+    * never becomes the double 2^60, nor noon a date; a string converts
+    * to a temporal column as Spark casts it for a comparison. The
+    * callers' rows compare in the column's type too: Spark pushes
+    * filters only on a bare column, with the value already cast to its
+    * type, and a [[Scope]] filters its rows with the converted value.
+    * A `Literal` is its value in its own type. */
+  private[io] def boundValue(v: Any, dt: DataType): Option[Any] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+    val l = v match {
+      case l: Literal => l
+      case _ => try Literal(v) catch { case _: RuntimeException => return None }
+    }
+    def cast(x: Any, from: DataType, to: DataType) = Option(Cast(Literal(x, from),
+      to, Some(SQLConf.get.sessionLocalTimeZone), EvalMode.TRY).eval())
+    def exact = cast(l.value, l.dataType, dt).filter(x => cast(x, dt, l.dataType)
+      .exists(PhysicalDataType.ordering(l.dataType).equiv(_, l.value)))
+    def temporal(t: DataType) =
+      t == DateType || t == TimestampType || t == TimestampNTZType
+    l.dataType match {
+      case `dt` => Some(l.value)
+      case _: NumericType if dt.isInstanceOf[NumericType] => exact
+      case StringType if temporal(dt) => cast(l.value, StringType, dt)
+      case t if temporal(t) && temporal(dt) => exact
+      case _ => None
     }
   }
 
-  /** Possibly-open bound from optional endpoints, normalized against the
-    * column type — what the SQL DML lowering derives from a WHERE's
-    * conjuncts as its rebase proof. None when an endpoint resists
-    * normalization or kinds mix (callers must then not claim
-    * disjointness). */
+  /** Possibly-open bound of column type `dt` from optional endpoints —
+    * what the SQL DML lowering derives from a WHERE's conjuncts as its
+    * rebase proof. None when an endpoint does not convert (callers must
+    * then not claim disjointness). */
   private[graft] def boundOf(lo: Option[Any], hi: Option[Any],
-                             dt: DataType): Option[Bound] =
-    try {
-      (lo.map(boundValue(_, dt)), hi.map(boundValue(_, dt))) match {
-        case (Some(Right(a)), Some(Right(b))) => Some(Bound("num", lo = a, hi = b))
-        case (Some(Right(a)), None) => Some(Bound("num", lo = a))
-        case (None, Some(Right(b))) => Some(Bound("num", hi = b))
-        case (Some(Left(a)), Some(Left(b))) => Some(Bound("str", loS = a, hiS = b))
-        case (Some(Left(a)), None) => Some(Bound("str", loS = a))
-        case (None, Some(Left(b))) => Some(Bound("str", hiS = b))
-        case _ => None
-      }
-    } catch { case _: IllegalArgumentException => None }
+                             dt: DataType): Option[Bound] = {
+    val (l, h) = (lo.map(boundValue(_, dt)), hi.map(boundValue(_, dt)))
+    if (l.contains(None) || h.contains(None) || (l ++ h).isEmpty) None
+    else Some(Bound(dt, l.flatten, h.flatten))
+  }
 
-  /** Row-level range predicate on the NORMALIZED value — the semantics
-    * the manifest stats are computed in (strings lexicographic, numbers
-    * and temporals as doubles); refuses bounds of mixed kinds. */
-  private def rangeFilter(c: String, dt: DataType, lo: Any, hi: Any)
-      : org.apache.spark.sql.Column =
-    (boundValue(lo, dt), boundValue(hi, dt)) match {
-      case (Left(l), Left(h)) => col(c).between(lit(l), lit(h))
-      case (Right(l), Right(h)) => normExpr(c, dt).between(lit(l), lit(h))
-      case _ => throw new IllegalArgumentException(
-        s"mixed bound kinds for [$lo, $hi] against $dt")
+  /** The (min, max) of column type `dt` over per-file stats, all-NULL
+    * files aside; None when no file has a value or a stat does not
+    * decode. */
+  private[io] def foldBounds(ss: Seq[FileStat], dt: DataType): Option[(Any, Any)] = {
+    val bs = ss.filterNot(_.kind == "null").map(_.bounds(dt))
+    Option.when(bs.nonEmpty && bs.forall(_.isDefined)) {
+      val o = PhysicalDataType.ordering(dt)
+      (bs.flatten.map(_._1).reduce(o.min[Any]),
+        bs.flatten.map(_._2).reduce(o.max[Any]))
     }
+  }
 
   /** Manifest record of one file's bloom sidecar: the column it covers
     * and its (bits, hashes) geometry — pinned per file, so a later
@@ -893,7 +908,7 @@ object TxnTable {
       val parts =
         l.stripPrefix(StatPrefix).split(java.util.regex.Pattern.quote(StatSep))
       val nulls = if (parts.length >= 5) parts(4).toLong else -1L
-      val kind = if (parts.length >= 6) parts(5) else "num"
+      val kind = if (parts.length >= 6) parts(5) else LegacyKind
       val (mn, mx) =
         if (kind == "str") (dec(parts(2)), dec(parts(3))) else (parts(2), parts(3))
       parts(0) -> FileStat(parts(1), kind, mn, mx, nulls)
@@ -1424,7 +1439,7 @@ object TxnTable {
     * bloom columns of a bloomable type — others get no stats, not
     * errors. Dotted entries (`meta.score`) resolve through struct
     * chains: nested fields carry per-file skipping stats exactly like
-    * top-level ones (normExpr's col() resolves the same path). */
+    * top-level ones (the tracker's col() resolves the same path). */
   private def statTargets(schema: StructType, statsCols: Seq[String],
                           bloomCols: Seq[String])
       : (Seq[(String, DataType, String)], Seq[String]) =
@@ -1440,8 +1455,7 @@ object TxnTable {
     * of each `bloomTracked` column.
     *
     * The tracker's expressions come from `frame.select(...)`'s ANALYZED
-    * projection — normExpr's casts carry the session time zone — bound
-    * to `frame`'s columns, which are exactly the data columns each
+    * projection, bound to `frame`'s columns, which are exactly the data columns each
     * written row holds (`shaped` only appends the `partitionBy` dir
     * columns, and those leave the file contents). The listing stays the
     * file list of record: a tracker file set that differs from it
@@ -1461,8 +1475,7 @@ object TxnTable {
     val exprs = tracked.map {
       case (c, TimestampType, _) if millis =>
         org.apache.spark.sql.functions.date_trunc("millisecond", col(c))
-          .cast("timestamp").cast("double")
-      case (c, dt, _) => normExpr(c, dt)
+      case (c, _, _) => col(c)
     } ++
       bloomTracked.map(c => when(col(c).isNotNull,
         org.apache.spark.sql.functions.xxhash64(col(c))))
@@ -1581,12 +1594,7 @@ object TxnTable {
     val buildAgg = org.apache.spark.sql.functions.udaf(
       new Bloom.BuildAggNullable(bloomBits(spark), bloomHashes(spark)))
     val aggs = count(lit(1)).as("__rows") +:
-      (tracked.flatMap { case (c, dt, _) => Seq(
-        min(normExpr(c, dt)).as(s"__mn_$c"),
-        max(normExpr(c, dt)).as(s"__mx_$c"),
-        org.apache.spark.sql.functions.sum(
-          when(normExpr(c, dt).isNull, 1L).otherwise(0L)).as(s"__nn_$c"))
-      } ++ bloomTracked.flatMap { c => Seq(
+      (statAggs(tracked) ++ bloomTracked.flatMap { c => Seq(
         buildAgg(when(col(c).isNotNull,
           org.apache.spark.sql.functions.xxhash64(col(c)))).as(s"__bl_$c"),
         org.apache.spark.sql.functions.sum(
@@ -1600,7 +1608,6 @@ object TxnTable {
         .groupBy(input_file_name().as("f"))
         .agg(aggs.head, aggs.tail: _*).collect()
         .map(r => toRel(r.getString(0)) -> r).toMap
-    def str(v: Any): String = if (v == null) null else v.toString
     // a file the groupBy never surfaced has zero rows
     val perFile = files.map { f =>
       f -> byFile.get(f).fold(FileAgg(0L,
@@ -1608,8 +1615,8 @@ object TxnTable {
         Array.fill(tracked.size)(0L), Array.fill(bloomTracked.size)(null),
         Array.fill(bloomTracked.size)(0L))) { r =>
         FileAgg(r.getAs[Long]("__rows"),
-          tracked.map(t => str(r.getAs[Any](s"__mn_${t._1}"))).toArray,
-          tracked.map(t => str(r.getAs[Any](s"__mx_${t._1}"))).toArray,
+          tracked.map(t => statTextOf(r.getAs[Any](s"__mn_${t._1}"))).toArray,
+          tracked.map(t => statTextOf(r.getAs[Any](s"__mx_${t._1}"))).toArray,
           tracked.map(t => r.getAs[Long](s"__nn_${t._1}")).toArray,
           bloomTracked.map(c => r.getAs[Array[Byte]](s"__bl_$c")).toArray,
           bloomTracked.map(c => r.getAs[Long](s"__bv_$c")).toArray)
@@ -1618,6 +1625,22 @@ object TxnTable {
     val (stats, rows, bitsets) = fileMeta(spark, perFile, tracked, bloomTracked)
     (stats, rows, bitsets.map { case (f, c, b) => (f, c) -> b.toSeq }.toMap)
   }
+
+  /** The read-back form of what the write tasks collect: min, max and
+    * NULL count of each tracked column as Spark aggregates, and
+    * [[statTextOf]] for a collected min/max. */
+  private def statAggs(tracked: Seq[(String, DataType, String)])
+      : Seq[org.apache.spark.sql.Column] =
+    tracked.flatMap { case (c, _, _) => Seq(
+      min(col(c)).as(s"__mn_$c"),
+      max(col(c)).as(s"__mx_$c"),
+      org.apache.spark.sql.functions.sum(
+        when(col(c).isNull, 1L).otherwise(0L)).as(s"__nn_$c"))
+    }
+  private def statTextOf(v: Any): String =
+    if (v == null) null
+    else statText(org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .convertToCatalyst(v))
 
   /** A fresh writer-unique data dir name: two racing writers can never
     * clobber each other's files. */
@@ -3286,7 +3309,7 @@ object TxnTable {
     * stats could not serve. */
   def readRangeOn(spark: SparkSession, table: String, column: String,
                   lo: Any, hi: Any): (DataFrame, Int, Int) =
-    readScope(spark, table, Scope.range(column, lo, hi))
+    readScope(spark, table, Scope(column, Seq(lo, hi), range = true))
 
   /** POINT-LOOKUP read: rows with `column = value`, planned over only
     * the files that stats, bucket ids AND bloom sidecars cannot rule
@@ -3297,7 +3320,7 @@ object TxnTable {
   def readEquals(spark: SparkSession, table: String, column: String,
                  value: Any): (DataFrame, Int, Int) = {
     require(value != null, "readEquals probes a value; use isNull filters for NULLs")
-    readScope(spark, table, Scope.equal(column, value))
+    readScope(spark, table, Scope(column, Seq(value)))
   }
 
   /** The latest snapshot's rows in `scope`, planned over the files
@@ -3307,9 +3330,9 @@ object TxnTable {
     val st = latestState(spark, table).getOrElse(
       throw new IllegalStateException(s"no committed version in $table"))
     val schema = st.schemaOf(table)
-    val inScope = scope.rows(schema(scope.column).dataType)
+    val (filter, inScope) = scope.on(schema(scope.column).dataType)
     val chosen = chooseFiles(spark, table, st, new StatsPruner(schema, st.stats),
-      Seq(scope.filter), st.files)
+      Seq(filter), st.files)
     val rows =
       if (chosen.isEmpty)
         spark.createDataFrame(
@@ -3418,7 +3441,7 @@ object TxnTable {
   def deleteEquals(spark: SparkSession, table: String, column: String,
                    value: Any): Long = {
     require(value != null, "deleteEquals removes a key; NULLs are retained by design")
-    scopedOverwrite(spark, table, Scope.equal(column, value), None)
+    scopedOverwrite(spark, table, Scope(column, Seq(value)), None)
   }
 
   /** Translate ABSOLUTE scan-emitted paths (`input_file_name()` /
@@ -3520,10 +3543,9 @@ object TxnTable {
     // the update keys, gathered ONCE per merge (the keys do not depend
     // on the snapshot, so a lost CAS re-plans without re-reading them;
     // lazy: the first commit of a table is an append and never needs
-    // them): non-null count, typed bounds — strings min/max by UTF-8
-    // bytes (a numeric cast would NULL out and silently no-op the whole
-    // merge), temporals as epoch, one normalization shared with the
-    // stats — and the distinct keys when few enough for a static IN
+    // them): non-null count, the keys' min/max in their own type (the
+    // ordering the stats use) and the distinct keys when few enough for
+    // a static IN
     val keyDt = updates.schema(keyCol).dataType
     lazy val upd = KeySet.gather(updates, keyCol, KeySet.probeKeyLimit(spark))
     def plan(st: State): Attempt = {
@@ -3535,7 +3557,8 @@ object TxnTable {
       // column has the frame's key type (no coercion on either side)
       val isKey = upd.keys.filter(_ => typeAt(schema, keyCol).contains(keyDt))
         .map(KeySet.isIn(keyCol, keyDt, _))
-      val keyBound = upd.bound // None: keys resist normalization, no pre-prune
+      // None: the keys do not convert to the column's type, no pre-prune
+      val keyBound = typeAt(schema, keyCol).flatMap(upd.bound)
       // stats pre-prune: only files whose range intersects the update
       // keys' range can contain a match (statless files always qualify)
       val candidates = keyBound match {
@@ -3706,8 +3729,8 @@ object TxnTable {
       // rebase on CAS loss only when the interleaved commits appended
       // files provably DISJOINT from the update keys' range (they can
       // hold no matching row, so neither the rewrite set nor the
-      // unmatched-insert decision changes); unnormalizable keys
-      // (keyBound None) always recompute — and identity merges ALWAYS
+      // unmatched-insert decision changes); keys that do not convert
+      // to the column's type (keyBound None) always recompute — and identity merges ALWAYS
       // recompute (a raced append may have advanced the high-water
       // mark; re-minting from the fresh snapshot prevents collisions)
       rewritePublish("merge", st, mergedSchema, touched.toSeq.sorted,
@@ -4956,8 +4979,8 @@ object TxnTable {
     * the GDPR / retention primitive: [[scopedOverwrite]] with nothing
     * landing, so files whose stats prove them wholly in range drop
     * without being read, stats-disjoint files carry by reference, and
-    * boundary files are rewritten with the complement. Rows match on
-    * the normalized value ([[rangeFilter]]). */
+    * boundary files are rewritten with the complement. Rows match in
+    * the column's type ([[Scope]]). */
   def deleteRange(spark: SparkSession, table: String, column: String,
                   lo: Double, hi: Double): Long =
     deleteRangeOn(spark, table, column, lo, hi)
@@ -4967,7 +4990,7 @@ object TxnTable {
     * values as `readRangeOn`. */
   def deleteRangeOn(spark: SparkSession, table: String, column: String,
                     lo: Any, hi: Any): Long =
-    scopedOverwrite(spark, table, Scope.range(column, lo, hi), None)
+    scopedOverwrite(spark, table, Scope(column, Seq(lo, hi), range = true), None)
 
   /** Delta's `replaceWhere` — the daily-re-ingest primitive: atomically
     * replace exactly the rows with `column` in [lo, hi] by `df`, in ONE
@@ -4984,7 +5007,8 @@ object TxnTable {
     * append-rebase against stats-disjoint concurrent commits. */
   def replaceRange(df: DataFrame, table: String, column: String,
                    lo: Any, hi: Any): Long =
-    scopedOverwrite(df.sparkSession, table, Scope.range(column, lo, hi), Some(df))
+    scopedOverwrite(df.sparkSession, table,
+      Scope(column, Seq(lo, hi), range = true), Some(df))
 
   /** Dynamic-partition overwrite (`partitionOverwriteMode=dynamic`
     * semantics): atomically replace exactly the rows whose `column`
@@ -5004,35 +5028,63 @@ object TxnTable {
       return latestVersion(spark = df.sparkSession, table = table).getOrElse(
         throw new IllegalStateException(
           s"dynamic overwrite of empty frame into uncommitted $table"))
-    scopedOverwrite(df.sparkSession, table, Scope.values(column, values), Some(df))
+    scopedOverwrite(df.sparkSession, table, Scope(column, values), Some(df))
   }
 
-  /** The rows a key-scoped op owns on `column`. `filter` — an EqualTo,
-    * an In, or GreaterThanOrEqual ∧ LessThanOrEqual — chooses files
-    * through [[chooseFiles]] and proves them covered through
-    * StatsPruner.mustMatch; `rows` is the same predicate per row
-    * against the column's declared type: exact `===`/`isin` for
-    * equality and IN, the normalized [[rangeFilter]] for ranges. */
-  private final case class Scope(column: String, filter: Filter,
-                                 rows: DataType => org.apache.spark.sql.Column) {
-    override def toString: String = filter match {
-      case EqualTo(_, v) => s"$column = $v"
-      case In(_, vs) => s"$column in {${vs.mkString(", ")}}"
-      case And(GreaterThanOrEqual(_, lo), LessThanOrEqual(_, hi)) =>
-        s"$column in [$lo, $hi]"
-      case f => f.toString
+  /** The rows a key-scoped op owns on `column`: `values` (one value is
+    * an equality, several an IN) or, for a `range`, the closed range of
+    * its two values. */
+  private final case class Scope(column: String, values: Seq[Any],
+                                 range: Boolean = false) {
+    override def toString: String =
+      if (range) s"$column in [${values.head}, ${values(1)}]"
+      else if (values.size == 1) s"$column = ${values.head}"
+      else s"$column in {${values.mkString(", ")}}"
+
+    /** The scope on a column of type `dt`: the filter that chooses files
+      * through [[chooseFiles]] and proves them covered through
+      * StatsPruner.mustMatch, and the same predicate per row. When every
+      * value converts ([[boundValue]]) the rows compare with literals of
+      * `dt`; otherwise they compare under Spark's own coercion and the
+      * filter is AlwaysTrue — it prunes nothing and proves nothing. */
+    def on(dt: DataType): (Filter, org.apache.spark.sql.Column) = {
+      val vs = if (!range) values
+        else Seq(inward(values.head, dt, up = true), inward(values(1), dt, up = false))
+      val typed = vs.map(boundValue(_, dt))
+      val lits =
+        if (typed.contains(None)) vs.map(lit)
+        else typed.flatten.map(v => org.apache.spark.sql.GraftBridge.column(
+          org.apache.spark.sql.catalyst.expressions.Literal(v, dt)))
+      val c = col(column)
+      val (filter, rows) =
+        if (range) (And(GreaterThanOrEqual(column, vs.head),
+          LessThanOrEqual(column, vs(1))), c >= lits.head && c <= lits(1))
+        else if (vs.size == 1) (EqualTo(column, vs.head), c === lits.head)
+        else (In(column, vs.toArray), c.isin(lits: _*))
+      (if (typed.contains(None)) AlwaysTrue else filter, rows)
     }
-  }
-  private object Scope {
-    def equal(c: String, v: Any): Scope =
-      Scope(c, EqualTo(c, v), _ => col(c) === lit(v))
-    /** A one-value set is an equality. */
-    def values(c: String, vs: Seq[Any]): Scope =
-      if (vs.size == 1) equal(c, vs.head)
-      else Scope(c, In(c, vs.toArray), _ => col(c).isInCollection(vs))
-    def range(c: String, lo: Any, hi: Any): Scope =
-      Scope(c, And(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi)),
-        dt => rangeFilter(c, dt, lo, hi))
+
+    /** Range endpoint `v` on an integral or decimal column when it does
+      * not convert: a fractional number rounds onto the column's scale,
+      * up for the lower endpoint and down for the upper, so `k >= 2.5`
+      * becomes `k >= 3` and selects the same rows. Else `v` itself. */
+    private def inward(v: Any, dt: DataType, up: Boolean): Any = {
+      val scale = dt match {
+        case ByteType | ShortType | IntegerType | LongType => 0
+        case d: DecimalType => d.scale
+        case _ => return v
+      }
+      val exact = v match {
+        case _ if boundValue(v, dt).isDefined => return v
+        case d: Double if !d.isNaN && !d.isInfinite => new java.math.BigDecimal(d)
+        case f: Float if !f.isNaN && !f.isInfinite => new java.math.BigDecimal(f.toDouble)
+        case b: BigDecimal => b.bigDecimal
+        case b: java.math.BigDecimal => b
+        case _ => return v
+      }
+      exact.setScale(scale,
+        if (up) java.math.RoundingMode.CEILING else java.math.RoundingMode.FLOOR)
+    }
   }
 
   /** THE key-scoped copy-on-write commit under deleteEquals,
@@ -5062,7 +5114,7 @@ object TxnTable {
     val column = scope.column
     val op = if (incoming.isEmpty) "delete" else "replace"
     incoming.foreach { df =>
-      require(df.filter(not(coalesce(scope.rows(df.schema(column).dataType),
+      require(df.filter(not(coalesce(scope.on(df.schema(column).dataType)._2,
           lit(false)))).limit(1).count() == 0L,
         s"replaceWhere scoped-overwrite contract: every incoming row must " +
           s"have $scope — found rows outside (or NULL-keyed)")
@@ -5086,15 +5138,12 @@ object TxnTable {
               " or delete through SQL DELETE, which composes with them"
             else ", then replaceWhere"))
         val schema = st.schemaOf(table)
-        val dt = schema(column).dataType
-        val matchExpr = coalesce(scope.rows(dt), lit(false))
+        val (filter, inScope) = scope.on(schema(column).dataType)
+        val matchExpr = coalesce(inScope, lit(false))
         val pruner = new StatsPruner(schema, st.stats)
-        val bound = pruner.envelope(column, scope.filter).getOrElse(
-          throw new IllegalArgumentException(
-            s"cannot normalize $scope against $dt"))
-        val chosen = chooseFiles(spark, table, st, pruner, Seq(scope.filter),
+        val chosen = chooseFiles(spark, table, st, pruner, Seq(filter),
           st.files)
-        val covered = chosen.filter(pruner.mustMatch(_, scope.filter))
+        val covered = chosen.filter(pruner.mustMatch(_, filter))
         val boundary = chosen.filterNot(covered.toSet)
         def boundaryRead = planFiles(spark, table, schema, boundary, st.pathpart, st.aliases, retired = st.retired, addv = st.addv)
         val landing = incoming.map(df => recomputeGenerated(df, st.schema)
@@ -5122,7 +5171,7 @@ object TxnTable {
               (Seq(d), nf, ns, nb, nr, cdc)
           }
         rewritePublish(op, st, schema, chosen.sorted, dirs, added, stats,
-          blooms, rows, Some(column -> bound), cdc,
+          blooms, rows, pruner.envelope(column, filter).map(column -> _), cdc,
           if (st.cdf) covered.sorted else Nil)
     }
     Log.commit(spark, table, op)(plan)
@@ -5536,7 +5585,8 @@ object TxnTable {
 
   /** METADATA-ONLY column profile (ANALYZE without the scan): one row
     * per stats-tracked column — global min/max folded from per-file
-    * stats (numeric and string kinds in their own typed columns),
+    * stats (strings as themselves, temporal values as epoch seconds,
+    * other values cast to double),
     * total null count, total row count — all from ONE manifest read.
     * On a 100 TB table this is the profile a query planner or a data
     * catalog wants, at the cost of a directory point-read. Columns
@@ -5544,7 +5594,7 @@ object TxnTable {
     * a pre-nulls file poisons n_nulls to NULL, a statless file poisons
     * that column's min/max. */
   def profile(spark: SparkSession, table: String): DataFrame = {
-    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     val st = latestState(spark, table).getOrElse(
       throw new IllegalStateException(s"no committed version in $table"))
     val totalRows: Option[Long] =
@@ -5557,23 +5607,24 @@ object TxnTable {
       val covered = perFile.forall { case (f, s) =>
         s.isDefined || st.rows.get(f).contains(0L) }
       val ss = perFile.flatMap(_._2)
-      val valued = ss.filterNot(_.kind == "null")
-      val kinds = valued.map(_.kind).distinct
-      val (minN, maxN) =
-        if (covered && kinds == Seq("num"))
-          (Some(valued.map(_.min).min), Some(valued.map(_.max).max))
-        else (None, None)
-      val (minS, maxS) =
-        if (covered && kinds == Seq("str"))
-          (Some(valued.map(_.minV).min(Utf8Ordering)),
-            Some(valued.map(_.maxV).max(Utf8Ordering)))
-        else (None, None)
+      val folded = st.schema.flatMap(typeAt(_, c)).filter(_ => covered)
+        .flatMap(dt => foldBounds(ss, dt).map { case (lo, hi) => (dt, lo, hi) })
+      // temporal values as epoch seconds, the session zone aside: a
+      // DATE at its UTC midnight, TIMESTAMP_NTZ as its wall clock in UTC
+      def asDouble(v: Any, dt: DataType): Any = dt match {
+        case DateType => v.asInstanceOf[Int] * 86400.0
+        case TimestampType | TimestampNTZType => v.asInstanceOf[Long] / 1e6
+        case _ => Cast(Literal(v, dt), DoubleType).eval()
+      }
+      val (minN, maxN, minS, maxS) = folded match {
+        case Some((StringType, lo, hi)) => (null, null, lo.toString, hi.toString)
+        case Some((dt, lo, hi)) => (asDouble(lo, dt), asDouble(hi, dt), null, null)
+        case None => (null, null, null, null)
+      }
       val nulls =
         if (covered && ss.forall(_.nulls >= 0L)) Some(ss.map(_.nulls).sum)
         else None
-      org.apache.spark.sql.Row(c,
-        minN.map(Double.box).orNull, maxN.map(Double.box).orNull,
-        minS.orNull, maxS.orNull,
+      org.apache.spark.sql.Row(c, minN, maxN, minS, maxS,
         nulls.map(Long.box).orNull, totalRows.map(Long.box).orNull)
     }
     spark.createDataFrame(
@@ -5744,8 +5795,8 @@ object TxnTable {
     * results, not just wrong pruning). Bucket partition columns refuse
     * outright for the same hash reason (the bucket ids in existing
     * paths were computed from the old type). Min/max skipping stats
-    * keep working unchanged: they store a numeric envelope, not typed
-    * bytes. */
+    * keep working unchanged: a stat's text reads as the wider type
+    * (`FileStat.bounds`). */
   def alterColumnType(spark: SparkSession, table: String,
                       name: String, to: DataType): Long =
     commitMetadata(spark, table, "alter-type") { st =>
@@ -6766,14 +6817,7 @@ object TxnTable {
     val tracked = (statsCols ++ partCols).distinct.flatMap(c =>
       schema.find(_.name == c).flatMap(f =>
         statKind(f.dataType).map(k => (c, f.dataType, k))))
-    val aggs = (count(lit(1)).as("__rows") +:
-      tracked.flatMap { case (c, dt, _) => Seq(
-        min(normExpr(c, dt)).as(s"__mn_$c"),
-        max(normExpr(c, dt)).as(s"__mx_$c"),
-        org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.when(
-            normExpr(c, dt).isNull, 1L).otherwise(0L)).as(s"__nn_$c"))
-      })
+    val aggs = count(lit(1)).as("__rows") +: statAggs(tracked)
     def relKey(uri: String): String = {
       val path = new Path(new java.net.URI(uri)).toUri.getPath
       require(path.startsWith(s"$tabAbs/"),
@@ -6790,7 +6834,8 @@ object TxnTable {
           (r.getAs[Any](s"__mn_$c"), r.getAs[Any](s"__mx_$c")) match {
             case (null, _) if nn > 0L => Some(FileStat(c, "null", "", "", nn))
             case (null, _) => None
-            case (mn, mx) => Some(FileStat(c, kind, mn.toString, mx.toString, nn))
+            case (mn, mx) =>
+              Some(FileStat(c, kind, statTextOf(mn), statTextOf(mx), nn))
           }
         }
         (key, ss, r.getAs[Long]("__rows"))
@@ -6889,15 +6934,15 @@ object TxnTable {
 
   /** OPTIMIZE … WHERE's scope: the files StatsPruner.mustMatch proves
     * wholly inside `c` ∈ [lo, hi], with known-zero NULLs. Bounds that
-    * do not normalize against the column refuse. */
+    * do not convert to the column's type refuse. */
   private def rangeCovers(st: State, schema: StructType, table: String,
                           c: String, lo: Any, hi: Any): String => Boolean = {
     val dt = typeAt(schema, c).getOrElse(throw new IllegalArgumentException(
       s"OPTIMIZE WHERE column $c is not a column of $table"))
     val pruner = new StatsPruner(schema, st.stats)
-    val inRange = Scope.range(c, lo, hi).filter
+    val (inRange, _) = Scope(c, Seq(lo, hi), range = true).on(dt)
     pruner.envelope(c, inRange).getOrElse(throw new IllegalArgumentException(
-      s"cannot normalize OPTIMIZE WHERE $c in [$lo, $hi] against $dt"))
+      s"cannot convert OPTIMIZE WHERE $c in [$lo, $hi] to $dt"))
     pruner.mustMatch(_, inRange)
   }
 

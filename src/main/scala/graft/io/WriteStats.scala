@@ -8,8 +8,9 @@ import org.apache.spark.sql.execution.datasources.{WriteJobStatsTracker, WriteTa
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One written file's commit metadata, aggregated by the write task
-  * that wrote it. Per stats expression: min/max rendered as strings
-  * (null when the file holds no non-null value) and the NULL count.
+  * that wrote it. Per stats expression: min/max as their stat text
+  * (`TxnTable.statText`; null when the file holds no non-null value)
+  * and the NULL count.
   * Per bloom expression: the bitset and its non-null input count. */
 private[io] final case class FileAgg(
     rows: Long,
@@ -24,8 +25,8 @@ private[io] final case class TaskFileAggs(files: Seq[(String, FileAgg)])
 
 /** Collects per-file row counts, min/max/null stats and bloom bitsets
   * INSIDE the parquet write tasks, so a commit's data write is one
-  * Spark job with no read-back. `stats` are the normalized stats
-  * expressions and `blooms` the `xxhash64(col)`-when-non-null
+  * Spark job with no read-back. `stats` are the stats columns and
+  * `blooms` the `xxhash64(col)`-when-non-null
   * expressions, both bound to the written data row. Min/max compare
   * with Spark's own `PhysicalDataType.ordering` — the ordering its
   * `min`/`max` aggregates use — keeping the first of equal values.
@@ -78,8 +79,8 @@ private[io] final class WriteStatsTracker(
     val bits: Array[Array[Byte]] = Array.fill(nBlooms)(new Array[Byte](bloomBits / 8))
     val bloomRows = new Array[Long](nBlooms)
     def result: FileAgg = FileAgg(rows,
-      mins.map(v => if (v == null) null else v.toString),
-      maxs.map(v => if (v == null) null else v.toString),
+      mins.map(v => if (v == null) null else TxnTable.statText(v)),
+      maxs.map(v => if (v == null) null else TxnTable.statText(v)),
       nulls, bits, bloomRows)
   }
 

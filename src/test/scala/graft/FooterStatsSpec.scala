@@ -137,7 +137,7 @@ class FooterStatsSpec extends AnyFunSuite {
           ($"id" % 7).cast("int").as("v"))
         val (got, _) = check(s"$zone/t", df, Seq("v"))
         assert(got.flatMap(_._1).filter(_.col == "v")
-            .forall(s => s.maxV.toDouble < 7.0),
+            .forall(s => s.kind == "typed" && s.maxV.toInt < 7),
           s"v's stats must come from v, not V: $got")
       } finally spark.conf.unset("spark.sql.caseSensitive")
     }
@@ -169,7 +169,7 @@ class FooterStatsSpec extends AnyFunSuite {
       val one = spark.range(41, 42).select($"id")
       val (o, _) = check(s"$zone/o", one, Seq("id"))
       assert(o.flatMap(_._1).exists(s =>
-        s.col == "id" && s.minV == "41.0" && s.maxV == "41.0"))
+        s.col == "id" && s.kind == "typed" && s.minV == "41" && s.maxV == "41"))
     }
   }
 
@@ -188,7 +188,8 @@ class FooterStatsSpec extends AnyFunSuite {
       val v = TxnTable.latestVersion(spark, t).get
       val stats = TxnTable.fileStats(spark, t, v)
       val files = TxnTable.snapshotFiles(spark, t, v)
-      val bound = TxnTable.Bound("num", lo = 9999.0, hi = 9999.0)
+      val bound = TxnTable.Bound(org.apache.spark.sql.types.LongType,
+        Some(9999L), Some(9999L))
       val kept = files.count(f => stats.getOrElse(f, Nil)
         .find(_.col == "id").forall(_.mayOverlap(bound)))
       assert(kept < files.size && kept >= 1,
@@ -242,20 +243,36 @@ class FooterStatsSpec extends AnyFunSuite {
       "read-back") {
     import spark.implicits._
     withZone { zone =>
-      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-      try {
+      Spec.withSessionZone("America/Los_Angeles") {
         val df = spark.range(0, 300, 1, 3).select($"id",
           date_add(lit("2021-03-01").cast("date"), ($"id" % 40).cast("int"))
             .as("d"),
           timestamp_seconds($"id" * 3600).as("ts"),
           timestamp_seconds($"id" * 60).cast("timestamp_ntz").as("ntz"))
         val (got, _) = check(s"$zone/t", df, Seq("d", "ts", "ntz"))
-        // epoch seconds of the LOCAL midnight: not a multiple of a day
-        assert(got.flatMap(_._1).filter(_.col == "d")
-          .forall(s => s.minV.toDouble % 86400.0 != 0.0), got)
-      } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+        // a DATE stat is its epoch day whatever the session zone
+        val first = java.time.LocalDate.parse("2021-03-01").toEpochDay
+        val ds = got.flatMap(_._1).filter(_.col == "d")
+        assert(ds.nonEmpty && ds.forall(s => s.kind == "typed" &&
+          s.minV.toLong >= first && s.maxV.toLong <= first + 39) &&
+          ds.map(_.minV.toLong).min == first &&
+          ds.map(_.maxV.toLong).max == first + 39, got)
+      }
     }
   }
+
+  for (tz <- Seq("UTC", "America/Los_Angeles"))
+    test(s"every stats type equals the read-back under $tz") {
+      withZone { zone =>
+        Spec.withSessionZone(tz) {
+          val (got, _) = check(s"$zone/t", Spec.everyStatsType(),
+            Spec.everyStatsCol, bloomCols = Seq("i64", "str"))
+          val kinds = got.flatMap(_._1).map(s => s.col -> s.kind).toMap
+          assert(kinds == Spec.everyStatsCol.map(c =>
+            c -> (if (c == "str") "str" else "typed")).toMap, kinds)
+        }
+      }
+    }
 
   test("TIMESTAMP_MILLIS output: timestamp stats describe the stored " +
       "milliseconds") {
@@ -272,7 +289,7 @@ class FooterStatsSpec extends AnyFunSuite {
             .as("ntz"))
         val (got, _) = check(s"$zone/t", df, Seq("ts", "ntz"))
         def whole(c: String) = got.flatMap(_._1).filter(_.col == c)
-          .map(s => (BigDecimal(s.maxV) * 1000).isWhole)
+          .map(s => s.maxV.toLong % 1000L == 0L)
         assert(whole("ts") == Seq(true, true) &&
           whole("ntz") == Seq(false, false), got)
       } finally spark.conf.set(key, "TIMESTAMP_MICROS")

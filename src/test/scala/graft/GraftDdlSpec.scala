@@ -289,9 +289,9 @@ class GraftDdlSpec extends AnyFunSuite {
       val v0 = TxnTable.latestVersion(spark, table).get
       val files0 = TxnTable.snapshotFiles(spark, table, v0)
       val stats0 = TxnTable.fileStats(spark, table, v0)
-      def lowOf(f: String): Double = stats0(f).find(_.col == "k").get.minV.toDouble
-      val inRange0 = files0.filter(f => lowOf(f) < 50.0)   // first two slices
-      val outside0 = files0.filterNot(f => lowOf(f) < 50.0)
+      def lowOf(f: String): Long = stats0(f).find(_.col == "k").get.minV.toLong
+      val inRange0 = files0.filter(f => lowOf(f) < 50L)   // first two slices
+      val outside0 = files0.filterNot(f => lowOf(f) < 50L)
       assert(inRange0.size == 2 && outside0.size == 2)
       spark.sql(s"OPTIMIZE '$table' WHERE k BETWEEN 0 AND 49")
       val v1 = TxnTable.latestVersion(spark, table).get

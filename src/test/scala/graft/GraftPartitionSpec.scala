@@ -94,7 +94,8 @@ class GraftPartitionSpec extends AnyFunSuite {
         val v = TxnTable.latestVersion(spark, table).get
         val stats = TxnTable.fileStats(spark, table, v)
         val files = TxnTable.snapshotFiles(spark, table, v)
-        def day(sec: String) = math.floorDiv(sec.toDouble.toLong, 86400L)
+        // ts is TIMESTAMP_NTZ: its stats are local micros
+        def day(us: String) = math.floorDiv(us.toLong, 86400000000L)
         files.nonEmpty && files.forall(f => stats.getOrElse(f, Nil).exists(s =>
           s.col == "ts" && day(s.minV) == day(s.maxV)))
       }
@@ -119,7 +120,7 @@ class GraftPartitionSpec extends AnyFunSuite {
         val v = TxnTable.latestVersion(spark, table).get
         val stats = TxnTable.fileStats(spark, table, v)
         val files = TxnTable.snapshotFiles(spark, table, v)
-        def b(sec: String) = bucket(sec.toDouble.toLong)
+        def b(us: String) = bucket(math.floorDiv(us.toLong, 1000000L))
         files.nonEmpty && files.forall(f => stats.getOrElse(f, Nil).exists(s =>
           s.col == "ts" && b(s.minV) == b(s.maxV)))
       }

@@ -59,11 +59,12 @@ class OverlapStatsSpec extends AnyFunSuite {
     * pass engaged and recorded exactly the read-back reference's
     * stats, rows and bloom bytes. */
   private def writeAndCheck(df: org.apache.spark.sql.DataFrame,
-      table: String, optimized: Boolean = true): Unit = {
+      table: String, optimized: Boolean = true,
+      stats: Seq[String] = statsCols): Unit = {
     val before = TxnTable.overlapStatsPasses.get()
     df.write.format("graft")
       .option("partitionBy", "bucket(8, h)")
-      .option("statsCols", statsCols.mkString(","))
+      .option("statsCols", stats.mkString(","))
       .option("bloomCols", bloomCols.mkString(","))
       .option("optimizedWrite", optimized.toString)
       .mode("overwrite").save(table)
@@ -72,7 +73,7 @@ class OverlapStatsSpec extends AnyFunSuite {
     val v = TxnTable.latestVersion(spark, table).get
     val files = TxnTable.snapshotFiles(spark, table, v)
     val (refStats, refRows, refBlooms) = TxnTable.readBackStats(
-      spark, table, files, df.schema, statsCols, bloomCols)
+      spark, table, files, df.schema, stats, bloomCols)
     def sorted(m: Map[String, Seq[TxnTable.FileStat]]) =
       m.view.mapValues(_.sortBy(_.col)).toMap
     assert(sorted(TxnTable.fileStats(spark, table, v)) == sorted(refStats),
@@ -107,6 +108,18 @@ class OverlapStatsSpec extends AnyFunSuite {
       // execution, so only the write tasks see exactly the rows written
       writeAndCheck(spark.read.format("graft").load(s"$zone/plain"),
         s"$zone/scanned")
+    }
+  }
+
+  test("every stats type records read-back-exact stats under UTC and " +
+      "Los Angeles") {
+    withZone { zone =>
+      for (tz <- Seq("UTC", "America/Los_Angeles")) Spec.withSessionZone(tz) {
+        val df = Spec.everyStatsType()
+          .withColumn("h", concat(lit("k"), $"doc_id" % 97))
+          .withColumn("grp", $"doc_id" % 13)
+        writeAndCheck(df, s"$zone/$tz", stats = Spec.everyStatsCol :+ "h")
+      }
     }
   }
 

@@ -44,8 +44,11 @@ class ReplaceWhereSpec extends AnyFunSuite {
       val after = TxnTable.snapshotFiles(spark, table, 2L).toSet
       val stats = TxnTable.fileStats(spark, table, 1L)
       val untouched = before.filter(f =>
-        stats.getOrElse(f, Nil).exists(s =>
-          s.col == "id" && (s.max < 30.0 || s.min > 70.0)))
+        stats.getOrElse(f, Nil).exists(s => s.col == "id" &&
+          s.bounds(org.apache.spark.sql.types.LongType).exists {
+            case (mn: Long, mx: Long) => mx < 30L || mn > 70L
+            case _ => false
+          }))
       assert(untouched.nonEmpty && untouched.forall(after.contains))
     }
   }
@@ -179,18 +182,13 @@ class ReplaceWhereSpec extends AnyFunSuite {
       .option("replaceWhere", s"id = $big").save(table))
   }
 
-  // outside UTC, DATE stats are the epoch seconds of the session zone's
-  // local midnight and a timestamp string parses in the session zone:
-  // file choice must normalize bounds the same way, or the replaced
-  // rows' files look disjoint and carry forward next to the new rows
-  private def inLosAngeles(body: => Unit): Unit = {
-    val key = "spark.sql.session.timeZone"
-    spark.conf.set(key, "America/Los_Angeles")
-    try body finally spark.conf.set(key, "UTC")
-  }
+  // outside UTC a timestamp string parses in the session zone: file
+  // choice must convert bounds the same way, or the replaced rows'
+  // files look disjoint and carry forward next to the new rows
+  private val LosAngeles = "America/Los_Angeles"
 
   test("INSERT OVERWRITE PARTITION on a DATE column outside UTC") {
-    inLosAngeles { withZone { zone =>
+    Spec.withSessionZone(LosAngeles) { withZone { zone =>
       val table = s"$zone/t"
       spark.sql("DROP TABLE IF EXISTS rw_date_t")
       spark.sql(
@@ -216,7 +214,7 @@ class ReplaceWhereSpec extends AnyFunSuite {
   }
 
   test("replaceWhere `ts = '…'` outside UTC replaces the rows `===` matches") {
-    inLosAngeles { withZone { zone =>
+    Spec.withSessionZone(LosAngeles) { withZone { zone =>
       import spark.implicits._
       val table = s"$zone/t"
       def frame(rows: (Long, String)*) = rows.toDF("id", "ts")
@@ -231,6 +229,29 @@ class ReplaceWhereSpec extends AnyFunSuite {
       assert(TxnTable.read(spark, table).select($"id").as[Long].collect()
         .sorted.toSeq == Seq(3L, 10L))
     }}
+  }
+
+  test("a date range written under UTC and replaced under Los Angeles " +
+      "replaces every matching row once") {
+    withZone { zone =>
+      import spark.implicits._
+      val table = s"$zone/t"
+      val day0 = java.time.LocalDate.parse("2024-01-01")
+      // four single-day files, written under UTC
+      (0 until 4).foreach { i =>
+        val df = Seq.range(0L, 3L).map(j => (i * 10L + j, java.sql.Date.valueOf(
+          day0.plusDays(i)))).toDF("id", "d").coalesce(1)
+        if (i == 0) TxnTable.commitOverwrite(df, table, statsCols = Seq("d"))
+        else TxnTable.commitAppend(df, table, statsCols = Seq("d"))
+      }
+      Spec.withSessionZone(LosAngeles) {
+        TxnTable.replaceRange(Seq((100L, java.sql.Date.valueOf(day0.plusDays(1))),
+            (101L, java.sql.Date.valueOf(day0.plusDays(2)))).toDF("id", "d"),
+          table, "d", day0.plusDays(1), day0.plusDays(2))
+      }
+      assert(TxnTable.read(spark, table).select($"id").as[Long].collect()
+        .sorted.toSeq == Seq(0L, 1L, 2L, 30L, 31L, 32L, 100L, 101L))
+    }
   }
 
   test("NULL-keyed rows survive a replace (SQL range semantics)") {

@@ -178,8 +178,8 @@ class SqlDmlSpec extends AnyFunSuite {
       // files provably outside BOTH the source keys [40,60) and the
       // NMBS bound k<25 must carry by reference
       val untouched = before.filter(f => stats(f).exists(s =>
-        s.col == "k" && (s.minV.toDouble >= 60.0 ||
-          (s.maxV.toDouble < 40.0 && s.minV.toDouble >= 25.0))))
+        s.col == "k" && (s.minV.toLong >= 60L ||
+          (s.maxV.toLong < 40L && s.minV.toLong >= 25L))))
       assert(untouched.nonEmpty, "fixture must have provably-disjoint files")
       assert(untouched.subsetOf(after),
         "files outside the source keys and the NMBS bound must carry")

@@ -465,25 +465,30 @@ class TxnSinkSpec extends AnyFunSuite {
       val before = TxnTable.snapshotFiles(spark, table, 1L)
       // delete exactly one file's recorded range: keys are unique, so
       // no other file overlaps it — the delete must be a manifest edit
+      def range(st: TxnTable.FileStat): (Double, Double) = (st.minV.toDouble, st.maxV.toDouble)
       val (f, fStats) = TxnTable.fileStats(spark, table, 1L).head
-      val st = fStats.head
-      val v = TxnTable.deleteRange(spark, table, "c_custkey", st.min, st.max)
+      val (lo, hi) = range(fStats.head)
+      val v = TxnTable.deleteRange(spark, table, "c_custkey", lo, hi)
       val after = TxnTable.snapshotFiles(spark, table, v)
       assert(after.toSet == before.toSet - f,
         "expected exactly the covered file dropped, nothing rewritten")
       assert(TxnTable.read(spark, table).count() ==
-        cust.filter(!$"c_custkey".between(st.min, st.max)).count())
-      // boundary delete: a range straddling two files rewrites only them
+        cust.filter(!$"c_custkey".between(lo, hi)).count())
+      // boundary delete: a range straddling two files rewrites only them;
+      // half-integer bounds on the integral key still prune and prove
       val remaining = TxnTable.fileStats(spark, table, v).toSeq
-        .map { case (file, ss) => file -> ss.head }
-        .sortBy(_._2.min)
+        .map { case (file, ss) => file -> range(ss.head) }
+        .sortBy(_._2._1)
       val (loF, hiF) = (remaining.head, remaining(1))
-      val v2 = TxnTable.deleteRange(spark, table, "c_custkey",
-        (loF._2.min + loF._2.max) / 2, (hiF._2.min + hiF._2.max) / 2)
+      def mid(r: (Double, Double)) = math.floor((r._1 + r._2) / 2) + 0.5
+      val v2 = TxnTable.deleteRange(spark, table, "c_custkey", mid(loF._2), mid(hiF._2))
       val after2 = TxnTable.snapshotFiles(spark, table, v2).toSet
       // the two straddled files are gone (rewritten), the others carried
       assert(!after2.contains(loF._1) && !after2.contains(hiF._1))
       assert(remaining.drop(2).forall(kv => after2.contains(kv._1)))
+      assert(TxnTable.read(spark, table).count() == cust
+        .filter(!$"c_custkey".between(lo, hi))
+        .filter(!$"c_custkey".between(mid(loF._2), mid(hiF._2))).count())
     }
   }
 
